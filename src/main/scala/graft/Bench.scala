@@ -9,10 +9,14 @@ object Bench {
     * BenchLineSpec asserts the healthy-path summary stays inside the
     * window for the worst-case registry names, so that failure mode is
     * structurally impossible.
+    *
+    * `codegen` (per query: classes compiled, compile seconds) goes into
+    * the full line only, as its own `"codegen"` object.
     */
   private[graft] def summaryLines(results: Seq[(String, Double)],
       errors: List[String], sfDir: String, fullPath: String,
-      nproc: Int, loadStart: String, loadEnd: String): (String, String) = {
+      nproc: Int, loadStart: String, loadEnd: String,
+      codegen: Seq[(String, (Long, Double))] = Nil): (String, String) = {
     def r3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     val qsFull = results.map { case (k, v) => "\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
@@ -22,8 +26,19 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     val env = s""""env":{"nproc":$nproc,"loadavg_start":$loadStart,"loadavg_end":$loadEnd}"""
     val base = s""""metric":"total","value":${f"$total%.2f"},"unit":"sec","n":${results.size},"errors":$errsJson,"sf":"$sfDir","full":"$fullPath",$env"""
-    (s"""{$base,"queries":$top}""", s"""{$base,"queries":$qsFull}""")
+    val cgJson = codegen.map { case (k, (n, sec)) =>
+      "\"" + k + "\":{\"compiles\":" + n + ",\"compile_s\":" + r3(sec) + "}"
+    }.mkString("{", ",", "}")
+    (s"""{$base,"queries":$top}""",
+      s"""{$base,"queries":$qsFull,"codegen":$cgJson}""")
   }
+
+  /** Classes compiled and nanoseconds spent compiling so far in this JVM
+    * (Spark's process-wide codegen counters; reading them runs no job).
+    */
+  private def codegenNow(): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -82,10 +97,12 @@ object Bench {
       graft.functions.Bpe.ensureMerges(spark, sfDir)
       System.err.println(f"[bench] bpe vocab fit (one-time, memoized): ${(System.nanoTime() - w0) / 1e9}%.1f s")
     }
+    val codegen = Seq.newBuilder[(String, (Long, Double))]
     val results = selected.map { case (name, fn) =>
       // Guide §1.5: label every query's jobs so event logs / the UI (when
       // enabled for a profiling run) attribute stages to bench rows.
       spark.sparkContext.setJobDescription(s"bench:$name")
+      val (c0, ns0) = codegenNow()
       val t0 = System.nanoTime()
       // noop sink, NOT count(): count() lets the optimizer prune unreferenced
       // branches wholesale (measured: dedup_embedding_cosine's count() plan
@@ -101,7 +118,10 @@ object Bench {
           false
         }
       // Failed queries are reported as -1, never as a healthy wall time.
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      val (c1, ns1) = codegenNow()
+      codegen += name -> ((c1 - c0, (ns1 - ns0) / 1e9))
+      name -> wall
     }
     // The driver's BENCH_r0N.json artifact keeps only the LAST 2000 chars of
     // stdout (measured: every BENCH_r0*.json tail is exactly 2000, and the
@@ -126,7 +146,7 @@ object Bench {
         .split(" ").take(1).mkString
       catch { case _: Throwable => "-1" }
     val (line, fullLine) = summaryLines(results, errors, sfDir, fullPath,
-      cores, loadStart, loadavg())
+      cores, loadStart, loadavg(), codegen.result())
     println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

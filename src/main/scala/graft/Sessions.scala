@@ -19,6 +19,25 @@ import org.apache.spark.sql.SparkSession
   *     not Spark's default 200: at local scale 200 post-shuffle tasks are
   *     pure scheduling overhead; on a real cluster the caller passes the
   *     cluster-appropriate value.
+  *   - `spark.sql.codegen.cache.maxEntries=2000` — Spark keys its compiled-
+  *     class cache on (thread context class loader, generated source) and
+  *     holds 100 entries by default, an LRU. One pass of the six-row
+  *     kernel/Components workload (dedup_minhash, dedup_simhash,
+  *     dedup_clusters, q_text_fingerprint, q_text_bigrams, ml_knn_cosine
+  *     at sf0.01) generates more classes than that, so each row's classes
+  *     were evicted before the next pass reached them: 159–190 compiles
+  *     and 2.0–2.9 s of compile time per 7–9 s warm pass. 2000 holds a
+  *     whole working set; with the clone setting below a warm pass
+  *     recompiles 0–8 classes (4-core VM, Spark 4.1). A static conf, read
+  *     once per JVM when `CodeGenerator` initialises.
+  *   - [[cloned]] sessions run with `spark.sql.artifact.isolation.enabled=
+  *     false`. With isolation on, every session gets its own
+  *     `JobArtifactState` and the executor runs its tasks under a fresh
+  *     class loader, so each per-call clone (dedup_clusters,
+  *     q_graph_pagerank) recompiled all of its classes — 60–106 per
+  *     dedup_clusters call — and those dead entries evicted everyone
+  *     else's. The host session keeps isolation; graft never adds
+  *     artifacts to its private clones.
   */
 object Sessions {
 
@@ -60,6 +79,9 @@ object Sessions {
       // asserts it per-read, this is the supported-construction default.
       .config("spark.sql.parquet.fieldId.write.enabled", "true")
       .config("spark.sql.parquet.fieldId.read.enabled", "true")
+      // Codegen cache sized to a working set of recurring plans (see the
+      // object doc): at the default 100 a warm pass recompiled everything.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
 
   /** Input-proportional shuffle-partition sizing — the heuristic a cluster
     * applies as config (target bytes per shuffle partition), here derived
@@ -141,6 +163,14 @@ object Sessions {
     * Frames plan under the session they were CREATED from, so the clone
     * only isolates work whose frames are built from it — read the inputs
     * through the clone (the registered composite operators do).
+    *
+    * Artifact isolation is off on the clone: its tasks run under the
+    * shared executor class loader, so its generated classes hit the
+    * codegen cache entries earlier calls (and the host) compiled, instead
+    * of a fresh per-session loader recompiling every class on every call.
+    * Set after the copy loop (a parent that set it `true` cannot win) and
+    * before the clone runs anything (the artifact state is computed once,
+    * lazily, per session).
     */
   def cloned(spark: SparkSession): SparkSession = {
     val s2 = spark.newSession()
@@ -148,6 +178,7 @@ object Sessions {
       try s2.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
+    s2.conf.set("spark.sql.artifact.isolation.enabled", "false")
     s2
   }
 
@@ -174,7 +205,10 @@ object Sessions {
     * comparison depends on (UTC session timezone, nanosAsLong) are
     * re-asserted on the live conf here — they apply to an adopted session
     * too. Only the session-construction-time settings (master, shuffle
-    * partitions) remain best-effort in that case.
+    * partitions, codegen cache size) remain best-effort in that case. The
+    * codegen cache size is further read once per JVM, when `CodeGenerator`
+    * first initialises: a JVM that compiled a class before this call keeps
+    * the size it had then.
     */
   def build(master: String, shufflePartitions: Int,
             appName: String = "graft"): SparkSession = {

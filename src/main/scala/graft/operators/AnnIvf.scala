@@ -777,32 +777,26 @@ object AnnIvf {
       val n = indexSize(s, index)
       val nlistEff = if (nlist > 0) nlist
         else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
-      // rerankParts / SPARK_GRAFT_ANN_RERANK_PARTS: 0/unset runs the r16
-      // DEFAULT grouped streaming-top-k shape ([[rerankGrouped]] — no
-      // pair rows, no pair sort, so the pair-spill model below no longer
-      // applies to the default); -1 forces the plain windowed shape and
-      // >0 the salted windowed shape at that partition count — kept as
-      // A/B escape hatches and as the row-identity anchors AnnSpec pins
-      // the grouped kernel against. The param wins over the env.
-      val partsOverride =
-        if (rerankParts != 0) rerankParts
-        else sys.env.get("SPARK_GRAFT_ANN_RERANK_PARTS")
-          .map(_.toInt).getOrElse(0)
-      return if (partsOverride == 0) {
+      // rerankParts: 0 runs the r16 DEFAULT grouped streaming-top-k shape
+      // ([[rerankGrouped]] — no pair rows, no pair sort, so the pair-spill
+      // model below no longer applies to the default); -1 forces the plain
+      // windowed shape and >0 the salted windowed shape at that partition
+      // count — kept as the A/B path and as the row-identity anchors
+      // AnnSpec pins the grouped kernel against.
+      return if (rerankParts == 0) {
         // Bound one (list, probe-group) row: probes-per-list grows as
         // nprobe·sqrt(n), so split past ~8k probes per group (~2 MB of
         // probe structs at dim 64). sf fixtures stay at 1 group.
         val probesPerList = n.toDouble * nprobe / nlistEff
         val groups = math.max(1, math.ceil(probesPerList / 8192.0).toInt)
         rerankGrouped(lists, assignments, k, groups)
-      } else if (partsOverride < 0) {
+      } else if (rerankParts < 0) {
         rerank(lists, assignments, k, broadcastProbes = false)
       } else {
-        val parts = partsOverride
         // salts: ~4 (list, salt) units per partition smooths list-size
         // skew without inflating the candidate replication much.
-        val salts = math.max(1, math.ceil(4.0 * parts / nlistEff).toInt)
-        rerankSalted(lists, assignments, k, salts, parts)
+        val salts = math.max(1, math.ceil(4.0 * rerankParts / nlistEff).toInt)
+        rerankSalted(lists, assignments, k, salts, rerankParts)
       }
     }
     val probes = lists.select(col("vec_id").as("p_id") +: col("embedding").as("p_emb")

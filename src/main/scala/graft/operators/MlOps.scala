@@ -130,7 +130,10 @@ object MlOps extends QueryPack {
     // Built from a private session clone: the iterative pass loop inside
     // (Components.altStar) pins pass-sized shuffle partitions on the
     // frames' session — the clone keeps that pin invisible to concurrent
-    // queries on the host session (Sessions.cloned).
+    // queries on the host session (Sessions.cloned). A clone per call is
+    // cheap: it shares the executor class loader (artifact isolation off),
+    // so its 60–106 generated classes are codegen-cache hits after the
+    // first call instead of a full recompile every call.
     "dedup_clusters" -> ((s, d) =>
       MinHash.dedupClusters(documents(graft.Sessions.cloned(s), d))
         .orderBy(col("doc_id").asc)),

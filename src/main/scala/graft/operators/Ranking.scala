@@ -202,16 +202,13 @@ object Ranking {
     * `memCeilingBytes` of corpus parquet the edge frame is data-sized
     * enough that deserialized row blocks (~3x the columnar footprint —
     * the r13 sf100 OOM forensics) are the wrong trade and the parquet
-    * round-trip above is used. SPARK_GRAFT_EDGE_MAT=mem|parquet overrides
-    * for A/B attribution.
+    * round-trip above is used. An A/B run forces either mode through
+    * `memCeilingBytes` (`Long.MaxValue`: memory; `-1`: parquet).
     */
   private[operators] def materializeAdaptive(df: DataFrame, tag: String,
       dataDir: String, memCeilingBytes: Long = 1L << 30): DataFrame =
-    sys.env.get("SPARK_GRAFT_EDGE_MAT").getOrElse(
-      if (corpusBytes(dataDir) <= memCeilingBytes) "mem" else "parquet") match {
-      case "mem" => df.localCheckpoint(true)
-      case _ => materialize(df, tag)
-    }
+    if (corpusBytes(dataDir) <= memCeilingBytes) df.localCheckpoint(true)
+    else materialize(df, tag)
 
   def tradeEdges(s: SparkSession, d: String): DataFrame = {
     val rel = materializeAdaptive(lineitem(s, d)
@@ -257,7 +254,10 @@ object Ranking {
     // Private session clone: the whole lifecycle (build + pass loop) plans
     // under the clone's SQLConf, so the pass-scoped shuffle-partition pins
     // here and inside pagerank can never leak into a concurrent query on
-    // the host session (ADVICE r14 — the multi-tenant-driver hazard).
+    // the host session (ADVICE r14 — the multi-tenant-driver hazard). The
+    // clone runs without artifact isolation, so its tasks share the
+    // executor class loader and reuse the codegen cache across calls
+    // rather than recompiling every class under a fresh per-session loader.
     val s2 = graft.Sessions.cloned(s)
     graft.Sessions.withShufflePartitions(
       s2, s2.sparkContext.defaultParallelism) {

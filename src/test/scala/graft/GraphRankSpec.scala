@@ -55,6 +55,8 @@ class GraphRankSpec extends AnyFunSuite {
   test("Sessions.cloned: conf pins on the clone are invisible to the parent; runtime confs copy over") {
     val parent = spark
     val before = parent.conf.get("spark.sql.shuffle.partitions")
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val isolationBefore = parent.conf.getOption(isolation)
     val clone = Sessions.cloned(parent)
     assert(clone.conf.get("spark.sql.shuffle.partitions") == before,
       "clone must inherit the parent's runtime conf")
@@ -66,6 +68,19 @@ class GraphRankSpec extends AnyFunSuite {
     assert(clone.conf.get("spark.sql.shuffle.partitions") == before)
     // and the clone shares the SparkContext (executors, block store)
     assert(clone.sparkContext eq parent.sparkContext)
+    // The clone runs without artifact isolation (a clone with its own
+    // executor class loader recompiles every generated class); the parent
+    // keeps its setting.
+    assert(clone.conf.get(isolation) == "false")
+    assert(parent.conf.getOption(isolation) == isolationBefore,
+      "cloning changed the parent's artifact isolation")
+    // A parent that sets isolation explicitly still yields a shared-loader
+    // clone: the copy loop runs before the clone's own setting.
+    val isolated = parent.newSession()
+    isolated.conf.set(isolation, "true")
+    assert(Sessions.cloned(isolated).conf.get(isolation) == "false",
+      "the copied parent value overrode the clone's setting")
+    assert(isolated.conf.get(isolation) == "true")
   }
 
   private def referenceRanks(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
