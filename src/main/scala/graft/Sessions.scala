@@ -30,6 +30,13 @@ import org.apache.spark.sql.SparkSession
   *     whole working set; with the clone setting below a warm pass
   *     recompiles 0–8 classes (4-core VM, Spark 4.1). A static conf, read
   *     once per JVM when `CodeGenerator` initialises.
+  *   - `spark.sql.codegen.useIdInClassName=false` — the cache key is the
+  *     generated source, and by default that source names its class
+  *     after the whole-stage codegen id. AQE numbers stages in the order
+  *     it plans them, so when one stage of a recurring query re-plans
+  *     (a broadcast side chosen by which stage finished first), every
+  *     later stage of that query shifts its id and recompiles unchanged
+  *     code. Without the id only the stages whose code changed miss.
   *   - [[cloned]] sessions run with `spark.sql.artifact.isolation.enabled=
   *     false`. With isolation on, every session gets its own
   *     `JobArtifactState` and the executor runs its tasks under a fresh
@@ -82,6 +89,9 @@ object Sessions {
       // Codegen cache sized to a working set of recurring plans (see the
       // object doc): at the default 100 a warm pass recompiled everything.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // Stage ids out of generated class names, so a recurring pipeline
+      // keeps one cache key (see the object doc).
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   /** Input-proportional shuffle-partition sizing — the heuristic a cluster
     * applies as config (target bytes per shuffle partition), here derived

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by iterated min-label propagation with
@@ -132,10 +133,17 @@ object Components {
     * label-join at all (a star edge u>c IS the assignment u -> c).
     *
     *   - large-star: every neighbor v > u links to min(N(u) ∪ {u}) —
-    *     computed from the symmetrized edge list as one aggregate + join.
+    *     computed from the symmetrized edge list as one per-u window min.
     *   - small-star: with edges held canonically u > v, every smaller
-    *     neighbor (and u itself) links to min(N_<=(u)) — one aggregate +
-    *     join on the halved list.
+    *     neighbor (and u itself) links to min(N_<=(u)) — one per-u window
+    *     min on the halved list.
+    *
+    * A window, not an aggregate joined back to its own input: at small
+    * scale both join sides fit a broadcast, and AQE broadcast whichever
+    * side's stage finished first, so the same pass planned BuildLeft on
+    * one call and BuildRight on the next and every flip recompiled its
+    * stages (CodegenReuseSpec saw 13–22 classes per warm dedup_clusters
+    * call). A window has no build side to choose.
     *
     * Both steps provably preserve connectivity and converge to min-rooted
     * stars in O(log^2 n) rounds (O(log n) in practice on short-diameter
@@ -203,6 +211,7 @@ object Components {
     val passParts = graft.Sessions.iterShufflePartitions(
       prev._1, spark.sparkContext.defaultParallelism)
     graft.Sessions.withShufflePartitions(spark, passParts) {
+    val byU = Window.partitionBy(col("u"))
     var pass = 0
     var converged = prev._1 == 0
     while (pass < maxPasses && !converged) {
@@ -210,14 +219,13 @@ object Components {
       // every strictly-larger neighbor re-links to m(u).
       val sym = e.select(col("u"), col("v"))
         .union(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = canon(sym.join(lsMin, Seq("u")).filter(col("v") > col("u"))
+      val large = canon(sym
+        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
+        .filter(col("v") > col("u"))
         .select(col("v").as("a_id"), col("m").as("b_id")))
       // small-star on the canonical (u > v) list: every smaller neighbor
       // and u itself re-link to the smallest neighbor.
-      val ssMin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val withMin = large.join(ssMin, Seq("u"))
+      val withMin = large.withColumn("m", min(col("v")).over(byU))
       val small = withMin.select(col("v").as("a_id"), col("m").as("b_id"))
         .union(withMin.select(col("u").as("a_id"), col("m").as("b_id")))
       val (e2, cur) = cpChecked(canon(small))

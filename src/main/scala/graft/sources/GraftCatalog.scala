@@ -171,9 +171,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       throw new IllegalArgumentException(
         s"$catName.${ident.name}: no committed version $v " +
           s"(have ${SnapshotStore.versions(tableDir).mkString(", ")})")
-    val entries = SnapshotStore.entriesAt(tableDir, v)
+    val snap = SnapshotStore.snapshot(tableDir, v)
+    val entries = snap.entries
     val hasDvs = entries.exists(_.contains("#dv="))
-    val schema = SnapshotStore.schemaAt(tableDir, v)
+    val schema = snap.manifest.schema
     // Renamed columns resolve by field id — assert the read-side conf
     // whenever the served schema carries ids (no-op otherwise).
     if (schema.exists(s => SnapshotStore.fieldIdsOf(s).nonEmpty))
@@ -189,7 +190,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // unpartitioned files would silently break merge/compact's
     // per-partition cost model.
     val partitioned = entries.exists(_.split('/').exists(_.startsWith("__part=")))
-    val partCol = SnapshotStore.partColOf(tableDir)
+    // The layout of the served version: the current one whenever writes
+    // are allowed at all.
+    val partCol = snap.manifest.layout
     val writable =
       if (asOf.isDefined) Left("time-traveled tables are read-only " +
         "(INSERT goes to the current version)")
@@ -220,9 +223,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       }
       val rows = SnapshotStore.versions(tableDir)
         .filter(v => asOf.forall(v <= _)).map { v =>
-        val entries = SnapshotStore.entriesAt(tableDir, v)
+        val snap = SnapshotStore.snapshot(tableDir, v)
+        val entries = snap.entries
         Row(v, new java.sql.Timestamp(commitMicros(tableDir, v) / 1000L),
-          SnapshotStore.rowsAt(tableDir, v), entries.size,
+          snap.manifest.rows, entries.size,
           entries.count(_.contains("#dv=")))
       }
       new GraftMetaTable(name, StructType(Seq(

@@ -36,42 +36,21 @@ object SnapshotCatalog {
   private val Dir = "_catalog"
 
   private def path(root: String, v: Long): Path =
-    Paths.get(root, Dir, f"v$v%013d.json")
+    Manifest.versionFile(Paths.get(root, Dir), v)
 
-  def versions(root: String): Seq[Long] = {
-    val dir = Paths.get(root, Dir)
-    if (!Files.isDirectory(dir)) return Nil
-    val it = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      it.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
-        .toSeq.sorted
-    } finally it.close()
-  }
+  def versions(root: String): Seq[Long] = Manifest.versionsIn(Paths.get(root, Dir))
 
   def currentVersion(root: String): Option[Long] = versions(root).lastOption
 
   /** The consistent cut: table name → table version at one catalog
-    * version (current unless `asOf`).
+    * version (current unless `asOf`). Only the `tables` map is read;
+    * other top-level fields are ignored.
     */
   def snapshot(root: String, asOf: Option[Long] = None): Map[String, Long] = {
     val v = asOf.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no catalog snapshot at $root"))
-    val txt = new String(Files.readAllBytes(path(root, v)), StandardCharsets.UTF_8)
-    // Scope to the tables MAP (same token discipline as the store's
-    // parseManifest) — an unscoped sweep would silently absorb any future
-    // numeric top-level field into the returned table map. Names are
-    // writer-controlled identifiers (no quotes/escapes/braces, enforced
-    // at publish); versions are plain longs, so the map ends at the first
-    // '}' after the token.
-    val tok = "\"tables\":{"
-    val idx = txt.indexOf(tok)
-    require(idx >= 0, s"malformed catalog manifest at version $v of $root")
-    val region = txt.substring(idx + tok.length, txt.indexOf("}", idx))
-    "\"([^\"]+)\":(-?\\d+)".r.findAllMatchIn(region)
-      .map(m => m.group(1) -> m.group(2).toLong).toMap
+    Manifest.decodeCatalog(Files.readAllBytes(path(root, v))).getOrElse(
+      throw new IllegalArgumentException(s"malformed catalog manifest at version $v of $root"))
   }
 
   /** Atomically publish a new cross-table cut. `expectedBase` carries the
@@ -82,22 +61,15 @@ object SnapshotCatalog {
   def publish(root: String, tables: Map[String, Long],
               expectedBase: Option[Long]): Long = {
     require(tables.nonEmpty, "empty catalog publish")
-    require(tables.keys.forall(n =>
-      !n.contains("\"") && !n.contains("\\") &&
-        !n.contains("{") && !n.contains("}")),
-      "table names must not contain quotes, backslashes, or braces")
     val cur = currentVersion(root)
     if (cur != expectedBase)
       throw new SnapshotStore.SnapshotConflictException(
         s"catalog at $root moved: expected base $expectedBase, found $cur")
     val next = cur.getOrElse(-1L) + 1
-    val body = tables.toSeq.sortBy(_._1)
-      .map { case (n, v) => s""""$n":$v""" }
-      .mkString("""{"tables":{""", ",", "}}")
     val p = path(root, next)
     Files.createDirectories(p.getParent)
     try {
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8),
+      Files.write(p, Manifest.encodeCatalog(tables).getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       next
     } catch {

@@ -66,14 +66,15 @@ object SnapshotRelation {
             partCol: Option[String] = None): DataFrame = {
     val v = asOf.orElse(SnapshotStore.currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val schema = SnapshotStore.schemaAt(root, v).getOrElse(
+    val snap = SnapshotStore.snapshot(root, v)
+    val schema = snap.manifest.schema.getOrElse(
       throw new IllegalStateException(
         s"version $v of $root predates schema recording; use SnapshotStore.read"))
-    val entries = SnapshotStore.entriesAt(root, v)
+    val entries = snap.entries
     if (entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val index = new SnapshotFileIndex(root, v, schema, partCol)
+    val index = new SnapshotFileIndex(snap, partCol)
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = new StructType(),
@@ -204,15 +205,14 @@ object SnapshotRelation {
   }
 }
 
-/** [[FileIndex]] over one pinned version of a [[SnapshotStore]] table.
-  * Planning-time `listFiles` maps the query's pushed filters onto the
-  * manifest's partition/section/range pruning; see [[SnapshotRelation]].
+/** [[FileIndex]] over one pinned, decoded version of a [[SnapshotStore]]
+  * table. Planning-time `listFiles` maps the query's pushed filters onto
+  * the manifest's partition/section/range pruning; see [[SnapshotRelation]].
   */
 private[sources] final class SnapshotFileIndex(
-    root: String, version: Long, schema: StructType,
-    partCol: Option[String]) extends FileIndex {
+    snap: SnapshotStore.Snapshot, partCol: Option[String]) extends FileIndex {
 
-  private val statsColNames = SnapshotStore.statsCols(root)
+  private val root = snap.root
   private def abs(entry: String): java.nio.file.Path =
     Paths.get(root, "data", SnapshotStore.entryPath(entry))
 
@@ -235,19 +235,19 @@ private[sources] final class SnapshotFileIndex(
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val pruned = SnapshotRelation.translate(
-      partitionFilters ++ dataFilters, partCol, statsColNames) match {
+      partitionFilters ++ dataFilters, partCol, snap.manifest.statsCols) match {
       case None => Nil // conjunction provably unsatisfiable
       case Some((parts, ranges)) =>
-        SnapshotStore.prunedFiles(root, version, parts, None, ranges)
+        SnapshotStore.pruned(snap, parts, None, ranges)
     }
     Seq(PartitionDirectory(InternalRow.empty, statuses(pruned).toArray))
   }
 
   override lazy val inputFiles: Array[String] =
-    SnapshotStore.entriesAt(root, version).map(e => abs(e).toString).toArray
+    snap.entries.map(e => abs(e).toString).toArray
 
   override def refresh(): Unit = () // pinned version: nothing to refresh
 
   override lazy val sizeInBytes: Long =
-    SnapshotStore.entriesAt(root, version).map(e => Files.size(abs(e))).sum
+    snap.entries.map(e => Files.size(abs(e))).sum
 }

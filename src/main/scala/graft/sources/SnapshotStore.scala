@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   *     `table/_manifests/v<13-digit>.json` → list of data-file paths
   *     relative to the table root (+ row count for audit, + optional
   *     writer transaction marker, + optional per-file column stats).
+  *     [[Manifest]] is its one model and codec; every operation decodes
+  *     each version it touches once ([[Snapshot]]) and passes it down.
   *   - COMMIT = create-exclusive of the next manifest. `CREATE_NEW` is
   *     atomic on POSIX (and maps to the atomic variants object stores /
   *     HDFS offer); two racing writers race for the same version number
@@ -54,9 +56,6 @@ import org.apache.spark.sql.functions._
 object SnapshotStore {
 
   final class SnapshotConflictException(msg: String) extends RuntimeException(msg)
-
-  private val ManifestDir = "_manifests"
-  private val SectionDir = "sections"
 
   /** Above this file count a commit writes the SECTIONED manifest layout
     * (measured: the flat layout is driver-bound at million-file scale —
@@ -142,28 +141,40 @@ object SnapshotStore {
       .digest(s.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
 
-  private def manifestPath(root: String, version: Long): Path =
-    Paths.get(root, ManifestDir, f"v$version%013d.json")
-
   /** All committed versions, ascending (empty for a non-table path). */
-  def versions(root: String): Seq[Long] = {
-    val dir = Paths.get(root, ManifestDir)
-    if (!Files.isDirectory(dir)) return Nil
-    val it = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      it.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
-        .toSeq.sorted
-    } finally it.close()
-  }
+  def versions(root: String): Seq[Long] =
+    Manifest.versionsIn(Paths.get(root, Manifest.Dir))
 
   def currentVersion(root: String): Option[Long] = versions(root).lastOption
 
   /** Per-file per-column [lo,hi] ranges: file → (column → range). */
-  private[graft] type FileStats = Map[String, Map[String, (Long, Long)]]
+  private[graft] type FileStats = Manifest.FileStats
+
+  /** One version as a single operation holds it: decoded once, then
+    * passed down. A sectioned manifest's entries (and their ranges) are
+    * read from its section files on first use, once; partition-pruned
+    * reads and incremental diffs bypass that and read only the sections
+    * they need.
+    */
+  final class Snapshot private[SnapshotStore] (val root: String, val version: Long,
+                                              val manifest: Manifest) {
+    private lazy val sectioned: Seq[(String, Manifest.Ranges)] =
+      manifest.sections.toSeq.flatten
+        .flatMap { case (_, ref) => Manifest.readSection(root, ref) }.sortBy(_._1)
+    lazy val entries: Seq[String] =
+      if (manifest.sections.isEmpty) manifest.files else sectioned.map(_._1)
+    lazy val ranges: FileStats =
+      if (manifest.sections.isEmpty) manifest.ranges
+      else sectioned.filter(_._2.nonEmpty).toMap
+    def isEmpty: Boolean = manifest.sections.fold(manifest.files.isEmpty)(_.isEmpty)
+  }
+
+  /** Decode `version` of the table at `root`. */
+  def snapshot(root: String, version: Long): Snapshot =
+    new Snapshot(root, version, Manifest.read(root, version))
+
+  private def current(root: String): Option[Snapshot] =
+    currentVersion(root).map(snapshot(root, _))
 
   /** Order-preserving 8-byte-prefix key for STRING stats columns. A
     * string column's per-file range is harvested as the encoding of the
@@ -222,147 +233,18 @@ object SnapshotStore {
     else s"__part=${ExternalCatalogUtils.escapePathName(value.toString)}"
   }
 
-  /** Minimal JSON codec for the manifest: row count, table schema,
-    * optional writer transaction marker, optional per-file column stats,
-    * then the sorted path list. Everything before `"files":[` on purpose
-    * — [[parseManifest]] treats the tail after that token as file
-    * entries. Paths are table-root-relative so the table directory can
-    * be moved/renamed wholesale.
-    */
-  private def renderManifest(files: Seq[String], rows: Long,
-                             stats: Option[(Seq[String], FileStats)],
-                             txn: Option[(String, Long)],
-                             schema: Option[org.apache.spark.sql.types.StructType],
-                             partCol: Option[String],
-                             changeKey: Option[Seq[String]] = None): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val schemaJson = schema.fold("") { st => s""""schema":${q(st.json)},""" } +
-      partColJson(partCol) + changeKeyJson(changeKey)
-    val txnJson = txn.fold("") { case (app, batch) =>
-      s""""txn":{"app":${q(app)},"batch":$batch},"""
-    }
-    val statsJson = stats.fold("") { case (cols, ranges) =>
-      val colsJson = cols.map(q).mkString("[", ",", "]")
-      val rangesJson = ranges.toSeq.sortBy(_._1).map { case (f, byCol) =>
-        val inner = byCol.toSeq.sortBy(_._1)
-          .map { case (c, (lo, hi)) => s"${q(c)}:[$lo,$hi]" }
-          .mkString("{", ",", "}")
-        s"${q(f)}:$inner"
-      }.mkString("{", ",", "}")
-      s""""stats":{"cols":$colsJson,"ranges":$rangesJson},"""
-    }
-    files.sorted.map(q)
-      .mkString(s"""{"rows":$rows,$schemaJson$txnJson$statsJson"files":[""",
-        ",", "]}")
-  }
-
-  /** The layout record as manifest JSON. ALWAYS emits the key (null for
-    * an unpartitioned commit) so [[partColAt]] can distinguish "this
-    * commit declares no partitioning" from "manifest predates the
-    * record" — the latter falls back to the legacy side file.
-    */
-  private def partColJson(partCol: Option[String]): String = partCol match {
-    case Some(c) =>
-      s""""part_col":"${c.replace("\\", "\\\\").replace("\"", "\\\"")}","""
-    case None => """"part_col":null,"""
-  }
-
   /** The partition column recorded IN version `v`'s manifest:
     * `Some(Some(c))` partitioned, `Some(None)` explicitly unpartitioned,
     * `None` when the manifest predates the embedded record (legacy).
     */
-  private[graft] def partColAt(root: String, version: Long): Option[Option[String]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    if (txt.contains(""""part_col":null""")) Some(None)
-    else "\"part_col\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt)
-      .map(m => Some(m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")))
-  }
-
-  /** The row-identity key a keyed commit (MERGE INTO, keyed upsert)
-    * declares in its manifest — what lets [[changes]] pair that commit's
-    * delete+insert rows into update_preimage/update_postimage images (the
-    * Delta CDF contract). Escaped like every other manifest string.
-    */
-  private def changeKeyJson(key: Option[Seq[String]]): String = key match {
-    case Some(cols) if cols.nonEmpty =>
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s""""change_key":${cols.map(q).mkString("[", ",", "]")},"""
-    case _ => ""
-  }
-
-  /** The change key version `v`'s commit declared, if any. */
-  private[graft] def changeKeyAt(root: String, version: Long): Option[Seq[String]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"change_key\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt).map { m =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(m.group(1))
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
-    }.filter(_.nonEmpty)
-  }
-
-  /** Sectioned-layout root manifest: everything EXCEPT per-file data
-    * (rows/schema/txn/declared stats cols), plus the partition-dir →
-    * section-file map. Per-file paths and stats live in the sections.
-    */
-  private def renderSectionedManifest(rows: Long, secRefs: Seq[(String, String)],
-                                      statsColNames: Option[Seq[String]],
-                                      txn: Option[(String, Long)],
-                                      schema: Option[org.apache.spark.sql.types.StructType],
-                                      partCol: Option[String],
-                                      changeKey: Option[Seq[String]] = None): String = {
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val schemaJson = schema.fold("") { st => s""""schema":${q(st.json)},""" } +
-      partColJson(partCol) + changeKeyJson(changeKey)
-    val txnJson = txn.fold("") { case (app, batch) =>
-      s""""txn":{"app":${q(app)},"batch":$batch},"""
-    }
-    val colsJson = statsColNames.fold("") { cols =>
-      s""""stats_cols":${cols.map(q).mkString("[", ",", "]")},"""
-    }
-    secRefs.sortBy(_._1).map { case (pd, ref) => s"${q(pd)}:${q(ref)}" }
-      .mkString(s"""{"rows":$rows,$schemaJson$txnJson$colsJson"sections":{""",
-        ",", "}}")
-  }
+  private[graft] def partColAt(root: String, version: Long): Option[Option[String]] =
+    Manifest.read(root, version).partCol
 
   /** The partition-dir → section-ref map of a sectioned manifest; None
-    * for the flat layout. Partition dirs are hive-path-escaped at write
-    * time (no quotes/backslashes/braces can appear), refs are md5 hex +
-    * ".list", so the map region ends at the first '}' after the token.
+    * for the flat layout.
     */
-  private[graft] def sectionsAt(root: String, version: Long): Option[Seq[(String, String)]] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    val tok = "\"sections\":{"
-    val i = txt.indexOf(tok)
-    if (i < 0) None
-    else {
-      val region = txt.substring(i + tok.length, txt.indexOf("}", i))
-      Some("\"([^\"]*)\":\"([^\"]+)\"".r.findAllMatchIn(region)
-        .map(m => m.group(1) -> m.group(2)).toSeq)
-    }
-  }
-
-  /** One section: newline-separated `path` or `path<TAB>{"col":[lo,hi],…}`
-    * lines — per-file stats ride the section so a pruned read never
-    * touches table-proportional metadata.
-    */
-  private def readSection(root: String, ref: String): Seq[(String, Map[String, (Long, Long)])] = {
-    val txt = new String(
-      Files.readAllBytes(Paths.get(root, ManifestDir, SectionDir, ref)),
-      StandardCharsets.UTF_8)
-    if (txt.isEmpty) Nil
-    else txt.split('\n').toSeq.map { line =>
-      val t = line.indexOf('\t')
-      if (t < 0) line -> Map.empty[String, (Long, Long)]
-      else {
-        val ranges = "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r
-          .findAllMatchIn(line.substring(t + 1))
-          .map(c => c.group(1) -> (c.group(2).toLong, c.group(3).toLong)).toMap
-        line.substring(0, t) -> ranges
-      }
-    }
-  }
+  private[graft] def sectionsAt(root: String, version: Long): Option[Seq[(String, String)]] =
+    Manifest.read(root, version).sections
 
   /** The table schema recorded at `version` — commits write it so reads
     * are inference-free and SCHEMA EVOLUTION works: a file written before
@@ -370,76 +252,15 @@ object SnapshotStore {
     * newer schema (parquet's standard missing-column fill). None only for
     * manifests predating schema recording.
     */
-  def schemaAt(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"schema\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(txt).map { m =>
-      val raw = m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-      org.apache.spark.sql.types.DataType.fromJson(raw)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-  }
+  def schemaAt(root: String, version: Long): Option[org.apache.spark.sql.types.StructType] =
+    Manifest.read(root, version).schema
 
-  /** Per-file per-column ranges recorded at `version` (empty when the
-    * table declares no stats columns). Keys are root-relative paths.
-    */
-  private[graft] def statsAt(root: String, version: Long): FileStats = {
-    sectionsAt(root, version).foreach { refs =>
-      return refs.flatMap { case (_, ref) => readSection(root, ref) }
-        .filter(_._2.nonEmpty).toMap
-    }
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    val tok = "\"ranges\":{"
-    val start = txt.indexOf(tok)
-    if (start < 0) {
-      // Legacy single-column format: "stats":{"file":[lo,hi],...} with no
-      // nested per-column map — written before multi-column ranges. Map
-      // each flat range onto the FIRST declared stats column so pre-change
-      // tables keep their file-skipping (and the next commit re-renders
-      // them in the nested format).
-      val lt = "\"stats\":{"
-      val ls = txt.indexOf(lt)
-      val col0 = statsCols(root).headOption
-      if (ls < 0 || col0.isEmpty) return Map.empty
-      val region = txt.substring(ls + lt.length, txt.indexOf("\"files\":["))
-      return "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r.findAllMatchIn(region)
-        .map(m => m.group(1) ->
-          Map(col0.get -> (m.group(2).toLong, m.group(3).toLong))).toMap
-    }
-    // Region must start AFTER the token: a region including `"ranges":{`
-    // makes the entry regex's first match swallow the "ranges" key plus
-    // the FIRST file's braces — that file's stats silently vanish, and
-    // because every commit re-renders carried stats, the loss compounds
-    // one file per commit (caught by SnapshotStoreSpec's multi-column
-    // strictness assert).
-    val region = txt.substring(start + tok.length, txt.indexOf("\"files\":["))
-    // file entry: "path":{"col":[lo,hi],...} — paths/cols are written by
-    // this object (uuid dirs, percent-escaped partition values, declared
-    // column names): no raw quotes inside either.
-    "\"([^\"]+)\":\\{([^}]*)\\}".r.findAllMatchIn(region).map { m =>
-      val byCol = "\"([^\"]+)\":\\[(-?\\d+),(-?\\d+)\\]".r
-        .findAllMatchIn(m.group(2))
-        .map(c => c.group(1) -> (c.group(2).toLong, c.group(3).toLong)).toMap
-      m.group(1) -> byCol
-    }.toMap
-  }
-
-  /** The declared stats columns (table-level config, set once at create;
-    * order is the [[read]] `keyRange` shorthand's binding: it targets the
+  /** The declared stats columns, as the current manifest records them
+    * (order is the [[read]] `keyRange` shorthand's binding: it targets the
     * FIRST declared column).
     */
-  def statsCols(root: String): Seq[String] = {
-    // 'stats_col' (singular) is the pre-multi-column file name — read it
-    // as a fallback so tables written before the rename keep their
-    // declared column and its file-skipping.
-    val candidates = Seq("stats_cols", "stats_col")
-      .map(n => Paths.get(root, ManifestDir, n))
-    candidates.find(Files.exists(_)).fold(Seq.empty[String]) { p =>
-      new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    }
-  }
+  def statsCols(root: String): Seq[String] =
+    current(root).fold(Seq.empty[String])(_.manifest.statsCols)
 
   /** [lo,hi] per declared stats column across one parquet file, from
     * its FOOTER only (no data read; parquet-hadoop ships with Spark).
@@ -492,51 +313,30 @@ object SnapshotStore {
     finally r.close()
   }
 
-  private def statsFor(root: String, files: Seq[String]): Option[(Seq[String], FileStats)] = {
-    val cols = statsCols(root)
-    if (cols.isEmpty) None
-    else Some(cols -> files.map(f =>
-      f -> fileRanges(Paths.get(root, "data", f), cols))
-      .filter(_._2.nonEmpty).toMap)
-  }
-
-  private def parseManifest(root: String, version: Long): Seq[String] =
-    sectionsAt(root, version) match {
-      case Some(refs) =>
-        refs.flatMap { case (_, ref) => readSection(root, ref).map(_._1) }.sorted
-      case None =>
-        val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-          StandardCharsets.UTF_8)
-        // Scope to the files ARRAY before extracting quoted strings — the
-        // object keys ("rows", "txn", "stats", "files") are quoted too. File
-        // entries are uuid/partition/part-file names: no quotes or escapes
-        // inside, enforced at write time (writeDataFiles controls every
-        // component; partition values are percent-escaped).
-        val arr = txt.substring(txt.indexOf("\"files\":[") + "\"files\":[".length)
-        "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(arr).map(_.group(1)).toSeq
-    }
+  /** Footer ranges of `files` on the declared `cols` (files without any
+    * range are left out).
+    */
+  private def harvest(root: String, cols: Seq[String], files: Seq[String]): FileStats =
+    if (cols.isEmpty) Map.empty
+    else files.map(f => f -> fileRanges(Paths.get(root, "data", f), cols))
+      .filter(_._2.nonEmpty).toMap
 
   /** The manifest-recorded row count of `version` (full snapshots record
     * their exact count; incremental commits record -1 — appends don't
-    * re-count history). Both manifest layouts lead with `"rows":N`.
+    * re-count history).
     */
-  def rowsAt(root: String, version: Long): Long = {
-    val txt = new String(Files.readAllBytes(manifestPath(root, version)),
-      StandardCharsets.UTF_8)
-    "\"rows\":(-?\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-      .getOrElse(-1L)
-  }
+  def rowsAt(root: String, version: Long): Long = Manifest.read(root, version).rows
 
   /** Data-file paths (absolute) of one version. */
   def filesAt(root: String, version: Long): Seq[String] =
-    parseManifest(root, version)
+    entriesAt(root, version)
       .map(rel => Paths.get(root, "data", entryPath(rel)).toString)
 
   /** Raw manifest entries of `version` (root-relative, DV annotations
     * intact) — what [[SnapshotRelation]]'s file index plans over.
     */
   private[graft] def entriesAt(root: String, version: Long): Seq[String] =
-    parseManifest(root, version)
+    snapshot(root, version).entries
 
   /** The most recent batch id committed by writer `appId` at or before the
     * current version — the restarted-streaming-writer replay guard: a
@@ -544,47 +344,14 @@ object SnapshotStore {
     * [[graft.streaming.SnapshotSink]]).
     */
   def lastTxn(root: String, appId: String): Option[Long] = {
-    def q(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val fromLive = versions(root).reverse.iterator.flatMap { v =>
-      val txt = new String(Files.readAllBytes(manifestPath(root, v)),
-        StandardCharsets.UTF_8)
-      TxnRe.findFirstMatchIn(txt)
-        .filter(_.group(1) == q(appId)).map(_.group(2).toLong)
+      Manifest.read(root, v).txn.filter(_._1 == appId).map(_._2)
     }.nextOption()
     // Vacuum may have pruned the manifest that carried this app's latest
     // marker — the checkpoint preserves it (Delta's SetTransaction state),
     // so the exactly-once replay guard survives retention. batchIds are
     // strictly increasing per app, so max is the latest.
-    (fromLive.toSeq ++ txnCheckpoint(root).get(q(appId)).toSeq)
-      .maxOption
-  }
-
-  private val TxnRe =
-    "\"txn\":\\{\"app\":\"((?:[^\"\\\\]|\\\\.)*)\",\"batch\":(-?\\d+)\\}".r
-
-  /** Escaped-app → latest batch markers carried forward by [[vacuum]] out
-    * of pruned manifests. Lives beside the manifests; vacuum never
-    * deletes it.
-    */
-  private def txnCheckpoint(root: String): Map[String, Long] = {
-    val p = Paths.get(root, ManifestDir, "txn_checkpoint.json")
-    if (!Files.exists(p)) Map.empty
-    else {
-      val txt = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      "\"((?:[^\"\\\\]|\\\\.)*)\":(-?\\d+)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-    }
-  }
-
-  private def writeTxnCheckpoint(root: String, state: Map[String, Long]): Unit = {
-    val p = Paths.get(root, ManifestDir, "txn_checkpoint.json")
-    val body = state.toSeq.sortBy(_._1)
-      .map { case (app, b) => s""""$app":$b""" }
-      .mkString("{", ",", "}")
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    (fromLive.toSeq ++ Manifest.readCheckpoint(root).get(appId).toSeq).maxOption
   }
 
   /** Write `df` as immutable parquet under a fresh commit dir; return the
@@ -628,35 +395,36 @@ object SnapshotStore {
                             txn: Option[(String, Long)] = None,
                             schema: Option[org.apache.spark.sql.types.StructType] = None,
                             partCol: Option[String] = None,
-                            changeKey: Option[Seq[String]] = None): Long = {
-    val p = manifestPath(root, next)
+                            changeKey: Option[Seq[String]] = None): Long =
+    publish(root, next, Manifest(rows, schema, Some(partCol), changeKey.getOrElse(Nil),
+      txn, stats.fold(Seq.empty[String])(_._1), files, stats.fold(Map.empty: FileStats)(_._2)))
+
+  /** Create-exclusive write of `m` (flat: `files` + `ranges`) as version
+    * `next`, in the sectioned layout at [[sectionThreshold]] files.
+    */
+  private def publish(root: String, next: Long, m: Manifest): Long = {
+    val p = Manifest.path(root, next)
     Files.createDirectories(p.getParent)
-    val rendered =
-      if (files.length >= sectionThreshold) {
+    val laidOut =
+      if (m.files.length >= sectionThreshold) {
         // Sectioned layout: group by partition dir ("" = unpartitioned),
         // content-address each group. An untouched partition re-renders
         // to the SAME hash → same ref, no write — commit IO is
         // proportional to touched partitions, and incremental diffs skip
         // identical refs wholesale.
-        val statsMap: FileStats = stats.map(_._2).getOrElse(Map.empty)
-        val byPart = files.groupBy(f =>
+        val byPart = m.files.groupBy(f =>
           f.split('/').find(_.startsWith("__part=")).getOrElse(""))
-        val secDir = Paths.get(root, ManifestDir, SectionDir)
-        Files.createDirectories(secDir)
-        val refs = byPart.toSeq.sortBy(_._1).map { case (pd, fs) =>
-          val bodyTxt = fs.sorted.map { f =>
-            val st = statsMap.getOrElse(f, Map.empty)
-            if (st.isEmpty) f
-            else f + "\t" + st.toSeq.sortBy(_._1)
-              .map { case (c, (lo, hi)) => s""""$c":[$lo,$hi]""" }
-              .mkString("{", ",", "}")
-          }.mkString("\n")
+        val refs = byPart.toSeq.map { case (pd, fs) =>
+          val bodyTxt = Manifest.encodeSection(fs.sorted.map(f =>
+            f -> (if (m.statsCols.isEmpty) Map.empty[String, (Long, Long)]
+                  else m.ranges.getOrElse(f, Map.empty))))
           val ref = md5Hex(bodyTxt) + ".list"
-          val sp = secDir.resolve(ref)
+          val sp = Manifest.sectionPath(root, ref)
           if (!Files.exists(sp)) {
             // Content-addressed: two writers racing on the same content
             // produce the same bytes — the lost move is benign.
-            val tmp = secDir.resolve(ref + "." + java.util.UUID.randomUUID() + ".tmp")
+            Files.createDirectories(sp.getParent)
+            val tmp = sp.resolveSibling(ref + "." + java.util.UUID.randomUUID() + ".tmp")
             Files.write(tmp, bodyTxt.getBytes(StandardCharsets.UTF_8))
             try Files.move(tmp, sp, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
             catch { case _: java.nio.file.FileAlreadyExistsException =>
@@ -664,13 +432,11 @@ object SnapshotStore {
           }
           pd -> ref
         }
-        renderSectionedManifest(rows, refs, stats.map(_._1), txn, schema,
-          partCol, changeKey)
-      } else renderManifest(files, rows, stats, txn, schema, partCol, changeKey)
-    val body = rendered.getBytes(StandardCharsets.UTF_8)
+        m.copy(files = Nil, ranges = Map.empty, sections = Some(refs))
+      } else m
     try {
-      Files.write(p, body, StandardOpenOption.CREATE_NEW,
-        StandardOpenOption.WRITE)
+      Files.write(p, Manifest.encode(laidOut).getBytes(StandardCharsets.UTF_8),
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
       next
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -727,7 +493,21 @@ object SnapshotStore {
       txn: Option[(String, Long)],
       schema: Option[org.apache.spark.sql.types.StructType],
       partCol: Option[String] = None,
-      changeKey: Option[Seq[String]] = None): Long = {
+      changeKey: Option[Seq[String]] = None): Long =
+    rebase(root, Option.when(base >= 0)(snapshot(root, base)), replaced, added,
+      conflictOnAddsIn, freshStats.fold(Map.empty: FileStats)(_._2),
+      Manifest(rows, schema, Some(partCol), changeKey.getOrElse(Nil), txn,
+        freshStats.fold(Seq.empty[String])(_._1)))
+
+  /** [[commitRebasing]] over a decoded base (None for a table with no
+    * version yet). `next` carries the new commit's metadata;
+    * its entries are derived here, its ranges are the kept base ranges
+    * plus `fresh` (when it declares stats columns).
+    */
+  private def rebase(root: String, base: Option[Snapshot],
+                     replaced: Seq[String], added: Seq[String],
+                     conflictOnAddsIn: Option[Set[String]],
+                     fresh: FileStats, next: Manifest): Long = {
     val replacedSet = replaced.toSet
     def dirOf(e: String) =
       entryPath(e).split('/').find(_.startsWith("__part=")).getOrElse("")
@@ -735,26 +515,23 @@ object SnapshotStore {
     // manifest recorded (authoritative), or the caller's declaration for
     // writers on legacy/fresh tables.
     val writeLayout: Option[Option[String]] =
-      (if (base >= 0) partColAt(root, base) else None).orElse(
-        Some(partCol).filter(_.isDefined))
+      base.flatMap(_.manifest.partCol)
+        .orElse(Some(next.layout).filter(_.isDefined))
     var b = base
     var attempts = 0
     while (true) {
-      val baseEntries = if (b >= 0) entriesAt(root, b) else Nil
+      val baseEntries = b.fold(Seq.empty[String])(_.entries)
       val kept = baseEntries.filterNot(replacedSet)
       val keptSet = kept.toSet
-      val stats = freshStats.map { case (c, fresh) =>
-        val carried: FileStats =
-          if (b >= 0) statsAt(root, b).filter { case (k, _) => keptSet(k) }
-          else Map.empty
-        c -> (carried ++ fresh)
-      }
-      try return commit(root, b + 1, kept ++ added, rows, stats, txn, schema,
-        partCol, changeKey)
+      val ranges =
+        if (next.statsCols.isEmpty) Map.empty: FileStats
+        else b.fold(Map.empty: FileStats)(_.ranges.filter { case (k, _) => keptSet(k) }) ++ fresh
+      try return publish(root, b.fold(0L)(_.version + 1),
+        next.copy(files = kept ++ added, ranges = ranges))
       catch {
         case conflict: SnapshotConflictException =>
           attempts += 1
-          val cur = currentVersion(root).getOrElse(throw conflict)
+          val cur = current(root).getOrElse(throw conflict)
           // Layout guard: a concurrent overwrite that re-partitioned the
           // table invalidates this write's file layout wholesale — the
           // files were already laid out under the scheme the BASE version
@@ -764,26 +541,24 @@ object SnapshotStore {
           // record skip the guard (side-file world, best effort).
           for {
             was <- writeLayout
-            now <- partColAt(root, cur)
+            now <- cur.manifest.partCol
             if was != now
           } throw new SnapshotConflictException(
             s"concurrent commit re-layouted $root (partition column now " +
               s"${now.getOrElse("<none>")}, this write laid out " +
               s"${was.getOrElse("<none>")}); retry against the new layout")
-          if (attempts > MaxRebases || cur <= b) throw conflict
+          if (attempts > MaxRebases || cur.version <= b.fold(-1L)(_.version)) throw conflict
           // Name+type+order equality: nullability differs legitimately
           // between a Seq-built frame (primitives non-null) and the same
           // table re-read from parquet (everything nullable) — only a real
           // column change is a conflict.
           def shape(s: Option[org.apache.spark.sql.types.StructType]) =
             s.map(_.fields.toSeq.map(f => (f.name, f.dataType)))
-          val okSchema =
-            if (b >= 0) shape(schemaAt(root, cur)) == shape(schemaAt(root, b))
-            else shape(schemaAt(root, cur)) == shape(schema)
-          if (!okSchema) throw new SnapshotConflictException(
-            s"concurrent schema change at $root: this commit derives from " +
-              s"version $b's schema; rebase abandoned")
-          val curEntries = entriesAt(root, cur)
+          if (shape(cur.manifest.schema) != shape(b.fold(next.schema)(_.manifest.schema)))
+            throw new SnapshotConflictException(
+              s"concurrent schema change at $root: this commit derives from " +
+                s"version ${b.fold(-1L)(_.version)}'s schema; rebase abandoned")
+          val curEntries = cur.entries
           val curSet = curEntries.toSet
           val missing = replaced.filterNot(curSet)
           if (missing.nonEmpty) throw new SnapshotConflictException(
@@ -803,10 +578,26 @@ object SnapshotStore {
                   s"commit rewrites at $root (e.g. ${clash.head})")
             case _ => ()
           }
-          b = cur // disjoint: rebase this write set onto the new current
+          b = Some(cur) // disjoint: rebase this write set onto the new current
       }
     }
     -1L // unreachable
+  }
+
+  /** The common incremental commit on top of `base`: rows -1, the base's
+    * declared stats columns carried, `added`'s ranges harvested from
+    * their footers unless `fresh` gives them.
+    */
+  private def commitOn(base: Snapshot, replaced: Seq[String], added: Seq[String],
+                       conflictOnAddsIn: Option[Set[String]],
+                       txn: Option[(String, Long)],
+                       schema: Option[org.apache.spark.sql.types.StructType],
+                       layout: Option[String], changeKey: Seq[String] = Nil,
+                       fresh: Option[FileStats] = None): Long = {
+    val cols = base.manifest.statsCols
+    rebase(base.root, Some(base), replaced, added, conflictOnAddsIn,
+      fresh.getOrElse(harvest(base.root, cols, added)),
+      Manifest(-1L, schema, Some(layout), changeKey, txn, cols))
   }
 
   // -- Column identity (schema evolution beyond add-column) ------------------
@@ -840,8 +631,9 @@ object SnapshotStore {
   /** First id no retained version has ever used (never reuse a dropped
     * column's id — reuse would resurrect its bytes from old files).
     */
-  private def nextColId(root: String): Long = {
-    val used = versions(root).flatMap(v => schemaAt(root, v))
+  private def nextColId(root: String, cur: Option[Snapshot]): Long = {
+    val used = versions(root)
+      .flatMap(v => cur.filter(_.version == v).fold(Manifest.read(root, v))(_.manifest).schema)
       .flatMap(s => fieldIdsOf(s).values)
     if (used.isEmpty) 1L else used.max + 1L
   }
@@ -852,10 +644,9 @@ object SnapshotStore {
     * fresh ids. The metadata rides the frame into the parquet writer
     * (footers get field ids) and into the committed schema.
     */
-  private def stampFieldIds(root: String, df: DataFrame): DataFrame = {
-    val existing = currentVersion(root).flatMap(schemaAt(root, _))
-      .map(fieldIdsOf).getOrElse(Map.empty)
-    var next = nextColId(root)
+  private def stampFieldIds(root: String, cur: Option[Snapshot], df: DataFrame): DataFrame = {
+    val existing = cur.flatMap(_.manifest.schema).map(fieldIdsOf).getOrElse(Map.empty)
+    var next = nextColId(root, cur)
     val cols = df.schema.fields.map { f =>
       val id = existing.getOrElse(f.name, { val n = next; next += 1; n })
       col(f.name).as(f.name, withId(f, id).metadata)
@@ -912,16 +703,16 @@ object SnapshotStore {
     *     parquet files provably serve); refuses on the partition column.
     */
   def alterColumns(root: String, steps: Seq[ColumnChange]): Long = {
-    val base = currentVersion(root).getOrElse(
+    val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
-    if (steps.isEmpty) return base
-    var schema = schemaAt(root, base).getOrElse(throw new IllegalStateException(
+    if (steps.isEmpty) return base.version
+    var schema = base.manifest.schema.getOrElse(throw new IllegalStateException(
       s"$root predates schema recording; overwrite() it first"))
-    var pc = partColOf(root)
-    val stats = statsCols(root)
+    var pc = base.manifest.layout
+    val stats = base.manifest.statsCols
     // Fresh ids allocate cumulatively across the statement's Adds, past
     // every id any retained version ever recorded.
-    var nextId = nextColId(root)
+    var nextId = nextColId(root, Some(base))
     var changed = false
     steps.foreach {
       case ColumnChange.Rename(from, to) =>
@@ -975,9 +766,9 @@ object SnapshotStore {
           changed = true
         }
     }
-    if (!changed) return base // all steps idempotent no-ops
-    commitRebasing(root, base, Nil, Nil, Some(Set.empty), rowsAt(root, base),
-      statsFor(root, Nil), None, Some(schema), pc)
+    if (!changed) return base.version // all steps idempotent no-ops
+    rebase(root, Some(base), Nil, Nil, Some(Set.empty), Map.empty,
+      Manifest(base.manifest.rows, Some(schema), Some(pc), statsCols = stats))
   }
 
   /** RENAME COLUMN as a metadata-only commit — see [[alterColumns]]. */
@@ -1035,12 +826,13 @@ object SnapshotStore {
                 declareStatsCol: Option[String] = None,
                 declareStatsCols: Seq[String] = Nil,
                 txn: Option[(String, Long)] = None): Long = {
-    val declared = declareStatsCols ++ declareStatsCol.toSeq
-    if (declared.nonEmpty) {
-      val p = Paths.get(root, ManifestDir, "stats_cols")
-      Files.createDirectories(p.getParent)
-      Files.write(p, declared.distinct.mkString(",").getBytes(StandardCharsets.UTF_8))
-    }
+    val declared = (declareStatsCols ++ declareStatsCol.toSeq).distinct
+    val vs = versions(root)
+    val cur = vs.lastOption.map(snapshot(root, _))
+    // Declared stats columns ride the manifest like the layout record:
+    // this commit's declaration, else the current one carried forward.
+    val statsCols = if (declared.nonEmpty) declared
+      else cur.fold(Seq.empty[String])(_.manifest.statsCols)
     // The partition column is table METADATA from this commit on (the SQL
     // catalog's INSERT path needs it to reproduce the layout). It rides
     // INSIDE the atomically-published manifest — a failed overwrite
@@ -1054,55 +846,48 @@ object SnapshotStore {
     // Content streams STRAIGHT into the commit's parquet data files — ONE
     // plan execution, no block-store staging. The manifest's exact row
     // count comes from the written files' parquet FOOTERS (metadata-only
-    // reads, same layer statsFor harvests), so count and write agree by
+    // reads, same layer harvest reads), so count and write agree by
     // construction even for non-deterministic sources. (The previous
     // shape localCheckpoint(true)-pinned the full content so a second
     // count() action would see the written rows; block-store rows are
     // ~3x data size — r13 forensics — so a 100 TB initial load would OOM
     // the block store before the write finished.)
-    val stamped = stampFieldIds(root, df)
+    val stamped = stampFieldIds(root, cur, df)
     val files = writeDataFiles(stamped, root, partCol)
     val rows = files.map(f => footerRowCount(Paths.get(root, "data", f))).sum
-    val next = currentVersion(root).getOrElse(-1L) + 1
-    val v = commit(root, next, files, rows, statsFor(root, files),
-      txn, Some(stamped.schema), partCol)
-    // The legacy side file is now shadowed by the manifest record; drop a
-    // stale one so external inspection can't read a contradicting layout.
-    Files.deleteIfExists(Paths.get(root, ManifestDir, "part_col"))
+    val v = publish(root, vs.lastOption.getOrElse(-1L) + 1,
+      Manifest(rows, Some(stamped.schema), Some(partCol), txn = txn, statsCols = statsCols,
+        files = files, ranges = harvest(root, statsCols, files)))
+    // The manifest record is authoritative; the `stats_cols` side file is
+    // only a mirror for readers that predate the record, written after
+    // the commit it describes. A legacy `part_col` side file is shadowed
+    // by the record: drop it so external inspection can't read a
+    // contradicting layout.
+    if (declared.nonEmpty)
+      Files.write(Paths.get(root, Manifest.Dir, "stats_cols"),
+        declared.mkString(",").getBytes(StandardCharsets.UTF_8))
+    Files.deleteIfExists(Paths.get(root, Manifest.Dir, "part_col"))
     v
   }
 
-  /** The table's recorded partition column, if any. Authoritative source
-    * is the CURRENT manifest's embedded `part_col` record (committed
-    * atomically with the file list it describes); tables whose manifests
-    * predate the embedded record fall back to the legacy `_manifests/
-    * part_col` side file (written by [[notePartCol]] backfills). Absent
-    * on pre-record tables and unpartitioned ones.
+  /** The table's recorded partition column, if any: the CURRENT
+    * manifest's embedded `part_col` record (committed atomically with the
+    * file list it describes), or for manifests predating the record the
+    * legacy `part_col` side file. Absent on unpartitioned tables and on
+    * pre-record tables without a side file.
     */
-  def partColOf(root: String): Option[String] =
-    currentVersion(root).flatMap(partColAt(root, _)) match {
-      case Some(recorded) => recorded
-      case None =>
-        val p = Paths.get(root, ManifestDir, "part_col")
-        if (!Files.exists(p)) None
-        else Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim)
-          .filter(_.nonEmpty)
-    }
+  def partColOf(root: String): Option[String] = current(root).flatMap(_.manifest.layout)
 
-  /** Record `c` as the table's partition column if no record exists yet;
-    * fail loudly on a mismatch (one table, one layout — a second
-    * partition column would silently break the per-partition cost model
-    * of merge/compact and the SQL INSERT path).
+  /** Fail loudly when `base` records a partition column other than `c`
+    * (one table, one layout — a second partition column would silently
+    * break the per-partition cost model of merge/compact and the SQL
+    * INSERT path). The commit that follows records `c`.
     */
-  private def notePartCol(root: String, c: String): Unit = partColOf(root) match {
-    case Some(prev) => require(prev == c,
-      s"table at $root is partitioned by '$prev'; a write partitioned by " +
-        s"'$c' would mix layouts (overwrite() re-layouts a table)")
-    case None =>
-      val p = Paths.get(root, ManifestDir, "part_col")
-      Files.createDirectories(p.getParent)
-      Files.write(p, c.getBytes(StandardCharsets.UTF_8))
-  }
+  private def requireLayout(base: Snapshot, c: String): Unit =
+    base.manifest.layout.foreach { prev =>
+      require(prev == c, s"table at ${base.root} is partitioned by '$prev'; " +
+        s"a write partitioned by '$c' would mix layouts (overwrite() re-layouts a table)")
+    }
 
   /** Append-only commit: previous snapshot's files plus the new ones.
     * (rows = -1: the manifest's row count is audit metadata for full
@@ -1118,9 +903,9 @@ object SnapshotStore {
              partCol: Option[String] = None,
              txn: Option[(String, Long)] = None,
              evolveSchema: Boolean = false): Long = {
-    val base = currentVersion(root)
-    val tableSchema = base.map(v => schemaAt(root, v)
-      .getOrElse(read(df.sparkSession, root, Some(v)).schema))
+    val base = current(root)
+    val tableSchema = base.map(b => b.manifest.schema
+      .getOrElse(readAt(df.sparkSession, b).schema))
     val conformed0 = tableSchema.fold(df)(st => conform(df, st, evolveSchema))
     // Evolved (added) columns join the table's column identity with fresh
     // ids — allocated past every id any retained version used, so a
@@ -1130,7 +915,7 @@ object SnapshotStore {
       val extras = conformed0.schema.fields.filterNot(f => known(f.name))
       if (extras.isEmpty || tableSchema.forall(fieldIdsOf(_).isEmpty)) conformed0
       else {
-        var next = nextColId(root)
+        var next = nextColId(root, base)
         conformed0.select(conformed0.schema.fields.map { f =>
           if (known(f.name)) col(f.name)
           else { val id = next; next += 1; col(f.name).as(f.name, withId(f, id).metadata) }
@@ -1140,14 +925,15 @@ object SnapshotStore {
     // Default to the table's recorded layout so callers that don't thread
     // the partition column (the SQL INSERT path) still append partitioned
     // files; an explicit partCol must agree with the record.
-    val pc = partCol.orElse(partColOf(root))
-    pc.foreach(notePartCol(root, _))
+    val pc = partCol.orElse(base.flatMap(_.manifest.layout))
+    for (b <- base; c <- pc) requireLayout(b, c)
     val files = writeDataFiles(conformed, root, pc)
+    val statsCols = base.fold(Seq.empty[String])(_.manifest.statsCols)
     // Blind append: no partition-level read set, so it rebases over ANY
     // concurrent commit (Delta's append-never-conflicts rule) — only a
     // concurrent schema change aborts it.
-    commitRebasing(root, base.getOrElse(-1L), Nil, files, Some(Set.empty),
-      -1L, statsFor(root, files), txn, Some(conformed.schema), pc)
+    rebase(root, base, Nil, files, Some(Set.empty), harvest(root, statsCols, files),
+      Manifest(-1L, Some(conformed.schema), Some(pc), txn = txn, statsCols = statsCols))
   }
 
   /** Cast `df` to the table's column set and types — every commit must
@@ -1200,17 +986,17 @@ object SnapshotStore {
       .isInstanceOf[org.apache.spark.sql.types.TimestampType],
       s"merge partCol '$partCol' is a timestamp: its hive dir rendering " +
         "is timezone-dependent; partition by a date or string rendering instead")
-    val base = currentVersion(root).getOrElse(
+    val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to merge into at $root"))
-    val baseFiles = parseManifest(root, base)
+    val baseFiles = base.entries
     // The kept/replaced split below is a path test on hive partition dirs;
     // a base snapshot NOT partitioned by partCol would silently keep every
     // old file (duplicate keys in affected partitions). Fail loudly instead.
     require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
       s"merge requires a partitioned base snapshot " +
         s"(write it with overwrite(df, root, Some(\"$partCol\")))")
-    notePartCol(root, partCol) // backfill the layout record on pre-record tables
-    val target = read(spark, root, Some(base))
+    requireLayout(base, partCol)
+    val target = readAt(spark, base)
     val cols = target.columns.map(col).toSeq
     val parts = updates.select(col(partCol)).distinct()
     // Null-safe semi join ON THE RENDERED PARTITION CLASS: a plain
@@ -1244,9 +1030,8 @@ object SnapshotStore {
     // Read-modify-write of the affected partitions: rebase over concurrent
     // commits elsewhere; conflict if they touched (rewrote OR appended
     // into) these partitions — the upsert's key-uniqueness read them.
-    commitRebasing(root, base, replaced, newFiles, Some(affectedDirs), -1L,
-      statsFor(root, newFiles), txn, Some(target.schema), Some(partCol),
-      changeKey = Some(Seq(keyCol)))
+    commitOn(base, replaced, newFiles, Some(affectedDirs), txn, Some(target.schema),
+      Some(partCol), Seq(keyCol))
   }
 
   /** Row-level DELETE with snapshot isolation — the GDPR/right-to-be-
@@ -1309,15 +1094,16 @@ object SnapshotStore {
                    content: DataFrame,
                    affectedParts: Option[Seq[Any]],
                    txn: Option[(String, Long)] = None): Long = {
-    val baseFiles = parseManifest(root, baseVersion)
-    val layout = partColOf(root)
+    val base = snapshot(root, baseVersion)
+    val baseFiles = base.entries
+    val layout = base.manifest.layout
     val partitioned = baseFiles.exists(_.split('/').exists(_.startsWith("__part=")))
     require(layout.isDefined || !partitioned,
       s"table at $root is partitioned but predates the part_col record; " +
         "rewrite it with SnapshotStore.overwrite(df, root, Some(col)) first")
     require(affectedParts.isEmpty || layout.isDefined,
       s"partition-scoped replaceWhere needs a partitioned table at $root")
-    val schema = schemaAt(root, baseVersion)
+    val schema = base.manifest.schema
     val conformed = schema.fold(content)(s => conform(content, s))
     // Content streams STRAIGHT into the commit's parquet data files — one
     // plan execution, no driver/block-store staging. (The previous shape
@@ -1333,11 +1119,9 @@ object SnapshotStore {
         val dirs = parts.map(partDir).toSet
         val replaced = baseFiles.filter(_.split('/').exists(dirs.contains))
         if (replaced.isEmpty && newFiles.isEmpty) return baseVersion // no-op
-        commitRebasing(root, baseVersion, replaced, newFiles, Some(dirs), -1L,
-          statsFor(root, newFiles), txn, schema, layout)
+        commitOn(base, replaced, newFiles, Some(dirs), txn, schema, layout)
       case None =>
-        commitRebasing(root, baseVersion, baseFiles, newFiles, None, -1L,
-          statsFor(root, newFiles), txn, schema, layout)
+        commitOn(base, baseFiles, newFiles, None, txn, schema, layout)
     }
   }
 
@@ -1345,12 +1129,12 @@ object SnapshotStore {
              partCol: Option[String] = None,
              txn: Option[(String, Long)] = None,
              deletionVectors: Boolean = false): Long = {
-    val base = currentVersion(root).getOrElse(
+    val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to delete from at $root"))
-    if (deletionVectors) return deleteWithDv(spark, root, predicate, txn, base)
-    val target = read(spark, root, Some(base))
+    if (deletionVectors) return deleteWithDv(spark, base, predicate, txn)
+    val target = readAt(spark, base)
     val keep = !coalesce(predicate, lit(false))
-    val baseFiles = parseManifest(root, base)
+    val baseFiles = base.entries
     partCol match {
       case Some(pc) =>
         require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
@@ -1358,7 +1142,7 @@ object SnapshotStore {
             s"(write it with overwrite(df, root, Some(\"$pc\")))")
         val parts = target.filter(predicate).select(col(pc)).distinct()
         val partVals = parts.collect().map(_.get(0))
-        if (partVals.isEmpty) return base // nothing matches, publish nothing
+        if (partVals.isEmpty) return base.version // nothing matches, publish nothing
         val affectedDirs = partVals.map(partDir).toSet
         def partKey(c: org.apache.spark.sql.Column) =
           when(c.isNull || c.cast("string") === "", lit(null: String))
@@ -1373,14 +1157,14 @@ object SnapshotStore {
           .select(target.columns.map(col).toIndexedSeq: _*), root, Some(pc))
         val replaced = baseFiles.filter(f =>
           f.split('/').exists(affectedDirs.contains))
-        commitRebasing(root, base, replaced, newFiles, Some(affectedDirs),
-          -1L, statsFor(root, newFiles), txn, Some(target.schema), Some(pc))
+        commitOn(base, replaced, newFiles, Some(affectedDirs), txn,
+          Some(target.schema), Some(pc))
       case None =>
-        if (target.filter(predicate).isEmpty) return base
+        if (target.filter(predicate).isEmpty) return base.version
         // Preserve the table's recorded layout: a whole-table delete is a
         // content rewrite, not a re-layouting — survivors land back under
         // the same partition scheme they came from.
-        val layout = partColOf(root)
+        val layout = base.manifest.layout
         // Straight-to-parquet staging (see replaceWhere): a delete matching
         // everything writes no part files -> a zero-file manifest, which
         // read() serves as a schema'd empty frame.
@@ -1388,8 +1172,7 @@ object SnapshotStore {
         // Whole-table rewrite: conflictOnAddsIn = None — any concurrent
         // addition intersects the read set, only version races on an
         // otherwise-unchanged table rebase.
-        commitRebasing(root, base, baseFiles, newFiles, None, -1L,
-          statsFor(root, newFiles), txn, Some(target.schema), layout)
+        commitOn(base, baseFiles, newFiles, None, txn, Some(target.schema), layout)
     }
   }
 
@@ -1416,13 +1199,17 @@ object SnapshotStore {
     * Predicates a caller applies on table columns push down through the
     * DV anti-join into the parquet scan as usual.
     */
-  def positionScan(spark: SparkSession, root: String, version: Long): DataFrame = {
-    val entries = parseManifest(root, version)
-    val schema = schemaAt(root, version)
+  def positionScan(spark: SparkSession, root: String, version: Long): DataFrame =
+    positionScanOf(spark, snapshot(root, version))
+
+  private def positionScanOf(spark: SparkSession, s: Snapshot): DataFrame = {
+    val root = s.root
+    val entries = s.entries
+    val schema = s.manifest.schema
     ensureFieldIdRead(spark, schema)
     if (entries.isEmpty) {
       val st = schema.getOrElse(throw new IllegalStateException(
-        s"version $version of $root has no files and predates schema recording"))
+        s"version ${s.version} of $root has no files and predates schema recording"))
       return spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
         .withColumn("__file", lit(null).cast("string"))
@@ -1443,20 +1230,20 @@ object SnapshotStore {
     }
   }
 
-  private def deleteWithDv(spark: SparkSession, root: String,
+  private def deleteWithDv(spark: SparkSession, base: Snapshot,
                            predicate: org.apache.spark.sql.Column,
-                           txn: Option[(String, Long)], base: Long): Long = {
-    val entries = parseManifest(root, base)
-    if (entries.isEmpty) return base
-    val schema = schemaAt(root, base)
+                           txn: Option[(String, Long)]): Long = {
+    val root = base.root
+    val entries = base.entries
+    if (entries.isEmpty) return base.version
     // Position scan over ALL entries, minus rows existing DVs already
     // deleted (so re-deleting an already-dead row is a no-op, not a
     // duplicate position).
-    val matches = positionScan(spark, root, base)
+    val matches = positionScanOf(spark, base)
       .filter(coalesce(predicate, lit(false)))
       .select(col("__file").as("file"), col("__pos").as("pos"))
       .localCheckpoint(true)
-    if (matches.isEmpty) return base
+    if (matches.isEmpty) return base.version
     val ref = writeDvFile(root, matches)
     // Touched-file list is bounded by the manifest size, never row count.
     val touched = matches.select("file").distinct()
@@ -1466,19 +1253,14 @@ object SnapshotStore {
       renderEntry(entryPath(e), entryDvs(e) :+ ref))
     // Stats re-key onto the annotated entries: deletion only narrows a
     // file's true range, so the recorded [lo,hi] stays a sound bound.
-    val cols = statsCols(root)
-    val fresh = if (cols.isEmpty) None else {
-      val old = statsAt(root, base)
-      Some(cols -> replaced.flatMap { e =>
-        old.get(e).map(v =>
-          renderEntry(entryPath(e), entryDvs(e) :+ ref) -> v)
-      }.toMap)
-    }
+    val fresh = replaced.flatMap { e =>
+      base.ranges.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ ref) -> v)
+    }.toMap
     // File-scoped write set: the DV annotates exactly `replaced`; rebase
     // over concurrent commits that left those entries alone (their
     // positions — parquet row indexes of immutable files — stay valid).
-    commitRebasing(root, base, replaced, annotated, Some(Set.empty), -1L,
-      fresh, txn, schema, partColOf(root))
+    commitOn(base, replaced, annotated, Some(Set.empty), txn, base.manifest.schema,
+      base.manifest.layout, fresh = Some(fresh))
   }
 
   /** Merge-on-read row-level UPDATE / MERGE commit — the deletion-vector
@@ -1518,9 +1300,10 @@ object SnapshotStore {
                  conflictOnAddsIn: Option[Set[String]] = Some(Set.empty),
                  txn: Option[(String, Long)] = None,
                  changeKey: Option[Seq[String]] = None): Long = {
-    val entries = parseManifest(root, baseVersion)
-    val schema = schemaAt(root, baseVersion)
-    val layout = partColOf(root)
+    val base = snapshot(root, baseVersion)
+    val entries = base.entries
+    val schema = base.manifest.schema
+    val layout = base.manifest.layout
     val tableCols = schema.map(_.fieldNames.toSeq)
       .getOrElse(acted.columns.toSeq.filterNot(
         c => c == "__file" || c == "__pos" || c == keepCol))
@@ -1561,17 +1344,12 @@ object SnapshotStore {
       // Stats: untouched carried by commitRebasing; annotated entries
       // re-key their old ranges (deletion only narrows a file's true
       // range); fresh files harvest from their footers.
-      val cols = statsCols(root)
-      val fresh = if (cols.isEmpty) None else {
-        val old = statsAt(root, baseVersion)
-        val rekeyed = ref.toSeq.flatMap(r => replaced.flatMap { e =>
-          old.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ r) -> v)
-        }).toMap
-        val harvested = statsFor(root, newFiles).map(_._2).getOrElse(Map.empty)
-        Some(cols -> (rekeyed ++ harvested))
-      }
-      commitRebasing(root, baseVersion, replaced, annotated ++ newFiles,
-        conflictOnAddsIn, -1L, fresh, txn, schema, layout, changeKey)
+      val rekeyed = ref.toSeq.flatMap(r => replaced.flatMap { e =>
+        base.ranges.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ r) -> v)
+      }).toMap
+      val fresh = rekeyed ++ harvest(root, base.manifest.statsCols, newFiles)
+      commitOn(base, replaced, annotated ++ newFiles, conflictOnAddsIn, txn, schema,
+        layout, changeKey.getOrElse(Nil), Some(fresh))
     } finally {
       if (Files.exists(stagingDir)) {
         import scala.jdk.CollectionConverters._
@@ -1631,27 +1409,34 @@ object SnapshotStore {
            colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
     val v = asOf.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root"))
-    val all = parseManifest(root, v)
+    readAt(spark, snapshot(root, v), partValues, keyRange, colRanges)
+  }
+
+  /** [[read]] of an already-decoded version. */
+  def readAt(spark: SparkSession, s: Snapshot,
+             partValues: Option[Set[String]] = None,
+             keyRange: Option[(Long, Long)] = None,
+             colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
+    // Manifest-recorded schema: inference-free planning, and the schema-
+    // evolution contract — files predating a column scan as null for it.
+    val schema = s.manifest.schema
     // A zero-file version is legitimate (e.g. a streaming writer's empty
     // bootstrap batch, or a delete that emptied the table): serve the
     // manifest-recorded schema as an empty frame instead of failing every
     // later read/merge against the table.
-    if (all.isEmpty) {
-      val st = schemaAt(root, v).getOrElse(throw new IllegalStateException(
-        s"version $v of $root has no files and predates schema recording"))
+    if (s.isEmpty) {
+      val st = schema.getOrElse(throw new IllegalStateException(
+        s"version ${s.version} of ${s.root} has no files and predates schema recording"))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
     }
-    val rels = prunedFiles(root, v, partValues, keyRange, colRanges)
-    // Manifest-recorded schema: inference-free planning, and the schema-
-    // evolution contract — files predating a column scan as null for it.
-    val schema = schemaAt(root, v)
+    val rels = pruned(s, partValues, keyRange, colRanges)
     ensureFieldIdRead(spark, schema)
     if (rels.isEmpty)
       schema.fold(spark.read)(spark.read.schema)
-        .parquet(Paths.get(root, "data", entryPath(all.head)).toString).limit(0)
+        .parquet(Paths.get(s.root, "data", entryPath(s.entries.head)).toString).limit(0)
     else
-      scanEntries(spark, root, rels, schema)
+      scanEntries(spark, s.root, rels, schema)
   }
 
   /** Root-relative files of `version` surviving manifest-level pruning
@@ -1661,44 +1446,29 @@ object SnapshotStore {
   def prunedFiles(root: String, version: Long,
                   partValues: Option[Set[String]] = None,
                   keyRange: Option[(Long, Long)] = None,
-                  colRanges: Map[String, (Long, Long)] = Map.empty): Seq[String] = {
+                  colRanges: Map[String, (Long, Long)] = Map.empty): Seq[String] =
+    pruned(snapshot(root, version), partValues, keyRange, colRanges)
+
+  private[graft] def pruned(s: Snapshot, partValues: Option[Set[String]],
+                            keyRange: Option[(Long, Long)],
+                            colRanges: Map[String, (Long, Long)]): Seq[String] = {
     val effective = colRanges ++ keyRange.flatMap(r =>
-      statsCols(root).headOption.map(_ -> r)).toMap
-    sectionsAt(root, version) match {
-      case Some(refs) =>
+      s.manifest.statsCols.headOption.map(_ -> r)).toMap
+    def inRange(byCol: Manifest.Ranges) = effective.forall { case (c, (lo, hi)) =>
+      byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    }
+    val dirs = partValues.map(_.map(partDir))
+    (s.manifest.sections, dirs) match {
+      case (Some(refs), Some(ds)) =>
         // Lazy by construction: partition pruning selects SECTIONS before
         // any per-file metadata is read — the layout's whole point.
-        val chosen = partValues match {
-          case Some(vals) =>
-            val dirs = vals.map(partDir)
-            refs.filter { case (pd, _) => dirs.contains(pd) }
-          case None => refs
-        }
-        val entries = chosen.flatMap { case (_, ref) => readSection(root, ref) }
-        (if (effective.isEmpty) entries.map(_._1)
-         else entries.collect {
-           case (f, byCol) if effective.forall { case (c, (lo, hi)) =>
-             byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-           } => f
-         }).sorted
-      case None =>
-        val all = parseManifest(root, version)
-        val byPart = partValues match {
-          case Some(vals) =>
-            val dirs = vals.map(partDir)
-            all.filter(_.split('/').exists(dirs.contains))
-          case None => all
-        }
+        refs.filter { case (pd, _) => ds(pd) }
+          .flatMap { case (_, ref) => Manifest.readSection(s.root, ref) }
+          .collect { case (f, byCol) if inRange(byCol) => f }.sorted
+      case _ =>
+        val byPart = dirs.fold(s.entries)(ds => s.entries.filter(_.split('/').exists(ds)))
         if (effective.isEmpty) byPart
-        else {
-          val ranges = statsAt(root, version)
-          byPart.filter { f =>
-            val byCol = ranges.getOrElse(f, Map.empty)
-            effective.forall { case (c, (lo, hi)) =>
-              byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-            }
-          }
-        }
+        else byPart.filter(f => inRange(s.ranges.getOrElse(f, Map.empty)))
     }
   }
 
@@ -1735,24 +1505,31 @@ object SnapshotStore {
               numFiles: Int = 1, sortBy: Seq[String] = Nil,
               zorderBy: Seq[String] = Nil,
               txn: Option[(String, Long)] = None): Long = {
+    val base = current(root).getOrElse(
+      throw new IllegalStateException(s"no snapshot to compact at $root"))
+    compactOn(spark, base, partCol, partValues, numFiles, sortBy, zorderBy, txn)
+  }
+
+  private def compactOn(spark: SparkSession, base: Snapshot, partCol: String,
+                        partValues: Option[Set[String]], numFiles: Int,
+                        sortBy: Seq[String], zorderBy: Seq[String],
+                        txn: Option[(String, Long)]): Long = {
     require(zorderBy.isEmpty || zorderBy.length >= 2,
       "zorderBy takes two or more columns")
     require(zorderBy.isEmpty || sortBy.isEmpty,
       "pass sortBy or zorderBy, not both")
-    val base = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot to compact at $root"))
-    require(parseManifest(root, base)
-      .forall(_.split('/').exists(_.startsWith("__part="))),
+    require(base.entries.forall(_.split('/').exists(_.startsWith("__part="))),
       "compact requires a partitioned base snapshot")
-    notePartCol(root, partCol) // backfill the layout record on pre-record tables
-    val victims = prunedFiles(root, base, partValues)
-    if (victims.isEmpty) return base // nothing to rewrite, publish nothing
+    requireLayout(base, partCol)
+    val victims = pruned(base, partValues, None, Map.empty)
+    if (victims.isEmpty) return base.version // nothing to rewrite, publish nothing
     // Recorded schema: victims predating an evolved column still compact
     // into full-schema files (nulls materialized) instead of silently
     // narrowing the table. DV-aware: compacting an annotated file
     // MATERIALIZES its deletions — the rewrite drops the annotation and
     // the orphaned DV file falls to vacuum.
-    val slice = scanEntries(spark, root, victims, schemaAt(root, base))
+    val schema = base.manifest.schema
+    val slice = scanEntries(spark, base.root, victims, schema)
     val arranged =
       if (zorderBy.nonEmpty) {
         // Quantile-bucket maxes from one tiny aggregate (offline layout
@@ -1774,13 +1551,12 @@ object SnapshotStore {
          else slice.repartition(col(partCol)))
           .sortWithinPartitions(keys: _*)
       }
-    val newFiles = writeDataFiles(arranged, root, Some(partCol))
+    val newFiles = writeDataFiles(arranged, base.root, Some(partCol))
     // Row movement only (no partition-level read set): rebase over
     // concurrent appends anywhere; conflict only if a concurrent commit
     // rewrote one of the victims out from under the compaction.
-    commitRebasing(root, base, victims, newFiles, Some(Set.empty), -1L,
-      statsFor(root, newFiles), txn,
-      schemaAt(root, base).orElse(Some(slice.schema)), Some(partCol))
+    commitOn(base, victims, newFiles, Some(Set.empty), txn,
+      schema.orElse(Some(slice.schema)), Some(partCol))
   }
 
   /** OPTIMIZE — the auto-sized maintenance rewrite behind the SQL
@@ -1801,21 +1577,21 @@ object SnapshotStore {
                zorderBy: Seq[String] = Nil,
                targetFileBytes: Long = 128L << 20,
                txn: Option[(String, Long)] = None): Long = {
-    val base = currentVersion(root).getOrElse(
+    val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to optimize at $root"))
-    val entries = entriesAt(root, base)
-    if (entries.isEmpty) return base
+    val entries = base.entries
+    if (entries.isEmpty) return base.version
     val bytes = entries.map(e =>
       Files.size(Paths.get(root, "data", entryPath(e)))).sum
     val numFiles = math.max(1L,
       math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
-    partColOf(root) match {
+    base.manifest.layout match {
       case Some(pc) =>
-        compact(spark, root, pc, None, numFiles, Nil, zorderBy, txn)
+        compactOn(spark, base, pc, None, numFiles, Nil, zorderBy, txn)
       case None =>
         require(zorderBy.isEmpty || zorderBy.length >= 2,
           "zorderBy takes two or more columns")
-        val schema = schemaAt(root, base)
+        val schema = base.manifest.schema
         val slice = scanEntries(spark, root, entries, schema)
         val arranged =
           if (zorderBy.nonEmpty) {
@@ -1832,8 +1608,7 @@ object SnapshotStore {
           } else slice.repartition(numFiles)
         val newFiles = writeDataFiles(arranged, root, None)
         // Row movement only — same rebase posture as compact.
-        commitRebasing(root, base, entries, newFiles, Some(Set.empty), -1L,
-          statsFor(root, newFiles), txn, schema, None)
+        commitOn(base, entries, newFiles, Some(Set.empty), txn, schema, None)
     }
   }
 
@@ -1850,17 +1625,14 @@ object SnapshotStore {
       if (totalFiles == 0) 0.0 else annotatedFiles.toDouble / totalFiles
   }
 
-  def dvDebt(root: String, version: Option[Long] = None): DvDebt = {
-    version.orElse(currentVersion(root)) match {
-      case None => DvDebt(0, 0, 0L)
-      case Some(v) =>
-        val entries = parseManifest(root, v)
-        val annotated = entries.filter(e => entryDvs(e).nonEmpty)
-        val refs = annotated.flatMap(entryDvs).distinct
-        val dvRows = refs
-          .map(r => footerRowCount(Paths.get(root, DvDir, r))).sum
-        DvDebt(annotated.size, entries.size, dvRows)
-    }
+  def dvDebt(root: String, version: Option[Long] = None): DvDebt =
+    version.orElse(currentVersion(root)).fold(DvDebt(0, 0, 0L))(v => debtOf(snapshot(root, v)))
+
+  private def debtOf(s: Snapshot): DvDebt = {
+    val annotated = s.entries.filter(e => entryDvs(e).nonEmpty)
+    val dvRows = annotated.flatMap(entryDvs).distinct
+      .map(r => footerRowCount(Paths.get(s.root, DvDir, r))).sum
+    DvDebt(annotated.size, s.entries.size, dvRows)
   }
 
   /** Materialize the current version's deletion vectors: rewrite ONLY the
@@ -1875,18 +1647,19 @@ object SnapshotStore {
     * without compact's whole-partition rewrite.
     */
   def materializeDv(spark: SparkSession, root: String,
-                    txn: Option[(String, Long)] = None): Long = {
-    val base = currentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $root"))
-    val entries = parseManifest(root, base)
-    val annotated = entries.filter(e => entryDvs(e).nonEmpty)
-    if (annotated.isEmpty) return base
-    val layout = partColOf(root)
-    val schema = schemaAt(root, base)
-    val rewritten = scanEntries(spark, root, annotated, schema)
-    val newFiles = writeDataFiles(rewritten, root, layout)
-    commitRebasing(root, base, annotated, newFiles, Some(Set.empty), -1L,
-      statsFor(root, newFiles), txn, schema, layout)
+                    txn: Option[(String, Long)] = None): Long =
+    materializeOn(spark, current(root).getOrElse(
+      throw new IllegalStateException(s"no snapshot at $root")), txn)
+
+  private def materializeOn(spark: SparkSession, base: Snapshot,
+                            txn: Option[(String, Long)]): Long = {
+    val annotated = base.entries.filter(e => entryDvs(e).nonEmpty)
+    if (annotated.isEmpty) return base.version
+    val layout = base.manifest.layout
+    val schema = base.manifest.schema
+    val rewritten = scanEntries(spark, base.root, annotated, schema)
+    val newFiles = writeDataFiles(rewritten, base.root, layout)
+    commitOn(base, annotated, newFiles, Some(Set.empty), txn, schema, layout)
   }
 
   /** Debt-driven maintenance trigger — the snapshot store's twin of the
@@ -1904,10 +1677,12 @@ object SnapshotStore {
                maxAnnotatedFraction: Double = 0.3,
                maxDvRows: Long = Long.MaxValue,
                txn: Option[(String, Long)] = None): Option[Long] = {
-    val debt = dvDebt(root)
-    val over = debt.annotatedFiles > 0 &&
-      (debt.annotatedFraction > maxAnnotatedFraction || debt.dvRows > maxDvRows)
-    if (!over) None else Some(materializeDv(spark, root, txn))
+    current(root).flatMap { base =>
+      val debt = debtOf(base)
+      val over = debt.annotatedFiles > 0 &&
+        (debt.annotatedFraction > maxAnnotatedFraction || debt.dvRows > maxDvRows)
+      if (!over) None else Some(materializeOn(spark, base, txn))
+    }
   }
 
   /** RESTORE: publish version `version`'s exact content — file list, DV
@@ -1927,12 +1702,13 @@ object SnapshotStore {
     */
   def restore(root: String, version: Long,
               txn: Option[(String, Long)] = None): Long = {
-    val cur = currentVersion(root).getOrElse(
+    val cur = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to restore at $root"))
-    if (version == cur) return cur
-    require(Files.exists(manifestPath(root, version)),
+    if (version == cur.version) return cur.version
+    require(Files.exists(Manifest.path(root, version)),
       s"version $version does not exist at $root (vacuumed or never committed)")
-    val target = entriesAt(root, version)
+    val restored = snapshot(root, version)
+    val target = restored.entries
     val missingData = target.map(entryPath)
       .filterNot(f => Files.exists(Paths.get(root, "data", f)))
     val missingDv = target.flatMap(entryDvs).distinct
@@ -1941,14 +1717,9 @@ object SnapshotStore {
       s"cannot restore $root to v$version: vacuum already removed " +
         s"${missingData.size} data file(s) and ${missingDv.size} DV file(s) " +
         (missingData ++ missingDv).take(3).mkString("(e.g. ", ", ", ")"))
-    val schema = schemaAt(root, version)
-    val layout = partColAt(root, version).getOrElse(None)
-    val cols = statsCols(root)
-    val stats =
-      if (cols.isEmpty) None
-      else Some(cols -> statsAt(root, version))
-    commitRebasing(root, cur, entriesAt(root, cur), target, None,
-      rowsAt(root, version), stats, txn, schema, layout)
+    val m = restored.manifest
+    rebase(root, Some(cur), cur.entries, target, None, restored.ranges,
+      Manifest(m.rows, m.schema, Some(m.layout), txn = txn, statsCols = cur.manifest.statsCols))
   }
 
   /** Zero-copy shallow CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE`
@@ -1982,11 +1753,12 @@ object SnapshotStore {
                  version: Option[Long] = None): Long = {
     val v = version.orElse(currentVersion(srcRoot)).getOrElse(
       throw new IllegalStateException(s"no snapshot to clone at $srcRoot"))
-    require(Files.exists(manifestPath(srcRoot, v)),
+    require(Files.exists(Manifest.path(srcRoot, v)),
       s"version $v does not exist at $srcRoot (vacuumed or never committed)")
     require(currentVersion(dstRoot).isEmpty,
       s"clone target $dstRoot already has a manifest log")
-    val entries = entriesAt(srcRoot, v)
+    val src = snapshot(srcRoot, v)
+    val entries = src.entries
     def linkInto(sub: String, rel: String): Unit = {
       val src = Paths.get(srcRoot, sub, rel)
       require(Files.exists(src),
@@ -2008,47 +1780,37 @@ object SnapshotStore {
     }
     entries.map(entryPath).foreach(linkInto("data", _))
     entries.flatMap(entryDvs).distinct.foreach(linkInto(DvDir, _))
-    // Declared stats columns are a table-level side record — carry them
-    // so the clone's future commits keep harvesting the same pruning
-    // stats the source declared.
-    val srcStatsCols = statsCols(srcRoot)
-    if (srcStatsCols.nonEmpty) {
-      val p = Paths.get(dstRoot, ManifestDir, "stats_cols")
-      Files.createDirectories(p.getParent)
-      Files.write(p, srcStatsCols.mkString(",")
-        .getBytes(StandardCharsets.UTF_8))
-    }
-    val stats =
-      if (srcStatsCols.isEmpty) None
-      else Some(srcStatsCols -> statsAt(srcRoot, v))
-    commit(dstRoot, 0L, entries, rowsAt(srcRoot, v), stats, None,
-      schemaAt(srcRoot, v), partColAt(srcRoot, v).getOrElse(None))
+    // The declared stats columns ride the clone's manifest, so its future
+    // commits keep harvesting the same pruning stats the source declared.
+    val m = src.manifest
+    publish(dstRoot, 0L, Manifest(m.rows, m.schema, Some(m.layout),
+      statsCols = m.statsCols, files = entries, ranges = src.ranges))
   }
 
   /** Manifest set diff `from` → `to`: (files added, files removed). The
     * incremental-consumer primitive — O(manifest size) driver math, no
     * data read.
     */
-  def changedFiles(root: String, from: Long, to: Long): (Seq[String], Seq[String]) = {
-    (sectionsAt(root, from), sectionsAt(root, to)) match {
+  def changedFiles(root: String, from: Long, to: Long): (Seq[String], Seq[String]) =
+    diff(snapshot(root, from), snapshot(root, to))
+
+  private def diff(from: Snapshot, to: Snapshot): (Seq[String], Seq[String]) = {
+    val (a, b) = (from.manifest.sections, to.manifest.sections) match {
       case (Some(fa), Some(fb)) =>
         // Identical section refs carry identical file sets (content-
         // addressed) — skip them wholesale; the diff parses only TOUCHED
         // partitions' sections. A section's content embeds its partition
         // dir in every path, so equal refs across different partitions
         // cannot occur.
-        val refsA = fa.map(_._2).toSet
-        val refsB = fb.map(_._2).toSet
-        val a = fa.filterNot(s => refsB(s._2))
-          .flatMap(s => readSection(root, s._2).map(_._1)).toSet
-        val b = fb.filterNot(s => refsA(s._2))
-          .flatMap(s => readSection(root, s._2).map(_._1)).toSet
-        ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
-      case _ =>
-        val a = parseManifest(root, from).toSet
-        val b = parseManifest(root, to).toSet
-        ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
+        def touched(mine: Seq[(String, String)], other: Seq[(String, String)]) = {
+          val skip = other.map(_._2).toSet
+          mine.filterNot(s => skip(s._2))
+            .flatMap(s => Manifest.readSection(to.root, s._2).map(_._1)).toSet
+        }
+        (touched(fa, fb), touched(fb, fa))
+      case _ => (from.entries.toSet, to.entries.toSet)
     }
+    ((b -- a).toSeq.sorted, (a -- b).toSeq.sorted)
   }
 
   /** CDC between two versions: the table columns plus `_change_type`
@@ -2067,7 +1829,7 @@ object SnapshotStore {
     * insert+delete churn. The key comes from `updateKey` when the caller
     * passes one, else — for a SINGLE-commit hop (to == from+1) — from the
     * `change_key` the commit itself declared (MERGE INTO records its ON
-    * equi-columns, the keyed upsert its keyCol; see [[changeKeyAt]]).
+    * equi-columns, the keyed upsert its keyCol; see [[Manifest]]).
     * Multi-commit ranges without an explicit key keep the plain
     * insert/delete labeling — different commits may disagree on the key,
     * and a wrong pairing is worse than none. Rows whose key is NULL never
@@ -2085,15 +1847,21 @@ object SnapshotStore {
     * the value-level grouping.
     */
   def changes(spark: SparkSession, root: String, from: Long, to: Long,
-              updateKey: Seq[String] = Nil): DataFrame = {
-    val (added, removed) = changedFiles(root, from, to)
+              updateKey: Seq[String] = Nil): DataFrame =
+    changesOf(spark, snapshot(root, from), snapshot(root, to), updateKey)
+
+  /** [[changes]] between two already-decoded versions of one table. */
+  def changesOf(spark: SparkSession, fromV: Snapshot, toV: Snapshot,
+                updateKey: Seq[String] = Nil): DataFrame = {
+    val (root, from, to) = (toV.root, fromV.version, toV.version)
+    val (added, removed) = diff(fromV, toV)
     // Both sides scan under the TO version's schema so the delta is
     // union-compatible even across a schema-evolving commit (old files
     // yield nulls for columns added since `from`).
-    val schema = schemaAt(root, to)
+    val schema = toV.manifest.schema
     def scan(fs: Seq[String]): DataFrame = {
       if (fs.isEmpty)
-        (parseManifest(root, to) ++ parseManifest(root, from)).headOption match {
+        (toV.entries ++ fromV.entries).headOption match {
           case Some(any) =>
             schema.fold(spark.read)(spark.read.schema)
               .parquet(Paths.get(root, "data", entryPath(any)).toString).limit(0)
@@ -2113,7 +1881,7 @@ object SnapshotStore {
     val del = r.exceptAll(a)
     val key: Seq[String] =
       if (updateKey.nonEmpty) updateKey
-      else if (to == from + 1) changeKeyAt(root, to).getOrElse(Nil)
+      else if (to == from + 1) toV.manifest.changeKey
       else Nil
     if (key.isEmpty || !key.forall(a.columns.contains))
       ins.withColumn("_change_type", lit("insert"))
@@ -2153,22 +1921,18 @@ object SnapshotStore {
              minAgeMs: Long = 15L * 60 * 1000): Unit = {
     val vs = versions(root)
     val dead = vs.dropRight(keepVersions)
-    val live = vs.takeRight(keepVersions)
-    val liveEntries = live.flatMap(parseManifest(root, _))
+    val live = vs.takeRight(keepVersions).map(snapshot(root, _))
+    val liveEntries = live.flatMap(_.entries)
     val referenced = liveEntries.map(entryPath).toSet
     // Harvest txn markers out of the manifests about to be pruned so
     // lastTxn's exactly-once contract survives retention (a compaction or
     // other writer's commits can push an app's latest marker out of the
     // keep window).
-    val harvested = dead.flatMap { v =>
-      val txt = new String(Files.readAllBytes(manifestPath(root, v)),
-        StandardCharsets.UTF_8)
-      TxnRe.findFirstMatchIn(txt).map(m => m.group(1) -> m.group(2).toLong)
-    }
+    val harvested = dead.flatMap(v => Manifest.read(root, v).txn)
     if (harvested.nonEmpty) {
-      val merged = (txnCheckpoint(root).toSeq ++ harvested)
+      val merged = (Manifest.readCheckpoint(root).toSeq ++ harvested)
         .groupBy(_._1).map { case (app, bs) => app -> bs.map(_._2).max }
-      writeTxnCheckpoint(root, merged)
+      Manifest.writeCheckpoint(root, merged)
     }
     val cutoff = System.currentTimeMillis() - minAgeMs
     val dataDir = Paths.get(root, "data")
@@ -2225,9 +1989,8 @@ object SnapshotStore {
     // Section GC: drop section files no LIVE manifest references, same
     // age guard (an in-flight commit writes its sections before its
     // manifest exists).
-    val liveSecs = live.flatMap(v =>
-      sectionsAt(root, v).map(_.map(_._2)).getOrElse(Nil)).toSet
-    val secDir = Paths.get(root, ManifestDir, SectionDir)
+    val liveSecs = live.flatMap(_.manifest.sections.toSeq.flatten.map(_._2)).toSet
+    val secDir = Paths.get(root, Manifest.Dir, Manifest.SectionDir)
     if (Files.isDirectory(secDir)) {
       val it = Files.list(secDir)
       try it.iterator().asScala
@@ -2236,6 +1999,6 @@ object SnapshotStore {
         .toList.foreach(Files.delete)
       finally it.close()
     }
-    dead.foreach(v => Files.deleteIfExists(manifestPath(root, v)))
+    dead.foreach(v => Files.deleteIfExists(Manifest.path(root, v)))
   }
 }

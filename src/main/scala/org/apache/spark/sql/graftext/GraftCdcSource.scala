@@ -201,12 +201,16 @@ private[graftext] final class GraftCdcSource(spark: ClassicSession,
     }
     val vs = SnapshotStore.versions(root)
     val from = start.map(offsetValue).orElse(startAfter)
+    // Each version is decoded once per batch: commit v's delta and commit
+    // v+1's share manifest v.
+    val decoded = scala.collection.mutable.Map.empty[Long, SnapshotStore.Snapshot]
+    def at(v: Long) = decoded.getOrElseUpdate(v, SnapshotStore.snapshot(root, v))
     // A v0 commit's delta IS its full content (there is no base manifest).
     def deltaOf(v: Long): DataFrame =
-      if (v == 0L) SnapshotStore.read(spark, root, Some(0L))
+      if (v == 0L) SnapshotStore.readAt(spark, at(0L))
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(0L))
-      else SnapshotStore.changes(spark, root, v - 1, v)
+      else SnapshotStore.changesOf(spark, at(v - 1), at(v))
         .withColumn("_commit_version", lit(v))
     val pieces: Seq[DataFrame] = from match {
       case Some(f) =>
@@ -225,7 +229,7 @@ private[graftext] final class GraftCdcSource(spark: ClassicSession,
       case None =>
         val v0 = vs.headOption.getOrElse(throw new IllegalStateException(
           s"graft-cdc: no committed snapshot at $root"))
-        val bootstrap = SnapshotStore.read(spark, root, Some(v0))
+        val bootstrap = SnapshotStore.readAt(spark, at(v0))
           .withColumn("_change_type", lit("insert"))
           .withColumn("_commit_version", lit(v0))
         bootstrap +: vs.filter(v => v > v0 && v <= endV).map(deltaOf)
