@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -8,27 +8,27 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graftext.Schemas
 import org.apache.spark.sql.types._
 
-/** Catalyst-integrated reads over a [[SnapshotStore]] table.
+/** How a [[SnapshotStore]] table is scanned: every read of the store —
+  * [[SnapshotStore.read]], CDC, the copy-on-write writers' rewrites, the
+  * position scans and the deletion-vector sidecars — is an ordinary
+  * parquet `HadoopFsRelation` over a [[SnapshotFileIndex]], the way the
+  * lakehouse formats do it (Delta's TahoeFileIndex / Iceberg's
+  * SparkScanBuilder): the manifest IS the listing. The index holds the
+  * candidate entries (a caller's manifest-pruned list, or all entries),
+  * stats them once when the frame is built — so a vacuumed file fails the
+  * read that names it — and never lists a directory or starts a job.
   *
-  * [[SnapshotStore.read]] prunes files from predicates the CALLER passes
-  * explicitly (`partValues` / `colRanges`) — correct, but it forks the
-  * query API: an operator composing over a snapshot table has to thread
-  * its filters to the read call by hand, and anything Catalyst derives
-  * later (a pushed-down join bound, a constant-folded predicate) never
-  * reaches the manifest. This module closes that gap the way the
-  * lakehouse formats do (Delta's TahoeFileIndex / Iceberg's
-  * SparkScanBuilder): a custom [[FileIndex]] backs an ordinary
-  * parquet `HadoopFsRelation`, and `listFiles` — invoked by
-  * `FileSourceStrategy` at PLANNING time with the query's own pushed
-  * data filters — translates those Catalyst expressions into the
-  * manifest's partition-dir + per-file-range pruning. An ordinary
-  * `df.filter($"k" === x)` then skips files with zero caller
-  * cooperation, and every Spark optimization over file sources
-  * (column pruning, filter pushdown into row groups, DPP on the
-  * partition dirs' redundant data column) applies unchanged.
+  * `listFiles` — invoked by `FileSourceStrategy` at PLANNING time with
+  * the query's own pushed data filters — translates those Catalyst
+  * expressions into the manifest's partition-dir + per-file-range
+  * pruning on top of the caller's. An ordinary `df.filter($"k" === x)`
+  * then skips files with zero caller cooperation, and every Spark
+  * optimization over file sources (column pruning, filter pushdown into
+  * row groups, DPP on the partition dirs' redundant data column) applies
+  * unchanged.
   *
   * Soundness: translation is CONSERVATIVE. A conjunct it cannot map
   * (wrong type, non-stats column, non-literal bound) prunes nothing —
@@ -38,70 +38,47 @@ import org.apache.spark.sql.types._
   * same rule [[SnapshotStore.prunedFiles]] applies; files without a
   * recorded range are always read.
   *
-  * Deletion vectors: a version whose entries carry DV sidecars gets the
-  * same `(file, row_index)` anti-join [[SnapshotStore.read]] applies,
-  * layered ON TOP of the relation — filters on data columns still push
-  * below the (left-anti) join into the scan, so manifest pruning
-  * composes with merge-on-read deletes.
+  * Deletion vectors: entries carrying DV sidecars get the `(file,
+  * row_index)` anti-join layered ON TOP of their relation — filters on
+  * data columns still push below the (left-anti) join into the scan, so
+  * manifest pruning composes with merge-on-read deletes.
   *
-  * 100 TB: this is the read path that makes the snapshot layer a Spark
-  * citizen at scale — planning-time file pruning from the sectioned
-  * manifest (partition-scoped section reads) rather than an
-  * enumerate-then-filter of a million FileStatuses, and the relation's
-  * `sizeInBytes` reflects the PRUNED table so join-strategy sizing
-  * (broadcast decisions) sees the real scan volume.
+  * The relation's `sizeInBytes` is the candidates' bytes, so
+  * join-strategy sizing (broadcast decisions) sees the real scan volume.
   */
 object SnapshotRelation {
 
   /** The table as a DataFrame whose scan prunes files at planning time
-    * from ordinary query filters (see object doc).
+    * from ordinary query filters — [[SnapshotStore.read]] of `asOf` (or
+    * the current version).
     *
-    * @param partCol the logical column the table is hive-partitioned by
-    *   (the writer's `partCol`; not persisted by the store, same contract
-    *   as [[SnapshotStore.merge]]). Equality/IN filters on it prune whole
-    *   partition dirs — with a sectioned manifest, without reading the
-    *   non-matching sections at all.
+    * @param partCol the column equality/IN filters prune partition dirs
+    *   by; defaults to the layout the manifest records. Name it only for
+    *   a table whose manifest predates the layout record.
     */
   def frame(spark: SparkSession, root: String, asOf: Option[Long] = None,
-            partCol: Option[String] = None): DataFrame = {
-    val v = asOf.orElse(SnapshotStore.currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    val snap = SnapshotStore.snapshot(root, v)
-    val schema = snap.manifest.schema.getOrElse(
-      throw new IllegalStateException(
-        s"version $v of $root predates schema recording; use SnapshotStore.read"))
-    val entries = snap.entries
-    if (entries.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val index = new SnapshotFileIndex(snap, partCol)
-    val relation = HadoopFsRelation(
-      location = index,
+            partCol: Option[String] = None): DataFrame =
+    SnapshotStore.readAt(spark, SnapshotStore.pinned(root, asOf), partCol = partCol)
+
+  /** The parquet relation over `candidates` (entries relative to `dir`,
+    * each with its recorded ranges), read under `schema` made nullable —
+    * as a user-given schema is in any parquet read, so files predating a
+    * column scan it as null.
+    */
+  private[sources] def scan(spark: SparkSession, dir: Path,
+                            candidates: Seq[(String, Manifest.Ranges)], schema: StructType,
+                            partCol: Option[String], statsCols: Seq[String]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      location = new SnapshotFileIndex(dir, candidates, partCol, statsCols),
       partitionSchema = new StructType(),
-      dataSchema = schema,
+      dataSchema = Schemas.asNullable(schema),
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-    val base = spark.baseRelationToDataFrame(relation)
-    val dvRefs = entries.flatMap(SnapshotStore.entryDvs).distinct
-    if (dvRefs.isEmpty) base
-    else {
-      // Merge-on-read: mask DV'd (file, row_index) pairs exactly like
-      // SnapshotStore.scanEntries. Applied over ALL rows (a DV pair can
-      // only match its own file, so plain files pass untouched) — one
-      // scan, and the left-anti join keeps data filters pushable.
-      val dv = spark.read
-        .parquet(dvRefs.map(r =>
-          Paths.get(root, SnapshotStore.DvDir, r).toString): _*)
-        .select(col("file").as("__file"), col("pos").as("__pos"))
-      base
-        .withColumn("__file",
-          expr("substring_index(_metadata.file_path, '/data/', -1)"))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(dv, Seq("__file", "__pos"), "left_anti")
-        .drop("__file", "__pos")
-    }
-  }
+      options = Map.empty)(spark))
+
+  /** The status of one local file; throws when it does not exist. */
+  private[sources] def status(p: Path): FileStatus =
+    new FileStatus(Files.size(p), false, 1, 128L << 20, 0L, new HPath(p.toUri))
 
   /** Conjunctive filter translation: Catalyst expressions → the store's
     * (partition values, per-column key ranges). Returns None when the
@@ -205,22 +182,21 @@ object SnapshotRelation {
   }
 }
 
-/** [[FileIndex]] over one pinned, decoded version of a [[SnapshotStore]]
-  * table. Planning-time `listFiles` maps the query's pushed filters onto
-  * the manifest's partition/section/range pruning; see [[SnapshotRelation]].
+/** [[FileIndex]] over a fixed set of manifest entries (see
+  * [[SnapshotRelation]]): `dir` is the directory entries are relative to,
+  * each candidate carries its recorded per-column ranges. Planning-time
+  * `listFiles` maps the query's pushed filters onto partition-dir and
+  * range pruning of the candidates.
   */
 private[sources] final class SnapshotFileIndex(
-    snap: SnapshotStore.Snapshot, partCol: Option[String]) extends FileIndex {
+    dir: Path, candidates: Seq[(String, Manifest.Ranges)],
+    partCol: Option[String], statsCols: Seq[String]) extends FileIndex {
 
-  private val root = snap.root
-  private def abs(entry: String): java.nio.file.Path =
-    Paths.get(root, "data", SnapshotStore.entryPath(entry))
-
-  private def statuses(entries: Seq[String]): Seq[FileStatus] =
-    entries.map { e =>
-      val p = abs(e)
-      new FileStatus(Files.size(p), false, 1, 128L << 20, 0L,
-        new HPath(p.toUri))
+  // Stat every candidate now: a vacuumed or missing file fails the read
+  // that names it, not a later action.
+  private val files: Seq[(String, Manifest.Ranges, FileStatus)] =
+    candidates.map { case (e, r) =>
+      (e, r, SnapshotRelation.status(dir.resolve(SnapshotStore.entryPath(e))))
     }
 
   // All data columns live in the files (the writer duplicates the
@@ -229,25 +205,22 @@ private[sources] final class SnapshotFileIndex(
   // data filter — partition-dir pruning happens inside translate.
   override def partitionSchema: StructType = new StructType()
 
-  override def rootPaths: Seq[HPath] =
-    Seq(new HPath(Paths.get(root, "data").toUri))
+  override def rootPaths: Seq[HPath] = Seq(new HPath(dir.toUri))
 
   override def listFiles(partitionFilters: Seq[Expression],
-                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val pruned = SnapshotRelation.translate(
-      partitionFilters ++ dataFilters, partCol, snap.manifest.statsCols) match {
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    SnapshotRelation.translate(partitionFilters ++ dataFilters, partCol, statsCols) match {
       case None => Nil // conjunction provably unsatisfiable
       case Some((parts, ranges)) =>
-        SnapshotStore.pruned(snap, parts, None, ranges)
+        val keep = SnapshotStore.selects(parts, ranges)
+        Seq(PartitionDirectory(InternalRow.empty,
+          files.collect { case (e, r, st) if keep((e, r)) => st }.toArray))
     }
-    Seq(PartitionDirectory(InternalRow.empty, statuses(pruned).toArray))
-  }
 
   override lazy val inputFiles: Array[String] =
-    snap.entries.map(e => abs(e).toString).toArray
+    files.map { case (e, _, _) => dir.resolve(SnapshotStore.entryPath(e)).toString }.toArray
 
-  override def refresh(): Unit = () // pinned version: nothing to refresh
+  override def refresh(): Unit = () // fixed entries: nothing to refresh
 
-  override lazy val sizeInBytes: Long =
-    snap.entries.map(e => Files.size(abs(e))).sum
+  override lazy val sizeInBytes: Long = files.map(_._3.getLen).sum
 }

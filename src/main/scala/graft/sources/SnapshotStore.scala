@@ -2,8 +2,11 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Snapshot-isolated table layout over plain parquet — the transactional
   * core a lakehouse format (Iceberg/Delta) adds on top of exactly the
@@ -45,7 +48,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: a commit writes the NEW data files plus one manifest
   * (KBs–MBs of file names), never rewrites history; a read adds one
-  * directory listing + one manifest parse over the plain-parquet cost.
+  * manifest parse and one stat per candidate file over the plain-parquet
+  * cost — the manifest is the listing ([[SnapshotRelation]]), so no
+  * directory is listed and no listing job runs.
   * Partition-grained replacement keeps merge cost proportional to touched
   * partitions, same as the non-transactional sink. What a real format
   * adds beyond this core — manifest trees for million-file tables,
@@ -95,46 +100,88 @@ object SnapshotStore {
   private def renderEntry(path: String, dvs: Seq[String]): String =
     if (dvs.isEmpty) path else path + "#dv=" + dvs.mkString(";")
 
-  /** DV-aware scan of manifest entries: plain entries read as a direct
-    * multi-path parquet scan (full pushdown, zero overhead); annotated
-    * entries anti-join their positions against the union of their DV
-    * files on (file, row_index) — the merge-on-read path, which
-    * [[compact]] collapses back to plain files. The file identity rides
-    * `_metadata.file_path`'s root-relative tail, matching the writer's
-    * manifest rendering (every component under data/ is writer-
-    * controlled, so '/data/' cannot recur inside a path).
+  /** DV-aware scan of manifest entries (each with its recorded ranges)
+    * of `s`'s table under `schema` (default: `s`'s, see [[schemaOf]]):
+    * plain entries read as one parquet relation over the manifest
+    * ([[SnapshotRelation.scan]]: no listing, full pushdown); annotated
+    * entries get a second relation masked by [[dvMask]] — the
+    * merge-on-read path, which [[compact]] collapses back to plain files.
+    * `partCol` is the column whose filters prune partition dirs at
+    * planning time (default: the recorded layout). With `rowIds` the
+    * result is one masked relation keeping `__file`/`__pos` (see
+    * [[positionScan]]).
     */
-  private def scanEntries(spark: SparkSession, root: String,
-                          entries: Seq[String],
-                          schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val reader = schema.fold(spark.read)(spark.read.schema)
-    def paths(es: Seq[String]) =
-      es.map(e => Paths.get(root, "data", entryPath(e)).toString)
-    val (dvE, plainE) = entries.partition(e => entryDvs(e).nonEmpty)
-    val plain =
-      if (plainE.isEmpty) None else Some(reader.parquet(paths(plainE): _*))
-    val masked = if (dvE.isEmpty) None else {
-      val refs = dvE.flatMap(entryDvs).distinct
-      val dv = spark.read
-        .parquet(refs.map(r => Paths.get(root, DvDir, r).toString): _*)
-        .select(col("file").as("__file"), col("pos").as("__pos"))
-      val scan = reader.parquet(paths(dvE): _*)
-        .withColumn("__file",
-          expr("substring_index(_metadata.file_path, '/data/', -1)"))
-        .withColumn("__pos", col("_metadata.row_index"))
-      // No broadcast hint: DV parquet sizes are visible to Catalyst, so
-      // the (typically tiny) DV side broadcasts on its own stats and a
-      // pathological huge DV still gets a sane shuffled anti-join.
-      Some(scan.join(dv, Seq("__file", "__pos"), "left_anti")
-        .drop("__file", "__pos"))
-    }
-    (plain, masked) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (Some(a), None) => a
-      case (None, Some(b)) => b
-      case (None, None) => throw new IllegalStateException("scanEntries on empty list")
-    }
+  private def scanEntries(spark: SparkSession, s: Snapshot,
+                          entries: Seq[(String, Manifest.Ranges)],
+                          schema: Option[StructType] = None,
+                          partCol: Option[String] = None,
+                          rowIds: Boolean = false): DataFrame = {
+    val st = schema.getOrElse(schemaOf(spark, s.root, s.manifest.schema, s.entries))
+    ensureFieldIdRead(spark, Some(st))
+    def rel(es: Seq[(String, Manifest.Ranges)]) =
+      SnapshotRelation.scan(spark, Paths.get(s.root, "data"), es, st,
+        partCol.orElse(s.manifest.layout), s.manifest.statsCols)
+    if (rowIds) return dvMask(spark, s.root, withRowId(rel(entries)), entries.map(_._1))
+    val (dvE, plainE) = entries.partition(e => entryDvs(e._1).nonEmpty)
+    if (dvE.isEmpty) return rel(plainE)
+    val masked = dvMask(spark, s.root, withRowId(rel(dvE)), dvE.map(_._1))
+      .drop("__file", "__pos")
+    if (plainE.isEmpty) masked else rel(plainE).unionByName(masked)
   }
+
+  /** `df`, a scan of data files, with its physical row identity: `__file`,
+    * the root-relative path from `_metadata.file_path`'s tail (every
+    * component under data/ is writer-controlled, so '/data/' cannot recur
+    * inside a path; URI-encoded as that column is, see [[owners]]), and
+    * `__pos`, the parquet row index.
+    */
+  private def withRowId(df: DataFrame): DataFrame =
+    df.withColumn("__file", expr("substring_index(_metadata.file_path, '/data/', -1)"))
+      .withColumn("__pos", col("_metadata.row_index"))
+
+  /** The entries owning the `__file` row ids `files` (one string column)
+    * holds — bounded by the manifest size, never row count. A row id is
+    * URI-encoded and an entry is not: a partition dir the writer escaped
+    * (`__part=a%3Ab`) reads back as `__part=a%253Ab`, so ids are decoded
+    * before matching.
+    */
+  private def owners(entries: Seq[String], files: DataFrame): Seq[String] = {
+    val ids = files.distinct().collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+    entries.filter(e => ids(entryPath(e)))
+  }
+
+  /** The deletion-vector mask: rows of `df` (carrying `__file`/`__pos`)
+    * whose position no DV sidecar annotating `entries` deletes. A DV pair
+    * can only match its own file, so rows of plain files pass untouched.
+    * No broadcast hint: the DV relation's size is visible to Catalyst, so
+    * the (typically tiny) DV side broadcasts on its own stats and a
+    * pathological huge DV still gets a sane shuffled anti-join.
+    */
+  private def dvMask(spark: SparkSession, root: String, df: DataFrame,
+                     entries: Seq[String]): DataFrame = {
+    val refs = entries.flatMap(entryDvs).distinct
+    if (refs.isEmpty) df
+    else df.join(SnapshotRelation.scan(spark, Paths.get(root, DvDir), refs.map(_ -> Map.empty),
+        DvSchema, None, Nil).select(col("file").as("__file"), col("pos").as("__pos")),
+      Seq("__file", "__pos"), "left_anti")
+  }
+
+  /** Columns of a DV sidecar: data file (root-relative) and row index. */
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** The schema a version is read under: the recorded one, else — a
+    * manifest predating schema recording — inferred once from the first
+    * of `entries`, as a plain parquet read does without `mergeSchema`.
+    */
+  private def schemaOf(spark: SparkSession, root: String, recorded: Option[StructType],
+                       entries: => Seq[String]): StructType =
+    recorded.getOrElse {
+      val e = entries.headOption.getOrElse(throw new IllegalStateException(
+        s"a version of $root has no files and predates schema recording"))
+      new ParquetFileFormat().inferSchema(spark, Map.empty,
+        Seq(SnapshotRelation.status(Paths.get(root, "data", entryPath(e))))).get
+    }
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -167,6 +214,9 @@ object SnapshotStore {
       if (manifest.sections.isEmpty) manifest.ranges
       else sectioned.filter(_._2.nonEmpty).toMap
     def isEmpty: Boolean = manifest.sections.fold(manifest.files.isEmpty)(_.isEmpty)
+    /** `es` (entries of this version) paired with their recorded ranges. */
+    def ranged(es: Seq[String]): Seq[(String, Manifest.Ranges)] =
+      es.map(e => e -> ranges.getOrElse(e, Map.empty))
   }
 
   /** Decode `version` of the table at `root`. */
@@ -175,6 +225,11 @@ object SnapshotStore {
 
   private def current(root: String): Option[Snapshot] =
     currentVersion(root).map(snapshot(root, _))
+
+  /** Version `asOf` of the table at `root`, else its current version. */
+  private[sources] def pinned(root: String, asOf: Option[Long]): Snapshot =
+    snapshot(root, asOf.orElse(currentVersion(root)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $root")))
 
   /** Order-preserving 8-byte-prefix key for STRING stats columns. A
     * string column's per-file range is harvested as the encoding of the
@@ -262,24 +317,26 @@ object SnapshotStore {
   def statsCols(root: String): Seq[String] =
     current(root).fold(Seq.empty[String])(_.manifest.statsCols)
 
-  /** [lo,hi] per declared stats column across one parquet file, from
-    * its FOOTER only (no data read; parquet-hadoop ships with Spark).
-    * Integral-backed types (int/long/date/timestamp/short-decimal) use
-    * the footer value directly; STRING/BINARY columns harvest the
-    * order-preserving [[stringKey]] of the footer min/max (truncation is
-    * a widening, so a parquet-side truncated max stays an upper bound).
-    * Columns missing, unsupported, or all-null in the file get no entry
-    * — such files are never skipped on that column.
+  /** One parquet FOOTER read (no data pages; parquet-hadoop ships with
+    * Spark): the file's exact row count from its block metadata, and its
+    * [lo,hi] per column of `colNames`. Integral-backed types (int/long/
+    * date/timestamp/short-decimal) use the footer value directly;
+    * STRING/BINARY columns harvest the order-preserving [[stringKey]] of
+    * the footer min/max (truncation is a widening, so a parquet-side
+    * truncated max stays an upper bound). Columns missing, unsupported,
+    * or all-null in the file get no entry — such files are never skipped
+    * on that column. `conf` is the caller's one Hadoop conf for a whole
+    * commit.
     */
-  private def fileRanges(abs: Path, colNames: Seq[String]): Map[String, (Long, Long)] = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs.toUri),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+  private def footer(conf: Configuration, abs: Path,
+                     colNames: Seq[String]): (Long, Manifest.Ranges) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(abs.toUri), conf))
     try {
       import scala.jdk.CollectionConverters._
       val blocks = r.getFooter.getBlocks.asScala.toSeq
-      colNames.flatMap { colName =>
+      (r.getRecordCount, colNames.flatMap { colName =>
         val ranges = blocks.flatMap { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == colName).flatMap { c =>
             val st = c.getStatistics
@@ -295,31 +352,27 @@ object SnapshotStore {
         }
         if (ranges.isEmpty) None
         else Some(colName -> (ranges.map(_._1).min, ranges.map(_._2).max))
-      }.toMap
+      }.toMap)
     } finally r.close()
   }
 
-  /** Exact row count of one written parquet file from its FOOTER only
-    * (block metadata — no data pages touched). Summing these over a
-    * commit's files gives the manifest's exact row count without a
-    * second plan execution or any block-store pin of the content.
+  /** Total row count of the written `files` and their footer ranges on
+    * the declared `cols` (files without any range are left out): one
+    * footer open per file, the SparkContext's Hadoop conf for all of them.
     */
-  private def footerRowCount(abs: Path): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(abs.toUri),
-      new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount
-    finally r.close()
+  private def footers(spark: SparkSession, root: String, cols: Seq[String],
+                      files: Seq[String]): (Long, FileStats) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val read = files.map(f => f -> footer(conf, Paths.get(root, "data", f), cols))
+    (read.map(_._2._1).sum, read.collect { case (f, (_, r)) if r.nonEmpty => f -> r }.toMap)
   }
 
-  /** Footer ranges of `files` on the declared `cols` (files without any
-    * range are left out).
+  /** Footer ranges of `files` on the declared `cols` (no file is opened
+    * when no column is declared).
     */
-  private def harvest(root: String, cols: Seq[String], files: Seq[String]): FileStats =
-    if (cols.isEmpty) Map.empty
-    else files.map(f => f -> fileRanges(Paths.get(root, "data", f), cols))
-      .filter(_._2.nonEmpty).toMap
+  private def harvest(spark: SparkSession, root: String, cols: Seq[String],
+                      files: Seq[String]): FileStats =
+    if (cols.isEmpty) Map.empty else footers(spark, root, cols, files)._2
 
   /** The manifest-recorded row count of `version` (full snapshots record
     * their exact count; incremental commits record -1 — appends don't
@@ -588,7 +641,8 @@ object SnapshotStore {
     * declared stats columns carried, `added`'s ranges harvested from
     * their footers unless `fresh` gives them.
     */
-  private def commitOn(base: Snapshot, replaced: Seq[String], added: Seq[String],
+  private def commitOn(spark: SparkSession, base: Snapshot,
+                       replaced: Seq[String], added: Seq[String],
                        conflictOnAddsIn: Option[Set[String]],
                        txn: Option[(String, Long)],
                        schema: Option[org.apache.spark.sql.types.StructType],
@@ -596,7 +650,7 @@ object SnapshotStore {
                        fresh: Option[FileStats] = None): Long = {
     val cols = base.manifest.statsCols
     rebase(base.root, Some(base), replaced, added, conflictOnAddsIn,
-      fresh.getOrElse(harvest(base.root, cols, added)),
+      fresh.getOrElse(harvest(spark, base.root, cols, added)),
       Manifest(-1L, schema, Some(layout), changeKey, txn, cols))
   }
 
@@ -854,10 +908,10 @@ object SnapshotStore {
     // the block store before the write finished.)
     val stamped = stampFieldIds(root, cur, df)
     val files = writeDataFiles(stamped, root, partCol)
-    val rows = files.map(f => footerRowCount(Paths.get(root, "data", f))).sum
+    val (rows, ranges) = footers(df.sparkSession, root, statsCols, files)
     val v = publish(root, vs.lastOption.getOrElse(-1L) + 1,
       Manifest(rows, Some(stamped.schema), Some(partCol), txn = txn, statsCols = statsCols,
-        files = files, ranges = harvest(root, statsCols, files)))
+        files = files, ranges = ranges))
     // The manifest record is authoritative; the `stats_cols` side file is
     // only a mirror for readers that predate the record, written after
     // the commit it describes. A legacy `part_col` side file is shadowed
@@ -904,8 +958,8 @@ object SnapshotStore {
              txn: Option[(String, Long)] = None,
              evolveSchema: Boolean = false): Long = {
     val base = current(root)
-    val tableSchema = base.map(b => b.manifest.schema
-      .getOrElse(readAt(df.sparkSession, b).schema))
+    val tableSchema = base.map(b =>
+      schemaOf(df.sparkSession, root, b.manifest.schema, b.entries))
     val conformed0 = tableSchema.fold(df)(st => conform(df, st, evolveSchema))
     // Evolved (added) columns join the table's column identity with fresh
     // ids — allocated past every id any retained version used, so a
@@ -932,7 +986,8 @@ object SnapshotStore {
     // Blind append: no partition-level read set, so it rebases over ANY
     // concurrent commit (Delta's append-never-conflicts rule) — only a
     // concurrent schema change aborts it.
-    rebase(root, base, Nil, files, Some(Set.empty), harvest(root, statsCols, files),
+    rebase(root, base, Nil, files, Some(Set.empty),
+      harvest(df.sparkSession, root, statsCols, files),
       Manifest(-1L, Some(conformed.schema), Some(pc), txn = txn, statsCols = statsCols))
   }
 
@@ -996,68 +1051,28 @@ object SnapshotStore {
       s"merge requires a partitioned base snapshot " +
         s"(write it with overwrite(df, root, Some(\"$partCol\")))")
     requireLayout(base, partCol)
-    val target = readAt(spark, base)
-    val cols = target.columns.map(col).toSeq
-    val parts = updates.select(col(partCol)).distinct()
-    // Null-safe semi join ON THE RENDERED PARTITION CLASS: a plain
-    // equi-join would never match a NULL partition value, and null + ""
-    // share one physical dir (the hive default-partition sentinel), so
-    // the match key must collapse them too — otherwise a merge touching
-    // "" removes the shared dir's files while the null rows were never
-    // in the rewrite (silent row loss). <=> matches null to null;
-    // partKey folds "" into null to mirror [[partDir]].
-    def partKey(c: org.apache.spark.sql.Column) =
-      when(c.isNull || c.cast("string") === "", lit(null: String))
-        .otherwise(c.cast("string"))
-    val affected = target.join(
-      broadcast(parts.withColumnRenamed(partCol, "__mergePart")),
-      partKey(col(partCol)) <=> partKey(col("__mergePart")), "left_semi")
-    val survivors = affected
-      .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
+    // The affected partitions are the hive dirs the updates' partition
+    // values render to (the writer's own escaping): the commit replaces
+    // exactly their files, and the rewrite reads exactly those files — so
+    // the rows rewritten are by construction the rows the commit removes.
+    val affectedDirs = updates.select(col(partCol)).distinct()
+      .collect().map(r => partDir(r.get(0))).toSet
+    val replaced = baseFiles.filter(f => f.split('/').exists(affectedDirs.contains))
+    val target = scanEntries(spark, base, base.ranged(replaced))
+    val survivors = target.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
     // Straight-to-parquet staging (see replaceWhere): the rewritten
     // partitions' content executes once, into the commit's data files,
     // never through the block store.
-    val merged = survivors.select(cols: _*)
+    val merged = survivors.select(target.columns.map(col).toSeq: _*)
       .unionByName(conform(updates, target.schema))
     val newFiles = writeDataFiles(merged, root, Some(partCol))
-    // Carry forward every base file OUTSIDE the affected partitions. The
-    // partition value is in the file path (hive layout), so the kept/
-    // replaced split is a path test — rendered with the same escaping the
-    // writer used, no data read.
-    val affectedDirs = parts.collect().map(r => partDir(r.get(0))).toSet
-    val replaced = baseFiles.filter(f =>
-      f.split('/').exists(affectedDirs.contains))
     // Read-modify-write of the affected partitions: rebase over concurrent
     // commits elsewhere; conflict if they touched (rewrote OR appended
     // into) these partitions — the upsert's key-uniqueness read them.
-    commitOn(base, replaced, newFiles, Some(affectedDirs), txn, Some(target.schema),
+    commitOn(spark, base, replaced, newFiles, Some(affectedDirs), txn, Some(target.schema),
       Some(partCol), Seq(keyCol))
   }
 
-  /** Row-level DELETE with snapshot isolation — the GDPR/right-to-be-
-    * forgotten primitive a training-data table needs as a first-class
-    * transactional call, not a manual read-filter-overwrite dance.
-    * Removes every row where `predicate` is TRUE (NULL keeps the row,
-    * standard DELETE semantics).
-    *
-    * With `partCol`, cost is ∝ touched partitions: only partitions that
-    * CONTAIN matching rows are rewritten (their survivors re-written,
-    * their old files dropped from the manifest); every other partition's
-    * files carry forward verbatim — same cost model and null/empty
-    * partition-class handling as [[merge]]. Without `partCol` the whole
-    * table rewrites (documented: the unpartitioned trade).
-    *
-    * The removal is CDC-visible: [[changes]] across the delete commit
-    * yields exactly the deleted rows as `_change_type='delete'`. The old
-    * version's files stay on disk until [[vacuum]]'s retention passes —
-    * time travel still sees the deleted rows, so TRUE erasure is
-    * delete + vacuum(0 retained history), the same two-step Delta
-    * documents for GDPR.
-    *
-    * A predicate matching nothing publishes nothing and returns the
-    * current version. A delete matching everything publishes a zero-file
-    * manifest, which [[read]] serves as a schema'd empty frame.
-    */
   /** Filter matching the partition CLASS of any of `values` — the same
     * null/empty-string collapsing the hive dir rendering applies (null
     * and "" share one physical dir), so callers selecting "rows in these
@@ -1119,12 +1134,36 @@ object SnapshotStore {
         val dirs = parts.map(partDir).toSet
         val replaced = baseFiles.filter(_.split('/').exists(dirs.contains))
         if (replaced.isEmpty && newFiles.isEmpty) return baseVersion // no-op
-        commitOn(base, replaced, newFiles, Some(dirs), txn, schema, layout)
+        commitOn(spark, base, replaced, newFiles, Some(dirs), txn, schema, layout)
       case None =>
-        commitOn(base, baseFiles, newFiles, None, txn, schema, layout)
+        commitOn(spark, base, baseFiles, newFiles, None, txn, schema, layout)
     }
   }
 
+  /** Row-level DELETE with snapshot isolation — the GDPR/right-to-be-
+    * forgotten primitive a training-data table needs as a first-class
+    * transactional call, not a manual read-filter-overwrite dance.
+    * Removes every row where `predicate` is TRUE (NULL keeps the row,
+    * standard DELETE semantics).
+    *
+    * With `partCol`, cost is ∝ touched partitions: only partitions that
+    * CONTAIN matching rows are rewritten (their survivors re-written,
+    * their old files dropped from the manifest); every other partition's
+    * files carry forward verbatim — same cost model and null/empty
+    * partition-class handling as [[merge]]. Without `partCol` the whole
+    * table rewrites (documented: the unpartitioned trade).
+    *
+    * The removal is CDC-visible: [[changes]] across the delete commit
+    * yields exactly the deleted rows as `_change_type='delete'`. The old
+    * version's files stay on disk until [[vacuum]]'s retention passes —
+    * time travel still sees the deleted rows, so TRUE erasure is
+    * delete + vacuum(0 retained history), the same two-step Delta
+    * documents for GDPR.
+    *
+    * A predicate matching nothing publishes nothing and returns the
+    * current version. A delete matching everything publishes a zero-file
+    * manifest, which [[read]] serves as a schema'd empty frame.
+    */
   def delete(spark: SparkSession, root: String, predicate: org.apache.spark.sql.Column,
              partCol: Option[String] = None,
              txn: Option[(String, Long)] = None,
@@ -1140,24 +1179,17 @@ object SnapshotStore {
         require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
           s"partition-pruned delete requires a partitioned base snapshot " +
             s"(write it with overwrite(df, root, Some(\"$pc\")))")
-        val parts = target.filter(predicate).select(col(pc)).distinct()
-        val partVals = parts.collect().map(_.get(0))
-        if (partVals.isEmpty) return base.version // nothing matches, publish nothing
-        val affectedDirs = partVals.map(partDir).toSet
-        def partKey(c: org.apache.spark.sql.Column) =
-          when(c.isNull || c.cast("string") === "", lit(null: String))
-            .otherwise(c.cast("string"))
-        val affected = target.join(
-          broadcast(parts.withColumnRenamed(pc, "__delPart")),
-          partKey(col(pc)) <=> partKey(col("__delPart")), "left_semi")
-        // Survivors stream straight to the commit's data files — no
-        // block-store pin (see replaceWhere); an all-deleted partition
+        val affectedDirs = target.filter(predicate).select(col(pc)).distinct()
+          .collect().map(r => partDir(r.get(0))).toSet
+        if (affectedDirs.isEmpty) return base.version // nothing matches, publish nothing
+        // The rewrite reads exactly the files the commit replaces (see
+        // merge). Survivors stream straight to the commit's data files —
+        // no block-store pin (see replaceWhere); an all-deleted partition
         // writes no files for itself.
-        val newFiles = writeDataFiles(affected.filter(keep)
-          .select(target.columns.map(col).toIndexedSeq: _*), root, Some(pc))
-        val replaced = baseFiles.filter(f =>
-          f.split('/').exists(affectedDirs.contains))
-        commitOn(base, replaced, newFiles, Some(affectedDirs), txn,
+        val replaced = baseFiles.filter(f => f.split('/').exists(affectedDirs.contains))
+        val newFiles = writeDataFiles(
+          scanEntries(spark, base, base.ranged(replaced)).filter(keep), root, Some(pc))
+        commitOn(spark, base, replaced, newFiles, Some(affectedDirs), txn,
           Some(target.schema), Some(pc))
       case None =>
         if (target.filter(predicate).isEmpty) return base.version
@@ -1172,9 +1204,25 @@ object SnapshotStore {
         // Whole-table rewrite: conflictOnAddsIn = None — any concurrent
         // addition intersects the read set, only version races on an
         // otherwise-unchanged table rebase.
-        commitOn(base, baseFiles, newFiles, None, txn, Some(target.schema), layout)
+        commitOn(spark, base, baseFiles, newFiles, None, txn, Some(target.schema), layout)
     }
   }
+
+  /** The LIVE rows of `version` with their physical row identity: every
+    * table column plus `__file` (root-relative data path) and `__pos`
+    * (parquet row index); rows existing DVs already deleted are excluded.
+    * Because data files are immutable, (`__file`, `__pos`) is a STABLE,
+    * content-independent row identity — row-level DML uses it both as the
+    * deletion-vector write target and as a deterministic ANSI-cardinality
+    * key (safe under stage retry, unlike monotonically_increasing_id).
+    * Predicates a caller applies on table columns push down through the
+    * DV anti-join into the parquet scan as usual.
+    */
+  def positionScan(spark: SparkSession, root: String, version: Long): DataFrame =
+    positionScanOf(spark, snapshot(root, version))
+
+  private def positionScanOf(spark: SparkSession, s: Snapshot): DataFrame =
+    scanEntries(spark, s, s.ranged(s.entries), rowIds = true)
 
   /** Deletion-vector DELETE: instead of rewriting touched partitions'
     * survivors, write ONE small position-delete sidecar under `_dv/`
@@ -1189,47 +1237,6 @@ object SnapshotStore {
     * compaction orphans them. Same commit atomicity and time-travel
     * contract as every other writer.
     */
-  /** The LIVE rows of `version` with their physical row identity: every
-    * table column plus `__file` (root-relative data path) and `__pos`
-    * (parquet row index); rows existing DVs already deleted are excluded.
-    * Because data files are immutable, (`__file`, `__pos`) is a STABLE,
-    * content-independent row identity — row-level DML uses it both as the
-    * deletion-vector write target and as a deterministic ANSI-cardinality
-    * key (safe under stage retry, unlike monotonically_increasing_id).
-    * Predicates a caller applies on table columns push down through the
-    * DV anti-join into the parquet scan as usual.
-    */
-  def positionScan(spark: SparkSession, root: String, version: Long): DataFrame =
-    positionScanOf(spark, snapshot(root, version))
-
-  private def positionScanOf(spark: SparkSession, s: Snapshot): DataFrame = {
-    val root = s.root
-    val entries = s.entries
-    val schema = s.manifest.schema
-    ensureFieldIdRead(spark, schema)
-    if (entries.isEmpty) {
-      val st = schema.getOrElse(throw new IllegalStateException(
-        s"version ${s.version} of $root has no files and predates schema recording"))
-      return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        .withColumn("__file", lit(null).cast("string"))
-        .withColumn("__pos", lit(null).cast("long"))
-    }
-    val reader = schema.fold(spark.read)(spark.read.schema)
-    val scan0 = reader
-      .parquet(entries.map(e => Paths.get(root, "data", entryPath(e)).toString): _*)
-      .withColumn("__file",
-        expr("substring_index(_metadata.file_path, '/data/', -1)"))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val priorRefs = entries.flatMap(entryDvs).distinct
-    if (priorRefs.isEmpty) scan0 else {
-      val prior = spark.read
-        .parquet(priorRefs.map(r => Paths.get(root, DvDir, r).toString): _*)
-        .select(col("file").as("__file"), col("pos").as("__pos"))
-      scan0.join(prior, Seq("__file", "__pos"), "left_anti")
-    }
-  }
-
   private def deleteWithDv(spark: SparkSession, base: Snapshot,
                            predicate: org.apache.spark.sql.Column,
                            txn: Option[(String, Long)]): Long = {
@@ -1245,10 +1252,7 @@ object SnapshotStore {
       .localCheckpoint(true)
     if (matches.isEmpty) return base.version
     val ref = writeDvFile(root, matches)
-    // Touched-file list is bounded by the manifest size, never row count.
-    val touched = matches.select("file").distinct()
-      .collect().map(_.getString(0)).toSet
-    val replaced = entries.filter(e => touched(entryPath(e)))
+    val replaced = owners(entries, matches.select("file"))
     val annotated = replaced.map(e =>
       renderEntry(entryPath(e), entryDvs(e) :+ ref))
     // Stats re-key onto the annotated entries: deletion only narrows a
@@ -1259,7 +1263,7 @@ object SnapshotStore {
     // File-scoped write set: the DV annotates exactly `replaced`; rebase
     // over concurrent commits that left those entries alone (their
     // positions — parquet row indexes of immutable files — stay valid).
-    commitOn(base, replaced, annotated, Some(Set.empty), txn, base.manifest.schema,
+    commitOn(spark, base, replaced, annotated, Some(Set.empty), txn, base.manifest.schema,
       base.manifest.layout, fresh = Some(fresh))
   }
 
@@ -1324,11 +1328,8 @@ object SnapshotStore {
       }
       val staged = if (hasActed) Some(spark.read.parquet(stagingDir.toString))
         else None
-      val replaced = staged.fold(Seq.empty[String]) { st =>
-        val touched = st.select(col("__file")).distinct()
-          .collect().map(_.getString(0)).toSet
-        entries.filter(e => touched(entryPath(e)))
-      }
+      val replaced =
+        staged.fold(Seq.empty[String])(st => owners(entries, st.select(col("__file"))))
       val ref = staged.map(st => writeDvFile(root,
         st.select(col("__file").as("file"), col("__pos").as("pos"))))
       val annotated = ref.toSeq.flatMap(r => replaced.map(e =>
@@ -1347,8 +1348,8 @@ object SnapshotStore {
       val rekeyed = ref.toSeq.flatMap(r => replaced.flatMap { e =>
         base.ranges.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ r) -> v)
       }).toMap
-      val fresh = rekeyed ++ harvest(root, base.manifest.statsCols, newFiles)
-      commitOn(base, replaced, annotated ++ newFiles, conflictOnAddsIn, txn, schema,
+      val fresh = rekeyed ++ harvest(spark, root, base.manifest.statsCols, newFiles)
+      commitOn(spark, base, replaced, annotated ++ newFiles, conflictOnAddsIn, txn, schema,
         layout, changeKey.getOrElse(Nil), Some(fresh))
     } finally {
       if (Files.exists(stagingDir)) {
@@ -1385,11 +1386,12 @@ object SnapshotStore {
   }
 
   /** Read a snapshot: the current version, or `asOf` for time travel.
-    * Plan-wise this is a plain multi-path parquet scan of the manifest's
-    * exact file list — column pruning, predicate pushdown, and (hive
-    * paths) partition values all work as usual.
+    * Plan-wise this is one parquet relation over the manifest's exact
+    * file list ([[SnapshotRelation]]): no directory listing and no Spark
+    * job until an action; column pruning, predicate pushdown and
+    * planning-time file pruning from ordinary filters all apply.
     *
-    * Manifest-level pruning before the scan:
+    * Manifest-level pruning from explicit arguments, before the scan:
     *   - `partValues` keeps only files under a matching `__part=` dir
     *     (pass RAW values; they are escaped the way the writer escaped).
     *   - `colRanges` is a conjunction of [lo,hi] (inclusive) predicates
@@ -1406,38 +1408,23 @@ object SnapshotStore {
            asOf: Option[Long] = None,
            partValues: Option[Set[String]] = None,
            keyRange: Option[(Long, Long)] = None,
-           colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
-    val v = asOf.orElse(currentVersion(root)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $root"))
-    readAt(spark, snapshot(root, v), partValues, keyRange, colRanges)
-  }
+           colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame =
+    readAt(spark, pinned(root, asOf), partValues, keyRange, colRanges)
 
-  /** [[read]] of an already-decoded version. */
+  /** [[read]] of an already-decoded version. `partCol` names the column
+    * whose filters prune partition dirs at planning time; by default the
+    * layout the manifest records.
+    */
   def readAt(spark: SparkSession, s: Snapshot,
              partValues: Option[Set[String]] = None,
              keyRange: Option[(Long, Long)] = None,
-             colRanges: Map[String, (Long, Long)] = Map.empty): DataFrame = {
+             colRanges: Map[String, (Long, Long)] = Map.empty,
+             partCol: Option[String] = None): DataFrame =
     // Manifest-recorded schema: inference-free planning, and the schema-
     // evolution contract — files predating a column scan as null for it.
-    val schema = s.manifest.schema
-    // A zero-file version is legitimate (e.g. a streaming writer's empty
-    // bootstrap batch, or a delete that emptied the table): serve the
-    // manifest-recorded schema as an empty frame instead of failing every
-    // later read/merge against the table.
-    if (s.isEmpty) {
-      val st = schema.getOrElse(throw new IllegalStateException(
-        s"version ${s.version} of ${s.root} has no files and predates schema recording"))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-    }
-    val rels = pruned(s, partValues, keyRange, colRanges)
-    ensureFieldIdRead(spark, schema)
-    if (rels.isEmpty)
-      schema.fold(spark.read)(spark.read.schema)
-        .parquet(Paths.get(s.root, "data", entryPath(s.entries.head)).toString).limit(0)
-    else
-      scanEntries(spark, s.root, rels, schema)
-  }
+    // A zero-file version (a streaming writer's empty bootstrap batch, a
+    // delete that emptied the table) reads as that schema's empty frame.
+    scanEntries(spark, s, pruned(s, partValues, keyRange, colRanges), partCol = partCol)
 
   /** Root-relative files of `version` surviving manifest-level pruning
     * (see [[read]] for the predicate semantics). Exposed so specs (and
@@ -1447,28 +1434,36 @@ object SnapshotStore {
                   partValues: Option[Set[String]] = None,
                   keyRange: Option[(Long, Long)] = None,
                   colRanges: Map[String, (Long, Long)] = Map.empty): Seq[String] =
-    pruned(snapshot(root, version), partValues, keyRange, colRanges)
+    pruned(snapshot(root, version), partValues, keyRange, colRanges).map(_._1)
 
-  private[graft] def pruned(s: Snapshot, partValues: Option[Set[String]],
-                            keyRange: Option[(Long, Long)],
-                            colRanges: Map[String, (Long, Long)]): Seq[String] = {
-    val effective = colRanges ++ keyRange.flatMap(r =>
-      s.manifest.statsCols.headOption.map(_ -> r)).toMap
-    def inRange(byCol: Manifest.Ranges) = effective.forall { case (c, (lo, hi)) =>
-      byCol.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-    val dirs = partValues.map(_.map(partDir))
-    (s.manifest.sections, dirs) match {
-      case (Some(refs), Some(ds)) =>
+  /** Entries of `s` surviving manifest-level pruning, with their ranges. */
+  private def pruned(s: Snapshot, partValues: Option[Set[String]],
+                     keyRange: Option[(Long, Long)],
+                     colRanges: Map[String, (Long, Long)]): Seq[(String, Manifest.Ranges)] = {
+    val keep = selects(partValues, colRanges ++ keyRange.flatMap(r =>
+      s.manifest.statsCols.headOption.map(_ -> r)).toMap)
+    (s.manifest.sections, partValues) match {
+      case (Some(refs), Some(vs)) =>
         // Lazy by construction: partition pruning selects SECTIONS before
         // any per-file metadata is read — the layout's whole point.
+        val ds = vs.map(partDir)
         refs.filter { case (pd, _) => ds(pd) }
           .flatMap { case (_, ref) => Manifest.readSection(s.root, ref) }
-          .collect { case (f, byCol) if inRange(byCol) => f }.sorted
-      case _ =>
-        val byPart = dirs.fold(s.entries)(ds => s.entries.filter(_.split('/').exists(ds)))
-        if (effective.isEmpty) byPart
-        else byPart.filter(f => inRange(s.ranges.getOrElse(f, Map.empty)))
+          .filter(keep).sortBy(_._1)
+      case _ => s.ranged(s.entries).filter(keep)
+    }
+  }
+
+  /** The manifest pruning rule: an entry is kept when it lies under the
+    * dir of one of `partValues` (raw values, rendered by [[partDir]]) and
+    * its recorded ranges are not provably disjoint from any of `probes`
+    * (a column without a recorded range never excludes).
+    */
+  private[sources] def selects(partValues: Option[Set[String]], probes: Map[String, (Long, Long)])
+      : ((String, Manifest.Ranges)) => Boolean = {
+    val dirs = partValues.map(_.map(partDir))
+    e => dirs.forall(ds => e._1.split('/').exists(ds)) && probes.forall { case (c, (lo, hi)) =>
+      e._2.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
   }
 
@@ -1529,7 +1524,7 @@ object SnapshotStore {
     // MATERIALIZES its deletions — the rewrite drops the annotation and
     // the orphaned DV file falls to vacuum.
     val schema = base.manifest.schema
-    val slice = scanEntries(spark, base.root, victims, schema)
+    val slice = scanEntries(spark, base, victims)
     val arranged =
       if (zorderBy.nonEmpty) {
         // Quantile-bucket maxes from one tiny aggregate (offline layout
@@ -1555,7 +1550,7 @@ object SnapshotStore {
     // Row movement only (no partition-level read set): rebase over
     // concurrent appends anywhere; conflict only if a concurrent commit
     // rewrote one of the victims out from under the compaction.
-    commitOn(base, victims, newFiles, Some(Set.empty), txn,
+    commitOn(spark, base, victims.map(_._1), newFiles, Some(Set.empty), txn,
       schema.orElse(Some(slice.schema)), Some(partCol))
   }
 
@@ -1592,7 +1587,7 @@ object SnapshotStore {
         require(zorderBy.isEmpty || zorderBy.length >= 2,
           "zorderBy takes two or more columns")
         val schema = base.manifest.schema
-        val slice = scanEntries(spark, root, entries, schema)
+        val slice = scanEntries(spark, base, base.ranged(entries))
         val arranged =
           if (zorderBy.nonEmpty) {
             val aggs = zorderBy.map(c => max(col(c)).cast("long").as(s"__m_$c"))
@@ -1608,7 +1603,7 @@ object SnapshotStore {
           } else slice.repartition(numFiles)
         val newFiles = writeDataFiles(arranged, root, None)
         // Row movement only — same rebase posture as compact.
-        commitOn(base, entries, newFiles, Some(Set.empty), txn, schema, None)
+        commitOn(spark, base, entries, newFiles, Some(Set.empty), txn, schema, None)
     }
   }
 
@@ -1630,8 +1625,9 @@ object SnapshotStore {
 
   private def debtOf(s: Snapshot): DvDebt = {
     val annotated = s.entries.filter(e => entryDvs(e).nonEmpty)
+    val conf = new Configuration()
     val dvRows = annotated.flatMap(entryDvs).distinct
-      .map(r => footerRowCount(Paths.get(s.root, DvDir, r))).sum
+      .map(r => footer(conf, Paths.get(s.root, DvDir, r), Nil)._1).sum
     DvDebt(annotated.size, s.entries.size, dvRows)
   }
 
@@ -1657,9 +1653,9 @@ object SnapshotStore {
     if (annotated.isEmpty) return base.version
     val layout = base.manifest.layout
     val schema = base.manifest.schema
-    val rewritten = scanEntries(spark, base.root, annotated, schema)
+    val rewritten = scanEntries(spark, base, base.ranged(annotated))
     val newFiles = writeDataFiles(rewritten, base.root, layout)
-    commitOn(base, annotated, newFiles, Some(Set.empty), txn, schema, layout)
+    commitOn(spark, base, annotated, newFiles, Some(Set.empty), txn, schema, layout)
   }
 
   /** Debt-driven maintenance trigger — the snapshot store's twin of the
@@ -1858,23 +1854,12 @@ object SnapshotStore {
     // Both sides scan under the TO version's schema so the delta is
     // union-compatible even across a schema-evolving commit (old files
     // yield nulls for columns added since `from`).
-    val schema = toV.manifest.schema
-    def scan(fs: Seq[String]): DataFrame = {
-      if (fs.isEmpty)
-        (toV.entries ++ fromV.entries).headOption match {
-          case Some(any) =>
-            schema.fold(spark.read)(spark.read.schema)
-              .parquet(Paths.get(root, "data", entryPath(any)).toString).limit(0)
-          case None => // both versions empty (e.g. empty bootstrap commit)
-            val st = schema.getOrElse(throw new IllegalStateException(
-              s"versions $from..$to of $root have no files and no recorded schema"))
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-        }
-      // DV-aware on BOTH sides: an annotated entry scans as its live rows
-      // only, so a DV-delete commit's delta is exactly the deleted rows.
-      else scanEntries(spark, root, fs, schema)
-    }
+    val schema = schemaOf(spark, root, toV.manifest.schema, toV.entries ++ fromV.entries)
+    // DV-aware on BOTH sides: an annotated entry scans as its live rows
+    // only, so a DV-delete commit's delta is exactly the deleted rows.
+    // No ranges: reading them would decode sections the diff skipped.
+    def scan(fs: Seq[String]): DataFrame =
+      scanEntries(spark, toV, fs.map(_ -> Map.empty), Some(schema))
     val a = scan(added)
     val r = scan(removed)
     val ins = a.exceptAll(r)

@@ -190,4 +190,28 @@ class SnapshotRelationSpec extends AnyFunSuite {
       == base.count())
     assert(SnapshotRelation.frame(spark, root).count() == base.count() + 1)
   }
+
+  test("frame reads a schema-evolved table: files predating a non-nullable added column scan it as null") {
+    import spark.implicits._
+    val root = scratch("snaprel_evo_")
+    SnapshotStore.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "payload"), root)
+    val evolved = Seq((3L, "c", 0.5)).toDF("k", "payload", "quality")
+    assert(!evolved.schema("quality").nullable)
+    SnapshotStore.append(evolved, root, evolveSchema = true)
+    val got = sortedRows(SnapshotRelation.frame(spark, root))
+    assert(got == sortedRows(SnapshotStore.read(spark, root)))
+    assert(got == Seq("1|a|null", "2|b|null", "3|c|0.5"))
+  }
+
+  test("frame without partCol prunes partition dirs by the layout the manifest records") {
+    val (root, base) = statsTable()
+    import spark.implicits._
+    val nat = base.select(col("c_nationkey")).as[Long].head()
+    val df = SnapshotRelation.frame(spark, root).filter(col("c_nationkey") === nat)
+    val inDir = SnapshotStore.prunedFiles(root, SnapshotStore.currentVersion(root).get,
+      partValues = Some(Set(nat.toString))).length
+    assert(inDir < SnapshotStore.filesAt(root, SnapshotStore.currentVersion(root).get).length)
+    assert(scannedFiles(df) == inDir)
+    assert(df.count() == base.filter(col("c_nationkey") === nat).count())
+  }
 }

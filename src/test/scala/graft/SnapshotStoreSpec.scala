@@ -1375,4 +1375,24 @@ class SnapshotStoreSpec extends AnyFunSuite {
         version = Some(0L)) // src v0 fell to the vacuum above
     }
   }
+
+  test("deletion vectors reach files under escaped partition dirs (delete and updateRows)") {
+    import spark.implicits._
+    val root = scratch("snap_dv_esc_")
+    // ':' is path-escaped: the dir is __part=a%3Ab, which the scan's
+    // _metadata.file_path reports URI-encoded as __part=a%253Ab.
+    SnapshotStore.overwrite(Seq((1L, "a:b", "x"), (2L, "a:b", "y"), (3L, "c", "z"))
+      .toDF("k", "p", "v"), root, Some("p"))
+    assert(SnapshotStore.filesAt(root, 0L).exists(_.contains("__part=a%3Ab")))
+    SnapshotStore.delete(spark, root, col("k") === 1L, deletionVectors = true)
+    def rows() = SnapshotStore.read(spark, root).select(col("k"), col("v"))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(rows() == Set((2L, "y"), (3L, "z")))
+    val v = SnapshotStore.currentVersion(root).get
+    val acted = SnapshotStore.positionScan(spark, root, v).filter(col("k") === 2L)
+      .select(col("__file"), col("__pos"), lit(true).as("__keep"), col("k"), col("p"),
+        lit("y2").as("v"))
+    SnapshotStore.updateRows(spark, root, v, acted, "__keep")
+    assert(rows() == Set((2L, "y2"), (3L, "z")))
+  }
 }
