@@ -100,13 +100,4 @@ object TextAnalysis {
     */
   def fingerprint(toks: Column): Column =
     org.apache.spark.sql.graftext.HashExprs.fingerprintXor(toks)
-
-  /** HOF reference implementation, kept only as the equivalence oracle for
-    * the codegen'd FingerprintXor expression (the aggregate/transform fold
-    * re-enters the interpreter per token; FingerprintXor is one codegen'd
-    * byte pass — identical rotate-xor arithmetic, HashExprsSpec-pinned).
-    */
-  def fingerprintHof(toks: Column): Column =
-    aggregate(transform(toks, t => xxhash64(t)), lit(0L),
-      (acc, h) => shiftleft(acc, 7).bitwiseOR(shiftrightunsigned(acc, 57)).bitwiseXOR(h))
 }

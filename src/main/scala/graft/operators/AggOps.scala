@@ -67,8 +67,9 @@ object AggOps extends QueryPack {
     * registered q_agg_topk_group formulation: the buffer never exceeds k,
     * so partial aggregation ships k rows/group/partition and nothing ever
     * sorts the full join output. Measured at sf1 vs the salted window it
-    * replaced: 0.70 s vs 1.06 s (TopKProbe re-measures both; TopKAggSpec
-    * pins result equality incl. NaN/-0.0 ordering).
+    * replaced: 0.70 s vs 1.06 s (BASELINE.md "TopK formulations"; the
+    * probe main is in git history at 7a28436). TopKAggSpec pins result
+    * equality against that window shape, incl. NaN/-0.0 ordering.
     */
   def topKAggregated(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -84,26 +85,6 @@ object AggOps extends QueryPack {
       .select(col("key").as("c_mktsegment"), posexplode(col("top")))
       .select(col("c_mktsegment"), (col("pos") + 1).cast(LongType).as("rn"),
         col("col.key").as("o_orderkey"), col("col.value").as("o_totalprice"))
-      .orderBy(col("c_mktsegment").asc, col("rn").asc)
-  }
-
-  /** The salted two-phase window formulation of the same query — kept
-    * UNREGISTERED as the equivalence/measurement baseline for
-    * topKAggregated (TopKAggSpec, TopKProbe).
-    */
-  def topKWindowed(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ord = Seq(col("o_totalprice").desc, col("o_orderkey").asc)
-    val w1 = Window.partitionBy(col("c_mktsegment"), col("salt")).orderBy(ord: _*)
-    val w2 = Window.partitionBy(col("c_mktsegment")).orderBy(ord: _*)
-    orders(s, d)
-      .join(customer(s, d), col("o_custkey") === col("c_custkey"))
-      .withColumn("salt", pmod(col("o_orderkey"), lit(64L)))
-      .withColumn("rn1", row_number().over(w1))
-      .filter(col("rn1") <= 3)
-      .withColumn("rn", row_number().over(w2).cast(LongType))
-      .filter(col("rn") <= 3)
-      .select(col("c_mktsegment"), col("rn"), col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("c_mktsegment").asc, col("rn").asc)
   }
 
@@ -235,7 +216,8 @@ object AggOps extends QueryPack {
     // aggregates makes Catalyst plan an Expand whose first-level aggregate
     // groups by (gid, l_partkey) — and then every one of those ~|parts|
     // groups carries its own ~16 KB HLL++(rsd=0.01) buffer. Measured at
-    // sf1: 48.7 s combined vs 2+1.5 s split (ApproxProbe decomposition).
+    // sf1: 48.7 s combined vs 2+1.5 s split (BASELINE.md round 3; the
+    // decomposition probe main is in git history at 7a28436).
     "q_agg_approx" -> ((s, d) => {
       val li = lineitem(s, d)
       // The 1-row x 1-row crossJoin is a deliberate BNLJ (PlanSpec

@@ -435,14 +435,12 @@ object AnnIvf {
     * projection to (p_id, c_id, cos) sits BELOW that exchange — embedding
     * arrays never shuffle per pair.
     */
-  private def rerank(lists: DataFrame, probeLists: DataFrame, k: Int,
-                     broadcastProbes: Boolean): DataFrame = {
-    val pl = if (broadcastProbes) broadcast(probeLists) else probeLists
+  private def rerank(lists: DataFrame, probeLists: DataFrame, k: Int): DataFrame = {
     val wRank = Window.partitionBy(col("p_id")).orderBy(col("cos").desc, col("c_id").asc)
     lists
       .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
         col("norm").as("c_norm"), col("list_id"))
-      .join(pl, Seq("list_id"))
+      .join(broadcast(probeLists), Seq("list_id"))
       .filter(col("p_id") =!= col("c_id"))
       .select(col("p_id"), col("c_id"),
         (fdot(col("p_emb"), col("c_emb")) / (col("p_norm") * col("c_norm"))).as("cos"))
@@ -464,8 +462,7 @@ object AnnIvf {
     val lists = liveLists(s, index)
     val withNorm = probes.withColumn("p_norm",
       sqrt(fdot(col("p_emb"), col("p_emb"))))
-    rerank(lists, probeAssignments(centers, supers, withNorm, nprobe, wSup), k,
-      broadcastProbes = true)
+    rerank(lists, probeAssignments(centers, supers, withNorm, nprobe, wSup), k)
   }
 
   /** One persisted index per (sfDir, nlist) per JVM: the registered queries
@@ -592,7 +589,7 @@ object AnnIvf {
   }
 
   /** One columnless count of a persisted index's inverted lists per JVM —
-    * sizes the kNN join's rerank parallelism (below). A count over the
+    * sizes the kNN join's probe groups (below). A count over the
     * lists parquet touches row-group metadata only.
     */
   private val listCountCache =
@@ -601,83 +598,22 @@ object AnnIvf {
     listCountCache.computeIfAbsent(index.listsPath, _ =>
       s.read.schema(listsSchema).parquet(index.listsPath).count())
 
-  /** Serialized spill bytes per rerank pair row — the (p_id, c_id, cos)
-    * triple after projection, lz4-framed in the sorter. Deliberately
-    * conservative (over-estimating only adds smaller tasks).
-    */
-  private val PairSpillBytes = 32.0
-
-  /** Per-task sort-spill target for the salted rerank. Sort spill lives
-    * only for the task's lifetime, so SIMULTANEOUS spill ≈ concurrent
-    * tasks × this — 32 × 256 MB = 8 GB on local[32], orders of magnitude
-    * under the r10 leg's ENOSPC point.
-    */
-  private val TargetTaskSpillBytes = 256.0 * 1024 * 1024
-  private val MaxRerankParts = 16384
-
-  /** [[rerank]] with pair-volume-bounded parallelism — the sf100
-    * single-node fix (r10 verdict #2). The plain rerank joins lists to
-    * probe assignments on list_id and inherits
-    * spark.sql.shuffle.partitions (32 here): at n = 2 M, nprobe 16 the
-    * designed O(nprobe·n^1.5) pair volume is ~4.5e10 rows ≈ 1.4 TB of
-    * per-task rank-sort spill — ~40 GB per task, ALL 32 concurrent, and
-    * the node's 59 GB of free disk is gone (ENOSPC, the r10 leg's
-    * failure). The volume is not the defect — a 1000-executor cluster
-    * absorbs it by having 1000× the spill surface; the fix is to give
-    * one node the same lever: partition the PAIR SPACE finer than the
-    * list count so each task's spill is bounded and is deleted at task
-    * end.
-    *
-    *   - candidates are replicated over `salts` buckets (explode — a
-    *     bounded ×salts on the SMALL side of the pair blowup);
-    *   - each probe lands in ONE bucket (pmod(hash(p_id), salts)), so
-    *     every (probe, candidate) pair still occurs exactly once;
-    *   - both sides are repartitioned to `parts` on (list_id, salt) —
-    *     the join reuses that partitioning (no extra exchange), AQE
-    *     leaves user-specified counts alone, and the per-probe top-k
-    *     still runs as a partial WindowGroupLimit below the final p_id
-    *     exchange (a probe's candidates span ≤ nprobe partitions, so the
-    *     exchange carries ≤ nprobe·k rows per probe).
-    *
-    * Same pairs, same output, same recall — only the task geometry
-    * changes, which is why [[annJoin]] can engage it purely on a size
-    * estimate without touching the operating point.
-    */
-  private def rerankSalted(lists: DataFrame, probeLists: DataFrame, k: Int,
-                           salts: Int, parts: Int): DataFrame = {
-    val wRank = Window.partitionBy(col("p_id")).orderBy(col("cos").desc, col("c_id").asc)
-    val cands = lists
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_emb"),
-        col("norm").as("c_norm"), col("list_id"))
-      .withColumn("salt", explode(sequence(lit(0), lit(salts - 1))))
-      .repartition(parts, col("list_id"), col("salt"))
-    val pl = probeLists
-      .withColumn("salt", pmod(hash(col("p_id")), lit(salts)))
-      .repartition(parts, col("list_id"), col("salt"))
-    cands.join(pl, Seq("list_id", "salt"))
-      .filter(col("p_id") =!= col("c_id"))
-      .select(col("p_id"), col("c_id"),
-        (fdot(col("p_emb"), col("c_emb")) / (col("p_norm") * col("c_norm"))).as("cos"))
-      .withColumn("rn", row_number().over(wRank).cast(LongType))
-      .filter(col("rn") <= k)
-      .select(col("p_id"), col("rn"), col("c_id"), col("cos"))
-  }
-
-  /** The r16 DEFAULT rerank: per-list streaming top-k, no pair rows, no
-    * pair sort (guide §1.2 step 1). The windowed shapes above materialize
+  /** The kNN join's rerank: per-list streaming top-k, no pair rows, no
+    * pair sort (guide §1.2 step 1). A windowed rerank ([[rerank]], or the
+    * plain and salted shapes the specs keep as references) materializes
     * one row per (probe, candidate) pair out of the list_id join and
-    * plan a per-task SORT under the partial WindowGroupLimit —
-    * ~n·nprobe·n/nlist rows (1.4e9 at sf10), whose spill is what
-    * rerankSalted's task-geometry split existed to bound. Here both
+    * plans a per-task SORT under the partial WindowGroupLimit —
+    * ~n·nprobe·n/nlist rows (1.4e9 at sf10, where it ran 7–10× slower
+    * than this shape, OPTIMIZATION_r17 §5). Here both
     * sides are grouped per inverted list first (two collect_list
     * aggregates — each shuffles the corpus exactly once, the same bytes
     * the pair join exchanged), the 1:1 list-level join carries ARRAYS,
     * and [[org.apache.spark.sql.graftext.ListTopKCosine]] scores each
     * (probe, candidate) pair in a tight loop emitting only each probe's
     * per-list top-k. The final cross-list window then ranks nprobe·k
-    * rows per probe instead of nprobe·n/nlist. Identical output
-    * (AnnSpec: grouped ≡ plain, row for row): same arithmetic, same
-    * (cos DESC, c_id ASC) total order, self-pairs skipped.
+    * rows per probe instead of nprobe·n/nlist. Identical output (AnnSpec
+    * pins it row for row against the windowed shapes): same arithmetic,
+    * same (cos DESC, c_id ASC) total order, self-pairs skipped.
     *
     * `probeGroups` splits each list's probe array into hash buckets so
     * one (list, group) row stays ~bounded regardless of corpus size
@@ -708,15 +644,30 @@ object AnnIvf {
       .select(col("p_id"), col("rn"), col("c_id"), col("cos"))
   }
 
+  private val FpCols = Seq("fp0", "fp1", "fp2", "fp3")
+
+  /** The exact kNN join's rerank inputs: the live inverted lists, and every
+    * live vector as a probe (p_id, p_emb, p_norm) assigned to its nprobe
+    * nearest lists. Shared with the specs' windowed reference shapes so
+    * they rerank exactly the pairs [[annJoin]] does.
+    */
+  private[graft] def joinAssignments(s: SparkSession, index: AnnIndex, nprobe: Int,
+                                     wSup: Int = WSup): (DataFrame, DataFrame) = {
+    val centers = s.read.schema(centroidsSchema).parquet(index.centroidsPath)
+    val supers = s.read.schema(supersSchema).parquet(index.supersPath)
+    val lists = liveLists(s, index)
+    val probes = lists.select(col("vec_id").as("p_id"),
+      col("embedding").as("p_emb"), col("norm").as("p_norm"))
+    (lists, probeAssignments(centers, supers, probes, nprobe, wSup))
+  }
+
   /** Approximate kNN JOIN: top-k neighbors for EVERY vector, from the
     * persisted IVF index — the unbounded generalization of [[ivfTopK]]
     * (whose probe set is bounded and therefore broadcastable). Here BOTH
     * sides scale with the corpus, so the probe-lists assignment joins the
     * inverted lists as a plain shuffled equi-join on list_id — no
-    * broadcast — and every per-probe limit is a WindowGroupLimit. When
-    * the estimated pair volume outgrows the session's shuffle
-    * parallelism, the rerank switches to [[rerankSalted]] (identical
-    * output, bounded per-task spill).
+    * broadcast — and every per-probe limit is a WindowGroupLimit; the
+    * exact rerank is always [[rerankGrouped]].
     *
     * `coarseK` selects between two rerank shapes — MEASURED round 5, see
     * BASELINE.md:
@@ -759,46 +710,26 @@ object AnnIvf {
     * IVF operating point. Parallelism of the list_id join equals nlist
     * (thousands at real scale; AQE splits any skewed hot list locally).
     */
-  private val FpCols = Seq("fp0", "fp1", "fp2", "fp3")
-
   def annJoin(s: SparkSession, d: String, nprobe: Int = DefaultNprobe, k: Int = 3,
-              coarseK: Int = 0, nlist: Int = 0, wSup: Int = WSup,
-              rerankParts: Int = 0): DataFrame = {
+              coarseK: Int = 0, nlist: Int = 0, wSup: Int = WSup): DataFrame = {
     val index = ensureIndex(s, d, nlist)
-    val centers = s.read.schema(centroidsSchema).parquet(index.centroidsPath)
-    val supers = s.read.schema(supersSchema).parquet(index.supersPath)
-    val lists = liveLists(s, index)
     if (coarseK <= 0) {
-      // single-stage exact path (the round-4 shape): every list-pruned
-      // candidate pays one exact dot below the rank exchange
-      val probes = lists.select(col("vec_id").as("p_id"),
-        col("embedding").as("p_emb"), col("norm").as("p_norm"))
-      val assignments = probeAssignments(centers, supers, probes, nprobe, wSup)
+      // single-stage exact path: every list-pruned candidate pays one
+      // exact dot inside the grouped rerank
+      val (lists, assignments) = joinAssignments(s, index, nprobe, wSup)
       val n = indexSize(s, index)
       val nlistEff = if (nlist > 0) nlist
         else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
-      // rerankParts: 0 runs the r16 DEFAULT grouped streaming-top-k shape
-      // ([[rerankGrouped]] — no pair rows, no pair sort, so the pair-spill
-      // model below no longer applies to the default); -1 forces the plain
-      // windowed shape and >0 the salted windowed shape at that partition
-      // count — kept as the A/B path and as the row-identity anchors
-      // AnnSpec pins the grouped kernel against.
-      return if (rerankParts == 0) {
-        // Bound one (list, probe-group) row: probes-per-list grows as
-        // nprobe·sqrt(n), so split past ~8k probes per group (~2 MB of
-        // probe structs at dim 64). sf fixtures stay at 1 group.
-        val probesPerList = n.toDouble * nprobe / nlistEff
-        val groups = math.max(1, math.ceil(probesPerList / 8192.0).toInt)
-        rerankGrouped(lists, assignments, k, groups)
-      } else if (rerankParts < 0) {
-        rerank(lists, assignments, k, broadcastProbes = false)
-      } else {
-        // salts: ~4 (list, salt) units per partition smooths list-size
-        // skew without inflating the candidate replication much.
-        val salts = math.max(1, math.ceil(4.0 * rerankParts / nlistEff).toInt)
-        rerankSalted(lists, assignments, k, salts, rerankParts)
-      }
+      // Bound one (list, probe-group) row: probes-per-list grows as
+      // nprobe·sqrt(n), so split past ~8k probes per group (~2 MB of
+      // probe structs at dim 64). sf fixtures stay at 1 group.
+      val probesPerList = n.toDouble * nprobe / nlistEff
+      val groups = math.max(1, math.ceil(probesPerList / 8192.0).toInt)
+      return rerankGrouped(lists, assignments, k, groups)
     }
+    val centers = s.read.schema(centroidsSchema).parquet(index.centroidsPath)
+    val supers = s.read.schema(supersSchema).parquet(index.supersPath)
+    val lists = liveLists(s, index)
     val probes = lists.select(col("vec_id").as("p_id") +: col("embedding").as("p_emb")
       +: FpCols.map(f => col(f).as(s"p_$f")): _*)
     // COARSE: sketch-hamming top-coarseK per probe; no arrays in the join

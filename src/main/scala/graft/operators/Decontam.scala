@@ -44,20 +44,6 @@ object Decontam {
   def gramsOf(toks: Column, n: Int): Column =
     org.apache.spark.sql.graftext.TextExprs.ngramsJoined(toks, n)
 
-  /** The r16 HOF formulation, kept only as the equivalence reference for
-    * DecontamSpec's NGramsJoined identity gate. `toks` must be a projected
-    * attribute, not an inline `split(...)`: HOF lambdas are interpreted
-    * and re-evaluate captured expressions per element (the round-5
-    * q_text_decontam pathology — 5.8-10.8 s vs 0.9 s at sf0.1).
-    */
-  private[graft] def gramsOfHof(toks: Column, n: Int): Column = {
-    require(n >= 1, s"gram length must be >= 1, got $n")
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(o => element_at(toks, i + o)): _*)))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Training docs sharing at least one distinct n-gram with the eval
     * corpus: (idCol, n_shared = distinct shared grams), ordered by id.
     */

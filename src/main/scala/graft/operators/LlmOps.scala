@@ -40,12 +40,6 @@ object LlmOps extends QueryPack {
   def qdot(a: Column, b: Column): Column =
     org.apache.spark.sql.graftext.VectorExprs.qdotNative(a, b)
 
-  /** HOF reference implementation of qdot — kept for the equivalence gate
-    * (ExprSpec) that pins the custom Expression to built-in semantics.
-    */
-  def qdotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** SQL twin of quantize for one element (DuckDB 1-based list index). */
   private def sqlQe(tbl: String): String =
     s"CAST(round(CAST($tbl.embedding[CAST(i AS INT)+1] AS DOUBLE) * 1000.0) AS BIGINT)"
@@ -79,43 +73,6 @@ object LlmOps extends QueryPack {
   private def quantizeChecked(v: Column): Column =
     when(size(v) === EmbDim, quantize(v)).otherwise(raise_error(concat(
       lit(s"expected $EmbDim-dim embedding, got "), size(v).cast("string"))))
-
-  /** The pre-r17-session-5 collect_set shape of q_dedup_cross_source —
-    * kept as the equivalence reference (PipelineOpsSpec pins the
-    * registered bitmask form row-identical to this), and as the shape a
-    * deployment with >63 sources would re-register.
-    */
-  private[graft] def crossSourceSetsReference(s: SparkSession, d: String): DataFrame = {
-    val srcSets = documents(s, d)
-      .select(col("source"), split(col("text"), " ").as("toks"))
-      .select(col("source"), explode(Decontam.gramsOf(col("toks"), 5)).as("g"))
-      .groupBy(col("g")).agg(collect_set(col("source")).as("ss"))
-      .filter(size(col("ss")) >= 2)
-    srcSets
-      .select(explode(col("ss")).as("src_a"), col("ss"))
-      .select(col("src_a"), explode(col("ss")).as("src_b"))
-      .filter(col("src_a") < col("src_b"))
-      .groupBy(col("src_a"), col("src_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy(col("src_a").asc, col("src_b").asc)
-  }
-
-  /** The pre-r17-session-5 posexplode/reassemble shape of
-    * q_text_stopfilter — the equivalence reference for the in-array
-    * filter form (PipelineOpsSpec pins row-identity).
-    */
-  private[graft] def stopfilterExplodeReference(s: SparkSession, d: String): DataFrame = {
-    val stop = Seq("the", "a", "value", "row")
-    documents(s, d)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
-      .filter(!col("term").isInCollection(stop))
-      .groupBy(col("doc_id"))
-      .agg(
-        array_join(transform(array_sort(collect_list(struct(col("pos"), col("term")))),
-          x => x.getField("term")), " ").as("clean_text"),
-        count(lit(1)).as("n_kept"))
-      .orderBy(col("doc_id").asc)
-  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_text_quality" -> ((s, d) => {
@@ -216,9 +173,9 @@ object LlmOps extends QueryPack {
     // no token exchange, no per-doc aggregate — the only shuffle left is
     // the declared output sort. Docs whose every token is a stopword drop
     // (n_kept >= 1), exactly as the groupBy dropped their zero surviving
-    // rows. ShapeProbe (sf10, one JVM, interleaved): 2.7–3.4 s → 1.6–2.0 s;
-    // PipelineOpsSpec pins row-identity to the explode reference;
-    // oracle-hash-gated.
+    // rows. A shape probe (sf10, one JVM, interleaved; git history at
+    // 7a28436): 2.7–3.4 s → 1.6–2.0 s; PipelineOpsSpec pins row-identity
+    // to the explode reference; oracle-hash-gated.
     "q_text_stopfilter" -> ((s, d) => {
       val stop = Seq("the", "a", "value", "row")
       val kept = filter(split(col("text"), " "),
@@ -602,8 +559,8 @@ object LlmOps extends QueryPack {
       // emits concat_ws(" ", t_i, t_{i+1}) for i = 1..len-1, and both
       // forms emit nothing for len < 2 or null text. DecontamSpec pins
       // the kernel element-identical to the HOF form at n = 2;
-      // ShapeProbe (sf10, one JVM): 2.2–2.5 s → 0.70–0.76 s (3.1×);
-      // oracle-hash-gated.
+      // a shape probe (sf10, one JVM; git history at 7a28436):
+      // 2.2–2.5 s → 0.70–0.76 s (3.1×); oracle-hash-gated.
       documents(s, d)
         .select(split(col("text"), " ").as("toks"))
         .select(explode(Decontam.gramsOf(col("toks"), 2)).as("bigram"))
@@ -692,8 +649,9 @@ object LlmOps extends QueryPack {
     // from the mask HISTOGRAM (|masks| ≤ 2^|sources| rows, tiny next to
     // |grams|), expanded against the source dimension twice — so the
     // second aggregation's input is mask-sized, not gram-sized.
-    // ShapeProbe (sf10, one JVM, interleaved): set shape 10.1–10.4 s vs
-    // mask shape 4.5–4.7 s, outputs identical at sf1 AND sf10;
+    // A shape probe (sf10, one JVM, interleaved; git history at 7a28436):
+    // set shape 10.1–10.4 s vs mask shape 4.5–4.7 s, outputs identical at
+    // sf1 AND sf10;
     // PipelineOpsSpec pins mask ≡ set row-identical; oracle-hash-gated.
     //
     // The source dimension: sids is |sources|-row (a categorical corpus

@@ -29,23 +29,18 @@ object MinHash {
     * minhash permutation family — and unlike multiplicative hashing it
     * cannot overflow (Spark 4 runs ANSI mode: long overflow throws).
     */
-  private val rots: IndexedSeq[Int] =
+  private[graft] val rots: IndexedSeq[Int] =
     (0 until NumHashes).map(j => (j * 19 + 7) % 63 + 1)
-  private val xorMasks: IndexedSeq[Long] =
+  private[graft] val xorMasks: IndexedSeq[Long] =
     (0 until NumHashes).map(j => 0x9E3779B97F4A7C15L * (2 * j + 1)) // Scala wraps
 
   /** One xxhash64 per token (NOT per token x slot — that was 32x the hash
     * work), mixed into each slot bijectively. r17: the codegen'd TokenHashes
     * kernel (`transform` is CodegenFallback — interpreted per element);
-    * equivalence vs [[baseHashesHof]] pinned in HashExprsSpec.
+    * equivalence vs the HOF reference pinned in HashExprsSpec.
     */
   def baseHashes(toks: Column): Column =
     org.apache.spark.sql.graftext.HashExprs.tokenHashes(toks)
-
-  /** HOF reference implementation, kept only as the equivalence oracle for
-    * the codegen'd TokenHashes expression.
-    */
-  def baseHashesHof(toks: Column): Column = transform(toks, t => xxhash64(t))
 
   /** Word n-gram shingles of a token array: ["a","b","c"] at n=2 ->
     * ["a b", "b c"]. Shingling makes the Jaccard signal ORDER-sensitive
@@ -60,21 +55,10 @@ object MinHash {
 
   /** 32-slot minhash signature from per-token base hashes — the codegen'd
     * custom Expression (same rot/xor formula; equivalence pinned by
-    * MinHashSpec's test against signatureFromBaseHof).
+    * ExprSpec's test against the HOF reference).
     */
   def signatureFromBase(base: Column): Column =
     org.apache.spark.sql.graftext.VectorExprs.minhashSlots(base, NumHashes)
-
-  /** HOF reference implementation, kept only as the equivalence oracle for
-    * the codegen'd MinHashSlots expression.
-    */
-  def signatureFromBaseHof(base: Column): Column =
-    array((0 until NumHashes).map { j =>
-      val r = rots(j)
-      array_min(transform(base, h =>
-        shiftleft(h, r).bitwiseOR(shiftrightunsigned(h, 64 - r))
-          .bitwiseXOR(lit(xorMasks(j)))))
-    }: _*)
 
   /** 64-bit HASHED word n-gram shingles: the shingle set under a 64-bit
     * hash — each shingle is xxhash64 over its window's token hashes, so no
@@ -88,27 +72,9 @@ object MinHash {
   def hashedShingles(toks: Column, n: Int): Column = {
     require(n == 2, s"hashedShingles implements bigrams (n=2), got n=$n")
     // r17: one codegen'd pass (HashedBigrams) — the zip_with/slice HOF chain
-    // below stays as the equivalence reference (HashExprsSpec pins them
-    // element-identical, including the short-doc whole-array fold).
+    // it replaced is the spec-side equivalence reference (HashExprsSpec pins
+    // them element-identical, including the short-doc whole-array fold).
     org.apache.spark.sql.graftext.HashExprs.hashedBigrams(toks)
-  }
-
-  /** HOF reference implementation, kept only as the equivalence oracle for
-    * the codegen'd HashedBigrams expression.
-    */
-  def hashedShinglesHof(toks: Column, n: Int): Column = {
-    require(n == 2, s"hashedShinglesHof implements bigrams (n=2), got n=$n")
-    val th = transform(toks, t => xxhash64(t))
-    // zip_with against the self-shifted array: the lambda touches ONLY its
-    // bound args. (An element_at(th, i+j) formulation re-evaluates the whole
-    // th array PER ELEMENT — higher-order lambdas don't close over outer
-    // expressions, they inline them — turning O(L) into O(L²) hashing;
-    // measured 2x slower end-to-end than even the string-building shingles.)
-    val sh = slice(
-      zip_with(th, slice(th, lit(2), greatest(size(toks) - 1, lit(0))),
-        (a, b) => xxhash64(a, b)),
-      lit(1), size(toks) - 1)
-    when(size(toks) < n, array(xxhash64(th))).otherwise(sh)
   }
 
   /** 32-slot minhash signature of a distinct-token array. */
@@ -160,20 +126,12 @@ object MinHash {
       .filter(size(col("base")) > 0)
       .select(col("doc_id"), signatureFromBase(col("base")).as("sig"))
       // r17: codegen'd BandHashes + posexplode — the transform/slice/struct
-      // HOF chain (kept below as bandHashesHof, the equivalence reference)
+      // HOF chain (now the spec-side bandHashesHof equivalence reference)
       // paid 8 interpreted lambda binds + slice allocations per banded row.
       // posexplode's pos IS the band id (same 0..Bands-1 order and values).
       .select(col("doc_id"), posexplode(
         org.apache.spark.sql.graftext.HashExprs.bandHashes(col("sig"), RowsPerBand))
         .as(Seq("band", "bh")))
-
-  /** HOF reference implementation of the per-band hash vector, kept only as
-    * the equivalence oracle for the codegen'd BandHashes expression
-    * (element b == the old explode'd struct's bh for band b).
-    */
-  def bandHashesHof(sig: Column): Column =
-    transform(sequence(lit(0), lit(Bands - 1)),
-      b => xxhash64(slice(sig, b * RowsPerBand + 1, lit(RowsPerBand))))
 
   /** Distinct candidate pairs (a_id < b_id) sharing >= 1 band bucket. */
   def candidatePairs(docs: DataFrame): DataFrame =
@@ -279,7 +237,8 @@ object MinHash {
   }
 
   /** As above with an explicit tokenization. Clustering runs the
-    * alternating-star algorithm (Components.altStar): ComponentsProbe
+    * alternating-star algorithm (Components.altStar): an isolated probe
+    * (BASELINE.md round 7; the probe main is in git history at 7a28436)
     * measured it 1.39x/1.43x faster than minLabel at sf1/sf10 over this
     * exact pipeline at label-identical output (the shrinking edge set
     * beats carrying the full set + a pointer-jump join every pass);

@@ -142,8 +142,8 @@ object ScanOps extends QueryPack {
     // lineitem (2 parquet passes over the same columns). ONE scan now
     // computes both branch flags per row — a row matching both filters
     // contributed (1,0) and (0,1) rows to the union before, (1,1) once
-    // now: identical (ca, cb) after the sum. ShapeProbe (one JVM,
-    // interleaved): sf1 2.1 → 1.7 s, sf10 never worse (the explode+sort
+    // now: identical (ca, cb) after the sum. A shape probe (one JVM,
+    // interleaved; git history at 7a28436): sf1 2.1 → 1.7 s, sf10 never worse (the explode+sort
     // tail dominates there); outputs identical at both SFs;
     // oracle-hash-gated. Plan: 2 parquet scans → 1.
     "q_set_except_all" -> ((s, d) => {

@@ -33,22 +33,6 @@ object SimHash {
     org.apache.spark.sql.graftext.VectorExprs.simhash64(
       org.apache.spark.sql.graftext.HashExprs.tokenHashes(toks))
 
-  /** HOF reference implementation, kept only as the equivalence oracle for
-    * the codegen'd SimHash64 expression.
-    */
-  def fingerprint64Hof(toks: Column): Column = {
-    val base = transform(toks, t => xxhash64(t))
-    val zero = array((0 until Bits).map(_ => lit(0L)): _*)
-    val bitArrays = transform(base, h =>
-      array((0 until Bits).map(b =>
-        shiftrightunsigned(h, b).bitwiseAND(lit(1L))): _*))
-    val counts = aggregate(bitArrays, zero, (acc, v) => zip_with(acc, v, _ + _))
-    val n = size(base).cast(LongType)
-    (0 until Bits).map { b =>
-      when(element_at(counts, b + 1) * 2 > n, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, c) => a.bitwiseOR(c))
-  }
-
   /** (doc_id, fp, chunk, cv) — one row per 16-bit chunk per doc. */
   def chunked(docs: DataFrame): DataFrame =
     docs

@@ -108,11 +108,12 @@ object SubqOps extends QueryPack {
         |         FROM lineitem l2 WHERE l2.l_partkey = l1.l_partkey))
         |ORDER BY s_suppkey ASC""".stripMargin,
 
-    // The PRODUCTION rewrite of q_subq_having_corr (the RewriteProbe
-    // winner, 1.70x at sf10): the subquery form pays THREE lineitem
-    // aggregations (the grouped fact + two decorrelated correlated
-    // scalars); the same semantics is ONE grouped aggregate + per-part
-    // window aggregates over the already-tiny (supp, part) rollup —
+    // The PRODUCTION rewrite of q_subq_having_corr (the winner of
+    // BASELINE.md's round-7 rewrite probe, 1.70x at sf10): the subquery
+    // form pays THREE lineitem aggregations (the grouped fact + two
+    // decorrelated correlated scalars); the same semantics is ONE grouped
+    // aggregate + per-part window aggregates over the already-tiny
+    // (supp, part) rollup —
     // because the rollup has exactly one row per (supp, part), the
     // window COUNT(*) per part IS the distinct-supplier count and the
     // window SUM(q) per part IS the part's total quantity. Registered

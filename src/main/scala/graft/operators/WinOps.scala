@@ -453,7 +453,7 @@ object WinOps extends QueryPack {
     // exact-NTILE) plan. The readable global-NTILE-window formulation —
     // three unpartitioned windows = a single-partition global sort, a
     // scale-killer at 100× — is DEMOTED out of the public registry to
-    // `rfmNtileReference` below; PipelineOpsSpec keeps it as the
+    // the spec-side `rfmNtileReference`; PipelineOpsSpec keeps it as the
     // oracle-identity anchor (scalable ≡ NTILE, row-identical). The
     // registry thereby carries no single-partition global window.
     "q_rfm_segment" -> ((s, d) => rfmScalable(s, d)),
@@ -492,29 +492,10 @@ object WinOps extends QueryPack {
         .orderBy(col("o_custkey").asc)
   }
 
-  /** The demoted readable NTILE-window formulation — three unpartitioned
-    * windows, i.e. a deliberate single-partition global sort. SPEC-ONLY:
-    * PipelineOpsSpec asserts rfmScalable ≡ this, which is the whole-plan
-    * correctness proof for the exact-NTILE reconstruction. Never register
-    * this shape; it is the thing the scalable form exists to replace.
-    */
-  private[graft] def rfmNtileReference(s: SparkSession, d: String): DataFrame = {
-    val agg = rfmAgg(s, d)
-    val wR = Window.orderBy(col("last_od").asc, col("o_custkey").asc)
-    val wF = Window.orderBy(col("frequency").asc, col("o_custkey").asc)
-    val wM = Window.orderBy(col("monetary_cents").asc, col("o_custkey").asc)
-    agg.select(col("o_custkey"), col("last_od"), col("frequency"),
-      col("monetary_cents"),
-      bi(ntile(5).over(wR)).as("r_score"),
-      bi(ntile(5).over(wF)).as("f_score"),
-      bi(ntile(5).over(wM)).as("m_score"))
-      .orderBy(col("o_custkey").asc)
-  }
-
   /** Shared RFM rollup: one row per customer (recency / frequency /
     * monetary), all exact types.
     */
-  private def rfmAgg(s: SparkSession, d: String): DataFrame =
+  private[graft] def rfmAgg(s: SparkSession, d: String): DataFrame =
     orders(s, d).groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_od"),
         count(lit(1)).as("frequency"),

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.StringWriter
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -90,6 +90,23 @@ object Manifest {
 
   private[sources] def path(root: String, version: Long): Path =
     versionFile(Paths.get(root, Dir), version)
+
+  /** Publish `bytes` as version `version` of the log in `dir`, atomically
+    * and exclusively. The bytes go to a temporary sibling first (a
+    * `.tmp` name [[versionsIn]] never lists); a hard link then gives them
+    * the version name. The link is atomic, so a reader sees the whole
+    * file or no version, and exclusive, so a racing writer's link throws
+    * `FileAlreadyExistsException` — the callers' conflict signal. A writer
+    * killed before it removes the temporary file leaves `*.tmp` debris
+    * that [[SnapshotStore.vacuum]] reclaims.
+    */
+  private[sources] def publishVersion(dir: Path, version: Long, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(f".v$version%013d.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try Files.createLink(versionFile(dir, version), tmp)
+    finally Files.deleteIfExists(tmp)
+  }
 
   /** The versions logged in `dir`, ascending (empty when it is absent). */
   private[sources] def versionsIn(dir: Path): Seq[Long] = {

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
 /** Catalog-level atomicity ACROSS [[SnapshotStore]] tables — the
   * "multi-table transaction" a lakehouse catalog adds on top of
@@ -17,7 +17,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   *     REAL but INVISIBLE to catalog readers, because a catalog reader
   *     resolves every table version through one catalog snapshot.
   *   - It then publishes the new name→version map as the next catalog
-  *     version: one CREATE_NEW, so the cross-table cut flips atomically.
+  *     version: one exclusive, atomic publish (`Manifest.publishVersion`),
+  *     so the cross-table cut flips atomically.
   *     Two racing publishers race for the version number; the loser gets
   *     [[SnapshotStore.SnapshotConflictException]] and must re-read,
   *     re-validate, and retry — same optimistic contract as the store.
@@ -66,11 +67,9 @@ object SnapshotCatalog {
       throw new SnapshotStore.SnapshotConflictException(
         s"catalog at $root moved: expected base $expectedBase, found $cur")
     val next = cur.getOrElse(-1L) + 1
-    val p = path(root, next)
-    Files.createDirectories(p.getParent)
     try {
-      Files.write(p, Manifest.encodeCatalog(tables).getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Manifest.publishVersion(Paths.get(root, Dir), next,
+        Manifest.encodeCatalog(tables).getBytes(StandardCharsets.UTF_8))
       next
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -24,11 +24,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     writer transaction marker, + optional per-file column stats).
   *     [[Manifest]] is its one model and codec; every operation decodes
   *     each version it touches once ([[Snapshot]]) and passes it down.
-  *   - COMMIT = create-exclusive of the next manifest. `CREATE_NEW` is
-  *     atomic on POSIX (and maps to the atomic variants object stores /
-  *     HDFS offer); two racing writers race for the same version number
-  *     and exactly one wins. The loser REBASES automatically when the two
-  *     write sets are disjoint ([[commitRebasing]] — driver-side manifest
+  *   - COMMIT = create-exclusive of the next manifest. Its bytes are
+  *     written to a temporary name, then hard-linked to the version name
+  *     (`Manifest.publishVersion`): the link is atomic and exclusive on
+  *     POSIX (the put-if-absent object stores / HDFS offer plays the same
+  *     role), so a reader never sees a partial manifest, and two racing
+  *     writers race for the same version number and exactly one wins.
+  *     The loser REBASES automatically when the two write sets are disjoint ([[commitRebasing]] — driver-side manifest
   *     math, the finished data files are reused) and surfaces a
   *     [[SnapshotConflictException]] only on a true intersection
   *     (optimistic concurrency, no locks).
@@ -64,9 +66,9 @@ object SnapshotStore {
 
   /** Above this file count a commit writes the SECTIONED manifest layout
     * (measured: the flat layout is driver-bound at million-file scale —
-    * 4.9 s parse, 11 s CDC diff, 95 MB text at 1e6 entries; see
-    * ManifestProbe + BASELINE.md). Sections are partition-grouped,
-    * content-addressed files read lazily: a partition-pruned read parses
+    * 4.9 s parse, 11 s CDC diff, 95 MB text at 1e6 entries; BASELINE.md
+    * round 12, whose probe main is in git history at 7a28436). Sections
+    * are partition-grouped, content-addressed files read lazily: a partition-pruned read parses
     * only matching sections, an incremental diff skips identical section
     * refs wholesale, and a commit re-writes only sections whose content
     * changed (Iceberg's manifest-list idea on the same primitives).
@@ -452,12 +454,11 @@ object SnapshotStore {
     publish(root, next, Manifest(rows, schema, Some(partCol), changeKey.getOrElse(Nil),
       txn, stats.fold(Seq.empty[String])(_._1), files, stats.fold(Map.empty: FileStats)(_._2)))
 
-  /** Create-exclusive write of `m` (flat: `files` + `ranges`) as version
-    * `next`, in the sectioned layout at [[sectionThreshold]] files.
+  /** Atomic, create-exclusive publish of `m` (flat: `files` + `ranges`)
+    * as version `next`, in the sectioned layout at [[sectionThreshold]]
+    * files.
     */
   private def publish(root: String, next: Long, m: Manifest): Long = {
-    val p = Manifest.path(root, next)
-    Files.createDirectories(p.getParent)
     val laidOut =
       if (m.files.length >= sectionThreshold) {
         // Sectioned layout: group by partition dir ("" = unpartitioned),
@@ -488,8 +489,8 @@ object SnapshotStore {
         m.copy(files = Nil, ranges = Map.empty, sections = Some(refs))
       } else m
     try {
-      Files.write(p, Manifest.encode(laidOut).getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      Manifest.publishVersion(Paths.get(root, Manifest.Dir), next,
+        Manifest.encode(laidOut).getBytes(StandardCharsets.UTF_8))
       next
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -1639,7 +1640,8 @@ object SnapshotStore {
     * commit rebases over concurrent appends like a compaction (row
     * movement only). Returns the current version unchanged when no file
     * is annotated. This collapses the measured merge-on-read read tax
-    * (UpdateProbe: full read 9.49 s at sf100 under DVs vs 0.74 s plain)
+    * (BASELINE.md round 15: full read 9.49 s at sf100 under DVs vs
+    * 0.74 s plain)
     * without compact's whole-partition rewrite.
     */
   def materializeDv(spark: SparkSession, root: String,
@@ -1971,9 +1973,9 @@ object SnapshotStore {
         finally walk.close()
       }
     }
-    // Section GC: drop section files no LIVE manifest references, same
-    // age guard (an in-flight commit writes its sections before its
-    // manifest exists).
+    // Section GC: drop section files no LIVE manifest references (their
+    // `*.tmp` debris included), same age guard (an in-flight commit writes
+    // its sections before its manifest exists).
     val liveSecs = live.flatMap(_.manifest.sections.toSeq.flatten.map(_._2)).toSet
     val secDir = Paths.get(root, Manifest.Dir, Manifest.SectionDir)
     if (Files.isDirectory(secDir)) {
@@ -1982,6 +1984,17 @@ object SnapshotStore {
         .filter(p => !liveSecs.contains(p.getFileName.toString) &&
           Files.getLastModifiedTime(p).toMillis <= cutoff)
         .toList.foreach(Files.delete)
+      finally it.close()
+    }
+    // Log GC: a writer killed mid-publish strands its temporary manifest
+    // (never listed as a version); an in-flight one is younger than cutoff.
+    val logDir = Paths.get(root, Manifest.Dir)
+    if (Files.isDirectory(logDir)) {
+      val it = Files.list(logDir)
+      try it.iterator().asScala
+        .filter(p => p.getFileName.toString.endsWith(".tmp") &&
+          Files.isRegularFile(p) && Files.getLastModifiedTime(p).toMillis <= cutoff)
+        .toList.foreach(Files.deleteIfExists(_))
       finally it.close()
     }
     dead.foreach(v => Files.deleteIfExists(Manifest.path(root, v)))

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types._
   * the list_id join and selected top-k per probe through a partial
   * WindowGroupLimit — which plans a per-task SORT of every pair row
   * (~n·nprobe·n/nlist rows ≈ 1.4e9 at sf10; the sort's spill is the
-  * very thing rerankSalted existed to bound). These generators replace
-  * the pair materialization + sort with a tight loop: candidates and
-  * probes arrive grouped per inverted list (two collect_list
+  * very thing the old salted rerank shape existed to bound). These
+  * generators replace the pair materialization + sort with a tight
+  * loop: candidates and probes arrive grouped per inverted list (two collect_list
   * aggregates, each shuffling the corpus ONCE — the same bytes the old
   * join exchanged), and each (probe, list) pair emits only its top-k
   * rows from a k-sized insertion buffer. No pair row is ever built, no

@@ -25,10 +25,11 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
 
 /** xxhash64 per element: array<string> | array<bigint> -> array<bigint>.
   * The native twin of `transform(toks, t => xxhash64(t))`
-  * (MinHash.baseHashesHof) — string elements hash their UTF-8 bytes, long
-  * elements hash via the 64-bit word kernel, both from the xxhash64()
-  * default seed 42 (the long case is what the shingled pipeline exercises:
-  * its "tokens" are already 64-bit shingle hashes).
+  * (ReferenceShapes.baseHashesHof, spec side) — string elements hash
+  * their UTF-8 bytes, long elements hash via the 64-bit word kernel,
+  * both from the xxhash64() default seed 42 (the long case is what the
+  * shingled pipeline exercises: its "tokens" are already 64-bit shingle
+  * hashes).
   */
 case class TokenHashes(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
@@ -85,10 +86,11 @@ case class TokenHashes(child: Expression)
 
 /** 64-bit hashed word-bigram shingles straight from the token array:
   * array<string> -> array<bigint>. The native twin of
-  * MinHash.hashedShinglesHof (token hashes, then xxhash64(th[i], th[i+1])
-  * per adjacent pair; a doc shorter than 2 tokens hashes its whole
-  * token-hash array — xxhash64 over an array folds hashLong element-wise
-  * from the seed). One pass, no intermediate arrays.
+  * ReferenceShapes.hashedShinglesHof (token hashes, then
+  * xxhash64(th[i], th[i+1]) per adjacent pair; a doc shorter than 2
+  * tokens hashes its whole token-hash array — xxhash64 over an array
+  * folds hashLong element-wise from the seed). One pass, no intermediate
+  * arrays.
   */
 case class HashedBigrams(child: Expression)
   extends UnaryExpression with ExpectsInputTypes {
@@ -220,7 +222,7 @@ case class BandHashes(child: Expression, rowsPerBand: Int)
 }
 
 /** Order-sensitive rotate-xor fold of per-token hashes:
-  * array<string> -> bigint. The native twin of TextAnalysis.fingerprintHof
+  * array<string> -> bigint. The native twin of ReferenceShapes.fingerprintHof
   * (`aggregate(transform(toks, xxhash64), 0L, (acc, h) => rotl7(acc) ^ h)`).
   */
 case class FingerprintXor(child: Expression)

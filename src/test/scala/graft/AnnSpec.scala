@@ -39,8 +39,10 @@ class AnnSpec extends AnyFunSuite {
     // item 5); the sf0.001 gates (16 lists) cannot see a regression at
     // that operating point, so this spec regenerates the 20k-vector
     // corpus (DataGen — distribution-gated by DataGenSpec) and floors the
-    // same metric AnnSweep reports, on the same deterministic 200-probe
-    // sampler. Floor 0.55 = measured 0.600 minus corpus-evolution margin.
+    // same metric the r10 ANN sweep reported (BENCH_ann_sweep_r10.json;
+    // the sweep main is in git history at 7a28436), on the same
+    // deterministic 200-probe sampler. Floor 0.55 = measured 0.600 minus
+    // corpus-evolution margin.
     // Corpus and index persist under target/graft-scratch across runs
     // (content-fingerprinted reuse).
     val dir = "target/graft-scratch/ann-recall-sf1"
@@ -90,7 +92,7 @@ class AnnSpec extends AnyFunSuite {
     // registered exact join carries (r14 verdict #3's floor) — and the
     // SAME 0.05 corpus-evolution margin under its operating point. ADC
     // tracks the within-list exact ceiling to ~1.5 pts at every nprobe
-    // (PqResidualProbe, BASELINE round 16), so this floor can never sit
+    // (BASELINE.md round 16), so this floor can never sit
     // ABOVE the exact path's own 0.55 floor: on the corpus build this
     // round the exact default point measured 0.600 and ADC 0.585 — the
     // old 0.6 floor red-flagged the documented 1.5-pt tracking gap, not
@@ -131,7 +133,7 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 0.55, f"IVF×PQ recall $recall%.3f < 0.55 floor")
 
     // The 0.7 gate at the byte-budget operating point (r15 verdict #4,
-    // measured round 16 — PqResidualProbe/BASELINE): with RESIDUAL codes
+    // measured round 16, BASELINE.md): with RESIDUAL codes
     // (IVFADC) the ADC ranking tracks the within-list exact ceiling to
     // ~1.5 pts at EVERY nprobe (16: 0.620 vs ceiling 0.635; 28: 0.750 vs
     // 0.765), so recall is list-pruning-bound, not code-fidelity-bound —
@@ -237,19 +239,21 @@ class AnnSpec extends AnyFunSuite {
 
   test("ann join grouped (default) ≡ salted ≡ plain rerank, row for row") {
     // All three rerank shapes must be pure execution-geometry changes:
-    // same pairs, same top-k, same ties. rerankParts selects the shape:
-    // 0 = the r16 grouped streaming-top-k DEFAULT (no pair rows, no
-    // pair sort), -1 = the plain windowed shape, 64 (> the session's 32
-    // shuffle partitions) = the salted windowed shape. Exact doubles
-    // compared at 1e-12 scale — the grouped kernel reuses FloatDot's
-    // sequential accumulation, so the cosines are bitwise-identical.
-    def rows(parts: Int) =
-      graft.operators.AnnIvf.annJoin(spark, TestSpark.sf0001, rerankParts = parts)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          math.rint(r.getDouble(3) * 1e12))).toSet
-    val grouped = rows(0)
-    val plain = rows(-1)
-    val salted = rows(64)
+    // same pairs, same top-k, same ties. annJoin runs the grouped
+    // streaming-top-k shape (no pair rows, no pair sort); the plain and
+    // salted windowed shapes in ReferenceShapes rank the same (lists,
+    // assignments) annJoin gets from AnnIvf.joinAssignments — salted over
+    // 16 salts at 64 partitions (> the session's shuffle partitions).
+    // Exact doubles compared at 1e-12 scale — the grouped kernel reuses
+    // FloatDot's sequential accumulation, so the cosines are
+    // bitwise-identical.
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        math.rint(r.getDouble(3) * 1e12))).toSet
+    val grouped = rows(AnnIvf.annJoin(spark, TestSpark.sf0001))
+    val plain = rows(ReferenceShapes.annRerankWindowed(spark, TestSpark.sf0001))
+    val salted = rows(ReferenceShapes.annRerankWindowed(spark, TestSpark.sf0001,
+      salts = 16, parts = 64))
     assert(plain.nonEmpty && plain == salted,
       s"shapes diverge: onlyPlain=${(plain -- salted).take(3)} onlySalted=${(salted -- plain).take(3)}")
     assert(grouped == plain,
@@ -343,7 +347,7 @@ class AnnSpec extends AnyFunSuite {
 
   test("persisted index: fit-free query side, identical results to ivfTopK") {
     val emb = graft.Tables.embeddings(spark, TestSpark.sf0001)
-    val dir = { val b=java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft-ann-spec-") }.toString
+    val dir = TestSpark.scratch("graft-ann-spec-")
     val index = AnnIvf.buildIndex(emb, dir)
 
     // Online side: constructing the query plan must run ZERO Spark jobs
@@ -382,7 +386,7 @@ class AnnSpec extends AnyFunSuite {
     val cut = (n * 0.8).toLong
     // Base build on 80% of the corpus; the remaining 20% arrives "later"
     // (the streaming-ingest shape).
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft-ann-append-") }.toString
+    val dir = TestSpark.scratch("graft-ann-append-")
     val index = AnnIvf.buildIndex(emb.filter(col("vec_id") < cut), dir)
     import scala.jdk.CollectionConverters._
     def listParts: Map[String, java.nio.file.attribute.FileTime] = {
@@ -427,7 +431,7 @@ class AnnSpec extends AnyFunSuite {
         .map(p => got.getOrElse(p, Set.empty[Long]).intersect(brute(p)).size / 5.0)
       rs.sum / rs.size
     }
-    val fullDir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createTempDirectory(b, "graft-ann-full-") }.toString
+    val fullDir = TestSpark.scratch("graft-ann-full-")
     val fullIndex = AnnIvf.buildIndex(emb, fullDir)
     val rAppend = recallOf(index)
     val rFull = recallOf(fullIndex)
@@ -438,7 +442,7 @@ class AnnSpec extends AnyFunSuite {
     // The corpus-fingerprint staleness guard is orthogonal and still
     // trips: regenerating the corpus parquet changes the fingerprint that
     // keys ensureIndex's cross-JVM reuse.
-    val fpDir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createTempDirectory(b, "graft-ann-fp-") }.toString
+    val fpDir = TestSpark.scratch("graft-ann-fp-")
     emb.limit(50).write.mode("overwrite").parquet(s"$fpDir/embeddings.parquet")
     val fp1 = AnnIvf.corpusFingerprint(fpDir)
     Thread.sleep(1100) // mtime granularity
@@ -451,7 +455,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val emb = graft.Tables.embeddings(spark, TestSpark.sf001)
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft-ann-tomb-") }.toString
+    val dir = TestSpark.scratch("graft-ann-tomb-")
     val index = AnnIvf.buildIndex(emb, dir)
     import scala.jdk.CollectionConverters._
     def listParts: Map[String, java.nio.file.attribute.FileTime] = {
@@ -516,7 +520,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val emb = graft.Tables.embeddings(spark, TestSpark.sf001)
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft-ann-resur-") }.toString
+    val dir = TestSpark.scratch("graft-ann-resur-")
     val index = AnnIvf.buildIndex(emb, dir)
     val v = 7L; val w = 11L
     val oldEmb = emb.filter(col("vec_id") === v)

@@ -25,9 +25,7 @@ class CsvJsonSpec extends AnyFunSuite {
   test("orc roundtrip: schema-faithful, values identical, predicates pushed to the ORC scan") {
     val src = Tables.customer(spark, TestSpark.sf0001)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-    val out = { val b = java.nio.file.Paths.get("target/graft-scratch")
-      java.nio.file.Files.createDirectories(b)
-      java.nio.file.Files.createTempDirectory(b, "graft_orc_") }.toString
+    val out = TestSpark.scratch("graft_orc_")
     TextSources.writeOrc(src, out)
     val back = TextSources.readOrc(spark, out, src.schema)
     assert(back.schema == src.schema)
@@ -44,9 +42,7 @@ class CsvJsonSpec extends AnyFunSuite {
   test("xml roundtrip: schema-faithful, values identical, from_xml parses a written element") {
     val src = Tables.customer(spark, TestSpark.sf0001)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-    val out = { val b = java.nio.file.Paths.get("target/graft-scratch")
-      java.nio.file.Files.createDirectories(b)
-      java.nio.file.Files.createTempDirectory(b, "graft_xml_") }.toString
+    val out = TestSpark.scratch("graft_xml_")
     TextSources.writeXml(src, out)
     val back = TextSources.readXml(spark, out, src.schema)
     assert(back.schema == src.schema)

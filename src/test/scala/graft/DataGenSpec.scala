@@ -111,7 +111,7 @@ class DataGenSpec extends AnyFunSuite {
     // ROUND-TRIPPED read schema of every generated timestamp-bearing table
     // field-by-field (name AND dataType) against the real corpus, so a
     // physical re-encoding on either side fails here by name.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-datagen-schema").toString
+    val tmp = TestSpark.scratch("graft-datagen-schema")
     val gen = Seq(
       "orders" -> DataGen.ordersFrame(spark, 100, 50),
       "lineitem" -> DataGen.lineitemFrame(spark, 100, 50, 10),

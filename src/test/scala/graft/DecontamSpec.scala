@@ -39,7 +39,7 @@ class DecontamSpec extends AnyFunSuite {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
         Decontam.gramsOf(col("toks"), 5).as("fast"),
-        Decontam.gramsOfHof(col("toks"), 5).as("slow"))
+        ReferenceShapes.gramsOfHof(col("toks"), 5).as("slow"))
     assert(corpus.filter(not(col("fast") <=> col("slow"))).count() == 0)
     val adversarial: Seq[(Int, Seq[String])] = Seq(
       1 -> Seq("a", "b", "c", "d", "e", "f"),
@@ -53,7 +53,7 @@ class DecontamSpec extends AnyFunSuite {
     Seq(1, 2, 5).foreach { n =>
       val cmp = df.select(col("id"),
         Decontam.gramsOf(col("toks"), n).as("fast"),
-        Decontam.gramsOfHof(col("toks"), n).as("slow"))
+        ReferenceShapes.gramsOfHof(col("toks"), n).as("slow"))
       val bad = cmp.filter(not(col("fast") <=> col("slow"))).collect()
       assert(bad.isEmpty, s"n=$n: ${bad.mkString("\n")}")
     }

@@ -16,9 +16,7 @@ class EvolutionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private lazy val dir: String = {
-    val base = java.nio.file.Paths.get("target/graft-scratch")
-    Files.createDirectories(base)
-    val d = Files.createTempDirectory(base, "graft_evo_").toString
+    val d = TestSpark.scratch("graft_evo_")
     val gen1 = spark.range(0, 50).select(col("id").as("doc_id"),
       concat(lit("old doc "), col("id")).as("text"))
     val gen2 = spark.range(50, 80).select(col("id").as("doc_id"),

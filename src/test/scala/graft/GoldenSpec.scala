@@ -105,9 +105,7 @@ class GoldenSpec extends AnyFunSuite {
     */
   private def docsDir(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val b = java.nio.file.Paths.get("target/graft-scratch")
-    java.nio.file.Files.createDirectories(b)
-    val dir = java.nio.file.Files.createTempDirectory(b, "graft_docs_").toString
+    val dir = TestSpark.scratch("graft_docs_")
     rows.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     dir

@@ -14,10 +14,8 @@ class GraphRankSpec extends AnyFunSuite {
 
   test("Scratch.scoped: concurrent invocations each release exactly their own dirs (ADVICE r14)") {
     import graft.operators.Scratch
-    val base = java.nio.file.Paths.get("target", "graft-scratch")
-    java.nio.file.Files.createDirectories(base)
     def mk(tag: String) = {
-      val d = java.nio.file.Files.createTempDirectory(base, s"scoped-$tag-")
+      val d = java.nio.file.Paths.get(TestSpark.scratch(s"scoped-$tag-"))
       java.nio.file.Files.write(d.resolve("x"), Array[Byte](1))
       d
     }

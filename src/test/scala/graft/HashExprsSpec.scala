@@ -47,7 +47,7 @@ class HashExprsSpec extends AnyFunSuite {
     for (df <- Seq(adversarial, corpusToks)) {
       val cmp = df.select(
         HashExprs.tokenHashes(col("toks")).as("native"),
-        MinHash.baseHashesHof(col("toks")).as("hof"))
+        ReferenceShapes.baseHashesHof(col("toks")).as("hof"))
       assert(cmp.filter(not(col("native") <=> col("hof"))).count() == 0)
     }
   }
@@ -67,7 +67,7 @@ class HashExprsSpec extends AnyFunSuite {
     assert(cmp1.filter(not(col("native") <=> col("hof"))).count() == 0)
     val cmp2 = corpusToks.select(
       MinHash.baseHashes(MinHash.hashedShingles(col("toks"), 2)).as("native"),
-      transform(MinHash.hashedShinglesHof(col("toks"), 2), t => xxhash64(t)).as("hof"))
+      transform(ReferenceShapes.hashedShinglesHof(col("toks"), 2), t => xxhash64(t)).as("hof"))
     assert(cmp2.filter(not(col("native") <=> col("hof"))).count() == 0)
   }
 
@@ -75,7 +75,7 @@ class HashExprsSpec extends AnyFunSuite {
     for (df <- Seq(adversarial, corpusToks)) {
       val cmp = df.select(
         HashExprs.hashedBigrams(col("toks")).as("native"),
-        MinHash.hashedShinglesHof(col("toks"), 2).as("hof"))
+        ReferenceShapes.hashedShinglesHof(col("toks"), 2).as("hof"))
       assert(cmp.filter(not(col("native") <=> col("hof"))).count() == 0)
     }
   }
@@ -87,7 +87,7 @@ class HashExprsSpec extends AnyFunSuite {
       .select(MinHash.signature(col("toks")).as("sig"))
     val cmp = sigs.select(
       HashExprs.bandHashes(col("sig"), MinHash.RowsPerBand).as("native"),
-      MinHash.bandHashesHof(col("sig")).as("hof"))
+      ReferenceShapes.bandHashesHof(col("sig")).as("hof"))
     assert(cmp.filter(not(col("native") <=> col("hof"))).count() == 0)
     // and the vector length is Bands
     assert(sigs.select(HashExprs.bandHashes(col("sig"), MinHash.RowsPerBand).as("bhs"))
@@ -98,7 +98,7 @@ class HashExprsSpec extends AnyFunSuite {
     for (df <- Seq(adversarial, corpusToks)) {
       val cmp = df.select(
         HashExprs.fingerprintXor(col("toks")).as("native"),
-        graft.functions.TextAnalysis.fingerprintHof(col("toks")).as("hof"))
+        ReferenceShapes.fingerprintHof(col("toks")).as("hof"))
       assert(cmp.filter(not(col("native") <=> col("hof"))).count() == 0)
     }
   }

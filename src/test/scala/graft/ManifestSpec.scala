@@ -21,11 +21,7 @@ import graft.sources.{Manifest, SnapshotCatalog, SnapshotStore}
 class ManifestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scratch(prefix: String): String = {
-    val b = Paths.get("target/graft-scratch")
-    Files.createDirectories(b)
-    Files.createTempDirectory(b, prefix).toString
-  }
+  import TestSpark.scratch
 
   private def cases[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).map(i => gen.pureApply(Gen.Parameters.default.withSize(8), Seed(7L + i)))

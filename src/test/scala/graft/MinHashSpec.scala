@@ -168,7 +168,7 @@ class MinHashSpec extends AnyFunSuite {
 
   test("Components.minLabel reliable-checkpoint mode: same labels, lineage cut to checkpoint files") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = TestSpark.scratch("graft-ckpt")
     try {
       val nodes = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
       val edges = Seq((1L, 3L), (2L, 4L), (3L, 4L)).toDF("a_id", "b_id")
@@ -192,7 +192,7 @@ class MinHashSpec extends AnyFunSuite {
 
   test("Components.minLabel resumes from a partial run's persisted labels (driver-restart recovery)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
+    val dir = TestSpark.scratch("graft-resume")
     try {
       // A long path (1-2-...-8) needs several propagate+jump rounds, so a
       // maxPasses=1 run genuinely stops short of the fixpoint — the spec

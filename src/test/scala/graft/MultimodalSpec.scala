@@ -36,9 +36,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("binaryFile ingestion: kind from extension, glob prunes the listing, decode runs end-to-end") {
     import java.nio.file.{Files, Paths}
-    val base = Paths.get("target/graft-scratch")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "graft_media_")
+    val dir = Paths.get(TestSpark.scratch("graft_media_"))
     val files = Seq("cat.png" -> Array[Byte](1, 2, 3), "dog.jpg" -> Array[Byte](4, 5),
       "song.wav" -> Array[Byte](6), "clip.mp4" -> Array[Byte](7, 8), "blob.xyz" -> Array[Byte](9))
     files.foreach { case (n, bytes) => Files.write(dir.resolve(n), bytes) }
@@ -118,9 +116,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("decodeMeta: binaryFile-ingested fixtures get REAL header dims; unrecognized keep zeroed meta") {
     import java.nio.file.Files
-    val base = java.nio.file.Paths.get("target/graft-scratch")
-    Files.createDirectories(base)
-    val dir = Files.createTempDirectory(base, "graft_hdr_")
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_hdr_"))
     Files.write(dir.resolve("cat.png"), pngBytes(640, 360))
     Files.write(dir.resolve("scan.bmp"), bmpBytes(1024, 768))
     Files.write(dir.resolve("song.wav"), wavBytes(16000, 2, 320))

@@ -15,7 +15,7 @@ class ObservabilitySpec extends AnyFunSuite {
   test("observe: write-job metrics equal an independent recompute, exact") {
     val docs = Tables.documents(spark, sf)
     val obs = Observation("docs_quality")
-    val out = java.nio.file.Files.createTempDirectory("obs_sink").toString
+    val out = TestSpark.scratch("obs_sink")
     Observability.qualityObserved(docs, obs, "doc_id", Some("text"))
       .write.mode("overwrite").parquet(out)
 

@@ -291,7 +291,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     // anchor proving the exact-NTILE reconstruction bit-exact.
     val cols = Seq("o_custkey", "last_od", "frequency", "monetary_cents",
       "r_score", "f_score", "m_score")
-    val ntileForm = operators.WinOps.rfmNtileReference(spark, d)
+    val ntileForm = ReferenceShapes.rfmNtileReference(spark, d)
       .selectExpr(cols: _*).collect().map(_.toSeq).toSeq
     val scalableForm = SparkEntry.queries("q_rfm_segment_scalable")(spark, d)
       .selectExpr(cols: _*).collect().map(_.toSeq).toSeq
@@ -302,7 +302,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("q_dedup_cross_source ≡ collect_set reference: the bitmask form is row-identical") {
     // The r17 bitmask rewrite (bit_or over source ids + mask histogram)
     // against the demoted collect_set shape it replaced.
-    val setForm = operators.LlmOps.crossSourceSetsReference(spark, d)
+    val setForm = ReferenceShapes.crossSourceSetsReference(spark, d)
       .collect().map(_.toSeq).toSeq
     val maskForm = SparkEntry.queries("q_dedup_cross_source")(spark, d)
       .collect().map(_.toSeq).toSeq
@@ -311,7 +311,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("q_text_stopfilter ≡ posexplode reference: the in-array filter form is row-identical") {
-    val explodeForm = operators.LlmOps.stopfilterExplodeReference(spark, d)
+    val explodeForm = ReferenceShapes.stopfilterExplodeReference(spark, d)
       .collect().map(_.toSeq).toSeq
     val arrayForm = SparkEntry.queries("q_text_stopfilter")(spark, d)
       .collect().map(_.toSeq).toSeq

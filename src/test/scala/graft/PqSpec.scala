@@ -205,9 +205,7 @@ class PqSpec extends AnyFunSuite {
 
   test("corrupted persisted codebook degrades to refit (None), never throws") {
     import java.nio.file.{Files, Paths}
-    val base = Paths.get("target/graft-scratch")
-    Files.createDirectories(base)
-    val f = base.resolve(s"graft-pq-cb-corrupt-spec-${System.nanoTime()}.bin")
+    val f = Paths.get(TestSpark.scratch("graft-pq-cb-")).resolve("corrupt-spec.bin")
     val ref = Pq.Codebook(2, 4, 3, Array.tabulate(2 * 4 * 3)(_.toFloat))
     Pq.storeCodebook(f, ref)
     // Round-trip sanity first, so the negative cases below have teeth.

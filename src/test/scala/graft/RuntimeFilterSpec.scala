@@ -105,7 +105,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   // scanning the week the query touches.
 
   test("dynamic partition pruning fires on our partitioned sink (plan marker + row identity)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    val tmp = TestSpark.scratch("graft-dpp")
     val ev = Tables.events(spark, d)
     sources.Sinks.writePartitionedBy(ev, "event_type", s"$tmp/ev")
 

@@ -17,7 +17,7 @@ class SinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("partitioned-by-date write prunes on read") {
-    val out = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_part_") }.toString
+    val out = TestSpark.scratch("graft_part_")
     Sinks.writePartitionedByDate(
       Tables.orders(spark, TestSpark.sf0001), "o_orderdate", out)
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
@@ -36,7 +36,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("merge upsert: updates + inserts land; untouched partitions byte-untouched (mtime-identical)") {
     import spark.implicits._
-    val out = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_merge_") }.toString
+    val out = TestSpark.scratch("graft_merge_")
     val base = Tables.customer(spark, TestSpark.sf0001)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
     Sinks.writePartitionedBy(base, "c_nationkey", out)
@@ -75,7 +75,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("merge upsert: partition-crossing update throws under validateKeyPartition") {
     import spark.implicits._
-    val out = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_merge_x_") }.toString
+    val out = TestSpark.scratch("graft_merge_x_")
     val base = Tables.customer(spark, TestSpark.sf0001)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
     Sinks.writePartitionedBy(base, "c_nationkey", out)
@@ -135,7 +135,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("streaming file source produces the same tumbling aggregation as batch") {
     // stage the events file into a directory (the file stream source lists dirs)
-    val dir = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_stream_src_") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_stream_src_"))
     Files.copy(
       java.nio.file.Paths.get(TestSpark.sf0001, "events.parquet"),
       dir.resolve("events.parquet"))
@@ -157,7 +157,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("stream-static join: dim enrichment over a live stream equals the batch formulation") {
-    val dir = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_enrich_src_") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_enrich_src_"))
     Files.copy(
       java.nio.file.Paths.get(TestSpark.sf0001, "events.parquet"),
       dir.resolve("events.parquet"))
@@ -179,7 +179,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("compaction: fragmented dataset rewritten to the target file count, data identical") {
-    val out = { val b=java.nio.file.Paths.get("target/graft-scratch"); Files.createDirectories(b); Files.createTempDirectory(b, "graft_compact_") }.toString
+    val out = TestSpark.scratch("graft_compact_")
     val orders = Tables.orders(spark, TestSpark.sf0001)
     orders.repartition(64).write.mode("overwrite").parquet(out)
     def parquetFiles(p: String) =
@@ -213,8 +213,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("zorder layout: secondary-key file pruning improves >=4x over single-key sort") {
-    val base = { val b = java.nio.file.Paths.get("target/graft-scratch")
-      Files.createDirectories(b); Files.createTempDirectory(b, "graft_zorder_") }.toString
+    val base = TestSpark.scratch("graft_zorder_")
     val li = Tables.lineitem(spark, TestSpark.sf001)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     // 64 files: z-order candidate sets scale ~sqrt(nFiles) (the 2-D grid
@@ -296,8 +295,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("3-column z-order via compact(zorderBy): a (partkey, suppkey) box probe prunes strictly better than the 2-column layout") {
-    val base = { val b = java.nio.file.Paths.get("target/graft-scratch")
-      Files.createDirectories(b); Files.createTempDirectory(b, "graft_z3_") }
+    val base = java.nio.file.Paths.get(TestSpark.scratch("graft_z3_"))
     import graft.sources.SnapshotStore
     val li = Tables.lineitem(spark, TestSpark.sf001)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))

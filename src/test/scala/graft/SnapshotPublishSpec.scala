@@ -1,0 +1,80 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.SnapshotStore
+
+/** Manifest publication is atomic: a reader never decodes a partial
+  * version, and a writer that dies mid-publish leaves only debris that no
+  * version names and vacuum reclaims.
+  */
+class SnapshotPublishSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import TestSpark.scratch
+
+  test("a reader racing a committer of multi-MB manifests always decodes a whole version") {
+    val root = scratch("snap_pubrace_")
+    val entries = 40000 // below sectionThreshold: one flat manifest per version
+    assert(entries < SnapshotStore.sectionThreshold)
+    val commits = 64
+    def files(v: Long): Seq[String] = {
+      val commitDir = java.util.UUID.nameUUIDFromBytes(BigInt(v).toByteArray)
+      (0 until entries).map(i => f"$commitDir/part-$i%05d-c000.snappy.parquet")
+    }
+    SnapshotStore.commit(root, 0L, files(0L), entries.toLong)
+    val manifestBytes = Files.size(Paths.get(root, "_manifests", f"v${0}%013d.json"))
+    assert(manifestBytes >= 2L * 1024 * 1024, s"manifest is only $manifestBytes B")
+
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    @volatile var done = false
+    var reads = 0
+    // The reader polls the log and decodes each new newest version the
+    // moment it is listed — while its writer may still be at work on it.
+    val reader = new Thread(() => {
+      var seen = 0L
+      while (!done) {
+        try SnapshotStore.currentVersion(root).filter(_ > seen).foreach { v =>
+          seen = v
+          reads += 1
+          val n = SnapshotStore.filesAt(root, v).size
+          if (n != entries) failures.add(new AssertionError(s"v$v decoded $n entries"))
+        } catch { case t: Throwable => failures.add(t) }
+      }
+    })
+    reader.start()
+    try (1L until commits).foreach(v => SnapshotStore.commit(root, v, files(v), entries.toLong))
+    finally { done = true; reader.join() }
+
+    assert(SnapshotStore.versions(root) == (0 until commits).map(_.toLong))
+    assert(reads >= 20, s"only $reads reads overlapped the commits")
+    assert(failures.isEmpty,
+      s"${failures.size} of $reads reads failed; first: ${failures.peek()}")
+  }
+
+  test("a killed writer's partial temporary manifest breaks neither reads nor the next commit; vacuum reclaims it") {
+    import spark.implicits._
+    val root = scratch("snap_pubdebris_")
+    SnapshotStore.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root)
+    val logDir = Paths.get(root, "_manifests")
+    // What a writer killed mid-publish of version 1 leaves behind: part of
+    // the bytes under a temporary name in the log dir.
+    val whole = Files.readAllBytes(logDir.resolve(f"v${0}%013d.json"))
+    val debris = logDir.resolve(f".v${1}%013d.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(debris, whole.take(whole.length / 2))
+
+    assert(SnapshotStore.versions(root) == Seq(0L))
+    assert(SnapshotStore.read(spark, root).count() == 2)
+    assert(SnapshotStore.append(Seq((3L, "c")).toDF("id", "v"), root) == 1L)
+    assert(SnapshotStore.read(spark, root).count() == 3)
+
+    // Inside the retention window it may be an in-flight publish: kept.
+    SnapshotStore.vacuum(root, keepVersions = 2)
+    assert(Files.exists(debris))
+    SnapshotStore.vacuum(root, keepVersions = 2, minAgeMs = 0L)
+    assert(!Files.exists(debris), "vacuum past the cutoff must remove the debris")
+    assert(SnapshotStore.versions(root) == Seq(0L, 1L))
+    assert(SnapshotStore.read(spark, root).count() == 3)
+  }
+}

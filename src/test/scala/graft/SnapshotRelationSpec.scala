@@ -20,11 +20,7 @@ import graft.sources.{SnapshotRelation, SnapshotStore}
 class SnapshotRelationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scratch(prefix: String): String = {
-    val b = Paths.get("target/graft-scratch")
-    Files.createDirectories(b)
-    Files.createTempDirectory(b, prefix).toString
-  }
+  import TestSpark.scratch
 
   /** Every parquet scan in the executed plan, descending into AQE query
     * stages (QueryStageExec is a leaf to `collect`, so a post-join plan

@@ -19,11 +19,7 @@ import graft.sources.SnapshotStore
 class SnapshotScanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scratch(prefix: String): String = {
-    val b = Paths.get("target/graft-scratch")
-    Files.createDirectories(b)
-    Files.createTempDirectory(b, prefix).toString
-  }
+  import TestSpark.scratch
 
   /** Jobs started and input records read by the jobs `body` runs. */
   private def measured(body: => Unit): (Int, Long) = {

@@ -13,11 +13,7 @@ import graft.sources.SnapshotStore
 class SnapshotStoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def scratch(prefix: String): String = {
-    val b = Paths.get("target/graft-scratch")
-    Files.createDirectories(b)
-    Files.createTempDirectory(b, prefix).toString
-  }
+  import TestSpark.scratch
 
   private def base = Tables.customer(spark, TestSpark.sf0001)
     .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))

@@ -286,7 +286,7 @@ class StreamingSpec extends AnyFunSuite {
     // its checkpoint, and show (a) restored state still suppresses a
     // duplicate first seen before the restart, (b) pre-restart input is not
     // reprocessed (no duplicate emission into the sink).
-    val root = { val b=java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_restart") }.toFile.getAbsolutePath
+    val root = TestSpark.scratch("graft_restart")
     val (srcDir, ckpt, outDir) = (s"$root/src", s"$root/ckpt", s"$root/out")
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
@@ -326,7 +326,7 @@ class StreamingSpec extends AnyFunSuite {
   test("stream_foreachbatch_upsert: update-mode agg lands as keyed upsert; batch replay is exactly-once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_feb") }.toFile.getAbsolutePath
+    val root = TestSpark.scratch("graft_feb")
     val outDir = s"$root/kv"
     val source = MemoryStream[(Long, Long)]
     // Update-mode running count per user: each micro-batch emits only the
@@ -545,7 +545,7 @@ class StreamingSpec extends AnyFunSuite {
     // contract that the incremental plan computes the batch answer.
     val d = "/root/testdata/sf0.001"
     // FileStreamSource wants a DIRECTORY; the corpus ships single files.
-    val srcDir = java.nio.file.Files.createTempDirectory("ss_attr_src")
+    val srcDir = java.nio.file.Paths.get(TestSpark.scratch("ss_attr_src"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"), srcDir.resolve("events.parquet"))
     def side(tpe: String) =
@@ -575,7 +575,7 @@ class StreamingSpec extends AnyFunSuite {
     // sit in state; appending a far-future sentinel batch advances the
     // watermark past every real view's window and flushes them all.
     val d = "/root/testdata/sf0.001"
-    val srcDir = java.nio.file.Files.createTempDirectory("ss_attr_outer_src")
+    val srcDir = java.nio.file.Paths.get(TestSpark.scratch("ss_attr_outer_src"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"), srcDir.resolve("events.parquet"))
     def side(tpe: String) =
@@ -605,7 +605,7 @@ class StreamingSpec extends AnyFunSuite {
         .withColumn("user_id", lit(-1L))
         .withColumn("event_type",
           when(monotonically_increasing_id() === 0, "view").otherwise("purchase"))
-      val tmpOut = java.nio.file.Files.createTempDirectory("ss_attr_sentinel")
+      val tmpOut = java.nio.file.Paths.get(TestSpark.scratch("ss_attr_sentinel"))
       far.coalesce(1).write.mode("overwrite").parquet(tmpOut.resolve("s").toString)
       val part = new java.io.File(tmpOut.resolve("s").toString).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -636,7 +636,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.sources.SnapshotStore
     import graft.streaming.SnapshotChangeFeed
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_feed") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_feed"))
     val root = dir.resolve("tbl").toString
     val ckpt = dir.resolve("ckpt/pos").toString
     def df(rows: (Long, Long, String)*) = rows.toDF("k", "p", "payload")
@@ -710,7 +710,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.sources.SnapshotStore
     import graft.streaming.SnapshotSink
-    val root = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_snapsink_empty") }.toFile.getAbsolutePath + "/tbl"
+    val root = TestSpark.scratch("graft_snapsink_empty") + "/tbl"
     val sink = SnapshotSink.mergeBatch(root, "user_id", "part", "appE")
     val empty = Seq.empty[(Long, Long, Long)].toDF("user_id", "sum_cents", "part")
     // Empty FIRST batch: must NOT bootstrap a zero-file table (a
@@ -735,7 +735,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.SnapshotStore
     import graft.streaming.SnapshotSink
-    val root = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_snapsink") }.toFile.getAbsolutePath + "/tbl"
+    val root = TestSpark.scratch("graft_snapsink") + "/tbl"
     val source = MemoryStream[(Long, Long)]
     // Update-mode running totals per user, partitioned by pmod(user,2) —
     // each micro-batch emits only changed keys, the natural merge feed.
@@ -788,7 +788,7 @@ class StreamingSpec extends AnyFunSuite {
   test("graft-cdc source: readStream over a snapshot table — bootstrap, per-commit deltas, restart, vacuum loudness") {
     import spark.implicits._
     import graft.sources.SnapshotStore
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_cdc_src") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_cdc_src"))
     val root = dir.resolve("tbl").toString
     def df(rows: (Long, Long, String)*) = rows.toDF("k", "p", "payload")
     def rowsOf(d: org.apache.spark.sql.DataFrame) = d
@@ -888,7 +888,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.sources.SnapshotStore
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_fmt_sink") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_fmt_sink"))
     val root = dir.resolve("tbl").toString
     val ckpt = dir.resolve("ckpt").toString
     val source = MemoryStream[(Long, Long)]
@@ -960,7 +960,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.sources.SnapshotStore
     import graft.streaming.SnapshotSink
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_chain") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_chain"))
     val rootA = dir.resolve("a").toString
     def df(rows: (Long, Long, String)*) = rows.toDF("k", "p", "payload")
 
@@ -1041,7 +1041,7 @@ class StreamingSpec extends AnyFunSuite {
   test("graft-cdc: catalog-resolved option(table) streams, incl. a DV delete commit; startingVersion=latest survives restart") {
     import spark.implicits._
     import graft.sources.SnapshotStore
-    val dir = { val b = java.nio.file.Paths.get("target/graft-scratch"); java.nio.file.Files.createDirectories(b); java.nio.file.Files.createTempDirectory(b, "graft_cdc_seam") }
+    val dir = java.nio.file.Paths.get(TestSpark.scratch("graft_cdc_seam"))
     // Resolve through a GraftCatalog conf, not a filesystem path — the
     // same name a SQL consumer uses (r13 verdict #6).
     spark.conf.set("spark.sql.catalog.gcdc",

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession per test JVM (Test / fork := true), built through the
@@ -11,4 +13,24 @@ object TestSpark {
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** This JVM's scratch root, `target/graft-scratch/run-*`, removed with
+    * everything under it when the JVM exits.
+    */
+  private lazy val scratchRun: Path = {
+    val base = Paths.get("target", "graft-scratch").toAbsolutePath
+    Files.createDirectories(base)
+    val run = Files.createTempDirectory(base, "run-")
+    sys.addShutdownHook {
+      val walk = Files.walk(run)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => scala.util.Try(Files.deleteIfExists(p)))
+      finally walk.close()
+    }
+    run
+  }
+
+  /** A fresh, empty directory (absolute path) under this JVM's scratch root. */
+  def scratch(prefix: String): String =
+    Files.createTempDirectory(scratchRun, prefix).toString
 }

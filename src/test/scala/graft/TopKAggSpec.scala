@@ -27,7 +27,7 @@ class TopKAggSpec extends AnyFunSuite {
       .collect().sortBy(t => (t._1, t._2))
     // the UNREGISTERED window formulation — the registered query is now the
     // aggregator itself, so comparing against it would be a self-check
-    val windowed = graft.operators.AggOps.topKWindowed(spark, TestSpark.sf001)
+    val windowed = ReferenceShapes.topKWindowed(spark, TestSpark.sf001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2))
     assert(agg.toSeq == windowed.toSeq)
@@ -46,7 +46,7 @@ class TopKAggSpec extends AnyFunSuite {
         |) LATERAL VIEW explode(top) AS e""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.sortBy(t => (-t._3, t._2)).toSeq).toMap
-    val windowed = graft.operators.AggOps.topKWindowed(spark, TestSpark.sf001)
+    val windowed = ReferenceShapes.topKWindowed(spark, TestSpark.sf001)
       .collect().map(r => (r.getString(0), r.getLong(2), r.getDouble(3)))
       .groupBy(_._1).view.mapValues(_.sortBy(t => (-t._3, t._2)).toSeq).toMap
     assert(viaSql.nonEmpty && viaSql == windowed)

@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
-"""Merge the per-chunk BENCH_sf100_r11_chunk*.json files from
-tools/sf100_leg.sh into one registry-wide JSON with the Bench schema
+"""Merge per-chunk Bench JSON files (one `graft.Bench` run per registry
+chunk, e.g. BENCH_sf100_r11_chunk*.json; the chunked sf100 leg script is
+in git history at 7a28436) into one registry-wide JSON with the Bench schema
 (total excludes -1 error sentinels; errors listed by name).
 
 Usage: tools/merge_chunks.py [prefix] [out]
