@@ -53,13 +53,4 @@ object Stats {
     tables.foreach { t =>
       spark.sql(s"ANALYZE TABLE $db.$t COMPUTE STATISTICS FOR ALL COLUMNS")
     }
-
-  /** One-call setup: register + analyze + flip the CBO confs on. */
-  def enableCbo(spark: SparkSession, sfDir: String,
-                db: String = "graft_stats"): Unit = {
-    registerCatalog(spark, sfDir, db)
-    analyze(spark, db)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-  }
 }

@@ -119,7 +119,6 @@ object Tables {
     sum(cents(c)).cast(DoubleType) / (count(lit(1)) * lit(100)).cast(DoubleType)
 
   /** SQL-side twins for oracle strings. */
-  val sqlDec2: String => String = c => s"CAST($c AS DECIMAL(18,2))"
   val sqlCents: String => String = c => s"CAST(CAST($c AS DECIMAL(18,2))*100 AS BIGINT)"
   val sqlDiscE4: (String, String) => String = (p, d) =>
     s"${sqlCents(p)} * (100 - ${sqlCents(d)})"

@@ -433,7 +433,8 @@ private[sources] class GraftSnapshotTable(tableName: String, version: Long,
     * don't translate (expressions, subqueries) make `canDeleteWhere`
     * false and the statement refuses loudly — never a partial delete.
     *
-    * Mode choice is the cost model, decided from the filter's references:
+    * Mode choice is the cost model, decided from the filter's references
+    * ([[SnapshotStore.copyOnWrite]], the rule UPDATE shares):
     *   - partition-aligned predicates (or no predicate at all) take the
     *     REWRITE path — wholly-deleted partitions drop their files from
     *     the manifest without writing anything;
@@ -452,11 +453,8 @@ private[sources] class GraftSnapshotTable(tableName: String, version: Long,
     val pred = filters.toSeq.flatMap(GraftFilterTranslation.toColumn)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val refs = filters.flatMap(_.references).toSet
-    val partitionAligned =
-      refs.isEmpty || partCol.exists(pc => refs.subsetOf(Set(pc)))
     SnapshotStore.delete(SparkSession.active, location, pred, partCol,
-      deletionVectors = !partitionAligned)
+      deletionVectors = !SnapshotStore.copyOnWrite(filters.flatMap(_.references).toSet, partCol))
   }
 
   override def schema(): StructType = delegate.schema

@@ -249,11 +249,23 @@ object Manifest {
     if (!Files.exists(p)) Map.empty else longs(Json.readTree(Files.readAllBytes(p)))
   }
 
-  private[sources] def writeCheckpoint(root: String, state: Map[String, Long]): Unit = {
-    val p = Paths.get(root, Dir, CheckpointFile)
-    val tmp = p.resolveSibling(CheckpointFile + ".tmp")
-    Files.write(tmp, encodeLongs(state).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  private[sources] def writeCheckpoint(root: String, state: Map[String, Long]): Unit =
+    replaceFile(Paths.get(root, Dir, CheckpointFile),
+      encodeLongs(state).getBytes(StandardCharsets.UTF_8))
+
+  /** Replace `p` with `bytes` atomically: they go to a temporary sibling
+    * named for this call alone, which then moves over `p`. Racing
+    * writers each stage their own file, so every move installs one whole
+    * file and a reader sees one writer's bytes. A writer killed before
+    * the move leaves `*.tmp` debris, which [[SnapshotStore.vacuum]]
+    * reclaims under a table's log.
+    */
+  private[graft] def replaceFile(p: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(p.getParent)
+    val tmp = p.resolveSibling(s"${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    finally Files.deleteIfExists(tmp)
   }
 
   /** A catalog snapshot `{"tables":{name: version, …}}`; other keys are ignored. */

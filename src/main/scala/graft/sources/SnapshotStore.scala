@@ -48,6 +48,19 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     transaction marker; [[lastTxn]] lets a restarted streaming writer
   *     skip a batch it already published (the Delta `txn` action).
   *
+  * Besides [[overwrite]] and [[append]], which only add files, every
+  * writer takes one of three paths, and all three commit through
+  * [[commitOn]] (the Delta "remove + add" commit):
+  *   - COPY-ON-WRITE ([[rewrite]]): the files under some partition dirs,
+  *     or the whole table, are replaced by content computed from exactly
+  *     those files — [[merge]], [[delete]], [[replaceWhere]];
+  *   - DELETION VECTORS ([[updateRows]]): acted rows are masked by
+  *     position and their new images appended — SQL UPDATE/MERGE and
+  *     `delete(deletionVectors = true)`;
+  *   - MAINTENANCE ([[rearrange]]): a victim entry list is rewritten,
+  *     sorted or z-ordered, with no row change — [[compact]],
+  *     [[optimize]], [[maintain]].
+  *
   * Scale posture: a commit writes the NEW data files plus one manifest
   * (KBs–MBs of file names), never rewrites history; a read adds one
   * manifest parse and one stat per candidate file over the plain-parquet
@@ -290,6 +303,10 @@ object SnapshotStore {
     else s"__part=${ExternalCatalogUtils.escapePathName(value.toString)}"
   }
 
+  /** The `__part=` dir entry `e` lies under ("" when unpartitioned). */
+  private def partDirOf(e: String): String =
+    entryPath(e).split('/').find(_.startsWith("__part=")).getOrElse("")
+
   /** The partition column recorded IN version `v`'s manifest:
     * `Some(Some(c))` partitioned, `Some(None)` explicitly unpartitioned,
     * `None` when the manifest predates the embedded record (legacy).
@@ -430,13 +447,7 @@ object SnapshotStore {
       case None => df.write.mode("error")
     }
     w.parquet(dir.toString)
-    import scala.jdk.CollectionConverters._
-    val it = Files.walk(dir)
-    try it.iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(p => Paths.get(root, "data").relativize(p).toString)
-      .toSeq
-    finally it.close()
+    parquetUnder(dir).map(p => Paths.get(root, "data").relativize(p).toString)
   }
 
   /** Atomically publish `files` as version `next`. Throws
@@ -466,24 +477,15 @@ object SnapshotStore {
         // to the SAME hash → same ref, no write — commit IO is
         // proportional to touched partitions, and incremental diffs skip
         // identical refs wholesale.
-        val byPart = m.files.groupBy(f =>
-          f.split('/').find(_.startsWith("__part=")).getOrElse(""))
-        val refs = byPart.toSeq.map { case (pd, fs) =>
+        val refs = m.files.groupBy(partDirOf).toSeq.map { case (pd, fs) =>
           val bodyTxt = Manifest.encodeSection(fs.sorted.map(f =>
             f -> (if (m.statsCols.isEmpty) Map.empty[String, (Long, Long)]
                   else m.ranges.getOrElse(f, Map.empty))))
           val ref = md5Hex(bodyTxt) + ".list"
           val sp = Manifest.sectionPath(root, ref)
-          if (!Files.exists(sp)) {
-            // Content-addressed: two writers racing on the same content
-            // produce the same bytes — the lost move is benign.
-            Files.createDirectories(sp.getParent)
-            val tmp = sp.resolveSibling(ref + "." + java.util.UUID.randomUUID() + ".tmp")
-            Files.write(tmp, bodyTxt.getBytes(StandardCharsets.UTF_8))
-            try Files.move(tmp, sp, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: java.nio.file.FileAlreadyExistsException =>
-              Files.deleteIfExists(tmp) }
-          }
+          // Content-addressed: two writers racing on the same content
+          // produce the same bytes, so either move may win.
+          if (!Files.exists(sp)) Manifest.replaceFile(sp, bodyTxt.getBytes(StandardCharsets.UTF_8))
           pd -> ref
         }
         m.copy(files = Nil, ranges = Map.empty, sections = Some(refs))
@@ -563,8 +565,6 @@ object SnapshotStore {
                      conflictOnAddsIn: Option[Set[String]],
                      fresh: FileStats, next: Manifest): Long = {
     val replacedSet = replaced.toSet
-    def dirOf(e: String) =
-      entryPath(e).split('/').find(_.startsWith("__part=")).getOrElse("")
     // The layout this write's files were produced against: what the base
     // manifest recorded (authoritative), or the caller's declaration for
     // writers on legacy/fresh tables.
@@ -626,7 +626,7 @@ object SnapshotStore {
                 s"whole-table write at $root conflicts with " +
                   s"${concurrentAdds.size} concurrently added file(s)")
             case Some(dirs) =>
-              val clash = concurrentAdds.filter(e => dirs(dirOf(e)))
+              val clash = concurrentAdds.filter(e => dirs(partDirOf(e)))
               if (clash.nonEmpty) throw new SnapshotConflictException(
                 s"concurrent commit added files under a partition this " +
                   s"commit rewrites at $root (e.g. ${clash.head})")
@@ -902,9 +902,8 @@ object SnapshotStore {
     // plan execution, no block-store staging. The manifest's exact row
     // count comes from the written files' parquet FOOTERS (metadata-only
     // reads, same layer harvest reads), so count and write agree by
-    // construction even for non-deterministic sources. (The previous
-    // shape localCheckpoint(true)-pinned the full content so a second
-    // count() action would see the written rows; block-store rows are
+    // construction even for non-deterministic sources. (Pinning the
+    // content in the block store for a second count() would hold rows at
     // ~3x data size — r13 forensics — so a 100 TB initial load would OOM
     // the block store before the write finished.)
     val stamped = stampFieldIds(root, cur, df)
@@ -1044,34 +1043,18 @@ object SnapshotStore {
         "is timezone-dependent; partition by a date or string rendering instead")
     val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to merge into at $root"))
-    val baseFiles = base.entries
-    // The kept/replaced split below is a path test on hive partition dirs;
-    // a base snapshot NOT partitioned by partCol would silently keep every
-    // old file (duplicate keys in affected partitions). Fail loudly instead.
-    require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
-      s"merge requires a partitioned base snapshot " +
-        s"(write it with overwrite(df, root, Some(\"$partCol\")))")
     requireLayout(base, partCol)
     // The affected partitions are the hive dirs the updates' partition
-    // values render to (the writer's own escaping): the commit replaces
-    // exactly their files, and the rewrite reads exactly those files — so
-    // the rows rewritten are by construction the rows the commit removes.
-    val affectedDirs = updates.select(col(partCol)).distinct()
+    // values render to (the writer's own escaping). The upsert's key
+    // uniqueness read them, so a concurrent commit that rewrote OR
+    // appended into them conflicts.
+    val dirs = updates.select(col(partCol)).distinct()
       .collect().map(r => partDir(r.get(0))).toSet
-    val replaced = baseFiles.filter(f => f.split('/').exists(affectedDirs.contains))
-    val target = scanEntries(spark, base, base.ranged(replaced))
-    val survivors = target.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-    // Straight-to-parquet staging (see replaceWhere): the rewritten
-    // partitions' content executes once, into the commit's data files,
-    // never through the block store.
-    val merged = survivors.select(target.columns.map(col).toSeq: _*)
-      .unionByName(conform(updates, target.schema))
-    val newFiles = writeDataFiles(merged, root, Some(partCol))
-    // Read-modify-write of the affected partitions: rebase over concurrent
-    // commits elsewhere; conflict if they touched (rewrote OR appended
-    // into) these partitions — the upsert's key-uniqueness read them.
-    commitOn(spark, base, replaced, newFiles, Some(affectedDirs), txn, Some(target.schema),
-      Some(partCol), Seq(keyCol))
+    rewrite(spark, base, "merge", Some(dirs), Some(partCol), txn, Seq(keyCol)) { replaced =>
+      val target = scanEntries(spark, base, replaced)
+      target.join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
+        .unionByName(conform(updates, target.schema))
+    }
   }
 
   /** Filter matching the partition CLASS of any of `values` — the same
@@ -1090,56 +1073,69 @@ object SnapshotStore {
     if (nullClass.nonEmpty) hit || key.isNull else hit
   }
 
-  /** Copy-on-write commit primitive for row-level SQL DML (UPDATE / MERGE
-    * INTO): atomically replace the content of the given partitions — or
-    * the whole table when `affectedParts` is None — with `content`,
-    * carrying every other partition's files forward verbatim. The Delta
+  /** The copy-on-write rewrite behind [[merge]], [[delete]] and
+    * [[replaceWhere]]: replace the entries of `base` under the partition
+    * dirs `dirs` (None: every entry) with the files `content` writes.
+    * `content` gets exactly the replaced entries, with their ranges, so
+    * the rows rewritten are by construction the rows the commit removes.
+    *
+    * The content conforms to the table schema and streams STRAIGHT into
+    * the commit's data files: one plan execution, no block-store staging
+    * (block-store rows are ~3x data size, r13 forensics). The data files
+    * are the durable staging; a rebase retry is manifest math over them.
+    * `dirs` is the write set for rebase ([[commitRebasing]]): a
+    * concurrent commit that touched those partitions conflicts, one
+    * elsewhere rebases; with None, any concurrent addition conflicts.
+    *
+    * A partition-scoped rewrite needs every file under a partition dir
+    * and a recorded `layout`; a partitioned table whose layout was never
+    * recorded refuses any rewrite (unpartitioned files next to hive dirs
+    * would silently break the per-partition cost model). Replacing
+    * nothing with nothing publishes nothing unless a txn marker must be
+    * recorded.
+    */
+  private def rewrite(spark: SparkSession, base: Snapshot, what: String,
+                      dirs: Option[Set[String]], layout: Option[String],
+                      txn: Option[(String, Long)] = None, changeKey: Seq[String] = Nil)
+                     (content: Seq[(String, Manifest.Ranges)] => DataFrame): Long = {
+    val partitioned = base.entries.count(partDirOf(_).nonEmpty)
+    require(if (layout.isEmpty) dirs.isEmpty && partitioned == 0
+            else dirs.isEmpty || partitioned == base.entries.size,
+      s"$what needs a partitioned base snapshot with a recorded layout at ${base.root} " +
+        s"(write it with overwrite(df, root, Some(\"${layout.getOrElse("<column>")}\")))")
+    val replaced = dirs.fold(base.entries)(ds => base.entries.filter(e => ds(partDirOf(e))))
+    val schema = schemaOf(spark, base.root, base.manifest.schema, base.entries)
+    val added = writeDataFiles(conform(content(base.ranged(replaced)), schema), base.root, layout)
+    if (replaced.isEmpty && added.isEmpty && txn.isEmpty) base.version
+    else commitOn(spark, base, replaced, added, dirs, txn, Some(schema), layout, changeKey)
+  }
+
+  /** Copy-on-write commit for row-level SQL DML (UPDATE / MERGE INTO):
+    * atomically replace the content of the given partitions — or the
+    * whole table when `affectedParts` is None — with `content`, carrying
+    * every other partition's files forward verbatim. The Delta
     * `replaceWhere` shape: cost ∝ touched partitions, never table size.
     *
     * `baseVersion` is the snapshot the caller READ to compute `content`
-    * (snapshot isolation): the commit rebases over concurrent commits
-    * elsewhere and conflicts if they touched the replaced partitions.
-    * `affectedParts = Some(Nil)` is a pure-insert commit (nothing
-    * replaced, blind-append conflict semantics). Content conforms to the
-    * table schema like every other writer; a partitioned table whose
-    * layout was never recorded refuses loudly (writing unpartitioned
-    * files next to hive dirs would silently break the per-partition cost
-    * model).
+    * (snapshot isolation, see [[rewrite]]). `affectedParts = Some(Nil)`
+    * is a pure-insert commit (nothing replaced, blind-append conflict
+    * semantics).
     */
   def replaceWhere(spark: SparkSession, root: String, baseVersion: Long,
-                   content: DataFrame,
-                   affectedParts: Option[Seq[Any]],
-                   txn: Option[(String, Long)] = None): Long = {
+                   content: DataFrame, affectedParts: Option[Seq[Any]]): Long = {
     val base = snapshot(root, baseVersion)
-    val baseFiles = base.entries
-    val layout = base.manifest.layout
-    val partitioned = baseFiles.exists(_.split('/').exists(_.startsWith("__part=")))
-    require(layout.isDefined || !partitioned,
-      s"table at $root is partitioned but predates the part_col record; " +
-        "rewrite it with SnapshotStore.overwrite(df, root, Some(col)) first")
-    require(affectedParts.isEmpty || layout.isDefined,
-      s"partition-scoped replaceWhere needs a partitioned table at $root")
-    val schema = base.manifest.schema
-    val conformed = schema.fold(content)(s => conform(content, s))
-    // Content streams STRAIGHT into the commit's parquet data files — one
-    // plan execution, no driver/block-store staging. (The previous shape
-    // localCheckpoint(true)-pinned the full conformed content first; block
-    // store rows are ~3x data size — r13 forensics — so an unpartitioned
-    // UPDATE at table scale would OOM the block store before the write
-    // finished. The data files themselves are the durable staging: a
-    // rebase retry is manifest math over already-written files.) An empty
-    // content plan writes no part files and commits a file-less swap.
-    val newFiles = writeDataFiles(conformed, root, layout)
-    affectedParts match {
-      case Some(parts) =>
-        val dirs = parts.map(partDir).toSet
-        val replaced = baseFiles.filter(_.split('/').exists(dirs.contains))
-        if (replaced.isEmpty && newFiles.isEmpty) return baseVersion // no-op
-        commitOn(spark, base, replaced, newFiles, Some(dirs), txn, schema, layout)
-      case None =>
-        commitOn(spark, base, baseFiles, newFiles, None, txn, schema, layout)
-    }
+    rewrite(spark, base, "replaceWhere", affectedParts.map(_.map(partDir).toSet),
+      base.manifest.layout)(_ => content)
   }
+
+  /** Whether a row-level DELETE or UPDATE whose predicate references the
+    * columns `refs` rewrites copy-on-write rather than masking rows with
+    * deletion vectors: when the predicate references nothing, or only
+    * the partition column `partCol`, it selects whole partitions, so the
+    * rewrite costs the same write and leaves no DV debt for reads to pay.
+    */
+  def copyOnWrite(refs: Set[String], partCol: Option[String]): Boolean =
+    refs.subsetOf(partCol.toSet)
 
   /** Row-level DELETE with snapshot isolation — the GDPR/right-to-be-
     * forgotten primitive a training-data table needs as a first-class
@@ -1154,6 +1150,12 @@ object SnapshotStore {
     * partition-class handling as [[merge]]. Without `partCol` the whole
     * table rewrites (documented: the unpartitioned trade).
     *
+    * With `deletionVectors` the matched rows are masked by position
+    * instead ([[updateRows]], nothing re-appended): no data file is
+    * written, one small sidecar under `_dv/` is, so cost is ∝ MATCHING
+    * rows — the shape for deleting one user's rows scattered across the
+    * table. Reads apply the mask until a [[compact]] or [[maintain]].
+    *
     * The removal is CDC-visible: [[changes]] across the delete commit
     * yields exactly the deleted rows as `_change_type='delete'`. The old
     * version's files stay on disk until [[vacuum]]'s retention passes —
@@ -1167,45 +1169,22 @@ object SnapshotStore {
     */
   def delete(spark: SparkSession, root: String, predicate: org.apache.spark.sql.Column,
              partCol: Option[String] = None,
-             txn: Option[(String, Long)] = None,
              deletionVectors: Boolean = false): Long = {
     val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to delete from at $root"))
-    if (deletionVectors) return deleteWithDv(spark, base, predicate, txn)
+    val hit = coalesce(predicate, lit(false))
+    // The position scan already drops rows earlier DVs deleted, so
+    // re-deleting a dead row is a no-op, not a duplicate position.
+    if (deletionVectors) return updateOn(spark, base,
+      positionScanOf(spark, base).filter(hit).withColumn("__keep", lit(false)), "__keep")
     val target = readAt(spark, base)
-    val keep = !coalesce(predicate, lit(false))
-    val baseFiles = base.entries
-    partCol match {
-      case Some(pc) =>
-        require(baseFiles.forall(_.split('/').exists(_.startsWith("__part="))),
-          s"partition-pruned delete requires a partitioned base snapshot " +
-            s"(write it with overwrite(df, root, Some(\"$pc\")))")
-        val affectedDirs = target.filter(predicate).select(col(pc)).distinct()
-          .collect().map(r => partDir(r.get(0))).toSet
-        if (affectedDirs.isEmpty) return base.version // nothing matches, publish nothing
-        // The rewrite reads exactly the files the commit replaces (see
-        // merge). Survivors stream straight to the commit's data files —
-        // no block-store pin (see replaceWhere); an all-deleted partition
-        // writes no files for itself.
-        val replaced = baseFiles.filter(f => f.split('/').exists(affectedDirs.contains))
-        val newFiles = writeDataFiles(
-          scanEntries(spark, base, base.ranged(replaced)).filter(keep), root, Some(pc))
-        commitOn(spark, base, replaced, newFiles, Some(affectedDirs), txn,
-          Some(target.schema), Some(pc))
-      case None =>
-        if (target.filter(predicate).isEmpty) return base.version
-        // Preserve the table's recorded layout: a whole-table delete is a
-        // content rewrite, not a re-layouting — survivors land back under
-        // the same partition scheme they came from.
-        val layout = base.manifest.layout
-        // Straight-to-parquet staging (see replaceWhere): a delete matching
-        // everything writes no part files -> a zero-file manifest, which
-        // read() serves as a schema'd empty frame.
-        val newFiles = writeDataFiles(target.filter(keep), root, layout)
-        // Whole-table rewrite: conflictOnAddsIn = None — any concurrent
-        // addition intersects the read set, only version races on an
-        // otherwise-unchanged table rebase.
-        commitOn(spark, base, baseFiles, newFiles, None, txn, Some(target.schema), layout)
+    val dirs = partCol.map(pc => target.filter(predicate).select(col(pc)).distinct()
+      .collect().map(r => partDir(r.get(0))).toSet)
+    if (dirs.fold(target.filter(predicate).isEmpty)(_.isEmpty)) return base.version
+    // A whole-table delete keeps the recorded layout: survivors land back
+    // under the partition scheme they came from.
+    rewrite(spark, base, "delete", dirs, partCol.orElse(base.manifest.layout)) {
+      scanEntries(spark, base, _).filter(!hit)
     }
   }
 
@@ -1225,52 +1204,9 @@ object SnapshotStore {
   private def positionScanOf(spark: SparkSession, s: Snapshot): DataFrame =
     scanEntries(spark, s, s.ranged(s.entries), rowIds = true)
 
-  /** Deletion-vector DELETE: instead of rewriting touched partitions'
-    * survivors, write ONE small position-delete sidecar under `_dv/`
-    * (columns `file`, `pos` = parquet row index) and commit a manifest
-    * where each touched file's entry gains a `#dv=` annotation. Cost is
-    * ∝ MATCHING ROWS, not touched-partition bytes — the 100 TB shape for
-    * a GDPR delete of one user's rows scattered across the table, where
-    * the rewrite path would re-copy gigabytes per touched partition for
-    * kilobytes of removals. Reads apply the DV as an anti-join on
-    * (file, row_index) until [[compact]] materializes it; [[changes]]
-    * sees exactly the deleted rows; [[vacuum]] GCs DVs once a rewrite or
-    * compaction orphans them. Same commit atomicity and time-travel
-    * contract as every other writer.
-    */
-  private def deleteWithDv(spark: SparkSession, base: Snapshot,
-                           predicate: org.apache.spark.sql.Column,
-                           txn: Option[(String, Long)]): Long = {
-    val root = base.root
-    val entries = base.entries
-    if (entries.isEmpty) return base.version
-    // Position scan over ALL entries, minus rows existing DVs already
-    // deleted (so re-deleting an already-dead row is a no-op, not a
-    // duplicate position).
-    val matches = positionScanOf(spark, base)
-      .filter(coalesce(predicate, lit(false)))
-      .select(col("__file").as("file"), col("__pos").as("pos"))
-      .localCheckpoint(true)
-    if (matches.isEmpty) return base.version
-    val ref = writeDvFile(root, matches)
-    val replaced = owners(entries, matches.select("file"))
-    val annotated = replaced.map(e =>
-      renderEntry(entryPath(e), entryDvs(e) :+ ref))
-    // Stats re-key onto the annotated entries: deletion only narrows a
-    // file's true range, so the recorded [lo,hi] stays a sound bound.
-    val fresh = replaced.flatMap { e =>
-      base.ranges.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ ref) -> v)
-    }.toMap
-    // File-scoped write set: the DV annotates exactly `replaced`; rebase
-    // over concurrent commits that left those entries alone (their
-    // positions — parquet row indexes of immutable files — stay valid).
-    commitOn(spark, base, replaced, annotated, Some(Set.empty), txn, base.manifest.schema,
-      base.manifest.layout, fresh = Some(fresh))
-  }
-
-  /** Merge-on-read row-level UPDATE / MERGE commit — the deletion-vector
-    * twin of [[replaceWhere]], cost ∝ ACTED rows, never touched-partition
-    * bytes. Atomically, in ONE manifest publish:
+  /** Merge-on-read row-level UPDATE / MERGE / DELETE commit — the
+    * deletion-vector twin of [[replaceWhere]], cost ∝ ACTED rows, never
+    * touched-partition bytes. Atomically, in ONE manifest publish:
     *
     *   1. the rows of `acted` (table columns plus `__file`/`__pos` from
     *      [[positionScan]], plus boolean `keepCol`) are position-deleted
@@ -1284,11 +1220,13 @@ object SnapshotStore {
     * file bytes are not rewritten (an mtime-stable base, spec-gated).
     * Reads serve through the DV anti-join until [[compact]] materializes;
     * [[changes]]' exceptAll algebra sees exactly delete(old values) +
-    * insert(new values).
+    * insert(new values). Stats: annotated entries re-key their old ranges
+    * (deletion only narrows a file's true range); fresh files harvest
+    * theirs from their footers.
     *
     * `acted` is staged once to a parquet scratch dir under the table root
-    * (never the block store — localCheckpoint rows are ~3× data size, the
-    * r13 forensics) so its three consumers (DV positions, touched-file
+    * (never the block store, whose rows are ~3× data size, the r13
+    * forensics) so its three consumers (DV positions, touched-file
     * list, re-append content) rescan written bytes instead of re-running
     * the matching join. The staging dir is removed before returning.
     *
@@ -1303,66 +1241,55 @@ object SnapshotStore {
                  acted: DataFrame, keepCol: String,
                  inserts: Option[DataFrame] = None,
                  conflictOnAddsIn: Option[Set[String]] = Some(Set.empty),
-                 txn: Option[(String, Long)] = None,
-                 changeKey: Option[Seq[String]] = None): Long = {
-    val base = snapshot(root, baseVersion)
-    val entries = base.entries
+                 changeKey: Option[Seq[String]] = None): Long =
+    updateOn(spark, snapshot(root, baseVersion), acted, keepCol, inserts, conflictOnAddsIn,
+      changeKey.getOrElse(Nil))
+
+  private def updateOn(spark: SparkSession, base: Snapshot, acted: DataFrame, keepCol: String,
+                       inserts: Option[DataFrame] = None,
+                       conflictOnAddsIn: Option[Set[String]] = Some(Set.empty),
+                       changeKey: Seq[String] = Nil): Long = {
+    val root = base.root
     val schema = base.manifest.schema
     val layout = base.manifest.layout
     val tableCols = schema.map(_.fieldNames.toSeq)
       .getOrElse(acted.columns.toSeq.filterNot(
         c => c == "__file" || c == "__pos" || c == keepCol))
-    val stagingDir = Paths.get(root, "_staging",
-      java.util.UUID.randomUUID().toString)
+    val stagingDir = Paths.get(root, "_staging", java.util.UUID.randomUUID().toString)
     try {
-      Files.createDirectories(stagingDir.getParent)
-      acted.select((Seq("__file", "__pos", keepCol) ++ tableCols)
-        .map(col): _*).write.parquet(stagingDir.toString)
-      // An empty acted plan writes no part files (an empty parquet dir is
-      // unreadable, not a 0-row frame) — detect emptiness from the dir.
-      val hasActed = {
-        import scala.jdk.CollectionConverters._
-        val it = Files.walk(stagingDir)
-        try it.iterator().asScala.exists(
-          _.getFileName.toString.endsWith(".parquet"))
-        finally it.close()
-      }
-      val staged = if (hasActed) Some(spark.read.parquet(stagingDir.toString))
-        else None
+      // keepCol is staged as 0/1, so the part files' FOOTERS tell whether
+      // any row was acted on and any kept, with no job run (even an empty
+      // plan writes one empty part file). A file without a keep range
+      // counts as kept.
+      acted.select((Seq(col("__file"), col("__pos"), col(keepCol).cast("int").as(keepCol)) ++
+        tableCols.map(col)): _*).write.parquet(stagingDir.toString)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val counts = parquetUnder(stagingDir).map(footer(conf, _, Seq(keepCol)))
+      val staged = Option.when(counts.exists(_._1 > 0))(spark.read.parquet(stagingDir.toString))
       val replaced =
-        staged.fold(Seq.empty[String])(st => owners(entries, st.select(col("__file"))))
-      val ref = staged.map(st => writeDvFile(root,
-        st.select(col("__file").as("file"), col("__pos").as("pos"))))
-      val annotated = ref.toSeq.flatMap(r => replaced.map(e =>
-        renderEntry(entryPath(e), entryDvs(e) :+ r)))
-      val additions0 = (staged.map(_.filter(col(keepCol))
-          .select(tableCols.map(col): _*)).toSeq ++
-        inserts.map(_.select(tableCols.map(col): _*)).toSeq)
-        .reduceOption(_.unionByName(_))
-      val newFiles = additions0.fold(Seq.empty[String]) { a =>
-        writeDataFiles(schema.fold(a)(s => conform(a, s)), root, layout)
+        staged.fold(Seq.empty[String])(st => owners(base.entries, st.select(col("__file"))))
+      val annotated = staged.toSeq.flatMap { st =>
+        val ref = writeDvFile(root, st.select(col("__file").as("file"), col("__pos").as("pos")))
+        replaced.map(e => e -> renderEntry(entryPath(e), entryDvs(e) :+ ref))
       }
-      if (!hasActed && newFiles.isEmpty) return baseVersion // full no-op
-      // Stats: untouched carried by commitRebasing; annotated entries
-      // re-key their old ranges (deletion only narrows a file's true
-      // range); fresh files harvest from their footers.
-      val rekeyed = ref.toSeq.flatMap(r => replaced.flatMap { e =>
-        base.ranges.get(e).map(v => renderEntry(entryPath(e), entryDvs(e) :+ r) -> v)
-      }).toMap
-      val fresh = rekeyed ++ harvest(spark, root, base.manifest.statsCols, newFiles)
-      commitOn(spark, base, replaced, annotated ++ newFiles, conflictOnAddsIn, txn, schema,
-        layout, changeKey.getOrElse(Nil), Some(fresh))
-    } finally {
-      if (Files.exists(stagingDir)) {
-        import scala.jdk.CollectionConverters._
-        val walk = Files.walk(stagingDir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
-    }
+      val kept = staged.filter(_ => counts.exists { case (n, r) =>
+          n > 0 && r.get(keepCol).forall(_._2 > 0) })
+        .map(_.filter(col(keepCol) === 1))
+      val newFiles = (kept.toSeq ++ inserts).map(_.select(tableCols.map(col): _*))
+        .reduceOption(_.unionByName(_)).fold(Seq.empty[String]) { a =>
+          writeDataFiles(schema.fold(a)(s => conform(a, s)), root, layout)
+        }
+      if (staged.isEmpty && newFiles.isEmpty) return base.version // full no-op
+      val fresh = annotated.flatMap { case (e, a) => base.ranges.get(e).map(a -> _) }.toMap ++
+        harvest(spark, root, base.manifest.statsCols, newFiles)
+      commitOn(spark, base, replaced, annotated.map(_._2) ++ newFiles, conflictOnAddsIn, None,
+        schema, layout, changeKey, Some(fresh))
+    } finally deleteTree(stagingDir)
   }
 
+  /** Write `matches` (`file`, `pos`) as one DV sidecar under `_dv/`;
+    * returns its name.
+    */
   private def writeDvFile(root: String, matches: DataFrame): String = {
     val id = java.util.UUID.randomUUID().toString
     val dvDir = Paths.get(root, DvDir)
@@ -1371,19 +1298,28 @@ object SnapshotStore {
     // One sidecar per delete commit (a GDPR-sized match list is small);
     // coalesce(1) is the deliberate single-file layout, not a bottleneck.
     matches.coalesce(1).write.parquet(tmp.toString)
-    import scala.jdk.CollectionConverters._
-    val it = Files.walk(tmp)
-    val part = try it.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
+    val part = parquetUnder(tmp).headOption
       .getOrElse(throw new IllegalStateException(s"no DV part file under $tmp"))
-    finally it.close()
-    val dest = dvDir.resolve(id + ".parquet")
-    Files.move(part, dest, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Files.move(part, dvDir.resolve(id + ".parquet"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     // Drop the spark output dir scaffolding (_SUCCESS, crc files).
-    val rm = Files.walk(tmp)
-    try rm.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
-    finally rm.close()
+    deleteTree(tmp)
     id + ".parquet"
+  }
+
+  /** The parquet part files under `dir`, recursively. */
+  private def parquetUnder(dir: Path): List[Path] = {
+    import scala.jdk.CollectionConverters._
+    val it = Files.walk(dir)
+    try it.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+    finally it.close()
+  }
+
+  /** Delete `p` and everything under it, deepest first. */
+  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists(_))
+    finally walk.close()
   }
 
   /** Read a snapshot: the current version, or `asOf` for time travel.
@@ -1463,7 +1399,7 @@ object SnapshotStore {
   private[sources] def selects(partValues: Option[Set[String]], probes: Map[String, (Long, Long)])
       : ((String, Manifest.Ranges)) => Boolean = {
     val dirs = partValues.map(_.map(partDir))
-    e => dirs.forall(ds => e._1.split('/').exists(ds)) && probes.forall { case (c, (lo, hi)) =>
+    e => dirs.forall(ds => ds(partDirOf(e._1))) && probes.forall { case (c, (lo, hi)) =>
       e._2.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
   }
@@ -1473,18 +1409,17 @@ object SnapshotStore {
     * ([[graft.streaming.SnapshotSink]]) publishes one commit per
     * micro-batch, so a hot partition accretes one small file set per
     * batch; compact rewrites the selected partitions' files into
-    * `numFiles` range-split files and publishes the swap as ONE commit —
-    * content-identical by construction, snapshot-isolated like any other
-    * commit (readers hold the old or the new version, never a mix; a
-    * racing writer surfaces as [[SnapshotConflictException]]).
+    * `numFiles` range-split files and publishes the swap as ONE commit
+    * ([[rearrange]]) — content-identical by construction, snapshot-
+    * isolated like any other commit.
     *
     * `partValues` (raw values, escaped like [[read]]) restricts the
-    * rewrite to named partitions — cost ∝ touched partitions, the only
-    * shape that survives at table scale; None compacts everything.
-    * `sortBy` orders rows within the range-split, so each output file
-    * carries a NARROW [min,max] on the sort key — compaction is also how
-    * a table EARNS its manifest-stats pruning (and parquet row-group
-    * skipping) after unsorted ingest.
+    * rewrite to named partitions of the recorded layout — cost ∝ touched
+    * partitions, the only shape that survives at table scale; None
+    * compacts everything. `sortBy` orders rows within the range-split, so
+    * each output file carries a NARROW [min,max] on the sort key —
+    * compaction is also how a table EARNS its manifest-stats pruning (and
+    * parquet row-group skipping) after unsorted ingest.
     *
     * `zorderBy` (two or more non-negative integral columns, exclusive
     * with `sortBy`) clusters on the Morton interleave of the keys'
@@ -1496,116 +1431,83 @@ object SnapshotStore {
     * the others). Bucket width scales with arity (16 bits at 2 keys,
     * 63/k beyond) so the interleave always fills a positive long.
     */
-  def compact(spark: SparkSession, root: String, partCol: String,
+  def compact(spark: SparkSession, root: String,
               partValues: Option[Set[String]] = None,
               numFiles: Int = 1, sortBy: Seq[String] = Nil,
-              zorderBy: Seq[String] = Nil,
-              txn: Option[(String, Long)] = None): Long = {
+              zorderBy: Seq[String] = Nil): Long = {
     val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to compact at $root"))
-    compactOn(spark, base, partCol, partValues, numFiles, sortBy, zorderBy, txn)
+    rearrange(spark, base, pruned(base, partValues, None, Map.empty), numFiles, sortBy, zorderBy)
   }
 
-  private def compactOn(spark: SparkSession, base: Snapshot, partCol: String,
-                        partValues: Option[Set[String]], numFiles: Int,
-                        sortBy: Seq[String], zorderBy: Seq[String],
-                        txn: Option[(String, Long)]): Long = {
+  /** The maintenance rewrite behind [[compact]], [[optimize]] and
+    * [[maintain]]: `victims` (entries of `base` with their ranges)
+    * rewritten into `numFiles` files, range-split on the recorded
+    * partition column plus `sortBy`, or plus the z-order key of
+    * `zorderBy` — one content-identical commit. The recorded schema is
+    * the scan's, so victims predating an evolved column compact into
+    * full-schema files (nulls materialized). DV-aware: rewriting an
+    * annotated entry MATERIALIZES its deletions — the rewrite drops the
+    * annotation and the orphaned DV file falls to vacuum. Row movement
+    * only (no partition-level read set): it rebases over concurrent
+    * appends anywhere and conflicts only if a concurrent commit rewrote
+    * a victim out from under it. No victims publish nothing.
+    */
+  private def rearrange(spark: SparkSession, base: Snapshot,
+                        victims: Seq[(String, Manifest.Ranges)], numFiles: Int,
+                        sortBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): Long = {
     require(zorderBy.isEmpty || zorderBy.length >= 2,
       "zorderBy takes two or more columns")
     require(zorderBy.isEmpty || sortBy.isEmpty,
       "pass sortBy or zorderBy, not both")
-    require(base.entries.forall(_.split('/').exists(_.startsWith("__part="))),
-      "compact requires a partitioned base snapshot")
-    requireLayout(base, partCol)
-    val victims = pruned(base, partValues, None, Map.empty)
-    if (victims.isEmpty) return base.version // nothing to rewrite, publish nothing
-    // Recorded schema: victims predating an evolved column still compact
-    // into full-schema files (nulls materialized) instead of silently
-    // narrowing the table. DV-aware: compacting an annotated file
-    // MATERIALIZES its deletions — the rewrite drops the annotation and
-    // the orphaned DV file falls to vacuum.
-    val schema = base.manifest.schema
+    if (victims.isEmpty) return base.version
+    val layout = base.manifest.layout
     val slice = scanEntries(spark, base, victims)
-    val arranged =
-      if (zorderBy.nonEmpty) {
+    val (keyed, keys) =
+      if (zorderBy.isEmpty) (slice, (layout.toSeq ++ sortBy).distinct.map(col))
+      else {
         // Quantile-bucket maxes from one tiny aggregate (offline layout
         // job, same driver-side single-row action as writeZordered).
-        val aggs = zorderBy.map(c => max(col(c)).cast("long").as(s"__m_$c"))
+        val aggs = zorderBy.map(c => max(col(c)).cast("long"))
         val r = slice.agg(aggs.head, aggs.tail: _*).head()
         val buckets = 1L << Sinks.zorderBits(zorderBy.length)
-        val keys = zorderBy.zipWithIndex.map { case (c, i) =>
+        val z = Sinks.zorderKeyN(zorderBy.zipWithIndex.map { case (c, i) =>
           (col(c).cast("long") * buckets / (r.getLong(i) + 1L)).cast("long")
-        }
-        val zk = Sinks.zorderKeyN(keys)
-        slice.withColumn("__z", zk)
-          .repartitionByRange(math.max(numFiles, 1), col(partCol), col("__z"))
-          .sortWithinPartitions(col(partCol), col("__z"))
-          .drop("__z")
-      } else {
-        val keys = (partCol +: sortBy).distinct.map(col)
-        (if (numFiles > 1) slice.repartitionByRange(numFiles, keys: _*)
-         else slice.repartition(col(partCol)))
-          .sortWithinPartitions(keys: _*)
+        })
+        (slice.withColumn("__z", z), layout.toSeq.map(col) :+ col("__z"))
       }
-    val newFiles = writeDataFiles(arranged, base.root, Some(partCol))
-    // Row movement only (no partition-level read set): rebase over
-    // concurrent appends anywhere; conflict only if a concurrent commit
-    // rewrote one of the victims out from under the compaction.
-    commitOn(spark, base, victims.map(_._1), newFiles, Some(Set.empty), txn,
-      schema.orElse(Some(slice.schema)), Some(partCol))
+    val arranged =
+      if (keys.isEmpty) keyed.repartition(numFiles)
+      else (if (numFiles > 1 || zorderBy.nonEmpty)
+              keyed.repartitionByRange(math.max(numFiles, 1), keys: _*)
+            else layout.fold(keyed.repartition(1))(pc => keyed.repartition(col(pc))))
+        .sortWithinPartitions(keys: _*)
+    commitOn(spark, base, victims.map(_._1),
+      writeDataFiles(arranged.drop("__z"), base.root, layout), Some(Set.empty), None,
+      base.manifest.schema.orElse(Some(slice.schema)), layout)
   }
+
+  /** Output file count for rewriting `entries`: their bytes at 128 MB a
+    * file, the standard lakehouse bin size (file sizes are filesystem
+    * metadata — no data read).
+    */
+  private def bins(root: String, entries: Seq[String]): Int =
+    (1L + (entries.map(e => Files.size(Paths.get(root, "data", entryPath(e)))).sum - 1L) /
+      (128L << 20)).toInt
 
   /** OPTIMIZE — the auto-sized maintenance rewrite behind the SQL
     * statement (`OPTIMIZE graft.t [ZORDER BY (a, b)]`) and the
     * convenience form of [[compact]] for Scala callers who don't want to
-    * pick a file count: the output file count comes from the CURRENT
-    * version's live data bytes at `targetFileBytes` per file (file sizes
-    * are filesystem metadata — no data read; 128 MB default, the
-    * standard lakehouse bin size). Partitioned tables delegate to
-    * [[compact]] (whole-table scope, recorded partition column);
-    * unpartitioned tables get the same semantics inline — one
-    * content-identical rewrite commit, DVs materialized, `zorderBy`
-    * clustering honored — which plain compact refuses (it keys its
-    * pruning on partition dirs). Returns the committed version (the
+    * pick a file count: every entry of the current version is rewritten,
+    * into [[bins]] files, DVs materialized, `zorderBy` clustering
+    * honored, partitioned or not. Returns the committed version (the
     * current one when the table has no files to rewrite).
     */
-  def optimize(spark: SparkSession, root: String,
-               zorderBy: Seq[String] = Nil,
-               targetFileBytes: Long = 128L << 20,
-               txn: Option[(String, Long)] = None): Long = {
+  def optimize(spark: SparkSession, root: String, zorderBy: Seq[String] = Nil): Long = {
     val base = current(root).getOrElse(
       throw new IllegalStateException(s"no snapshot to optimize at $root"))
-    val entries = base.entries
-    if (entries.isEmpty) return base.version
-    val bytes = entries.map(e =>
-      Files.size(Paths.get(root, "data", entryPath(e)))).sum
-    val numFiles = math.max(1L,
-      math.ceil(bytes.toDouble / targetFileBytes).toLong).toInt
-    base.manifest.layout match {
-      case Some(pc) =>
-        compactOn(spark, base, pc, None, numFiles, Nil, zorderBy, txn)
-      case None =>
-        require(zorderBy.isEmpty || zorderBy.length >= 2,
-          "zorderBy takes two or more columns")
-        val schema = base.manifest.schema
-        val slice = scanEntries(spark, base, base.ranged(entries))
-        val arranged =
-          if (zorderBy.nonEmpty) {
-            val aggs = zorderBy.map(c => max(col(c)).cast("long").as(s"__m_$c"))
-            val r = slice.agg(aggs.head, aggs.tail: _*).head()
-            val buckets = 1L << Sinks.zorderBits(zorderBy.length)
-            val keys = zorderBy.zipWithIndex.map { case (c, i) =>
-              (col(c).cast("long") * buckets / (r.getLong(i) + 1L)).cast("long")
-            }
-            slice.withColumn("__z", Sinks.zorderKeyN(keys))
-              .repartitionByRange(numFiles, col("__z"))
-              .sortWithinPartitions(col("__z"))
-              .drop("__z")
-          } else slice.repartition(numFiles)
-        val newFiles = writeDataFiles(arranged, root, None)
-        // Row movement only — same rebase posture as compact.
-        commitOn(spark, base, entries, newFiles, Some(Set.empty), txn, schema, None)
-    }
+    rearrange(spark, base, base.ranged(base.entries), bins(root, base.entries),
+      zorderBy = zorderBy)
   }
 
   /** Merge-on-read debt of one table version: how much of the file set
@@ -1632,56 +1534,33 @@ object SnapshotStore {
     DvDebt(annotated.size, s.entries.size, dvRows)
   }
 
-  /** Materialize the current version's deletion vectors: rewrite ONLY the
-    * annotated files (DV-masked scan → plain files) and publish the swap
-    * as one commit. Cost ∝ annotated files, never table size; untouched
-    * files stay byte-identical and keep their manifest stats; orphaned DV
-    * files fall to [[vacuum]]. Content-identical by construction, so the
-    * commit rebases over concurrent appends like a compaction (row
-    * movement only). Returns the current version unchanged when no file
-    * is annotated. This collapses the measured merge-on-read read tax
-    * (BASELINE.md round 15: full read 9.49 s at sf100 under DVs vs
-    * 0.74 s plain)
-    * without compact's whole-partition rewrite.
-    */
-  def materializeDv(spark: SparkSession, root: String,
-                    txn: Option[(String, Long)] = None): Long =
-    materializeOn(spark, current(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot at $root")), txn)
-
-  private def materializeOn(spark: SparkSession, base: Snapshot,
-                            txn: Option[(String, Long)]): Long = {
-    val annotated = base.entries.filter(e => entryDvs(e).nonEmpty)
-    if (annotated.isEmpty) return base.version
-    val layout = base.manifest.layout
-    val schema = base.manifest.schema
-    val rewritten = scanEntries(spark, base, base.ranged(annotated))
-    val newFiles = writeDataFiles(rewritten, base.root, layout)
-    commitOn(spark, base, annotated, newFiles, Some(Set.empty), txn, schema, layout)
-  }
-
   /** Debt-driven maintenance trigger — the snapshot store's twin of the
     * ANN index's churn-fraction RebuildThreshold (AnnIvf.scala): each
     * merge-on-read commit leaves DV mask work every subsequent read pays;
     * past a threshold the one-time rewrite is cheaper than the recurring
     * tax. Checks [[dvDebt]] (footer/manifest math only) and, when EITHER
     * bound is crossed — annotated-file fraction or absolute DV row mass —
-    * runs exactly one [[materializeDv]] commit. Returns the new version
-    * when maintenance ran, None when the table is under budget. Callers
-    * poll it after writes (e.g. a streaming sink's batch hook); an
-    * under-threshold call costs a manifest parse + DV footer reads.
+    * runs exactly one [[rearrange]] commit of ONLY the annotated files:
+    * cost ∝ annotated files, untouched files stay byte-identical and keep
+    * their stats. This collapses the measured merge-on-read read tax
+    * (BASELINE.md round 15: full read 9.49 s at sf100 under DVs vs
+    * 0.74 s plain) without compact's whole-partition rewrite. Returns the
+    * new version when maintenance ran, None when the table is under
+    * budget. Callers poll it after writes (e.g. a streaming sink's batch
+    * hook); an under-threshold call costs a manifest parse + DV footer
+    * reads.
     */
   def maintain(spark: SparkSession, root: String,
                maxAnnotatedFraction: Double = 0.3,
-               maxDvRows: Long = Long.MaxValue,
-               txn: Option[(String, Long)] = None): Option[Long] = {
+               maxDvRows: Long = Long.MaxValue): Option[Long] =
     current(root).flatMap { base =>
       val debt = debtOf(base)
-      val over = debt.annotatedFiles > 0 &&
-        (debt.annotatedFraction > maxAnnotatedFraction || debt.dvRows > maxDvRows)
-      if (!over) None else Some(materializeOn(spark, base, txn))
+      Option.when(debt.annotatedFiles > 0 &&
+          (debt.annotatedFraction > maxAnnotatedFraction || debt.dvRows > maxDvRows)) {
+        val annotated = base.entries.filter(entryDvs(_).nonEmpty)
+        rearrange(spark, base, base.ranged(annotated), bins(root, annotated))
+      }
     }
-  }
 
   /** RESTORE: publish version `version`'s exact content — file list, DV
     * annotations, stats, schema, and partition layout — as a NEW commit
@@ -1922,81 +1801,39 @@ object SnapshotStore {
       Manifest.writeCheckpoint(root, merged)
     }
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val dataDir = Paths.get(root, "data")
-    import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(dataDir)) {
-      val it = Files.walk(dataDir)
-      val victims = try it.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !referenced.contains(dataDir.relativize(p).toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toList
-      finally it.close()
-      victims.foreach(Files.delete)
-      // prune now-empty commit dirs (best-effort, deepest first)
-      val dirs = Files.walk(dataDir)
-      try dirs.iterator().asScala.toList.reverse
-        .filter(p => Files.isDirectory(p) && p != dataDir)
-        .foreach { p =>
+    // Deepest first: every file under `dir` that `doomed` picks and that
+    // is older than the cutoff (an in-flight writer's files are younger),
+    // then every doomed dir left empty.
+    def sweep(dir: Path)(doomed: Path => Boolean): Unit = if (Files.isDirectory(dir)) {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(dir)
+      val deepestFirst = try walk.iterator().asScala.toList.reverse finally walk.close()
+      deepestFirst.filter(p => p != dir && doomed(p)).foreach { p =>
+        if (!Files.isDirectory(p)) {
+          if (Files.getLastModifiedTime(p).toMillis <= cutoff) Files.deleteIfExists(p)
+        } else {
           val s = Files.list(p)
-          val empty = try !s.iterator().hasNext finally s.close()
-          if (empty) Files.delete(p)
+          if (try !s.iterator().hasNext finally s.close()) Files.deleteIfExists(p)
         }
-      finally dirs.close()
-    }
-    // DV GC: drop deletion-vector files no LIVE manifest entry annotates
-    // (a compaction materialized them, or their data file was rewritten
-    // by a merge), same age guard as data files.
-    val liveDvs = liveEntries.flatMap(entryDvs).toSet
-    val dvDir = Paths.get(root, DvDir)
-    if (Files.isDirectory(dvDir)) {
-      val it = Files.list(dvDir)
-      try it.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !liveDvs.contains(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toList.foreach(Files.delete)
-      finally it.close()
-    }
-    // Staging GC: updateRows removes its parquet staging dir in a finally,
-    // but a JVM kill mid-commit can strand one — sweep stale dirs under
-    // the same age guard (an in-flight writer's staging is younger).
-    val stagingDir = Paths.get(root, "_staging")
-    if (Files.isDirectory(stagingDir)) {
-      val it = Files.list(stagingDir)
-      val stale = try it.iterator().asScala.filter(p =>
-        Files.getLastModifiedTime(p).toMillis <= cutoff).toList
-      finally it.close()
-      stale.foreach { p =>
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists(_))
-        finally walk.close()
       }
     }
-    // Section GC: drop section files no LIVE manifest references (their
-    // `*.tmp` debris included), same age guard (an in-flight commit writes
-    // its sections before its manifest exists).
+    val dataDir = Paths.get(root, "data")
+    sweep(dataDir)(p => !referenced(dataDir.relativize(p).toString))
+    // Deletion vectors no live entry annotates: a compaction materialized
+    // them, or a merge rewrote their data file.
+    val liveDvs = liveEntries.flatMap(entryDvs).toSet
+    sweep(Paths.get(root, DvDir))(p => !liveDvs(p.getFileName.toString))
+    // updateRows removes its staging dir in a finally, but a JVM killed
+    // mid-commit strands it.
+    sweep(Paths.get(root, "_staging"))(_ => true)
+    // Section files no live manifest references (their `*.tmp` debris
+    // included); an in-flight commit writes its sections before its
+    // manifest exists.
     val liveSecs = live.flatMap(_.manifest.sections.toSeq.flatten.map(_._2)).toSet
-    val secDir = Paths.get(root, Manifest.Dir, Manifest.SectionDir)
-    if (Files.isDirectory(secDir)) {
-      val it = Files.list(secDir)
-      try it.iterator().asScala
-        .filter(p => !liveSecs.contains(p.getFileName.toString) &&
-          Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toList.foreach(Files.delete)
-      finally it.close()
-    }
-    // Log GC: a writer killed mid-publish strands its temporary manifest
-    // (never listed as a version); an in-flight one is younger than cutoff.
-    val logDir = Paths.get(root, Manifest.Dir)
-    if (Files.isDirectory(logDir)) {
-      val it = Files.list(logDir)
-      try it.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".tmp") &&
-          Files.isRegularFile(p) && Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .toList.foreach(Files.deleteIfExists(_))
-      finally it.close()
-    }
+    sweep(Paths.get(root, Manifest.Dir, Manifest.SectionDir))(p => !liveSecs(p.getFileName.toString))
+    // A manifest or checkpoint writer killed mid-publish strands its
+    // temporary file, never listed as a version.
+    sweep(Paths.get(root, Manifest.Dir))(_.getFileName.toString.endsWith(".tmp"))
     dead.foreach(v => Files.deleteIfExists(Manifest.path(root, v)))
   }
 }

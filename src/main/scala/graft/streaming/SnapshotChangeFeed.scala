@@ -1,10 +1,10 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{Manifest, SnapshotStore}
 
 /** Incremental READ side of a [[SnapshotStore]] table — the tailing
   * consumer that turns the manifest log into a micro-batch change
@@ -64,11 +64,7 @@ final class SnapshotChangeFeed(root: String, checkpointPath: String,
   def commit(version: Long): Unit = {
     consumed.foreach(c => require(version >= c,
       s"commit($version) behind checkpoint $c"))
-    Files.createDirectories(ckptFile.getParent)
-    val tmp = ckptFile.resolveSibling(ckptFile.getFileName.toString + ".tmp")
-    Files.write(tmp, version.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, ckptFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Manifest.replaceFile(ckptFile, version.toString.getBytes(StandardCharsets.UTF_8))
   }
 
   /** The next unconsumed commit's row delta, or None when caught up. */

@@ -157,13 +157,9 @@ case class GraftUpdateCommand(target: LogicalPlan,
   override def run(spark: SparkSession): Seq[Row] = {
     val (location, base, partCol) = GraftDml.tableMeta(target)
     val tNames = target.output.map(a => a.exprId -> a.name).toMap
-    val condRefs = condition.map(_.references.map(_.name).toSet)
-      .getOrElse(Set.empty[String])
-    val partitionAligned = partCol match {
-      case Some(pc) => condRefs.subsetOf(Set(pc))
-      case None => condRefs.isEmpty // no predicate: whole-table rewrite
-    }
-    if (partitionAligned) {
+    // The rule DELETE shares (no predicate: whole-table rewrite).
+    if (SnapshotStore.copyOnWrite(
+        condition.fold(Set.empty[String])(_.references.map(_.name).toSet), partCol)) {
       // COW path over the resolved relation (attribute ids bind exactly).
       val df = GraftDml.ofRows(spark, target)
       val matchPred = coalesce(

@@ -304,7 +304,7 @@ class SinkSpec extends AnyFunSuite {
     def lay(cols: Seq[String]): String = {
       val root = base.resolve(s"z${cols.length}").toString
       SnapshotStore.overwrite(li, root, Some("p"))
-      SnapshotStore.compact(spark, root, "p", numFiles = nFiles,
+      SnapshotStore.compact(spark, root, numFiles = nFiles,
         zorderBy = cols)
       root
     }

@@ -1,7 +1,10 @@
 package graft
 
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.SnapshotStore
@@ -76,5 +79,52 @@ class SnapshotPublishSpec extends AnyFunSuite {
     assert(!Files.exists(debris), "vacuum past the cutoff must remove the debris")
     assert(SnapshotStore.versions(root) == Seq(0L, 1L))
     assert(SnapshotStore.read(spark, root).count() == 3)
+  }
+
+  test("a forked writer killed at random points leaves a table that reads its newest version, takes the next commit, and vacuums clean") {
+    import spark.implicits._
+    val root = scratch("snap_kill_")
+    val rows = SnapshotCommitLoop.Rows
+    def batch(from: Long) = (0 until rows).map(j => (from + j, 0L)).toDF("id", "p")
+    SnapshotStore.overwrite(batch(-rows.toLong), root, Some("p"))
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+    val rnd = new scala.util.Random(31)
+    for (round <- 1 to 3) {
+      val child = new ProcessBuilder((Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g",
+          "-cp", System.getProperty("java.class.path"), "graft.SnapshotCommitLoop", root)).asJava)
+        .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+      // A child that hangs is killed too; its closed stdout then fails the wait below.
+      val watchdog = new Thread(() =>
+        try { Thread.sleep(240000); child.destroyForcibly() } catch { case _: InterruptedException => () })
+      watchdog.setDaemon(true)
+      watchdog.start()
+      try {
+        val out = new BufferedReader(new InputStreamReader(child.getInputStream))
+        // Let it commit a few versions, then kill it at a random instant.
+        for (_ <- 0 until 2 + rnd.nextInt(3))
+          assert(Option(out.readLine()).exists(_.startsWith("committed")),
+            s"round $round: the child stopped before committing")
+        Thread.sleep(rnd.nextInt(500).toLong)
+      } finally {
+        child.destroyForcibly().waitFor()
+        watchdog.interrupt()
+      }
+      // Every version holds `rows` more rows than the one before it.
+      val v = SnapshotStore.currentVersion(root).get
+      assert(SnapshotStore.read(spark, root).count() == (v + 1) * rows, s"round $round at v$v")
+      assert(SnapshotStore.append(batch(1000000L * round), root) == v + 1)
+      SnapshotStore.vacuum(root, keepVersions = Int.MaxValue, minAgeMs = 0L)
+      val live = SnapshotStore.versions(root)
+        .flatMap(SnapshotStore.filesAt(root, _)).map(Paths.get(_)).toSet
+      def under(dir: String) = {
+        val walk = Files.walk(Paths.get(root, dir))
+        try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList finally walk.close()
+      }
+      assert(under("data").filterNot(live).isEmpty, s"round $round: data debris survived vacuum")
+      assert(!under("_manifests").exists(_.toString.endsWith(".tmp")),
+        s"round $round: temporary manifests survived vacuum")
+      assert(SnapshotStore.read(spark, root).count() == (v + 2) * rows)
+    }
   }
 }

@@ -60,8 +60,7 @@ class SnapshotRelationSpec extends AnyFunSuite {
     val root = scratch("snaprel_")
     SnapshotStore.overwrite(base, root, Some("c_nationkey"),
       declareStatsCols = Seq("c_custkey", "c_mktsegment"))
-    SnapshotStore.compact(spark, root, "c_nationkey",
-      numFiles = 4, sortBy = Seq("c_custkey"))
+    SnapshotStore.compact(spark, root, numFiles = 4, sortBy = Seq("c_custkey"))
     (root, base)
   }
 
@@ -135,8 +134,7 @@ class SnapshotRelationSpec extends AnyFunSuite {
     SnapshotStore.overwrite(base, root, Some("c_nationkey"),
       declareStatsCols = Seq("c_mktsegment"))
     // cluster by segment so files carry narrow segment ranges
-    SnapshotStore.compact(spark, root, "c_nationkey",
-      numFiles = 3, sortBy = Seq("c_mktsegment"))
+    SnapshotStore.compact(spark, root, numFiles = 3, sortBy = Seq("c_mktsegment"))
     val total = SnapshotStore.filesAt(
       root, SnapshotStore.currentVersion(root).get).length
 

@@ -240,7 +240,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     val plan = inner.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("c_nationkey"))
 
-    SnapshotStore.compact(spark, root, "c_nationkey")
+    SnapshotStore.compact(spark, root)
     assert(sortedRows(spark.sql("SELECT * FROM graft.dv")) ==
       sortedRows(SnapshotStore.read(spark, root)))
     assert(spark.sql("SELECT * FROM graft.dv").count() == expect.count())
@@ -481,7 +481,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
       finally it.close()
     }
     // compact materializes the DVs away; content identical
-    SnapshotStore.compact(spark, root, "p")
+    SnapshotStore.compact(spark, root)
     assert(spark.sql("SELECT sum(dv_count) AS n FROM graft.updmor.files")
       .head().getLong(0) == 0L)
     assert(spark.sql("SELECT k, v FROM graft.updmor ORDER BY k").collect()

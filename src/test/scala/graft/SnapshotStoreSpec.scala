@@ -517,7 +517,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // 2. A concurrent commit that REWROTE a touched file (compact) must
     // conflict the stale update loudly — its positions are dead.
     val base2 = SnapshotStore.currentVersion(root).get
-    SnapshotStore.compact(spark, root, "p")
+    SnapshotStore.compact(spark, root)
     intercept[SnapshotStore.SnapshotConflictException] {
       SnapshotStore.updateRows(spark, root, base2,
         // acted was planned against base2's files; recompute positions
@@ -586,7 +586,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
     // Compaction materializes the DVs: entries lose their annotation,
     // content identical, and vacuum then reclaims the orphaned sidecars.
-    val v3 = SnapshotStore.compact(spark, root, "c_nationkey")
+    val v3 = SnapshotStore.compact(spark, root)
     assert(SnapshotStore.prunedFiles(root, v3).forall(!_.contains("#dv=")))
     assert(SnapshotStore.read(spark, root).count() ==
       base.count() - victims.size - victims2.size)
@@ -703,7 +703,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(probeBefore.size > before.size / 2,
       s"fixture defect: unsorted files should span wide ranges (${probeBefore.size}/${before.size})")
 
-    val vC = SnapshotStore.compact(spark, root, "p", numFiles = 8,
+    val vC = SnapshotStore.compact(spark, root, numFiles = 8,
       sortBy = Seq("k"))
     assert(vC == v9 + 1)
     val after = SnapshotStore.prunedFiles(root, vC)
@@ -723,7 +723,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
     // Selective compaction: partition 1's files are physically untouched.
     val p1Before = SnapshotStore.prunedFiles(root, vC, Some(Set("1"))).toSet
-    val vS = SnapshotStore.compact(spark, root, "p", partValues = Some(Set("0")))
+    val vS = SnapshotStore.compact(spark, root, partValues = Some(Set("0")))
     val p1After = SnapshotStore.prunedFiles(root, vS, Some(Set("1"))).toSet
     assert(p1After == p1Before, "a partition outside the compaction set must keep its files")
     // CDC across the compaction is EMPTY net change (pure rewrite).
@@ -747,9 +747,9 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val zRoot = scratch("snap_zord_")
     val sRoot = scratch("snap_sort_")
     val zPre = ingest(zRoot); ingest(sRoot)
-    val vz = SnapshotStore.compact(spark, zRoot, "p", numFiles = 64,
+    val vz = SnapshotStore.compact(spark, zRoot, numFiles = 64,
       zorderBy = Seq("a", "b"))
-    val vs = SnapshotStore.compact(spark, sRoot, "p", numFiles = 64,
+    val vs = SnapshotStore.compact(spark, sRoot, numFiles = 64,
       sortBy = Seq("a"))
     // Content identical across the z-order rewrite.
     val cols = Seq(col("id"), col("a"), col("b"), col("p"))
@@ -1347,13 +1347,13 @@ class SnapshotStoreSpec extends AnyFunSuite {
     // then vacuum it to one retained version — the shared base files drop
     // out of the clone's tree, but the inode link count keeps them alive
     // for the source. Then the mirror image.
-    SnapshotStore.compact(spark, dst, "c_nationkey")
+    SnapshotStore.compact(spark, dst)
     SnapshotStore.vacuum(dst, keepVersions = 1, minAgeMs = 0L)
     assert(SnapshotStore.read(spark, src).orderBy("c_custkey").collect()
       .map(_.getLong(0)).toSeq ==
       (expect.map(_.getLong(0)) :+ 900002L).sorted,
       "vacuuming the clone must never delete a file the source references")
-    SnapshotStore.compact(spark, src, "c_nationkey")
+    SnapshotStore.compact(spark, src)
     SnapshotStore.vacuum(src, keepVersions = 1, minAgeMs = 0L)
     assert(SnapshotStore.read(spark, dst).count() == expect.size + 1,
       "vacuuming the source must never delete a file the clone references")

@@ -49,4 +49,9 @@ class SourceHygieneSpec extends AnyFunSuite {
   test("no test-only reference shape (*Hof, *Reference) is defined in src/main") {
     assert(offenders("""\bdef \w*(Hof|Reference)\b""", Set.empty).isEmpty)
   }
+
+  test("the snapshot store pins nothing in the block store (no localCheckpoint)") {
+    val store = sources.collect { case (p, text) if p.endsWith(Paths.get("sources", "SnapshotStore.scala")) => text }
+    assert(store.size == 1 && !store.head.contains("localCheckpoint"))
+  }
 }
