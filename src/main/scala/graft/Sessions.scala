@@ -73,10 +73,11 @@ object Sessions {
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
       // The library's session extensions: graft SQL functions
-      // (quantized_dot, float_dot) and row-level SQL DML (UPDATE / MERGE
-      // INTO) over graft snapshot tables. Construction-time only — hosts
-      // that cannot control session construction get the functions via
-      // GraftFunctions.register(spark); DML then requires this builder.
+      // (quantized_dot, float_dot), and the reads and row-level DML
+      // (DELETE / UPDATE / MERGE INTO) of graft snapshot tables.
+      // Construction-time only — hosts that cannot control session
+      // construction get the functions via GraftFunctions.register(spark);
+      // snapshot-table reads and DML then require this builder.
       .config("spark.sql.extensions",
         "org.apache.spark.sql.graftext.GraftExtensions")
       // Column identity: snapshot tables stamp parquet field ids so

@@ -5,15 +5,13 @@ import java.util.Collections
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -35,14 +33,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Reads: `loadTable` resolves the requested snapshot version from the
   * manifest log (current, `VERSION AS OF` n, or the newest manifest
-  * committed at-or-before a `TIMESTAMP AS OF` bound) and returns a table
-  * whose scan machinery is Spark's OWN parquet DSv2 stack
-  * (`ParquetTable` over the version's exact file list, with the
-  * manifest-recorded schema as the user-specified schema). That buys the
-  * full native read path for free — column pruning, filter pushdown into
-  * row-group stats, vectorized decode — while the snapshot layer
-  * contributes exactly what a table format should: WHICH files constitute
-  * the version, and the authoritative schema.
+  * committed at-or-before a `TIMESTAMP AS OF` bound), decodes it once and
+  * returns a [[GraftSnapshotTable]] holding that [[SnapshotStore.Snapshot]].
+  * The table has no scan of its own: the read rule of
+  * `org.apache.spark.sql.graftext.GraftExtensions` replaces its relation
+  * with the plan [[SnapshotStore.readAt]] builds for that snapshot — the
+  * one parquet relation over a [[SnapshotFileIndex]] every Scala read
+  * uses. A SQL read therefore lists no directory and starts no job before
+  * an action, and gets column pruning, filter pushdown into row groups,
+  * planning-time manifest pruning and vectorized decode. The catalog
+  * needs that extension (`Sessions.build` installs it): without it a SQL
+  * read of these tables fails, as the table declares no scan.
   *
   * Writes go through the SAME manifest-commit protocol as the Scala API —
   * `INSERT INTO` delegates to [[SnapshotStore.append]] (blind append,
@@ -63,12 +64,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * served driver-side from the manifest log via `LocalScan`; they are
   * KB-sized reads even at million-file scale (sectioned manifests).
   *
-  * Deletion vectors: a version whose entries carry `#dv=` sidecars cannot
-  * be served as a bare file list (the deleted rows are still IN the
-  * files). `loadTable` refuses such versions by name and points at the
-  * two honest outs — `SnapshotStore.compact` (which materializes DVs) or
-  * the Scala read path (which anti-joins them). Refusal over silent
-  * resurrection.
+  * Deletion vectors: a version whose entries carry `#dv=` sidecars reads
+  * through the same [[SnapshotStore.readAt]] plan, which anti-joins the
+  * sidecars' (file, row_index) pairs against the annotated files only.
+  * A reader between a DELETE and the next compact sees the masked table;
+  * filters still push below the join into the parquet scan.
   *
   * 100 TB: planning cost is one manifest read (sectioned manifests keep
   * that KB-sized at million-file scale); the scan itself is the native
@@ -134,8 +134,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   private def commitMicros(dir: String, v: Long): Long =
-    Files.getLastModifiedTime(
-      Paths.get(dir, "_manifests", f"v$v%013d.json")).toMillis * 1000L
+    Files.getLastModifiedTime(Manifest.path(dir, v)).toMillis * 1000L
 
   /** The snapshot directory `ident` denotes: either directly
     * (`graft.ns.table`), or — when `ident.name` is a metadata-table
@@ -172,24 +171,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         s"$catName.${ident.name}: no committed version $v " +
           s"(have ${SnapshotStore.versions(tableDir).mkString(", ")})")
     val snap = SnapshotStore.snapshot(tableDir, v)
-    val entries = snap.entries
-    val hasDvs = entries.exists(_.contains("#dv="))
-    val schema = snap.manifest.schema
-    // Renamed columns resolve by field id — assert the read-side conf
-    // whenever the served schema carries ids (no-op otherwise).
-    if (schema.exists(s => SnapshotStore.fieldIdsOf(s).nonEmpty))
-      SparkSession.active.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    // entryPath strips DV annotations (`path#dv=ref`): the delegate table
-    // only ever sees real file paths — for DV versions it contributes
-    // schema/properties while the scan goes through GraftDvScanBuilder.
-    val files = entries.map(e =>
-      Paths.get(tableDir, "data", SnapshotStore.entryPath(e)).toString)
     // SQL writes reproduce the table's layout from the recorded partition
     // column. A table whose files are partitioned but whose layout was
     // never recorded (pre-record history) stays read-only: appending
     // unpartitioned files would silently break merge/compact's
     // per-partition cost model.
-    val partitioned = entries.exists(_.split('/').exists(_.startsWith("__part=")))
+    val partitioned = snap.entries.exists(_.split('/').exists(_.startsWith("__part=")))
     // The layout of the served version: the current one whenever writes
     // are allowed at all.
     val partCol = snap.manifest.layout
@@ -201,10 +188,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
           "rewrite it with SnapshotStore.overwrite(df, root, Some(col)) " +
           "to enable SQL writes")
       else Right(partCol)
-    new GraftSnapshotTable(s"$catName.${ident.name}", v, tableDir, writable,
-      ParquetTable(s"$catName.${ident.name}@v$v", SparkSession.active,
-        CaseInsensitiveStringMap.empty(), files, schema,
-        classOf[ParquetFileFormat]), hasDvs)
+    new GraftSnapshotTable(s"$catName.${ident.name}", snap, writable)
   }
 
   /** `<table>.history` / `<table>.files` as driver-side LocalScan tables —
@@ -409,55 +393,34 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 }
 
-/** A pinned snapshot version as a DSv2 table. Scan planning delegates
-  * wholesale to the native parquet table built over the version's file
-  * list; writes (when `writable`) delegate to the SnapshotStore commit
-  * protocol through the V1Write fallback — `INSERT INTO` is an append
-  * commit (rebases over concurrent writers), `INSERT OVERWRITE` a
-  * replace commit. `writable = Left(reason)` refuses at analysis with
-  * the reason (time travel, unrecorded legacy layout).
+/** A pinned snapshot version as a DSv2 table: its schema, properties and
+  * writes, and the [[SnapshotStore.Snapshot]] `loadTable` decoded. It
+  * declares no scan: reads plan through [[SnapshotStore.readAt]] of
+  * `snapshot` (see [[GraftCatalog]]), and `DELETE FROM` / `UPDATE` /
+  * `MERGE INTO` are the DML commands of `graftext.GraftDml`. Writes (when
+  * `writable`) go to the SnapshotStore commit protocol through the
+  * V1Write fallback — `INSERT INTO` is an append commit (rebases over
+  * concurrent writers), `INSERT OVERWRITE` a replace commit.
+  * `writable = Left(reason)` refuses at analysis with the reason (time
+  * travel, unrecorded legacy layout).
   */
-private[sources] class GraftSnapshotTable(tableName: String, version: Long,
-                                          location: String,
-                                          writable: Either[String, Option[String]],
-                                          delegate: ParquetTable,
-                                          hasDvs: Boolean = false)
-  extends Table with SupportsRead with SupportsWrite
-  with org.apache.spark.sql.connector.catalog.SupportsDelete {
+final class GraftSnapshotTable private[sources] (tableName: String,
+                                                 val snapshot: SnapshotStore.Snapshot,
+                                                 writable: Either[String, Option[String]])
+  extends Table with SupportsWrite {
 
   override def name(): String = tableName
 
-  /** `DELETE FROM graft.t WHERE …` — Spark's metadata-delete path: the
-    * condition arrives as V1 filters and maps onto
-    * [[SnapshotStore.delete]]'s transactional commit. Predicates that
-    * don't translate (expressions, subqueries) make `canDeleteWhere`
-    * false and the statement refuses loudly — never a partial delete.
-    *
-    * Mode choice is the cost model, decided from the filter's references
-    * ([[SnapshotStore.copyOnWrite]], the rule UPDATE shares):
-    *   - partition-aligned predicates (or no predicate at all) take the
-    *     REWRITE path — wholly-deleted partitions drop their files from
-    *     the manifest without writing anything;
-    *   - row-level predicates take the DELETION-VECTOR path — cost ∝
-    *     matching rows (one KB-sized sidecar), not touched-partition
-    *     bytes; reads serve through the DV scan until the next compact.
+  private lazy val readSchema = SnapshotStore.readSchema(SparkSession.active, snapshot)
+
+  override def schema(): StructType = readSchema
+
+  /** The partition column a write to this table lays out by; throws the
+    * refusal when the table is read-only.
     */
-  override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    writable.isRight &&
-      filters.forall(GraftFilterTranslation.toColumn(_).isDefined)
-
-  override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val partCol = writable.fold(
-      reason => throw new UnsupportedOperationException(s"$tableName: $reason"),
-      identity)
-    val pred = filters.toSeq.flatMap(GraftFilterTranslation.toColumn)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    SnapshotStore.delete(SparkSession.active, location, pred, partCol,
-      deletionVectors = !SnapshotStore.copyOnWrite(filters.flatMap(_.references).toSet, partCol))
-  }
-
-  override def schema(): StructType = delegate.schema
+  def writeLayout(): Option[String] = writable.fold(
+    reason => throw new UnsupportedOperationException(s"$tableName: $reason"),
+    identity)
 
   /** AUTOMATIC_SCHEMA_EVOLUTION (writable tables only) opts into Spark's
     * own MERGE WITH SCHEMA EVOLUTION machinery: the analyzer computes the
@@ -482,27 +445,13 @@ private[sources] class GraftSnapshotTable(tableName: String, version: Long,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def properties(): java.util.Map[String, String] =
-    (Map("location" -> location, "snapshot-version" -> version.toString,
+    (Map("location" -> snapshot.root, "snapshot-version" -> snapshot.version.toString,
       "provider" -> "graft-snapshot",
-      "deletion-vectors" -> hasDvs.toString) ++
+      "deletion-vectors" -> snapshot.entries.exists(_.contains("#dv=")).toString) ++
       writable.toOption.flatten.map("partition-column" -> _)).asJava
 
-  /** Plain versions scan through Spark's native parquet DSv2 stack; a
-    * version carrying deletion vectors scans through [[GraftDvScanBuilder]]
-    * — the SAME DV anti-join the Scala path applies
-    * ([[SnapshotStore.read]]), surfaced via the V1 fallback so a reader
-    * between a GDPR delete and the next compaction sees the masked table
-    * instead of a refusal (r12 refused these versions by name).
-    */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (hasDvs)
-      new GraftDvScanBuilder(location, version, delegate.schema)
-    else delegate.newScanBuilder(options)
-
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val partCol = writable.fold(
-      reason => throw new UnsupportedOperationException(s"$tableName: $reason"),
-      identity)
+    val partCol = writeLayout()
     new WriteBuilder with SupportsTruncate {
       private var replace = false
       override def truncate(): WriteBuilder = { replace = true; this }
@@ -511,115 +460,12 @@ private[sources] class GraftSnapshotTable(tableName: String, version: Long,
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean): Unit =
               if (replace || overwrite)
-                SnapshotStore.overwrite(data, location, partCol)
+                SnapshotStore.overwrite(data, snapshot.root, partCol)
               else
-                SnapshotStore.append(data, location, partCol)
+                SnapshotStore.append(data, snapshot.root, partCol)
           }
       }
     }
-  }
-}
-
-/** Scan for a deletion-vector-carrying snapshot version: plans the Scala
-  * read path's DataFrame — parquet scan of the version's files, anti-join
-  * against the DV sidecars on (file, row_index) — and hands Spark its RDD
-  * through the DSv2→V1 fallback ([[V1Scan]], the same bridge the built-in
-  * JDBC source rides). Column pruning and filter pushdown are applied to
-  * the INNER DataFrame, so Catalyst pushes predicates through the
-  * anti-join into the parquet scan below it (an anti-join never removes a
-  * filter's rows from the left side — pushdown is semantics-preserving);
-  * every filter is ALSO reported back as residual, so correctness never
-  * depends on the translation.
-  *
-  * 100 TB: the anti-join is the designed GDPR-window shape — DV sidecars
-  * are KBs and broadcast on their own stats; the underlying scan keeps
-  * native vectorized decode. The V1 bridge costs one InternalRow→Row→
-  * InternalRow conversion pass versus the columnar path, bounded by the
-  * window between a delete and the next compact (which materializes DVs
-  * and restores the native path).
-  */
-private[sources] class GraftDvScanBuilder(location: String, version: Long,
-                                          tableSchema: StructType)
-  extends ScanBuilder
-  with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-  with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns {
-
-  import org.apache.spark.sql.sources
-  import org.apache.spark.sql.Column
-
-  private var required: StructType = tableSchema
-  private var filters: Array[sources.Filter] = Array.empty
-
-  override def pushFilters(fs: Array[sources.Filter]): Array[sources.Filter] = {
-    filters = fs
-    fs // all residual: the inner filter is best-effort, Spark re-checks
-  }
-
-  override def pushedFilters(): Array[sources.Filter] =
-    filters.filter(translate(_).isDefined)
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  private def translate(f: sources.Filter): Option[Column] =
-    GraftFilterTranslation.toColumn(f)
-
-  override def build(): Scan = new org.apache.spark.sql.connector.read.V1Scan {
-    override def readSchema(): StructType = required
-
-    override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-      with org.apache.spark.sql.sources.TableScan](ctx: SQLContext): T = {
-      val pushable = filters.flatMap(translate)
-      val cols = required.fieldNames
-      new org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan {
-        override def sqlContext: SQLContext = ctx
-        override def schema: StructType = required
-        override def buildScan(): org.apache.spark.rdd.RDD[Row] = {
-          var df = SnapshotStore.read(ctx.sparkSession, location, Some(version))
-          pushable.foreach(p => df = df.filter(p))
-          if (cols.nonEmpty)
-            df = df.select(cols.map(org.apache.spark.sql.functions.col)
-              .toIndexedSeq: _*)
-          else df = df.select() // COUNT(*)-style empty projection
-          df.rdd
-        }
-      }.asInstanceOf[T]
-    }
-  }
-}
-
-/** V1 `Filter` → `Column` translation, shared by the DV scan (pushdown
-  * into the inner frame) and SQL DELETE (`SupportsDelete.deleteWhere`).
-  * None = untranslated: the DV scan leaves those to Spark's residual
-  * evaluation; DELETE refuses them at `canDeleteWhere` (loud, never a
-  * silent over- or under-delete).
-  */
-object GraftFilterTranslation {
-  import org.apache.spark.sql.{sources, Column}
-  import org.apache.spark.sql.functions.{col, lit, not}
-
-  def toColumn(f: sources.Filter): Option[Column] = f match {
-    case sources.EqualTo(a, v) => Some(col(a) === lit(v))
-    case sources.EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case sources.GreaterThan(a, v) => Some(col(a) > lit(v))
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case sources.LessThan(a, v) => Some(col(a) < lit(v))
-    case sources.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case sources.In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case sources.IsNull(a) => Some(col(a).isNull)
-    case sources.IsNotNull(a) => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case sources.StringContains(a, v) => Some(col(a).contains(v))
-    case sources.AlwaysTrue() => Some(lit(true))
-    case sources.AlwaysFalse() => Some(lit(false))
-    case sources.And(l, r) =>
-      for { a <- toColumn(l); b <- toColumn(r) } yield a && b
-    case sources.Or(l, r) =>
-      for { a <- toColumn(l); b <- toColumn(r) } yield a || b
-    case sources.Not(c) => toColumn(c).map(not)
-    case _ => None
   }
 }
 

@@ -12,8 +12,10 @@ import org.apache.spark.sql.graftext.Schemas
 import org.apache.spark.sql.types._
 
 /** How a [[SnapshotStore]] table is scanned: every read of the store —
-  * [[SnapshotStore.read]], CDC, the copy-on-write writers' rewrites, the
-  * position scans and the deletion-vector sidecars — is an ordinary
+  * [[SnapshotStore.read]], SQL over [[GraftCatalog]] and
+  * `spark.read.format("graft")` (both planned as [[SnapshotStore.readAt]]),
+  * CDC, the copy-on-write writers' rewrites, the position scans and the
+  * deletion-vector sidecars — is an ordinary
   * parquet `HadoopFsRelation` over a [[SnapshotFileIndex]], the way the
   * lakehouse formats do it (Delta's TahoeFileIndex / Iceberg's
   * SparkScanBuilder): the manifest IS the listing. The index holds the

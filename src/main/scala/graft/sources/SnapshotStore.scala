@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftext.Schemas
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Snapshot-isolated table layout over plain parquet — the transactional
@@ -198,6 +199,12 @@ object SnapshotStore {
         Seq(SnapshotRelation.status(Paths.get(root, "data", entryPath(e))))).get
     }
 
+  /** The schema [[readAt]] serves `s` under: its [[schemaOf]], every
+    * column nullable.
+    */
+  def readSchema(spark: SparkSession, s: Snapshot): StructType =
+    Schemas.asNullable(schemaOf(spark, s.root, s.manifest.schema, s.entries))
+
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(StandardCharsets.UTF_8))
@@ -242,7 +249,7 @@ object SnapshotStore {
     currentVersion(root).map(snapshot(root, _))
 
   /** Version `asOf` of the table at `root`, else its current version. */
-  private[sources] def pinned(root: String, asOf: Option[Long]): Snapshot =
+  def pinned(root: String, asOf: Option[Long]): Snapshot =
     snapshot(root, asOf.orElse(currentVersion(root)).getOrElse(
       throw new IllegalStateException(s"no committed snapshot at $root")))
 
@@ -447,7 +454,16 @@ object SnapshotStore {
       case None => df.write.mode("error")
     }
     w.parquet(dir.toString)
-    parquetUnder(dir).map(p => Paths.get(root, "data").relativize(p).toString)
+    // A write of no rows leaves no file when partitioned but one empty
+    // part file when not: drop that one, so an empty commit names none.
+    val files = parquetUnder(dir) match {
+      case Seq(only) if partCol.isEmpty &&
+          footer(df.sparkSession.sparkContext.hadoopConfiguration, only, Nil)._1 == 0 =>
+        deleteTree(dir)
+        Nil
+      case fs => fs
+    }
+    files.map(p => Paths.get(root, "data").relativize(p).toString)
   }
 
   /** Atomically publish `files` as version `next`. Throws

@@ -49,6 +49,12 @@ object SnapshotSink {
     *   .option("checkpointLocation", ckpt).start()
     * }}}
     */
+  def mergeBatch(root: String, keyCol: String, partCol: String,
+                 appId: String): (DataFrame, Long) => Unit =
+    guarded(root, Some(partCol), appId) { (batch, txn) =>
+      SnapshotStore.merge(batch.sparkSession, root, batch, keyCol, partCol, txn = txn)
+    }
+
   /** The append-mode twin of [[mergeBatch]]: each micro-batch lands as an
     * append commit (the event-log shape — no key, rows only ever added),
     * with the SAME txn-marker replay guard and empty-batch skip. First
@@ -57,51 +63,39 @@ object SnapshotSink {
     */
   def appendBatch(root: String, partCol: Option[String],
                   appId: String): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      // Pin + full count FIRST (the documented foreachBatch pattern for
-      // multi-action use): a limit-1 emptiness probe executes only a
-      // partition prefix, which (a) re-runs the micro-batch scan per
-      // action and (b) leaves stateful-upstream state stores uncommitted
-      // — Spark 4's state-store commit validation fails the batch
-      // (StreamingSpec's chained-topology scenario caught it).
-      batch.persist()
-      try {
-        val n = batch.count()
-        if (n == 0L) ()
-        else if (SnapshotStore.lastTxn(root, appId).exists(_ >= batchId)) ()
-        else if (SnapshotStore.currentVersion(root).isEmpty)
-          SnapshotStore.overwrite(batch, root, partCol, txn = Some(appId -> batchId))
-        else
-          SnapshotStore.append(batch, root, partCol, txn = Some(appId -> batchId))
-      } finally { batch.unpersist(); () }
+    guarded(root, partCol, appId) { (batch, txn) =>
+      SnapshotStore.append(batch, root, partCol, txn = txn)
     }
 
-  def mergeBatch(root: String, keyCol: String, partCol: String,
-                 appId: String): (DataFrame, Long) => Unit =
+  /** `commit(batch, txn)` of each micro-batch, behind the guard both
+    * sinks share:
+    *   - the batch is persisted and fully counted FIRST (the documented
+    *     foreachBatch pattern for multi-action use): a limit-1 emptiness
+    *     probe executes only a partition prefix, which (a) re-runs the
+    *     micro-batch scan per action and (b) leaves stateful-upstream
+    *     state stores uncommitted — Spark 4's state-store commit
+    *     validation fails the batch (StreamingSpec's chained-topology
+    *     scenario caught it);
+    *   - an empty batch publishes nothing: empty micro-batches are
+    *     routine, and an empty FIRST batch would bootstrap a zero-file
+    *     table (replaying a skipped empty batch is trivially idempotent,
+    *     so no txn marker is needed);
+    *   - a replayed batch (restart raced the checkpoint) is already
+    *     published — the no-op IS the exactly-once guarantee;
+    *   - the first batch bootstraps the table with `partCol`'s layout.
+    */
+  private def guarded(root: String, partCol: Option[String], appId: String)
+                     (commit: (DataFrame, Option[(String, Long)]) => Unit)
+      : (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      // Pin + full count first — see appendBatch (state-store commit
-      // validation + one scan for the commit path's several actions).
       batch.persist()
       try {
-      if (batch.count() == 0L) {
-        // Empty micro-batches are routine (no new offsets in the trigger
-        // window). Publishing one is worse than pointless: an empty FIRST
-        // batch would bootstrap a zero-file table via a partitioned write
-        // that emits no parquet at all. Skip — replay of a skipped empty
-        // batch is trivially idempotent, so no txn marker is needed.
-        ()
-      } else if (SnapshotStore.lastTxn(root, appId).exists(_ >= batchId)) {
-        // Replayed batch (restart raced the checkpoint): already
-        // published — the no-op IS the exactly-once guarantee.
-        ()
-      } else if (SnapshotStore.currentVersion(root).isEmpty) {
-        // First batch bootstraps the table (partitioned, so merges work).
-        SnapshotStore.overwrite(batch, root, Some(partCol),
-          txn = Some(appId -> batchId))
-      } else {
-        SnapshotStore.merge(batch.sparkSession, root, batch, keyCol, partCol,
-          txn = Some(appId -> batchId))
-      }
+        val txn = Some(appId -> batchId)
+        if (batch.count() == 0L) ()
+        else if (SnapshotStore.lastTxn(root, appId).exists(_ >= batchId)) ()
+        else if (SnapshotStore.currentVersion(root).isEmpty)
+          SnapshotStore.overwrite(batch, root, partCol, txn = txn)
+        else commit(batch, txn)
       } finally { batch.unpersist(); () }
     }
 }

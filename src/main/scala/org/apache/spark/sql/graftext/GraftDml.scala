@@ -2,14 +2,15 @@ package org.apache.spark.sql.graftext
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo, ExprId, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, EqualTo, ExprId, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 
-import graft.sources.SnapshotStore
+import graft.sources.{GraftSnapshotTable, SnapshotStore}
 
 /** Row-level SQL DML for graft snapshot tables — `UPDATE graft.t SET …`
   * and `MERGE INTO graft.t USING … ON …` — via a post-hoc resolution rule
@@ -19,8 +20,8 @@ import graft.sources.SnapshotStore
   * (or sidesteps) DSv2 row-level operations: intercept the ANALYZED
   * `UpdateTable`/`MergeIntoTable` (conditions and assignments fully
   * resolved against the relation's attributes), re-plan them as DataFrame
-  * computations, and commit. `DELETE FROM` needs none of this — it rides
-  * Spark's own `SupportsDelete` path into [[SnapshotStore.delete]].
+  * computations, and commit. `DELETE FROM` converts the same way, into
+  * [[SnapshotStore.delete]].
   *
   * Scale shape — MERGE-ON-READ at row granularity (the Delta-DV model):
   * both commands cost ∝ MATCHED rows, not touched-partition bytes. The
@@ -46,6 +47,9 @@ import graft.sources.SnapshotStore
   */
 class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan resolveOperators {
+    case d @ DeleteFromTable(target, condition)
+        if d.resolved && GraftDml.graftRelation(target).isDefined =>
+      GraftDeleteCommand(target, condition)
     case u @ UpdateTable(target, assignments, condition)
         if u.resolved && GraftDml.graftRelation(target).isDefined =>
       GraftUpdateCommand(target, assignments, condition)
@@ -62,6 +66,30 @@ class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 }
 
+/** Every read of a graft snapshot table plans what
+  * [[SnapshotStore.readAt]] plans for the version it resolved: the
+  * catalog table's relation (SQL) and the `format("graft")` relation are
+  * each replaced by readAt's analyzed plan under a `Project` that keeps
+  * the relation's output expression ids, so whatever was resolved above
+  * binds unchanged (Delta's V2→V1 relation swap). Injected after
+  * [[GraftDmlRule]]: the DML commands keep their target relation, and
+  * their reads of it (`GraftDml.ofRows`) run this rule when analyzed.
+  */
+class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan resolveOperators {
+    case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSnapshotTable] =>
+      readAs(r.output, r.table.asInstanceOf[GraftSnapshotTable].snapshot)
+    case r: LogicalRelation if r.relation.isInstanceOf[GraftSnapshotRelation] =>
+      readAs(r.output, r.relation.asInstanceOf[GraftSnapshotRelation].snapshot)
+  }
+
+  private def readAs(output: Seq[Attribute], s: SnapshotStore.Snapshot): LogicalPlan = {
+    val read = SnapshotStore.readAt(spark, s).queryExecution.analyzed
+    Project(output.zip(read.output).map { case (a, r) => Alias(r, a.name)(exprId = a.exprId) },
+      read)
+  }
+}
+
 private[graftext] object GraftDml {
 
   /** Marker column: whether an acted row re-appends (update) or only
@@ -69,15 +97,10 @@ private[graftext] object GraftDml {
     */
   val Keep = "__graft_keep"
 
-  /** The graft snapshot relation under `plan` (stripping aliases), if any.
-    * Identified by the provider property — the table class itself is
-    * package-private to the sources package by design.
-    */
+  /** The graft snapshot relation under `plan` (stripping aliases), if any. */
   def graftRelation(plan: LogicalPlan): Option[DataSourceV2Relation] = plan match {
     case SubqueryAlias(_, child) => graftRelation(child)
-    case r: DataSourceV2Relation
-        if Option(r.table.properties.get("provider")).contains("graft-snapshot") =>
-      Some(r)
+    case r: DataSourceV2Relation if r.table.isInstanceOf[GraftSnapshotTable] => Some(r)
     case _ => None
   }
 
@@ -135,6 +158,35 @@ private[graftext] object GraftDml {
     */
   def clauseCond(c: Option[Expression], names: Map[ExprId, String]): Column =
     coalesce(c.map(rebind(_, names)).getOrElse(lit(true)), lit(false))
+}
+
+/** `DELETE FROM <graft table> [WHERE condition]` as one
+  * [[SnapshotStore.delete]] commit against the current version. The
+  * condition must be a conjunction Spark could push to a source
+  * (`DataSourceStrategy.translateFilter`); any other conjunct refuses the
+  * statement before anything runs, as does a read-only table. Mode choice
+  * is [[SnapshotStore.copyOnWrite]], the rule UPDATE shares:
+  * partition-aligned predicates (or none) rewrite — wholly-deleted
+  * partitions drop their files from the manifest without writing
+  * anything; row-level predicates mask rows with deletion vectors — cost
+  * ∝ matching rows, one KB-sized sidecar.
+  */
+case class GraftDeleteCommand(target: LogicalPlan, condition: Expression)
+  extends LeafRunnableCommand with PredicateHelper {
+
+  override def run(spark: SparkSession): Seq[Row] = {
+    val table = GraftDml.graftRelation(target).get.table.asInstanceOf[GraftSnapshotTable]
+    val partCol = table.writeLayout()
+    splitConjunctivePredicates(condition).foreach { c =>
+      if (DataSourceStrategy.translateFilter(c, supportNestedPredicatePushdown = true).isEmpty)
+        throw new UnsupportedOperationException(
+          s"${table.name}: DELETE supports only predicates a source filter expresses; got ${c.sql}")
+    }
+    SnapshotStore.delete(spark, table.snapshot.root,
+      GraftDml.rebind(condition, target.output.map(a => a.exprId -> a.name).toMap), partCol,
+      deletionVectors = !SnapshotStore.copyOnWrite(condition.references.map(_.name).toSet, partCol))
+    Seq.empty
+  }
 }
 
 /** `UPDATE <graft table> SET assignments [WHERE condition]`.

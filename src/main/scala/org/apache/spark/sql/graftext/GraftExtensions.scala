@@ -19,9 +19,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    // Row-level SQL DML (UPDATE / MERGE INTO) over graft snapshot tables —
+    // Row-level SQL DML (DELETE / UPDATE / MERGE INTO) over graft tables —
     // the post-hoc resolution hook, same wiring the lakehouse formats use.
     ext.injectPostHocResolutionRule(session => new GraftDmlRule(session))
+    // Reads of graft snapshot tables (SQL, format("graft")) plan through
+    // SnapshotStore.readAt — after the DML rule, which keeps its target.
+    ext.injectPostHocResolutionRule(session => new GraftReadRule(session))
     // Maintenance statements (OPTIMIZE / VACUUM) — a delegating parser
     // that recognizes exactly those two shapes (GraftSqlParser).
     ext.injectParser((_, delegate) => new GraftSqlParser(delegate))

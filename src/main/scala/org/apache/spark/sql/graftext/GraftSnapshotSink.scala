@@ -5,7 +5,9 @@ import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
+import graft.sources.SnapshotStore
 import graft.streaming.SnapshotSink
 
 /** Shared `option("path")` / `option("table", "<catalog>.<table>")`
@@ -64,10 +66,10 @@ private[graftext] object GraftTableResolve {
   * nothing (no zero-file bootstrap versions).
   *
   * V1 sink on purpose (same bridge as the source): `addBatch` receives
-  * the micro-batch as an incremental plan, re-wraps it as a batch frame
-  * over the SAME execution (one pass), and pins it so the commit's
-  * multiple consumers (emptiness guard, key-uniqueness join, file write)
-  * never re-execute the source scan.
+  * the micro-batch as an incremental plan and re-wraps it as a batch frame
+  * over the SAME execution (one pass); the commit function persists it,
+  * so the commit's multiple consumers (emptiness guard, key-uniqueness
+  * join, file write) never re-execute the source scan.
   */
 final class GraftSnapshotSinkProvider extends StreamSinkProvider
   with org.apache.spark.sql.sources.RelationProvider with DataSourceRegister {
@@ -75,13 +77,13 @@ final class GraftSnapshotSinkProvider extends StreamSinkProvider
   override def shortName(): String = "graft"
 
   /** `spark.read.format("graft")` — the batch-read twin: the snapshot
-    * table's current version (or `option("versionAsOf", n)`) through the
-    * Scala read path (manifest-pinned file list, DV masking, recorded
-    * schema), bridged as a V1 relation. Column pruning and translatable
-    * filters push into the inner scan; Spark re-checks every filter, so
-    * correctness never rides the translation. Also what makes a typo'd
-    * `SELECT * FROM graft.nope` fail with the table name instead of a
-    * direct-file-query riddle.
+    * table's current version (or `option("versionAsOf", n)`), decoded
+    * once. [[GraftReadRule]] replaces the relation with the plan
+    * [[graft.sources.SnapshotStore.readAt]] builds for it, so this read
+    * plans exactly what the Scala and SQL reads plan (manifest-pinned
+    * file list, DV masking, recorded schema, pushdown into the scan).
+    * Also what makes a typo'd `SELECT * FROM graft.nope` fail with the
+    * table name instead of a direct-file-query riddle.
     */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String])
@@ -93,7 +95,8 @@ final class GraftSnapshotSinkProvider extends StreamSinkProvider
       s"graft: '$root' is not a snapshot table (no manifest log); " +
         "point option(\"path\") at a table root or option(\"table\") at " +
         "a catalog name")
-    new GraftSnapshotRelation(sqlContext, root, p.get("versionasof").map(_.toLong))
+    new GraftSnapshotRelation(sqlContext,
+      SnapshotStore.pinned(root, p.get("versionasof").map(_.toLong)))
   }
 
   override def createSink(sqlContext: SQLContext,
@@ -120,33 +123,16 @@ final class GraftSnapshotSinkProvider extends StreamSinkProvider
   }
 }
 
+/** The `format("graft")` relation: one decoded snapshot and its read
+  * schema. It has no scan of its own — [[GraftReadRule]] plans it.
+  */
 private[graftext] final class GraftSnapshotRelation(ctx: SQLContext,
-                                                    root: String,
-                                                    asOf: Option[Long])
-  extends org.apache.spark.sql.sources.BaseRelation
-  with org.apache.spark.sql.sources.PrunedFilteredScan {
-
-  import graft.sources.{GraftFilterTranslation, SnapshotStore}
+                                                    val snapshot: SnapshotStore.Snapshot)
+  extends org.apache.spark.sql.sources.BaseRelation {
 
   override def sqlContext: SQLContext = ctx
 
-  override val schema =
-    SnapshotStore.read(ctx.sparkSession, root, asOf).schema
-
-  // Spark re-evaluates every filter above the scan (the default
-  // unhandled-filters contract); the pushed fragment is a best-effort
-  // data reduction, same posture as the DV scan bridge.
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[org.apache.spark.sql.sources.Filter])
-      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    var df = SnapshotStore.read(ctx.sparkSession, root, asOf)
-    filters.flatMap(GraftFilterTranslation.toColumn).foreach(f => df = df.filter(f))
-    df = if (requiredColumns.nonEmpty)
-      df.select(requiredColumns.map(org.apache.spark.sql.functions.col)
-        .toIndexedSeq: _*)
-    else df.select() // COUNT(*)-style empty projection
-    df.rdd
-  }
+  override val schema: StructType = SnapshotStore.readSchema(ctx.sparkSession, snapshot)
 }
 
 private[graftext] final class GraftSnapshotSink(root: String,
@@ -162,14 +148,11 @@ private[graftext] final class GraftSnapshotSink(root: String,
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     // The engine hands addBatch a STREAMING-planned frame (actions like
     // .write refuse it). Re-wrap the same incremental execution as a
-    // batch frame — one execution, the standard V1-sink bridge — then pin
-    // it: the commit path reads the batch more than once (emptiness
-    // guard, merge's survivor join, the file write), and each unpinned
-    // read would re-run the micro-batch scan.
+    // batch frame — one execution, the standard V1-sink bridge. The
+    // commit function persists it before its first action, so the
+    // micro-batch scan runs once.
     val spark = data.sparkSession.asInstanceOf[ClassicSession]
-    val batch = spark.internalCreateDataFrame(
-      data.queryExecution.toRdd, data.schema).localCheckpoint(true)
-    commitBatch(batch, batchId)
+    commitBatch(spark.internalCreateDataFrame(data.queryExecution.toRdd, data.schema), batchId)
   }
 
   override def toString: String = s"GraftSnapshotSink[$root]"

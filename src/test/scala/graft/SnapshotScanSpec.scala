@@ -8,11 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotStore
+import graft.sources.{GraftCatalog, SnapshotStore}
 
-/** How much Spark work a snapshot-store scan costs: a read plans over the
-  * manifest (no listing job, however many files), and the copy-on-write
-  * writers read only the files their commit replaces. Jobs and the
+/** How much Spark work a snapshot-store scan costs: a read — Scala, SQL
+  * or `format("graft")` — plans over the manifest (no listing job,
+  * however many files), and the copy-on-write writers read only the
+  * files their commit replaces. Jobs and the
   * tasks' `recordsRead` are counted by a listener over the jobs this
   * thread runs (its own job group), after the listener bus drains.
   */
@@ -65,15 +66,48 @@ class SnapshotScanSpec extends AnyFunSuite {
     (root, 4800L)
   }
 
+  /** `root` as a table of a SQL catalog rooted at its parent directory. */
+  private def sqlName(root: String): String = {
+    val p = Paths.get(root)
+    spark.conf.set("spark.sql.catalog.scancat", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.scancat.root", p.getParent.toString)
+    s"scancat.`${p.getFileName}`"
+  }
+
   test("building a read starts no Spark job: the manifest is the listing") {
     val (root, rows) = table()
     val v = SnapshotStore.currentVersion(root).get
+    val t = sqlName(root)
     assert(measured(SnapshotStore.read(spark, root))._1 == 0)
     assert(measured(SnapshotStore.read(spark, root, asOf = Some(v)))._1 == 0)
+    assert(measured(spark.sql(s"SELECT * FROM $t"))._1 == 0)
+    assert(measured(spark.sql(s"SELECT * FROM $t VERSION AS OF $v"))._1 == 0)
+    assert(measured(spark.read.format("graft").option("path", root).load())._1 == 0)
     // Positive control through the same counter: an action is seen.
     val (jobs, read) = measured(assert(SnapshotStore.read(spark, root).count() == rows))
     assert(jobs >= 1)
     assert(read == rows)
+  }
+
+  test("SQL and format(\"graft\") reads plan what SnapshotStore.read plans, deletion vectors included") {
+    val (root, _) = table()
+    val t = sqlName(root)
+    val v0 = SnapshotStore.currentVersion(root).get
+    SnapshotStore.delete(spark, root, col("key") % 5 === 0, deletionVectors = true)
+    val v1 = SnapshotStore.currentVersion(root).get
+    def jobs(df: => org.apache.spark.sql.DataFrame): Int =
+      measured(assert(df.filter(col("key") === 42L).collect().length == 1))._1
+    for (v <- Seq(v0, v1)) {
+      val store = jobs(SnapshotStore.read(spark, root, asOf = Some(v)))
+      assert(jobs(spark.sql(s"SELECT * FROM $t VERSION AS OF $v")) == store, s"v$v")
+      assert(jobs(spark.read.format("graft").option("path", root)
+        .option("versionAsOf", v.toString).load()) == store, s"v$v")
+    }
+    val plan = spark.sql(s"SELECT * FROM $t WHERE part = 3").queryExecution.executedPlan.toString
+    assert(plan.contains("SnapshotFileIndex") && plan.contains("LeftAnti"), plan)
+    Seq("InMemoryFileIndex", "BatchScan", "Scan graft.").foreach { n =>
+      assert(!plan.contains(n), s"$n in\n$plan")
+    }
   }
 
   test("merge into one partition reads only that partition's rows") {

@@ -6,11 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.sources.{GraftCatalog, SnapshotStore}
 
 /** The SQL surface of the snapshot layer ([[graft.sources.GraftCatalog]]):
-  * plain `spark.sql` over snapshot tables, `VERSION AS OF` / `TIMESTAMP AS
-  * OF` time travel, filter pushdown through the native parquet scan,
-  * analysis-time write refusal, and the deletion-vector serving/compact
-  * story. Every content check compares against the Scala read path
-  * (SnapshotStore.read), which the rest of the suite pins.
+  * plain `spark.sql` and `spark.read.format("graft")` over snapshot
+  * tables — both plan through `SnapshotStore.readAt`, the Scala read —
+  * `VERSION AS OF` / `TIMESTAMP AS OF` time travel, filter pushdown into
+  * the parquet scan, write and DELETE refusal, row-level DML, and the
+  * deletion-vector serving/compact story. Every content check compares
+  * against the Scala read path (SnapshotStore.read), which the rest of
+  * the suite pins.
   */
 class SnapshotSqlSpec extends AnyFunSuite {
   private lazy val spark = {
@@ -184,6 +186,13 @@ class SnapshotSqlSpec extends AnyFunSuite {
       legacy.newWriteBuilder(null)
     }
     assert(e2.getMessage.contains("part_col"))
+    // DELETE FROM refuses the same table for the same reason, unchanged
+    val before = SnapshotStore.currentVersion(root)
+    val e3 = intercept[UnsupportedOperationException] {
+      spark.sql("DELETE FROM graft.wrref WHERE c_custkey = 1")
+    }
+    assert(e3.getMessage.contains("part_col"))
+    assert(SnapshotStore.currentVersion(root) == before)
   }
 
   test("history and files metadata tables read straight from the manifest log") {
@@ -224,18 +233,18 @@ class SnapshotSqlSpec extends AnyFunSuite {
     assert(spark.sql("SELECT * FROM graft.dv").count() == expect.count())
     assert(sortedRows(spark.sql("SELECT * FROM graft.dv")) ==
       sortedRows(SnapshotStore.read(spark, root)))
-    // predicates and pruned projections work through the DV scan (the
-    // translated filter rides the inner DataFrame, below the anti-join)
+    // predicates and pruned projections work over the masked read (the
+    // filter pushes below the anti-join into the parquet scan)
     assert(spark.sql(
       "SELECT c_custkey FROM graft.dv WHERE c_nationkey = 3").count() ==
       expect.filter(col("c_nationkey") === 3).count())
     assert(spark.sql(
       "SELECT count(*) AS n FROM graft.dv WHERE c_custkey % 7 = 0")
       .head().getLong(0) == 0L)
-    // the un-DV'd history is still SQL-readable through the native path
+    // the un-DV'd history is still SQL-readable
     assert(spark.sql("SELECT * FROM graft.dv VERSION AS OF 0").count() == base.count())
-    // inner-path pushdown evidence: the filter the DV scan plants reaches
-    // the parquet scan BELOW the anti-join
+    // pushdown evidence: the filter reaches the parquet scan BELOW the
+    // anti-join
     val inner = SnapshotStore.read(spark, root).filter(col("c_nationkey") === 3)
     val plan = inner.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("c_nationkey"))

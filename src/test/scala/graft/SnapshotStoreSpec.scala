@@ -423,6 +423,21 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(SnapshotStore.versions(root).max == vAll + 1)
   }
 
+  test("an empty unpartitioned write commits no file: delete-all and an empty overwrite name zero files") {
+    import spark.implicits._
+    val root = scratch("snap_emptyunpart_")
+    val t = Seq((1L, "a"), (2L, "b")).toDF("k", "payload")
+    SnapshotStore.overwrite(t, root)
+    val vAll = SnapshotStore.delete(spark, root, lit(true))
+    assert(SnapshotStore.filesAt(root, vAll).isEmpty, SnapshotStore.filesAt(root, vAll).toString)
+    val empty = SnapshotStore.read(spark, root)
+    assert(empty.columns.toSeq == Seq("k", "payload") && empty.isEmpty)
+    val vEmpty = SnapshotStore.overwrite(t.filter(col("k") < 0L), root)
+    assert(SnapshotStore.filesAt(root, vEmpty).isEmpty)
+    assert(SnapshotStore.rowsAt(root, vEmpty) == 0L)
+    assert(SnapshotStore.read(spark, root).schema == empty.schema)
+  }
+
   test("merge rejects a timestamp partition column") {
     import spark.implicits._
     val root = scratch("snap_ts_")

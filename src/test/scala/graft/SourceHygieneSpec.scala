@@ -50,6 +50,10 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders("""\bdef \w*(Hof|Reference)\b""", Set.empty).isEmpty)
   }
 
+  test("snapshot tables have one read path: no DSv2 scan, V1 scan or source-filter delete bridge") {
+    assert(offenders("""\b(ParquetTable|V1Scan|PrunedFilteredScan|SupportsDelete)\b""", Set.empty).isEmpty)
+  }
+
   test("the snapshot store pins nothing in the block store (no localCheckpoint)") {
     val store = sources.collect { case (p, text) if p.endsWith(Paths.get("sources", "SnapshotStore.scala")) => text }
     assert(store.size == 1 && !store.head.contains("localCheckpoint"))
