@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftext.Schemas
@@ -54,10 +54,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * [[commitOn]] (the Delta "remove + add" commit):
   *   - COPY-ON-WRITE ([[rewrite]]): the files under some partition dirs,
   *     or the whole table, are replaced by content computed from exactly
-  *     those files — [[merge]], [[delete]], [[replaceWhere]];
+  *     those files — [[merge]] and copy-on-write [[updateWhere]] (SQL
+  *     UPDATE and DELETE, Scala [[delete]]);
   *   - DELETION VECTORS ([[updateRows]]): acted rows are masked by
-  *     position and their new images appended — SQL UPDATE/MERGE and
-  *     `delete(deletionVectors = true)`;
+  *     position and their new images appended — SQL MERGE and
+  *     deletion-vector [[updateWhere]];
   *   - MAINTENANCE ([[rearrange]]): a victim entry list is rewritten,
   *     sorted or z-ordered, with no row change — [[compact]],
   *     [[optimize]], [[maintain]].
@@ -1073,24 +1074,8 @@ object SnapshotStore {
     }
   }
 
-  /** Filter matching the partition CLASS of any of `values` — the same
-    * null/empty-string collapsing the hive dir rendering applies (null
-    * and "" share one physical dir), so callers selecting "rows in these
-    * partitions" agree exactly with the file-path test the commit uses.
-    */
-  def partitionIn(partCol: String, values: Seq[Any]): org.apache.spark.sql.Column = {
-    def cls(v: Any): Option[String] =
-      Option(v).map(_.toString).filter(_.nonEmpty)
-    val key = when(col(partCol).isNull || col(partCol).cast("string") === "",
-      lit(null: String)).otherwise(col(partCol).cast("string"))
-    val (nullClass, strs) = values.map(cls).partition(_.isEmpty)
-    val hit = if (strs.isEmpty) lit(false)
-      else key.isin(strs.flatten.distinct: _*)
-    if (nullClass.nonEmpty) hit || key.isNull else hit
-  }
-
-  /** The copy-on-write rewrite behind [[merge]], [[delete]] and
-    * [[replaceWhere]]: replace the entries of `base` under the partition
+  /** The copy-on-write rewrite behind [[merge]] and [[updateWhere]]:
+    * replace the entries of `base` under the partition
     * dirs `dirs` (None: every entry) with the files `content` writes.
     * `content` gets exactly the replaced entries, with their ranges, so
     * the rows rewritten are by construction the rows the commit removes.
@@ -1126,24 +1111,6 @@ object SnapshotStore {
     else commitOn(spark, base, replaced, added, dirs, txn, Some(schema), layout, changeKey)
   }
 
-  /** Copy-on-write commit for row-level SQL DML (UPDATE / MERGE INTO):
-    * atomically replace the content of the given partitions — or the
-    * whole table when `affectedParts` is None — with `content`, carrying
-    * every other partition's files forward verbatim. The Delta
-    * `replaceWhere` shape: cost ∝ touched partitions, never table size.
-    *
-    * `baseVersion` is the snapshot the caller READ to compute `content`
-    * (snapshot isolation, see [[rewrite]]). `affectedParts = Some(Nil)`
-    * is a pure-insert commit (nothing replaced, blind-append conflict
-    * semantics).
-    */
-  def replaceWhere(spark: SparkSession, root: String, baseVersion: Long,
-                   content: DataFrame, affectedParts: Option[Seq[Any]]): Long = {
-    val base = snapshot(root, baseVersion)
-    rewrite(spark, base, "replaceWhere", affectedParts.map(_.map(partDir).toSet),
-      base.manifest.layout)(_ => content)
-  }
-
   /** Whether a row-level DELETE or UPDATE whose predicate references the
     * columns `refs` rewrites copy-on-write rather than masking rows with
     * deletion vectors: when the predicate references nothing, or only
@@ -1156,21 +1123,14 @@ object SnapshotStore {
   /** Row-level DELETE with snapshot isolation — the GDPR/right-to-be-
     * forgotten primitive a training-data table needs as a first-class
     * transactional call, not a manual read-filter-overwrite dance.
-    * Removes every row where `predicate` is TRUE (NULL keeps the row,
-    * standard DELETE semantics).
-    *
-    * With `partCol`, cost is ∝ touched partitions: only partitions that
-    * CONTAIN matching rows are rewritten (their survivors re-written,
-    * their old files dropped from the manifest); every other partition's
-    * files carry forward verbatim — same cost model and null/empty
-    * partition-class handling as [[merge]]. Without `partCol` the whole
-    * table rewrites (documented: the unpartitioned trade).
+    * Removes every row of the current version where `predicate` is TRUE
+    * ([[updateWhere]] with nothing assigned).
     *
     * With `deletionVectors` the matched rows are masked by position
-    * instead ([[updateRows]], nothing re-appended): no data file is
-    * written, one small sidecar under `_dv/` is, so cost is ∝ MATCHING
-    * rows — the shape for deleting one user's rows scattered across the
-    * table. Reads apply the mask until a [[compact]] or [[maintain]].
+    * instead of rewriting their partitions: no data file is written, one
+    * small sidecar under `_dv/` is, so cost is ∝ MATCHING rows — the
+    * shape for deleting one user's rows scattered across the table. Reads
+    * apply the mask until a [[compact]] or [[maintain]].
     *
     * The removal is CDC-visible: [[changes]] across the delete commit
     * yields exactly the deleted rows as `_change_type='delete'`. The old
@@ -1178,29 +1138,61 @@ object SnapshotStore {
     * time travel still sees the deleted rows, so TRUE erasure is
     * delete + vacuum(0 retained history), the same two-step Delta
     * documents for GDPR.
+    */
+  def delete(spark: SparkSession, root: String, predicate: Column,
+             partCol: Option[String] = None,
+             deletionVectors: Boolean = false): Long =
+    updateWhere(spark, current(root).getOrElse(
+        throw new IllegalStateException(s"no snapshot to delete from at $root")),
+      predicate, None, partCol, copyOnWrite = !deletionVectors)
+
+  /** Row-level UPDATE (`set` = new values by column name) or DELETE
+    * (`set` = None) of the rows of `base` where `predicate` is TRUE (NULL
+    * leaves the row alone, the SQL contract) — one atomic commit, rebased
+    * over concurrent commits elsewhere. Both modes commit the Delta
+    * "remove + add":
     *
-    * A predicate matching nothing publishes nothing and returns the
-    * current version. A delete matching everything publishes a zero-file
+    *   - COPY-ON-WRITE: with `partCol`, only the partitions that CONTAIN
+    *     matching rows are rewritten, from exactly their files (cost ∝
+    *     touched partitions; every other file carries forward verbatim,
+    *     and a concurrent commit into a rewritten partition conflicts);
+    *     without it the whole table rewrites, keeping the recorded layout.
+    *     Assignments may move rows across partitions.
+    *   - DELETION VECTORS: the matched rows' positions are masked by one
+    *     sidecar and their updated images appended ([[updateRows]]), cost
+    *     ∝ matching rows; base data files are not rewritten.
+    *
+    * A predicate matching nothing publishes nothing and returns the base
+    * version. A delete matching everything publishes a zero-file
     * manifest, which [[read]] serves as a schema'd empty frame.
     */
-  def delete(spark: SparkSession, root: String, predicate: org.apache.spark.sql.Column,
-             partCol: Option[String] = None,
-             deletionVectors: Boolean = false): Long = {
-    val base = current(root).getOrElse(
-      throw new IllegalStateException(s"no snapshot to delete from at $root"))
+  def updateWhere(spark: SparkSession, base: Snapshot, predicate: Column,
+                  set: Option[Map[String, Column]],
+                  partCol: Option[String], copyOnWrite: Boolean): Long = {
     val hit = coalesce(predicate, lit(false))
-    // The position scan already drops rows earlier DVs deleted, so
-    // re-deleting a dead row is a no-op, not a duplicate position.
-    if (deletionVectors) return updateOn(spark, base,
-      positionScanOf(spark, base).filter(hit).withColumn("__keep", lit(false)), "__keep")
+    val vs = set.getOrElse(Map.empty[String, Column])
+    val cols = schemaOf(spark, base.root, base.manifest.schema, base.entries).fieldNames.toSeq
+    require(vs.keySet.subsetOf(cols.toSet),
+      s"update at ${base.root} assigns unknown columns ${(vs.keySet -- cols).mkString(", ")}")
+    if (!copyOnWrite) {
+      require(!cols.exists(Set("__file", "__pos", "__keep")),
+        s"deletion vectors at ${base.root} reserve the column names __file, __pos, __keep")
+      // The position scan already drops rows earlier DVs deleted, so
+      // re-deleting a dead row is a no-op, not a duplicate position.
+      return updateOn(spark, base, positionScanOf(spark, base).filter(hit)
+        .withColumns(vs + ("__keep" -> lit(set.isDefined))), "__keep")
+    }
     val target = readAt(spark, base)
     val dirs = partCol.map(pc => target.filter(predicate).select(col(pc)).distinct()
       .collect().map(r => partDir(r.get(0))).toSet)
     if (dirs.fold(target.filter(predicate).isEmpty)(_.isEmpty)) return base.version
-    // A whole-table delete keeps the recorded layout: survivors land back
+    // A whole-table rewrite keeps the recorded layout: rows land back
     // under the partition scheme they came from.
-    rewrite(spark, base, "delete", dirs, partCol.orElse(base.manifest.layout)) {
-      scanEntries(spark, base, _).filter(!hit)
+    rewrite(spark, base, set.fold("delete")(_ => "update"), dirs,
+        partCol.orElse(base.manifest.layout)) { es =>
+      val replaced = scanEntries(spark, base, es)
+      if (set.isEmpty) replaced.filter(!hit)
+      else replaced.select(cols.map(c => vs.get(c).fold(col(c))(when(hit, _).otherwise(col(c))).as(c)): _*)
     }
   }
 
@@ -1221,7 +1213,7 @@ object SnapshotStore {
     scanEntries(spark, s, s.ranged(s.entries), rowIds = true)
 
   /** Merge-on-read row-level UPDATE / MERGE / DELETE commit — the
-    * deletion-vector twin of [[replaceWhere]], cost ∝ ACTED rows, never
+    * deletion-vector twin of [[rewrite]], cost ∝ ACTED rows, never
     * touched-partition bytes. Atomically, in ONE manifest publish:
     *
     *   1. the rows of `acted` (table columns plus `__file`/`__pos` from

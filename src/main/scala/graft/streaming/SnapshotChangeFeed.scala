@@ -41,6 +41,8 @@ import graft.sources.{Manifest, SnapshotStore}
   * (the consumer fell behind the retention window), poll FAILS LOUDLY
   * with the reseed instruction instead of silently emitting a wrong
   * delta — the same contract as falling off the tail of a Kafka topic.
+  * [[SnapshotChangeFeed.deltas]] computes each batch, the function the
+  * `graft-cdc` streaming source serves too.
   *
   * Scale posture: each poll is one directory listing + two manifest
   * parses + a scan of the TOUCHED files only (the changes() cost model);
@@ -70,27 +72,8 @@ final class SnapshotChangeFeed(root: String, checkpointPath: String,
   /** The next unconsumed commit's row delta, or None when caught up. */
   def poll(spark: SparkSession): Option[(DataFrame, Long)] = {
     val vs = SnapshotStore.versions(root)
-    if (vs.isEmpty) return None
-    consumed match {
-      case None =>
-        // Bootstrap: the earliest retained version's full content as
-        // inserts. (If vacuum trimmed history, the earliest RETAINED
-        // version is the correct seed — it is the oldest consistent
-        // state that still exists.)
-        val v0 = vs.head
-        Some(SnapshotStore.read(spark, root, Some(v0))
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v0)) -> v0)
-      case Some(c) =>
-        vs.find(_ > c).map { next =>
-          require(vs.contains(c),
-            s"consumer position $c was vacuumed past (oldest retained " +
-              s"manifest: ${vs.head}); the delta base is gone — reseed " +
-              "from a fresh bootstrap (new checkpoint) or raise vacuum's keepVersions")
-          SnapshotStore.changes(spark, root, c, next)
-            .withColumn("_commit_version", lit(next)) -> next
-        }
-    }
+    consumed.fold(vs.headOption)(c => vs.find(_ > c))
+      .flatMap(next => SnapshotChangeFeed.deltas(spark, root, consumed, next).map(_ -> next))
   }
 
   /** Poll/process/commit until caught up; returns versions processed. */
@@ -105,5 +88,53 @@ final class SnapshotChangeFeed(root: String, checkpointPath: String,
       batch = poll(spark)
     }
     done.result()
+  }
+}
+
+object SnapshotChangeFeed {
+
+  /** The row delta of the commits in (`after`, `through`] of the table at
+    * `root`: the table's columns plus `_change_type` and
+    * `_commit_version`, one [[SnapshotStore.changesOf]] delta per commit
+    * (a version-0 commit's delta is its full content). With `after` None
+    * the delta starts with the bootstrap — the earliest RETAINED
+    * version's full content as 'insert' rows (if vacuum trimmed history,
+    * that is the oldest consistent state that still exists) — followed
+    * by the later commits' deltas. None when the range holds no commit.
+    *
+    * Commit v's delta needs manifests v-1 and v; when
+    * [[SnapshotStore.vacuum]] pruned one of them (the consumer fell
+    * behind the retention window) this fails loudly with the reseed
+    * instruction instead of silently skipping commits — the falling-off-
+    * the-Kafka-tail contract.
+    */
+  def deltas(spark: SparkSession, root: String, after: Option[Long],
+             through: Long): Option[DataFrame] = {
+    val vs = SnapshotStore.versions(root)
+    // Each version is decoded once: commit v's delta and commit v+1's
+    // share manifest v.
+    val decoded = scala.collection.mutable.Map.empty[Long, SnapshotStore.Snapshot]
+    def at(v: Long) = decoded.getOrElseUpdate(v, SnapshotStore.snapshot(root, v))
+    def stamped(df: DataFrame, v: Long) = df.withColumn("_commit_version", lit(v))
+    def inserts(v: Long) = stamped(
+      SnapshotStore.readAt(spark, at(v)).withColumn("_change_type", lit("insert")), v)
+    def deltaOf(v: Long) =
+      if (v == 0L) inserts(0L) else stamped(SnapshotStore.changesOf(spark, at(v - 1), at(v)), v)
+    val pieces = after match {
+      case Some(f) =>
+        require(f <= through, s"change feed start $f beyond end $through at $root")
+        val gone = ((f + 1) to through).filterNot(vs.contains) ++
+          Some(f).filter(b => b >= 0 && f < through && !vs.contains(b))
+        require(gone.isEmpty, s"version(s) ${gone.distinct.sorted.mkString(", ")} at $root " +
+          s"were vacuumed past (oldest retained manifest: ${vs.headOption.getOrElse("<none>")}); " +
+          "the delta bases are gone — reseed from a fresh bootstrap (new checkpoint) " +
+          "or raise vacuum's keepVersions")
+        ((f + 1) to through).map(deltaOf)
+      case None =>
+        val v0 = vs.headOption.getOrElse(
+          throw new IllegalStateException(s"no committed snapshot at $root"))
+        inserts(v0) +: vs.filter(v => v > v0 && v <= through).map(deltaOf)
+    }
+    pieces.reduceOption(_.unionByName(_, allowMissingColumns = true))
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.sources.SnapshotStore
+import graft.streaming.SnapshotChangeFeed
 
 /** `spark.readStream.format("graft-cdc")` — the snapshot layer's change
   * feed as a first-class Structured Streaming source, so a downstream
@@ -189,57 +190,19 @@ private[graftext] final class GraftCdcSource(spark: ClassicSession,
       .map(v => LongOffset(cap.fold(v)(math.min(v, _))))
   }
 
-  /** The row-level delta of commits in (start, end] — per-commit diffs
-    * unioned, each stamped with its `_commit_version`. A fresh stream
-    * (start = None) bootstraps from the earliest retained version as
-    * all-inserts unless `startingVersion` skipped it.
+  /** The row-level delta of commits in (start, end]
+    * ([[SnapshotChangeFeed.deltas]]). A fresh stream (start = None)
+    * bootstraps from the earliest retained version as all-inserts unless
+    * `startingVersion` skipped it.
     */
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val endV = offsetValue(end)
     synchronized {
       servedThrough = Some(servedThrough.fold(endV)(math.max(_, endV)))
     }
-    val vs = SnapshotStore.versions(root)
-    val from = start.map(offsetValue).orElse(startAfter)
-    // Each version is decoded once per batch: commit v's delta and commit
-    // v+1's share manifest v.
-    val decoded = scala.collection.mutable.Map.empty[Long, SnapshotStore.Snapshot]
-    def at(v: Long) = decoded.getOrElseUpdate(v, SnapshotStore.snapshot(root, v))
-    // A v0 commit's delta IS its full content (there is no base manifest).
-    def deltaOf(v: Long): DataFrame =
-      if (v == 0L) SnapshotStore.readAt(spark, at(0L))
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0L))
-      else SnapshotStore.changesOf(spark, at(v - 1), at(v))
-        .withColumn("_commit_version", lit(v))
-    val pieces: Seq[DataFrame] = from match {
-      case Some(f) =>
-        require(f <= endV, s"graft-cdc: start $f beyond end $endV at $root")
-        // Loud on vacuumed history: commit v's delta needs manifests v-1
-        // AND v; a pruned range silently dropping commits would be data
-        // loss, the falling-off-the-Kafka-tail case.
-        val gone = ((f + 1) to endV).filterNot(vs.contains) ++
-          Some(f).filter(b => b >= 0 && f < endV && !vs.contains(b))
-        require(gone.isEmpty, s"graft-cdc: version(s) " +
-          s"${gone.distinct.sorted.mkString(", ")} at $root were vacuumed " +
-          s"past (oldest retained: ${vs.headOption.getOrElse("<none>")}); " +
-          "the stream's delta bases are gone — reseed from a new " +
-          "checkpoint or raise vacuum's keepVersions")
-        ((f + 1) to endV).map(deltaOf)
-      case None =>
-        val v0 = vs.headOption.getOrElse(throw new IllegalStateException(
-          s"graft-cdc: no committed snapshot at $root"))
-        val bootstrap = SnapshotStore.readAt(spark, at(v0))
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v0))
-        bootstrap +: vs.filter(v => v > v0 && v <= endV).map(deltaOf)
-    }
-    val batch = pieces match {
-      case Seq() => // engine replayed an empty range; serve schema-only
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case ps => ps.reduce(_.unionByName(_, allowMissingColumns = true))
-    }
+    val batch = SnapshotChangeFeed.deltas(spark, root, start.map(offsetValue).orElse(startAfter),
+        endV).getOrElse( // engine replayed an empty range; serve schema-only
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     // Conform to the source schema (a bootstrap version may predate an
     // evolved column — it reads as null, the schema-evolution contract),
     // pin column order, then re-wrap as a STREAMING frame over the

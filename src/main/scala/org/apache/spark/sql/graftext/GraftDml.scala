@@ -12,29 +12,32 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{GraftSnapshotTable, SnapshotStore}
 
-/** Row-level SQL DML for graft snapshot tables — `UPDATE graft.t SET …`
-  * and `MERGE INTO graft.t USING … ON …` — via a post-hoc resolution rule
-  * that swaps the resolved logical command for a runnable one executing
-  * over [[SnapshotStore]]'s rebase-retry commit protocol. This is the
-  * published lakehouse architecture for engines whose write path predates
-  * (or sidesteps) DSv2 row-level operations: intercept the ANALYZED
-  * `UpdateTable`/`MergeIntoTable` (conditions and assignments fully
-  * resolved against the relation's attributes), re-plan them as DataFrame
-  * computations, and commit. `DELETE FROM` converts the same way, into
-  * [[SnapshotStore.delete]].
+/** Row-level SQL DML for graft snapshot tables — `DELETE FROM graft.t`,
+  * `UPDATE graft.t SET …` and `MERGE INTO graft.t USING … ON …` — via a
+  * post-hoc resolution rule that swaps the resolved logical command for a
+  * runnable one executing over [[SnapshotStore]]'s rebase-retry commit
+  * protocol. This is the published lakehouse architecture for engines
+  * whose write path predates (or sidesteps) DSv2 row-level operations:
+  * intercept the ANALYZED `DeleteFromTable`/`UpdateTable`/
+  * `MergeIntoTable` (conditions and assignments fully resolved against
+  * the relation's attributes), re-plan them as DataFrame computations,
+  * and commit.
   *
-  * Scale shape — MERGE-ON-READ at row granularity (the Delta-DV model):
-  * both commands cost ∝ MATCHED rows, not touched-partition bytes. The
-  * acted rows' old positions are masked by one deletion-vector sidecar
-  * and their new images (plus MERGE inserts) append as new files, all in
-  * ONE atomic commit ([[SnapshotStore.updateRows]]); every base data file
-  * carries forward byte-untouched (mtime-proof spec-gated). An UPDATE
-  * whose predicate is partition-aligned (references only the partition
-  * column, or no predicate at all) takes the copy-on-write
-  * [[SnapshotStore.replaceWhere]] path instead — when the whole partition
-  * rewrites anyway, COW leaves no DV debt for later reads to pay.
-  * [[SnapshotStore.compact]] materializes accumulated DVs back to plain
-  * files.
+  * DELETE and UPDATE are each one [[SnapshotStore.updateWhere]] call over
+  * the snapshot and layout the analyzer resolved, the function the Scala
+  * [[SnapshotStore.delete]] runs too. [[SnapshotStore.copyOnWrite]] picks
+  * the mode: a partition-aligned predicate (only the partition column, or
+  * none) rewrites the touched partitions — the whole partition rewrites
+  * anyway, and COW leaves no DV debt for later reads to pay; any other
+  * predicate runs MERGE-ON-READ at row granularity (the Delta-DV model),
+  * cost ∝ MATCHED rows: their old positions are masked by one
+  * deletion-vector sidecar and their new images append as new files, in
+  * ONE atomic commit, every base data file byte-untouched (mtime-proof
+  * spec-gated). MERGE always runs merge-on-read
+  * ([[SnapshotStore.updateRows]]). [[SnapshotStore.compact]] materializes
+  * accumulated DVs back to plain files. Every command refuses a read-only
+  * table (time-traveled, or partitioned with an unrecorded layout) with
+  * its reason before anything runs.
   *
   * Snapshot isolation: content is computed against the version the
   * analyzer resolved; the commit rebases over concurrent commits
@@ -104,15 +107,14 @@ private[graftext] object GraftDml {
     case _ => None
   }
 
-  /** (location, baseVersion, partCol) of the resolved relation — all
-    * carried in the table's DSv2 properties.
-    */
-  def tableMeta(plan: LogicalPlan): (String, Long, Option[String]) = {
-    val props = graftRelation(plan).getOrElse(throw new IllegalStateException(
-      s"not a graft snapshot relation: $plan")).table.properties
-    (props.get("location"), props.get("snapshot-version").toLong,
-      Option(props.get("partition-column")))
-  }
+  /** The graft snapshot table `plan` resolved to. */
+  def table(plan: LogicalPlan): GraftSnapshotTable = graftRelation(plan).getOrElse(
+    throw new IllegalStateException(s"not a graft snapshot relation: $plan"))
+    .table.asInstanceOf[GraftSnapshotTable]
+
+  /** Column name by expression id for the attributes `plan` outputs. */
+  def names(plan: LogicalPlan): Map[ExprId, String] =
+    plan.output.map(a => a.exprId -> a.name).toMap
 
   /** DataFrame over the RESOLVED plan — attribute ids are preserved, so
     * Columns built from the command's resolved expressions bind exactly.
@@ -128,7 +130,7 @@ private[graftext] object GraftDml {
     * replaced by an unresolved one carrying the name `names` assigns its
     * exprId, so the Column re-resolves against a DIFFERENT frame exposing
     * those names — the bridge from the analyzer's resolved relation to
-    * the fresh [[SnapshotStore.positionScan]] the DV path computes over.
+    * the fresh scans [[SnapshotStore.updateWhere]] and MERGE compute over.
     * Attributes outside `names` (none, for a resolved DML command) pass
     * through untouched.
     */
@@ -161,45 +163,41 @@ private[graftext] object GraftDml {
 }
 
 /** `DELETE FROM <graft table> [WHERE condition]` as one
-  * [[SnapshotStore.delete]] commit against the current version. The
+  * [[SnapshotStore.updateWhere]] commit with nothing assigned. The
   * condition must be a conjunction Spark could push to a source
   * (`DataSourceStrategy.translateFilter`); any other conjunct refuses the
-  * statement before anything runs, as does a read-only table. Mode choice
-  * is [[SnapshotStore.copyOnWrite]], the rule UPDATE shares:
-  * partition-aligned predicates (or none) rewrite — wholly-deleted
+  * statement before anything runs, as does a read-only table. A
+  * partition-aligned predicate (or none) rewrites — wholly-deleted
   * partitions drop their files from the manifest without writing
-  * anything; row-level predicates mask rows with deletion vectors — cost
-  * ∝ matching rows, one KB-sized sidecar.
+  * anything; a row-level predicate masks rows with deletion vectors —
+  * cost ∝ matching rows, one KB-sized sidecar.
   */
 case class GraftDeleteCommand(target: LogicalPlan, condition: Expression)
   extends LeafRunnableCommand with PredicateHelper {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val table = GraftDml.graftRelation(target).get.table.asInstanceOf[GraftSnapshotTable]
+    val table = GraftDml.table(target)
     val partCol = table.writeLayout()
     splitConjunctivePredicates(condition).foreach { c =>
       if (DataSourceStrategy.translateFilter(c, supportNestedPredicatePushdown = true).isEmpty)
         throw new UnsupportedOperationException(
           s"${table.name}: DELETE supports only predicates a source filter expresses; got ${c.sql}")
     }
-    SnapshotStore.delete(spark, table.snapshot.root,
-      GraftDml.rebind(condition, target.output.map(a => a.exprId -> a.name).toMap), partCol,
-      deletionVectors = !SnapshotStore.copyOnWrite(condition.references.map(_.name).toSet, partCol))
+    SnapshotStore.updateWhere(spark, table.snapshot,
+      GraftDml.rebind(condition, GraftDml.names(target)), None, partCol,
+      SnapshotStore.copyOnWrite(condition.references.map(_.name).toSet, partCol))
     Seq.empty
   }
 }
 
-/** `UPDATE <graft table> SET assignments [WHERE condition]`.
-  *
-  * Row-level predicates execute MERGE-ON-READ: one position scan finds
-  * the matched rows, their old positions mask via a deletion-vector
-  * sidecar, their updated images append — cost ∝ matched rows, base files
-  * byte-untouched. Partition-aligned predicates (and the no-predicate
-  * whole-table form) keep copy-on-write [[SnapshotStore.replaceWhere]]:
-  * those rewrite the whole partition's rows anyway, so COW costs the same
-  * write and leaves no DV debt. Either way assignments may change the
-  * partition column — updated rows land as added files wherever their new
-  * value falls.
+/** `UPDATE <graft table> SET assignments [WHERE condition]` as one
+  * [[SnapshotStore.updateWhere]] commit. A partition-aligned predicate
+  * (or none, the whole-table form) rewrites the touched partitions from
+  * exactly their files; a row-level one runs merge-on-read — one position
+  * scan finds the matched rows, their old positions mask via a
+  * deletion-vector sidecar, their updated images append, base files
+  * byte-untouched. Either way assignments may change the partition
+  * column — updated rows land wherever their new value falls.
   */
 case class GraftUpdateCommand(target: LogicalPlan,
                               assignments: Seq[Assignment],
@@ -207,58 +205,14 @@ case class GraftUpdateCommand(target: LogicalPlan,
   extends LeafRunnableCommand {
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (location, base, partCol) = GraftDml.tableMeta(target)
-    val tNames = target.output.map(a => a.exprId -> a.name).toMap
-    // The rule DELETE shares (no predicate: whole-table rewrite).
-    if (SnapshotStore.copyOnWrite(
-        condition.fold(Set.empty[String])(_.references.map(_.name).toSet), partCol)) {
-      // COW path over the resolved relation (attribute ids bind exactly).
-      val df = GraftDml.ofRows(spark, target)
-      val matchPred = coalesce(
-        condition.map(GraftDml.toColumn).getOrElse(lit(true)), lit(false))
-      val assign = assignments.map { a =>
-        a.key match {
-          case ar: AttributeReference => ar.name -> GraftDml.toColumn(a.value)
-          case other => throw new UnsupportedOperationException(
-            "graft DML supports top-level column assignments only; got " +
-              other.sql)
-        }
-      }.toMap
-      val outCols = df.columns.toSeq.map { c =>
-        when(matchPred, assign.getOrElse(c, col(c))).otherwise(col(c)).as(c)
-      }
-      partCol match {
-        case Some(pc) =>
-          // Touched partitions: column-pruned scan, driver list bounded by
-          // partition count.
-          val parts = df.filter(matchPred).select(col(pc)).distinct()
-            .collect().map(_.get(0)).toSeq
-          if (parts.nonEmpty)
-            SnapshotStore.replaceWhere(spark, location, base,
-              df.filter(SnapshotStore.partitionIn(pc, parts)).select(outCols: _*),
-              Some(parts))
-        case None =>
-          if (!df.filter(matchPred).isEmpty)
-            SnapshotStore.replaceWhere(spark, location, base,
-              df.select(outCols: _*), None)
-      }
-    } else {
-      // Merge-on-read path: rebind the resolved predicate/assignments by
-      // name onto the position scan (table column names are unique).
-      val assign = GraftDml.assignmentMap(assignments, tNames)
-      val pos = SnapshotStore.positionScan(spark, location, base)
-      require(!tNames.values.exists(
-        Set("__file", "__pos", GraftDml.Keep)),
-        "UPDATE reserves the column names __file, __pos, __graft_keep")
-      val pred = coalesce(
-        condition.map(GraftDml.rebind(_, tNames)).getOrElse(lit(true)),
-        lit(false))
-      val tCols = target.output.map(_.name)
-      val acted = pos.filter(pred).select(
-        Seq(col("__file"), col("__pos"), lit(true).as(GraftDml.Keep)) ++
-          tCols.map(c => assign.getOrElse(c, col(c)).as(c)): _*)
-      SnapshotStore.updateRows(spark, location, base, acted, GraftDml.Keep)
-    }
+    val table = GraftDml.table(target)
+    val partCol = table.writeLayout()
+    val names = GraftDml.names(target)
+    SnapshotStore.updateWhere(spark, table.snapshot,
+      condition.fold(lit(true))(GraftDml.rebind(_, names)),
+      Some(GraftDml.assignmentMap(assignments, names)), partCol,
+      SnapshotStore.copyOnWrite(condition.fold(Set.empty[String])(_.references.map(_.name).toSet),
+        partCol))
     Seq.empty
   }
 }
@@ -333,7 +287,9 @@ case class GraftMergeCommand(target: LogicalPlan,
     }
 
   override def run(spark: SparkSession): Seq[Row] = {
-    val (location, base, _) = GraftDml.tableMeta(target)
+    val table = GraftDml.table(target)
+    table.writeLayout() // refuses a read-only table with its reason
+    val (location, base) = (table.snapshot.root, table.snapshot.version)
     val tCols = target.output.map(_.name)
     Seq("__file", "__pos", GraftDml.Keep).foreach { m =>
       require(!tCols.contains(m), s"MERGE reserves the column name $m")
@@ -345,8 +301,7 @@ case class GraftMergeCommand(target: LogicalPlan,
     // resolved it.
     val sNames = source.output.zipWithIndex
       .map { case (a, i) => a.exprId -> s"__graft_s$i" }.toMap
-    val tNames = target.output.map(a => a.exprId -> a.name).toMap
-    val names = sNames ++ tNames
+    val names = sNames ++ GraftDml.names(target)
     val sR = {
       val s0 = GraftDml.ofRows(spark, source)
       s0.select(source.output.zipWithIndex.map { case (a, i) =>
@@ -381,14 +336,14 @@ case class GraftMergeCommand(target: LogicalPlan,
     }
     val changeKey = keyCols.filter(_.nonEmpty)
     val tVals = tCols.map(c => c -> col(c)).toMap
-    val nullVals = graftRelation.schema.fields
+    val nullVals = table.schema.fields
       .map(f => f.name -> lit(null).cast(f.dataType)).toMap
 
     // NOT MATCHED inserts: a source-side anti join against the LIVE rows
     // (DV-masked read), clause-filtered — never touches target content.
     val inserts = if (notMatched.isEmpty) None else {
       val sOnly = sR.join(
-        SnapshotStore.read(spark, location, Some(base)), cond, "left_anti")
+        SnapshotStore.readAt(spark, table.snapshot), cond, "left_anti")
       val (appliedI, _, valsI) = branch(notMatched, nullVals, names)
       Some(sOnly.filter(appliedI).select(tCols.map(c => valsI(c).as(c)): _*))
     }
@@ -446,8 +401,4 @@ case class GraftMergeCommand(target: LogicalPlan,
     }
     Seq.empty
   }
-
-  private def graftRelation =
-    GraftDml.graftRelation(target).getOrElse(throw new IllegalStateException(
-      s"not a graft snapshot relation: $target")).table
 }

@@ -139,4 +139,16 @@ class SnapshotScanSpec extends AnyFunSuite {
     assert(left.count() == rows - victims.size)
     assert(left.filter(col("key").isin(victims: _*)).isEmpty)
   }
+
+  test("a SQL UPDATE of one partition reads at most the table once plus the replaced rows") {
+    val (root, rows) = table()
+    val (_, read) = measured(spark.sql(s"UPDATE ${sqlName(root)} SET value = -1 WHERE part = 7"))
+    val replacedRows = rows / 12
+    assert(read <= rows + replacedRows,
+      s"update read $read records; the table holds $rows, the replaced partition $replacedRows")
+    val after = SnapshotStore.read(spark, root)
+    assert(after.count() == rows)
+    val updated = after.filter(col("value") === -1).collect().map(_.getLong(0)).toSet
+    assert(updated == (0L until rows).filter(_ % 12 == 7).toSet)
+  }
 }

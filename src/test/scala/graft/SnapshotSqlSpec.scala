@@ -193,6 +193,19 @@ class SnapshotSqlSpec extends AnyFunSuite {
     }
     assert(e3.getMessage.contains("part_col"))
     assert(SnapshotStore.currentVersion(root) == before)
+    // so do UPDATE and MERGE
+    val e4 = intercept[UnsupportedOperationException] {
+      spark.sql("UPDATE graft.wrref SET c_mktsegment = 'X' WHERE c_custkey = 1")
+    }
+    assert(e4.getMessage.contains("part_col"))
+    assert(SnapshotStore.currentVersion(root) == before)
+    val e5 = intercept[UnsupportedOperationException] {
+      spark.sql("""MERGE INTO graft.wrref t
+        USING (SELECT 1L AS c_custkey, 'X' AS c_mktsegment) s ON t.c_custkey = s.c_custkey
+        WHEN MATCHED THEN UPDATE SET c_mktsegment = s.c_mktsegment""")
+    }
+    assert(e5.getMessage.contains("part_col"))
+    assert(SnapshotStore.currentVersion(root) == before)
   }
 
   test("history and files metadata tables read straight from the manifest log") {
@@ -640,25 +653,26 @@ class SnapshotSqlSpec extends AnyFunSuite {
       s"DV-deleted row resurrected or update misapplied: $got")
   }
 
-  test("replaceWhere: concurrent commit into a replaced partition conflicts; disjoint commits rebase") {
+  test("updateWhere: concurrent commit into a replaced partition conflicts; disjoint commits rebase") {
     import spark.implicits._
     import graft.sources.SnapshotStore.SnapshotConflictException
     val root = tableDir("rw")
     val df = Seq((1L, 0L, "a"), (2L, 1L, "b")).toDF("k", "p", "v")
     SnapshotStore.overwrite(df, root, Some("p")) // v0
+    // SET v = 'A2' WHERE k = 1, copy-on-write over partition 0, read at `base`
+    def setA2(base: Long) = SnapshotStore.updateWhere(spark, SnapshotStore.snapshot(root, base),
+      col("k") === 1L, Some(Map("v" -> lit("A2"))), Some("p"), copyOnWrite = true)
     // a concurrent writer lands in partition 0 AFTER our base was read:
     // the copy-on-write of partition 0 must conflict, not silently drop
     // the concurrent row
     SnapshotStore.append(Seq((7L, 0L, "z")).toDF("k", "p", "v"), root, Some("p")) // v1
     intercept[SnapshotConflictException] {
-      SnapshotStore.replaceWhere(spark, root, 0L,
-        Seq((1L, 0L, "A2")).toDF("k", "p", "v"), Some(Seq(0L)))
+      setA2(0L)
     }
     // re-read at v1 (the retry contract), then a DISJOINT concurrent
     // commit (partition 1) lands before our commit: rebases cleanly
-    val content = Seq((1L, 0L, "A2"), (7L, 0L, "z")).toDF("k", "p", "v")
     SnapshotStore.append(Seq((8L, 1L, "y")).toDF("k", "p", "v"), root, Some("p")) // v2
-    val v = SnapshotStore.replaceWhere(spark, root, 1L, content, Some(Seq(0L)))
+    val v = setA2(1L)
     assert(v == 3L, "rebase over the disjoint commit, not a conflict")
     val got = SnapshotStore.read(spark, root)
       .select(col("k"), col("v")).collect()

@@ -54,6 +54,10 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders("""\b(ParquetTable|V1Scan|PrunedFilteredScan|SupportsDelete)\b""", Set.empty).isEmpty)
   }
 
+  test("row-level UPDATE/DELETE have one path: no replaceWhere, partitionIn or tableMeta") {
+    assert(offenders("""\bdef (replaceWhere|partitionIn|tableMeta)\b""", Set.empty).isEmpty)
+  }
+
   test("the snapshot store pins nothing in the block store (no localCheckpoint)") {
     val store = sources.collect { case (p, text) if p.endsWith(Paths.get("sources", "SnapshotStore.scala")) => text }
     assert(store.size == 1 && !store.head.contains("localCheckpoint"))
