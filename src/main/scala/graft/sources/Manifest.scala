@@ -109,14 +109,18 @@ object Manifest {
   }
 
   /** The versions logged in `dir`, ascending (empty when it is absent). */
-  private[sources] def versionsIn(dir: Path): Seq[Long] = {
-    if (!Files.isDirectory(dir)) return Nil
+  private[sources] def versionsIn(dir: Path): Seq[Long] = logIn(dir)._1
+
+  /** One listing of `dir`: its logged versions, ascending, and its
+    * temporary files (a [[publishVersion]] in flight or stranded).
+    */
+  private[sources] def logIn(dir: Path): (Seq[Long], Seq[Path]) = {
+    if (!Files.isDirectory(dir)) return (Nil, Nil)
     val it = Files.list(dir)
-    try it.iterator().asScala.map(_.getFileName.toString)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }
-      .toSeq.sorted
-    finally it.close()
+    val names = try it.iterator().asScala.map(_.getFileName.toString).toList finally it.close()
+    (names.collect { case n if n.startsWith("v") && n.endsWith(".json") =>
+        n.stripPrefix("v").stripSuffix(".json").toLong }.sorted,
+      names.filter(_.endsWith(".tmp")).map(dir.resolve))
   }
 
   /** Decode version `version` of the table at `root`, consulting the

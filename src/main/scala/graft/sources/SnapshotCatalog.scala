@@ -58,24 +58,35 @@ object SnapshotCatalog {
     * optimistic-concurrency check: the catalog version this writer READ
     * its world at (None for the bootstrap publish). If someone published
     * since, the swap must not proceed on a stale validation — conflict.
+    *
+    * A publisher killed between writing its temporary file and linking it
+    * strands `.v<n>.<uuid>.tmp`; each publish removes those older than the
+    * store's in-flight window ([[SnapshotStore.vacuum]]'s default), found
+    * in the same listing it reads its base version from, so a racing
+    * publisher's own file is never taken.
     */
   def publish(root: String, tables: Map[String, Long],
               expectedBase: Option[Long]): Long = {
     require(tables.nonEmpty, "empty catalog publish")
-    val cur = currentVersion(root)
+    val dir = Paths.get(root, Dir)
+    val (vs, tmps) = Manifest.logIn(dir)
+    val cur = vs.lastOption
     if (cur != expectedBase)
       throw new SnapshotStore.SnapshotConflictException(
         s"catalog at $root moved: expected base $expectedBase, found $cur")
     val next = cur.getOrElse(-1L) + 1
-    try {
-      Manifest.publishVersion(Paths.get(root, Dir), next,
-        Manifest.encodeCatalog(tables).getBytes(StandardCharsets.UTF_8))
-      next
-    } catch {
+    try Manifest.publishVersion(dir, next,
+      Manifest.encodeCatalog(tables).getBytes(StandardCharsets.UTF_8))
+    catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new SnapshotStore.SnapshotConflictException(
           s"catalog version $next already committed at $root")
     }
+    val cutoff = System.currentTimeMillis() - SnapshotStore.InFlightMs
+    // A racing publisher may remove a listed file first.
+    tmps.filter(p => scala.util.Try(Files.getLastModifiedTime(p).toMillis <= cutoff).getOrElse(false))
+      .foreach(Files.deleteIfExists(_))
+    next
   }
 
   /** Read table `name` at the pinned catalog cut — the reader-side half

@@ -444,15 +444,38 @@ object SnapshotStore {
     * dirs nested under differing commit uuids), and partition pruning
     * happens at the MANIFEST level ([[read]]'s partValues) — file-list
     * pruning before the scan, the same layer a table format prunes at.
+    *
+    * Each write task writes one file into every partition it touches, so
+    * the frame is sized before the write: it is coalesced (narrow, no
+    * shuffle) to ⌈estimated bytes / [[TargetFileBytes]]⌉ tasks, the
+    * estimate being the optimized plan's `sizeInBytes`. A 2k-row append
+    * then adds one file, not one per slice of its local frame. Three
+    * guards write the frame as it comes ([[writeTasks]]):
+    *   1. the caller laid it out — under `Project`/`Filter`/
+    *      `SubqueryAlias`, the analyzed plan's top is a `Repartition`
+    *      (`repartition`/`coalesce`), `RepartitionByExpression`,
+    *      `RebalancePartitions` or a `sortWithinPartitions` sort (so
+    *      [[rearrange]]'s range-split and sorted files keep their count);
+    *   2. the plan may emit more or wider rows than its estimate says:
+    *      it holds a `Generate` or `Expand` (row fan-out the estimate does
+    *      not scale by), a typed object operator (`map`/`flatMap`/
+    *      `mapPartitions`, sized as their input), a Python or R node, or
+    *      a UDF (its value sized as its type's default);
+    *   3. a leaf's size is not known: every leaf must be a local
+    *      relation, a range, a file relation or a cache already
+    *      materialized — not an RDD-backed frame (such as a
+    *      `foreachBatch` micro-batch), an external relation or a cache
+    *      whose size is still its plan's estimate.
     */
   private[graft] def writeDataFiles(df: DataFrame, root: String,
                                     partCol: Option[String]): Seq[String] = {
     val commitId = java.util.UUID.randomUUID().toString
     val dir = Paths.get(root, "data", commitId)
+    val sized = writeTasks(df).fold(df)(df.coalesce)
     val w = partCol match {
-      case Some(c) => df.withColumn("__part", col(c)).write.mode("error")
+      case Some(c) => sized.withColumn("__part", col(c)).write.mode("error")
         .partitionBy("__part")
-      case None => df.write.mode("error")
+      case None => sized.write.mode("error")
     }
     w.parquet(dir.toString)
     // A write of no rows leaves no file when partitioned but one empty
@@ -465,6 +488,47 @@ object SnapshotStore {
       case fs => fs
     }
     files.map(p => Paths.get(root, "data").relativize(p).toString)
+  }
+
+  /** The bytes of one data file: what a commit's write is sized to
+    * ([[writeDataFiles]]) and what OPTIMIZE bins by ([[bins]]) — the
+    * standard lakehouse file size.
+    */
+  private val TargetFileBytes = 128L << 20
+
+  /** The task count [[writeDataFiles]] coalesces `df` to, or None when one
+    * of its three guards keeps the frame's own partitioning.
+    */
+  private def writeTasks(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.{PythonFuncExpression, UserDefinedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    @scala.annotation.tailrec
+    def laidOut(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter | _: SubqueryAlias => laidOut(p.children.head)
+      case _: Repartition | _: RepartitionByExpression | _: RebalancePartitions => true
+      case s: Sort => !s.global
+      case _ => false
+    }
+    def opaque(p: LogicalPlan): Boolean = p match {
+      case _: Generate | _: Expand | _: ObjectConsumer | _: ObjectProducer => true
+      case _ => p.expressions.exists(_.exists {
+        case _: UserDefinedExpression | _: PythonFuncExpression => true
+        case _ => false
+      })
+    }
+    def sized(leaf: LogicalPlan): Boolean = leaf match {
+      case _: LocalRelation | _: Range => true
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case m: InMemoryRelation => m.cacheBuilder.isCachedColumnBuffersLoaded
+      case _ => false
+    }
+    val qe = df.queryExecution
+    val plan = qe.optimizedPlan
+    if (laidOut(qe.analyzed) || plan.exists(opaque) || !plan.collectLeaves().forall(sized)) None
+    else Some(((plan.stats.sizeInBytes + TargetFileBytes - 1) / TargetFileBytes)
+      .max(1).min(Int.MaxValue).toInt)
   }
 
   /** Atomically publish `files` as version `next`. Throws
@@ -1064,8 +1128,13 @@ object SnapshotStore {
     // The affected partitions are the hive dirs the updates' partition
     // values render to (the writer's own escaping). The upsert's key
     // uniqueness read them, so a concurrent commit that rewrote OR
-    // appended into them conflicts.
-    val dirs = updates.select(col(partCol)).distinct()
+    // appended into them conflicts. Updates the optimizer folds to a
+    // driver-local relation (a `Seq.toDF` frame) collect without a job,
+    // and their distinct values are taken here; others run one.
+    val values = updates.select(col(partCol))
+    val local = values.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val dirs = (if (local) values else values.distinct())
       .collect().map(r => partDir(r.get(0))).toSet
     rewrite(spark, base, "merge", Some(dirs), Some(partCol), txn, Seq(keyCol)) { replaced =>
       val target = scanEntries(spark, base, replaced)
@@ -1495,13 +1564,13 @@ object SnapshotStore {
       base.manifest.schema.orElse(Some(slice.schema)), layout)
   }
 
-  /** Output file count for rewriting `entries`: their bytes at 128 MB a
-    * file, the standard lakehouse bin size (file sizes are filesystem
-    * metadata — no data read).
+  /** Output file count for rewriting `entries`: their bytes at
+    * [[TargetFileBytes]] a file (file sizes are filesystem metadata — no
+    * data read).
     */
   private def bins(root: String, entries: Seq[String]): Int =
     (1L + (entries.map(e => Files.size(Paths.get(root, "data", entryPath(e)))).sum - 1L) /
-      (128L << 20)).toInt
+      TargetFileBytes).toInt
 
   /** OPTIMIZE — the auto-sized maintenance rewrite behind the SQL
     * statement (`OPTIMIZE graft.t [ZORDER BY (a, b)]`) and the
@@ -1779,6 +1848,13 @@ object SnapshotStore {
     }
   }
 
+  /** The in-flight writer window: how long a file no version names may
+    * still belong to a writer that has not published yet. [[vacuum]]'s
+    * default retention, and the age past which a catalog publish
+    * reclaims stranded temporary files ([[SnapshotCatalog.publish]]).
+    */
+  private[sources] val InFlightMs = 15L * 60 * 1000
+
   /** Drop data files no LIVE manifest references (after `keepVersions`
     * manifests are pruned) — the maintenance job, never part of a commit.
     * Readers pinned to a retained version stay safe; time travel beyond
@@ -1792,7 +1868,7 @@ object SnapshotStore {
     * when no concurrent writer can exist.
     */
   def vacuum(root: String, keepVersions: Int = 2,
-             minAgeMs: Long = 15L * 60 * 1000): Unit = {
+             minAgeMs: Long = InFlightMs): Unit = {
     val vs = versions(root)
     val dead = vs.dropRight(keepVersions)
     val live = vs.takeRight(keepVersions).map(snapshot(root, _))

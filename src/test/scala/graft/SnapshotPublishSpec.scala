@@ -2,16 +2,17 @@ package graft
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.SnapshotStore
+import graft.sources.{SnapshotCatalog, SnapshotStore}
 
 /** Manifest publication is atomic: a reader never decodes a partial
   * version, and a writer that dies mid-publish leaves only debris that no
-  * version names and vacuum reclaims.
+  * version names and vacuum (or, in a catalog, the next publish) reclaims.
   */
 class SnapshotPublishSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -79,6 +80,33 @@ class SnapshotPublishSpec extends AnyFunSuite {
     assert(!Files.exists(debris), "vacuum past the cutoff must remove the debris")
     assert(SnapshotStore.versions(root) == Seq(0L, 1L))
     assert(SnapshotStore.read(spark, root).count() == 3)
+  }
+
+  test("a catalog publish reclaims temporary files older than the in-flight window and keeps fresh ones") {
+    val cat = scratch("snap_cattmp_")
+    assert(SnapshotCatalog.publish(cat, Map("t" -> 0L), None) == 0L)
+    val dir = Paths.get(cat, "_catalog")
+    // What two publishers killed between write and link leave behind: one
+    // an hour ago, one a moment ago (it may still be in flight).
+    def stranded(v: Long, ageMs: Long) = {
+      val p = dir.resolve(f".v$v%013d.${java.util.UUID.randomUUID()}.tmp")
+      Files.write(p, """{"tables":{"t":""".getBytes("UTF-8"))
+      Files.setLastModifiedTime(p, FileTime.fromMillis(System.currentTimeMillis() - ageMs))
+      p
+    }
+    val old = stranded(1L, 60L * 60 * 1000)
+    val fresh = stranded(1L, 1000L)
+    assert(SnapshotCatalog.snapshot(cat) == Map("t" -> 0L))
+
+    assert(SnapshotCatalog.publish(cat, Map("t" -> 1L), Some(0L)) == 1L)
+    assert(!Files.exists(old), "a temporary file past the window must be reclaimed")
+    assert(Files.exists(fresh), "a temporary file inside the window may be in flight")
+    assert(SnapshotCatalog.versions(cat) == Seq(0L, 1L))
+    assert(SnapshotCatalog.snapshot(cat) == Map("t" -> 1L))
+    assert(SnapshotCatalog.snapshot(cat, Some(0L)) == Map("t" -> 0L))
+    assert(SnapshotCatalog.publish(cat, Map("t" -> 2L), Some(1L)) == 2L)
+    assert(Files.exists(fresh))
+    assert(SnapshotCatalog.snapshot(cat) == Map("t" -> 2L))
   }
 
   test("a forked writer killed at random points leaves a table that reads its newest version, takes the next commit, and vacuums clean") {

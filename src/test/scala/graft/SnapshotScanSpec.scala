@@ -54,12 +54,13 @@ class SnapshotScanSpec extends AnyFunSuite {
 
   /** 4,800 rows over 12 partitions, written by 4 tasks: 48 data files,
     * past the 32 explicit paths at which a plain parquet read of the
-    * file list would start a listing job.
+    * file list would start a listing job. The frame is laid out by an
+    * explicit `repartition(4)`, which the store's write keeps.
     */
   private def table(): (String, Long) = {
     val root = scratch("snapscan_")
     val df = spark.range(0, 4800, 1, 4).select(col("id").as("key"),
-      (col("id") % 12).cast("int").as("part"), (col("id") * 7).as("value"))
+      (col("id") % 12).cast("int").as("part"), (col("id") * 7).as("value")).repartition(4)
     SnapshotStore.overwrite(df, root, Some("part"))
     val files = SnapshotStore.filesAt(root, SnapshotStore.currentVersion(root).get).size
     assert(files >= 40, s"the table needs at least 40 files, has $files")
@@ -125,6 +126,24 @@ class SnapshotScanSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     val want = before ++ inPart.take(30).map(k => k -> ((5, -k))) + (99999L -> ((5, 1L)))
     assert(after == want)
+  }
+
+  test("merging driver-local updates names their partitions without a job") {
+    import spark.implicits._
+    def merged(shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val (root, _) = table()
+      val updates = shape((0L until 600L by 12).map(k => (k + 5, 5, -k)).toDF("key", "part", "value"))
+      val (jobs, _) = measured(SnapshotStore.merge(spark, root, updates, "key", "part"))
+      (jobs, SnapshotStore.read(spark, root).collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet)
+    }
+    val (localJobs, localTable) = merged(identity)
+    val (spreadJobs, spreadTable) = merged(_.repartition(2))
+    assert(localJobs < spreadJobs, s"local updates ran $localJobs jobs, repartitioned ones $spreadJobs")
+    // The rewrite alone runs two jobs here; a distinct over the updates'
+    // partition values would add two more.
+    assert(localJobs <= 2, s"local updates ran $localJobs jobs")
+    assert(localTable == spreadTable)
+    assert(localTable.count(_._3 < 0) == 49) // key 5 is set to 0, the 49 others below it
   }
 
   test("a partitioned delete scans the table once plus the replaced rows") {

@@ -491,7 +491,9 @@ class SnapshotStoreSpec extends AnyFunSuite {
   test("updateRows: rebases over a concurrent blind append; conflicts when a concurrent commit rewrote a touched file; stats pruning survives the update") {
     import spark.implicits._
     val root = scratch("snap_updrows_")
+    // Four key ranges, each written by its own task: files with narrow k ranges.
     val df = (1L to 400L).map(k => (k, k % 4, s"v$k")).toDF("k", "p", "v")
+      .repartitionByRange(4, col("k"))
     // Declared stats on k → per-file [lo,hi] ranges in the manifest.
     val v0 = SnapshotStore.overwrite(df, root, Some("p"), declareStatsCol = Some("k"))
     def acted(pred: org.apache.spark.sql.Column) = {
