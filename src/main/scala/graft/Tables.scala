@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table loaders + the cross-engine determinism helpers from SURVEY.md §7.3.
   *
@@ -24,8 +24,40 @@ object Tables {
     */
   val EmbeddingDim = 64
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Reads with the table's memoized schema: inference runs a Spark job
+    * (~25 ms on the driver) per read, the memo once per table per JVM.
+    */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    tableKey(spark, path) match {
+      case Some(key) =>
+        spark.read.schema(schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema))
+          .parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** What a table's inferred schema depends on: its path, each data file's
+    * path, size and modification time (a rewrite in place changes them),
+    * and the nanos-as-long conf that decides how TIMESTAMP(NANOS) reads.
+    * None when the path cannot be listed; the read then infers as usual.
+    */
+  private def tableKey(spark: SparkSession, path: String): Option[String] = scala.util.Try {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: the located statuses listFiles builds ask
+    // the local file system for each file's owner and permissions, which
+    // it answers by running a process per file.
+    def files(p: org.apache.hadoop.fs.Path): Seq[String] = fs.listStatus(p).toSeq
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .flatMap(f =>
+        if (f.isDirectory) files(f.getPath)
+        else Seq(s"${f.getPath}:${f.getLen}:${f.getModificationTime}"))
+    val nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    (Seq(path, nanos) ++ files(root).sorted).mkString("\n")
+  }.toOption
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components by iterated min-label propagation with
   * pointer jumping — the piece that turns one-hop dedup ASSIGNMENTS into
@@ -151,6 +153,19 @@ object Components {
     * (count, hash-sum) checksum is stable across one large+small round —
     * the same single-action-per-pass shape as minLabel's changed-count.
     *
+    * Driver finish: after every checkpoint (the initial edge set and each
+    * pass) the observed checksum already knows the edge count m. Once
+    * m × 16 B (one (u, v) pair of longs) fits Spark's own broadcast bound,
+    * `spark.sql.autoBroadcastJoinThreshold`, the remaining work is
+    * broadcast-sized: the pairs are collected from the checkpointed blocks
+    * (one job, no shuffle), union-find runs on the driver, and `nodes` is
+    * left-joined to a local (id, label) relation of the non-root nodes —
+    * the converged star assignment, exact even where `maxPasses` would
+    * have stopped the pass loop short. A larger edge set keeps running
+    * passes and is checked again after each one, so a big graph crosses
+    * over once its shrinking edge set fits. A threshold <= 0 (broadcasts
+    * off) turns the finish off; `maxPasses` bounds the pass loop only.
+    *
     * Checkpointing contract is minLabel's: localCheckpoint by default,
     * reliable checkpoints to `checkpointDir` for cluster runs.
     * Equivalence with minLabel is spec-gated (MinHashSpec) on the
@@ -167,10 +182,8 @@ object Components {
               maxPasses: Int = 10,
               checkpointDir: Option[String] = None,
               edgesPreCanonical: Boolean = false): DataFrame = {
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit =
-      System.err.println(f"[altstar] $what at ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    checkpointDir.foreach(nodes.sparkSession.sparkContext.setCheckpointDir)
+    val spark = nodes.sparkSession
+    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def cp(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     // Canonical undirected form: u > v, no self-loops, deduped. distinct()
@@ -198,52 +211,97 @@ object Components {
       val x = row("x") match { case v: Long => v; case _ => 0L } // null iff m == 0
       (out, (m, x))
     }
+    val finishBytes = broadcastBytes(spark)
+    def fitsDriver(m: Long): Boolean = finishBytes > 0 && m <= finishBytes / 16
     var (e, prev) = cpChecked(
       if (edgesPreCanonical)
         edges.select(greatest(col("a_id"), col("b_id")).as("u"),
           least(col("a_id"), col("b_id")).as("v"))
       else canon(edges))
-    mark(s"edges materialized + checksum (m=${prev._1})")
-    // Iterative-operator pass partitioning: state = the (shrinking) edge
-    // set, whose initial count the convergence checksum just computed for
-    // free — not the session's input-proportional sizing.
-    val spark = nodes.sparkSession
-    val passParts = graft.Sessions.iterShufflePartitions(
-      prev._1, spark.sparkContext.defaultParallelism)
-    graft.Sessions.withShufflePartitions(spark, passParts) {
-    val byU = Window.partitionBy(col("u"))
-    var pass = 0
-    var converged = prev._1 == 0
-    while (pass < maxPasses && !converged) {
-      // large-star over the symmetrized list: m(u) = min(N(u) ∪ {u});
-      // every strictly-larger neighbor re-links to m(u).
-      val sym = e.select(col("u"), col("v"))
-        .union(e.select(col("v").as("u"), col("u").as("v")))
-      val large = canon(sym
-        .withColumn("m", least(col("u"), min(col("v")).over(byU)))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("a_id"), col("m").as("b_id")))
-      // small-star on the canonical (u > v) list: every smaller neighbor
-      // and u itself re-link to the smallest neighbor.
-      val withMin = large.withColumn("m", min(col("v")).over(byU))
-      val small = withMin.select(col("v").as("a_id"), col("m").as("b_id"))
-        .union(withMin.select(col("u").as("a_id"), col("m").as("b_id")))
-      val (e2, cur) = cpChecked(canon(small))
-      e = e2
-      converged = cur == prev
-      prev = cur
-      pass += 1
-      mark(s"pass $pass done (m=${cur._1})")
+    var onDriver = fitsDriver(prev._1)
+    if (!onDriver) {
+      // Iterative-operator pass partitioning: state = the (shrinking) edge
+      // set, whose initial count the convergence checksum just computed for
+      // free — not the session's input-proportional sizing.
+      val passParts = graft.Sessions.iterShufflePartitions(
+        prev._1, spark.sparkContext.defaultParallelism)
+      graft.Sessions.withShufflePartitions(spark, passParts) {
+        val byU = Window.partitionBy(col("u"))
+        var pass = 0
+        var converged = prev._1 == 0
+        while (!onDriver && pass < maxPasses && !converged) {
+          // large-star over the symmetrized list: m(u) = min(N(u) ∪ {u});
+          // every strictly-larger neighbor re-links to m(u).
+          val sym = e.select(col("u"), col("v"))
+            .union(e.select(col("v").as("u"), col("u").as("v")))
+          val large = canon(sym
+            .withColumn("m", least(col("u"), min(col("v")).over(byU)))
+            .filter(col("v") > col("u"))
+            .select(col("v").as("a_id"), col("m").as("b_id")))
+          // small-star on the canonical (u > v) list: every smaller neighbor
+          // and u itself re-link to the smallest neighbor.
+          val withMin = large.withColumn("m", min(col("v")).over(byU))
+          val small = withMin.select(col("v").as("a_id"), col("m").as("b_id"))
+            .union(withMin.select(col("u").as("a_id"), col("m").as("b_id")))
+          val (e2, cur) = cpChecked(canon(small))
+          e = e2
+          converged = cur == prev
+          prev = cur
+          pass += 1
+          onDriver = fitsDriver(cur._1)
+        }
+      }
     }
-    }
-    // Converged state: stars rooted at component minima — the edge (u, c)
-    // IS the label assignment; isolated nodes label themselves. The
-    // min-agg is belt-and-braces for the maxPasses-hit un-converged case
-    // (labels are then a valid partial merge, same caveat as minLabel).
-    val assign = e.groupBy(col("u").as("id")).agg(min(col("v")).as("lab"))
-    mark("returning (assign frame is lazy)")
+    // Without the driver finish, the converged state is stars rooted at
+    // component minima — the edge (u, c) IS the label assignment; isolated
+    // nodes label themselves either way. The min-agg is belt-and-braces for
+    // the maxPasses-hit un-converged case (labels are then a valid partial
+    // merge, same caveat as minLabel).
+    val assign =
+      if (onDriver) driverStars(e)
+      else e.groupBy(col("u").as("id")).agg(min(col("v")).as("lab"))
     nodes.select(col(idCol).as("id"))
       .join(assign, Seq("id"), "left_outer")
       .select(col("id"), coalesce(col("lab"), col("id")).as("label"))
+  }
+
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes; <= 0 when broadcasts
+    * are off.
+    */
+  private def broadcastBytes(spark: SparkSession): Long = {
+    val v = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    if (v.startsWith("-")) -1L else JavaUtils.byteStringAsBytes(v)
+  }
+
+  /** (id, lab) for every non-root node of the (u, v) edge set `e`, lab =
+    * its component's min id: union-find with path halving over the sorted
+    * distinct ids, always linking the larger root under the smaller so
+    * each root is its component's min.
+    */
+  private def driverStars(e: DataFrame): DataFrame = {
+    val pairs = e.select(col("u"), col("v")).collect()
+    val us = pairs.map(_.getLong(0))
+    val vs = pairs.map(_.getLong(1))
+    val ids = us ++ vs
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (x <- ids) if (n == 0 || ids(n - 1) != x) { ids(n) = x; n += 1 }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def at(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    for (i <- us.indices) {
+      val a = find(at(us(i)))
+      val b = find(at(vs(i)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val rows = new java.util.ArrayList[Row]()
+    for (i <- 0 until n) { val r = find(i); if (r != i) rows.add(Row(ids(i), ids(r))) }
+    e.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("lab", LongType, nullable = false))))
   }
 }

@@ -122,9 +122,13 @@ object MinHash {
       // Token-less docs are excluded from banding: minhash of an empty set
       // is undefined (the native expression would yield identical
       // Long.MaxValue slots and bucket ALL empty docs as mutual near-dups).
-      // Empty/identical docs belong to exact dedup (q_dedup_exact).
-      .filter(size(col("base")) > 0)
-      .select(col("doc_id"), signatureFromBase(col("base")).as("sig"))
+      // Empty/identical docs belong to exact dedup (q_dedup_exact). They
+      // get a null signature, whose posexplode emits no rows, rather than
+      // a filter: a filter here is pushed below the callers' shared
+      // exchange and makes the banding subtree differ from the verify
+      // joins', so the exchange is no longer reused.
+      .select(col("doc_id"),
+        signatureFromBase(when(size(col("base")) > 0, col("base"))).as("sig"))
       // r17: codegen'd BandHashes + posexplode — the transform/slice/struct
       // HOF chain (now the spec-side bandHashesHof equivalence reference)
       // paid 8 interpreted lambda binds + slice allocations per banded row.
@@ -166,6 +170,7 @@ object MinHash {
     * verification per doc against its proposed canonical. Linear in
     * docs x bands end to end: the n² pair list is never materialized.
     * Unverified proposals fall back to self (the doc stays canonical).
+    * A document whose doc_id is null gets no row.
     */
   def dedupAssignments(docs: DataFrame): DataFrame =
     dedupAssignments(docs, array_distinct(split(col("text"), " ")))
@@ -188,8 +193,7 @@ object MinHash {
     * non-adjacent, non-min member can still split — acceptable for a
     * training-data dedup artifact and the standard LSH-CC tradeoff.
     *
-    * Components by bounded min-label propagation + pointer jumping
-    * (Components.minLabel).
+    * Components by the alternating-star algorithm (Components.altStar).
     */
   def dedupClusters(docs: DataFrame): DataFrame =
     dedupClusters(docs, array_distinct(split(col("text"), " ")))
@@ -266,7 +270,13 @@ object MinHash {
     // and both verify joins (ReuseExchange). As in verifiedEdges (r17), the
     // exchange carries the 64-bit hashed token set, not the token strings —
     // same signatures, same verify sizes, 8 B/element through every reader.
-    val toks = docs.select(col("doc_id"), baseHashes(toksExpr).as("th"))
+    // Reuse needs the three consumers' subtrees below the exchange to be
+    // identical, so no consumer may push a filter under it: the banding
+    // drops token-less docs by a null signature (bandedFromBase), and the
+    // shared frame itself carries the `doc_id IS NOT NULL` that the
+    // candidate join would otherwise infer and push down on its side only.
+    val toks = docs.filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), baseHashes(toksExpr).as("th"))
       .repartition(col("doc_id"))
     val bands = bandedFromBase(toks.select(col("doc_id"), col("th").as("base")))
     // Bucket-min via a window over ONE pass of the banded frame: the

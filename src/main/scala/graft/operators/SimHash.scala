@@ -116,9 +116,16 @@ object SimHash {
     // repartition(fp): a deliberate exchange both the groupBy and the final
     // per-doc join consume (ReuseExchange) — without it the doc scan +
     // fingerprint run once per consumer. Same pattern as
-    // MinHash.bandedSignatures.
-    val fps = docs.select(col("doc_id"),
-      fingerprint64(array_distinct(split(col("text"), " "))).as("fp"))
+    // MinHash.bandedSignatures. Reuse needs the consumers' subtrees below
+    // the exchange to be identical, so none may push a filter under it.
+    // The inner join on fp would infer `fp IS NOT NULL` and push it down
+    // on its side only, where it also fingerprints every doc a second
+    // time. So fp is made non-nullable instead: docs with null text, whose
+    // fingerprint is null and never joins, are dropped first, and the
+    // coalesce (a no-op on non-null text) tells the optimizer so.
+    val fps = docs.filter(col("text").isNotNull)
+      .select(col("doc_id"), coalesce(
+        fingerprint64(array_distinct(split(col("text"), " "))), lit(0L)).as("fp"))
       .repartition(col("fp"))
     val groups = fps.groupBy(col("fp")).agg(min(col("doc_id")).as("gmin"))
     // Per bucket: min (gmin, fp) struct = the bucket's best proposal and

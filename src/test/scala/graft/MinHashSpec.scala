@@ -143,13 +143,9 @@ class MinHashSpec extends AnyFunSuite {
     // the min-parent under-merge fixture
     val n1 = Seq(1L, 2L, 3L, 4L, 5L).toDF("id")
     val e1 = Seq((1L, 3L), (2L, 4L), (3L, 4L)).toDF("a_id", "b_id")
-    assert(labelsOf(graft.operators.Components.altStar(n1, e1, "id")) ==
-      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L))
     // the 8-node path graph (deep diameter — the pointer-jump stressor)
     val n2 = (1L to 8L).toDF("id")
     val e2 = (1L to 7L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    assert(labelsOf(graft.operators.Components.altStar(n2, e2, "id")) ==
-      (1L to 8L).map(_ -> 1L).toMap)
     // seeded random graph: 60 nodes, 45 edges from a fixed LCG — both
     // algorithms must produce the identical label table.
     var seed = 0x5eedL
@@ -161,9 +157,61 @@ class MinHashSpec extends AnyFunSuite {
     val rndEdges = Seq.fill(45)((next(60) + 1, next(60) + 1))
       .filter { case (a, b) => a != b }
     val e3 = rndEdges.toDF("a_id", "b_id")
-    val viaStar = labelsOf(graft.operators.Components.altStar(nodes3, e3, "id"))
     val viaMin = labelsOf(graft.operators.Components.minLabel(nodes3, e3, "id"))
-    assert(viaStar == viaMin, s"altStar and minLabel diverge on the random graph")
+    // Once with the driver finish (the default broadcast threshold), once
+    // with the pass loop alone (threshold -1).
+    def check(): Unit = {
+      assert(labelsOf(graft.operators.Components.altStar(n1, e1, "id")) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L))
+      assert(labelsOf(graft.operators.Components.altStar(n2, e2, "id")) ==
+        (1L to 8L).map(_ -> 1L).toMap)
+      val viaStar = labelsOf(graft.operators.Components.altStar(nodes3, e3, "id"))
+      assert(viaStar == viaMin, s"altStar and minLabel diverge on the random graph")
+    }
+    check()
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(check())
+  }
+
+  test("Components.altStar on a broadcast-sized edge set starts 2 jobs: the checkpoint and the collect") {
+    import spark.implicits._
+    // ~200 canonical edges (a_id < b_id, distinct), as MinHash.verifiedEdges
+    // hands them over: 40 chains of 5 edges over 240 nodes.
+    val edges = for (c <- 0L until 40L; i <- 0L until 5L) yield (c * 6 + i + 1, c * 6 + i + 2)
+    val nodes = (1L to 240L).toDF("id")
+    val eDf = edges.toDF("a_id", "b_id")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val out = try graft.operators.Components.altStar(nodes, eDf, "id", edgesPreCanonical = true)
+    finally { org.apache.spark.ListenerDrain(sc); sc.removeSparkListener(l) }
+    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+    val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 240L).map(i => i -> ((i - 1) / 6 * 6 + 1)).toMap)
+  }
+
+  test("dedup_minhash and dedup_simhash scan documents once: one shared exchange feeds every consumer") {
+    // The final adaptive plan, descending into query stages; a reused
+    // exchange is a leaf there, so each scan counted is one real read.
+    def scans(p: org.apache.spark.sql.execution.SparkPlan): Int = {
+      val here = p match {
+        case _: org.apache.spark.sql.execution.FileSourceScanExec => 1
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(q.plan)
+        case _ => 0
+      }
+      here + p.children.map(scans).sum
+    }
+    for (row <- Seq("dedup_minhash", "dedup_simhash")) {
+      val df = SparkEntry.queries(row)(spark, TestSpark.sf0001)
+      df.collect()
+      assert(scans(df.queryExecution.executedPlan) == 1,
+        s"$row:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("Components.minLabel reliable-checkpoint mode: same labels, lineage cut to checkpoint files") {

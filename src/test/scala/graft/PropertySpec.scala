@@ -121,29 +121,62 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Component min per node 1..n by a plain-Scala union-find. */
+  private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n + 1)(identity)
+    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    (1 to n).map(x => x.toLong -> find(x).toLong).toMap
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("altStar == plain-Scala union-find on random graphs") {
     import spark.implicits._
     // Components.altStar (the dedup_clusters engine) vs an independent
     // union-find: same component minima for arbitrary edge sets, including
-    // self-loops, duplicate/reversed edges, and isolated nodes.
+    // self-loops, duplicate/reversed edges, and isolated nodes. Run with
+    // the driver finish (the default broadcast threshold) and with the
+    // pass loop alone (threshold -1).
     val nNodes = 24
     val edgeGen = Gen.listOf(
       Gen.zip(Gen.choose(1L, nNodes.toLong), Gen.choose(1L, nNodes.toLong)))
-    for ((edges, i) <- cases(edgeGen, n = 5).zipWithIndex) {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (threshold <- Seq(spark.conf.get(key), "-1");
+         (edges, i) <- cases(edgeGen, n = 5).zipWithIndex) {
       val nodes = (1L to nNodes.toLong).toDF("id")
       val eDf = (if (edges.isEmpty) Seq((1L, 1L)) else edges).toDF("a_id", "b_id")
-      val got = graft.operators.Components.altStar(nodes, eDf, "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // union-find reference
-      val parent = Array.tabulate(nNodes + 1)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expect = (1 to nNodes).map(x => x.toLong -> find(x).toLong).toMap
-      assert(got == expect, s"case $i edges=$edges")
+      val got = TestSpark.withConf(key, threshold)(
+        labels(graft.operators.Components.altStar(nodes, eDf, "id")))
+      assert(got == unionFind(nNodes, edges), s"threshold $threshold case $i edges=$edges")
     }
+  }
+
+  test("altStar crosses over to the driver finish once its shrinking edge set fits the broadcast bound") {
+    import spark.implicits._
+    // A 12-clique (66 edges, a star of 11 after one pass) beside a
+    // 40-node path (39 edges, several passes to converge) and 8 isolated
+    // nodes. The bound sits one edge below the initial set, so the first
+    // check keeps the pass loop and the check after pass 1 finishes on
+    // the driver. maxPasses = 1 stops the loop alone short of the path's
+    // fixpoint; the finish must still give the exact components.
+    val clique = for (a <- 41L to 52L; b <- (a + 1) to 52L) yield (a, b)
+    val path = (1L to 39L).map(i => (i, i + 1))
+    val edges = clique ++ path
+    val nodes = (1L to 60L).toDF("id")
+    val eDf = edges.toDF("a_id", "b_id")
+    val bound = 16 * (edges.size - 1)
+    val expect = unionFind(60, edges)
+    val loopOnly = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
+      labels(graft.operators.Components.altStar(nodes, eDf, "id", maxPasses = 1)))
+    assert(loopOnly != expect, "one pass alone should stop short of the fixpoint")
+    val crossed = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", bound.toString)(
+      labels(graft.operators.Components.altStar(nodes, eDf, "id", maxPasses = 1)))
+    assert(crossed == expect)
   }
 
   test("q_cdc_scd2 invariants: per-user intervals tile the change timeline; one open current row") {

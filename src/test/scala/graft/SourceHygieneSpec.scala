@@ -46,6 +46,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders("""\bdef main\(""", EntryMains).isEmpty)
   }
 
+  test("operators print nothing to stderr") {
+    // Ranking.scala's pass marks stay until they become structured events.
+    assert(offenders("""System\.err\.print""", EntryMains + "Ranking.scala").isEmpty)
+  }
+
   test("no test-only reference shape (*Hof, *Reference) is defined in src/main") {
     assert(offenders("""\bdef \w*(Hof|Reference)\b""", Set.empty).isEmpty)
   }

@@ -30,6 +30,15 @@ object TestSpark {
     run
   }
 
+  /** Runs `body` with the session conf `key` set to `value`, then puts
+    * back what was there before.
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   /** A fresh, empty directory (absolute path) under this JVM's scratch root. */
   def scratch(prefix: String): String =
     Files.createTempDirectory(scratchRun, prefix).toString

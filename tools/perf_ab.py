@@ -7,14 +7,17 @@
 Pair i runs `perfbench/run.py` with seed first-seed+i once in each checkout;
 even pairs run the base first, odd pairs the change first, so a drift of
 the host over time does not favour one side. Every run's result line
-is appended to --log (default: perf_ab.jsonl in the working directory).
+and full record are appended to --log (default: perf_ab.jsonl in the
+working directory).
 
 For each metric of the result lines (the end-to-end ones, or the per-layer
-ones with --trace 1) that is not zero throughout, it prints each side's
-median and quartiles, how many pairs the change won (by the metric's
-direction in the change's BENCHMARK.json; a tie is not a win), and whether
-the gap between the medians exceeds the distance between the base's
-quartiles. Exit status is non-zero when a run failed or reported failed
+ones with --trace 1) that is not zero throughout, and for each query's
+median warm wall (`wall.<query>`, from the `detail.query_walls` of the
+full record line before the result, when the workload reports it), it
+prints each side's median and quartiles, how many pairs the change won
+(by the metric's direction in the change's BENCHMARK.json; a tie is not a
+win), and whether the gap between the medians exceeds the distance
+between the base's quartiles. Exit status is non-zero when a run failed or reported failed
 operations.
 """
 import argparse
@@ -33,7 +36,7 @@ def quartiles(vs):
 
 
 def run(checkout, workload, seed, seconds, trace):
-    """One perfbench run in `checkout`; its result line, or None on failure."""
+    """One perfbench run in `checkout`: its (record, result) lines, or None on failure."""
     p = subprocess.run(
         [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", trace],
@@ -42,7 +45,13 @@ def run(checkout, workload, seed, seconds, trace):
     if p.returncode != 0 or not lines:
         print(f"  {checkout}: {workload} seed {seed} failed with status {p.returncode}", flush=True)
         return None
-    return json.loads(lines[-1])
+    return (json.loads(lines[-2]) if len(lines) > 1 else {}), json.loads(lines[-1])
+
+
+def query_walls(record):
+    """Each query's median warm wall in one run, as `wall.<query>` metrics."""
+    walls = record.get("detail", {}).get("query_walls") or {}
+    return {f"wall.{q}": {"value": statistics.median(ws)} for q, ws in walls.items() if ws}
 
 
 def report(workload, pairs, better):
@@ -87,10 +96,12 @@ def main(argv):
                 sides.reverse()
             got = {}
             for side, checkout in sides:
-                res = run(checkout, w, seed, spec["run_seconds"], a.trace)
+                out = run(checkout, w, seed, spec["run_seconds"], a.trace)
+                record, res = out if out else (None, None)
                 with open(a.log, "a") as f:
                     f.write(json.dumps({"side": side, "checkout": checkout, "workload": w,
-                                        "seed": seed, "trace": int(a.trace), "result": res}) + "\n")
+                                        "seed": seed, "trace": int(a.trace), "result": res,
+                                        "record": record}) + "\n")
                 if res is None:
                     ok = False
                     continue
@@ -98,7 +109,7 @@ def main(argv):
                     print(f"  {side}: {w} seed {seed}: {res['failed']} of "
                           f"{res['attempted']} operations failed", flush=True)
                     ok = False
-                got[side] = res
+                got[side] = {**res, "metrics": {**res["metrics"], **query_walls(record)}}
             if len(got) == 2:
                 pairs.append((got["base"], got["change"]))
             print(f"  {w} pair {i + 1}/{a.pairs} (seed {seed}, {sides[0][0]} first) done", flush=True)
