@@ -40,9 +40,6 @@ object Ranking {
     */
   def pagerank(edgesIn: DataFrame, iters: Int = 10,
                broadcastCeiling: Long = 8000000L): DataFrame = {
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit =
-      System.err.println(f"[pagerank] $what at ${(System.nanoTime() - t0) / 1e9}%.1f s")
     // Degrees are NODE-sized; edges are EDGE-sized — materialize only the
     // node-sized pieces. The sf100 forensics
     // (BENCH_sf100_r13_pagerank{320,64,128,320v2} disk traces): widening
@@ -96,7 +93,6 @@ object Ranking {
     val spark = edgesIn.sparkSession
     val passParts = graft.Sessions.iterShufflePartitions(
       n, spark.sparkContext.defaultParallelism)
-    mark(s"build done (n=$n, allReceive=$allReceive, passParts=$passParts)")
     graft.Sessions.withShufflePartitions(spark, passParts) {
     var ranks = nodes.select(col("node"), lit(Scale / n).as("r"))
     var pass = 0
@@ -140,7 +136,6 @@ object Ranking {
       // (measured 22 s; every-pass is 13 s). A 16k-row localCheckpoint
       // costs ~nothing next to a re-run pass.
       ranks = ranks.localCheckpoint()
-      mark(s"pass $pass done")
     }
     // Force the final pass while the materialized inputs are still live;
     // the returned frame reads the truncated lineage only, so the edge/
@@ -262,12 +257,9 @@ object Ranking {
     graft.Sessions.withShufflePartitions(
       s2, s2.sparkContext.defaultParallelism) {
       Scratch.scoped {
-        val t0 = System.nanoTime()
-        val r = pagerank(tradeEdges(s2, d))
+        pagerank(tradeEdges(s2, d))
           .select(col("node"), col("r"))
           .orderBy(col("node").asc)
-        System.err.println(f"[pagerank] tradeRank frame built at ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        r
       }
     }
   }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.graftext.Schemas
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Snapshot-isolated table layout over plain parquet — the transactional
-  * core a lakehouse format (Iceberg/Delta) adds on top of exactly the
-  * directory shape `Sinks` writes, built here from first principles
+  * core a lakehouse format (Iceberg/Delta) adds on top of a plain
+  * hive-partitioned parquet directory, built here from first principles
   * because neither format is on this classpath.
   *
   * The mechanism is the standard one:
@@ -39,8 +39,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     explicit `asOf`), then read ONLY that manifest's files. A reader
   *     never observes a half-written commit — uncommitted data files are
   *     invisible because no manifest names them, and replaced files stay
-  *     readable because commits never delete. This is the isolation
-  *     `Sinks.mergeIntoPartitioned` documents it lacks.
+  *     readable because commits never delete. This is the isolation a
+  *     dynamic partition overwrite of plain parquet lacks: a reader
+  *     racing it can see a half-replaced partition.
   *   - CDC between versions is a MANIFEST SET DIFF ([[changes]]): the
   *     net row delta v1→v2 is exactly (rows of files added) exceptAll
   *     (rows of files removed) — cost proportional to touched files,
@@ -1098,10 +1099,21 @@ object SnapshotStore {
       .toIndexedSeq ++ extra.map(col): _*)
   }
 
-  /** MERGE-style keyed upsert with SNAPSHOT ISOLATION — the transactional
-    * twin of [[Sinks.mergeIntoPartitioned]], same per-partition cost
-    * model and the same key-cannot-change-partition contract. The commit
-    * swaps the affected partitions' files for rewritten ones in ONE
+  /** MERGE-style keyed upsert with SNAPSHOT ISOLATION: the update rows
+    * replace the rows with the same `keyCol` inside the partitions the
+    * updates name, and new keys are inserted there. Cost is proportional
+    * to the touched partitions: only their files are read back and
+    * rewritten, and every other partition's entries carry forward as the
+    * same files.
+    *
+    * CONTRACT: a key may NOT change partition. Old rows are replaced only
+    * within the updates' partition values, so an update whose key lives
+    * in a DIFFERENT partition leaves the old row in place and the key
+    * ends up in both. Handling that would take a key scan of the whole
+    * table; a partitioned upsert does not need it when the partition
+    * value is part of the key's identity (date or region dims).
+    *
+    * The commit swaps the affected partitions' files for rewritten ones in ONE
     * atomic manifest publish: a concurrent reader holds either the old
     * version (all old files, still on disk) or the new one — never a mix.
     * A concurrent WRITER that committed first invalidates this merge's
@@ -1500,7 +1512,7 @@ object SnapshotStore {
     *
     * `zorderBy` (two or more non-negative integral columns, exclusive
     * with `sortBy`) clusters on the Morton interleave of the keys'
-    * quantile buckets instead ([[Sinks.zorderKeyN]] — the OPTIMIZE
+    * quantile buckets instead ([[ZOrder.zorderKeyN]] — the OPTIMIZE
     * ZORDER BY of the lakehouse formats): every output file then carries
     * a narrow range on EVERY listed column simultaneously, so a table
     * with multi-column declared stats earns conjunctive manifest pruning
@@ -1544,11 +1556,11 @@ object SnapshotStore {
       if (zorderBy.isEmpty) (slice, (layout.toSeq ++ sortBy).distinct.map(col))
       else {
         // Quantile-bucket maxes from one tiny aggregate (offline layout
-        // job, same driver-side single-row action as writeZordered).
+        // job, one driver-side single-row action).
         val aggs = zorderBy.map(c => max(col(c)).cast("long"))
         val r = slice.agg(aggs.head, aggs.tail: _*).head()
-        val buckets = 1L << Sinks.zorderBits(zorderBy.length)
-        val z = Sinks.zorderKeyN(zorderBy.zipWithIndex.map { case (c, i) =>
+        val buckets = 1L << ZOrder.zorderBits(zorderBy.length)
+        val z = ZOrder.zorderKeyN(zorderBy.zipWithIndex.map { case (c, i) =>
           (col(c).cast("long") * buckets / (r.getLong(i) + 1L)).cast("long")
         })
         (slice.withColumn("__z", z), layout.toSeq.map(col) :+ col("__z"))

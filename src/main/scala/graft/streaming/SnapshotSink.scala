@@ -7,11 +7,11 @@ import graft.sources.SnapshotStore
   * committed into a [[SnapshotStore]] table — the composition that turns
   * the store into a streaming-writable lakehouse table.
   *
-  * Why the plain `foreachBatch` + parquet-upsert pattern
-  * (StatefulOps.upsertByPartition) isn't enough: dynamic partition
-  * overwrite gives exactly-once CONTENT, but a reader racing the
-  * overwrite can observe a half-replaced partition. Routing each batch
-  * through `SnapshotStore.merge` instead gives every micro-batch commit
+  * Why a plain `foreachBatch` parquet upsert (a dynamic partition
+  * overwrite keyed by the upsert column) isn't enough: it gives
+  * exactly-once CONTENT, but a reader racing the overwrite can observe
+  * a half-replaced partition. Routing each batch through
+  * `SnapshotStore.merge` instead gives every micro-batch commit
   * snapshot isolation (readers see whole versions only), time travel
   * across batch boundaries, and a version history that doubles as the
   * stream's audit log.

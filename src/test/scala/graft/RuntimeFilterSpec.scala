@@ -107,7 +107,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   test("dynamic partition pruning fires on our partitioned sink (plan marker + row identity)") {
     val tmp = TestSpark.scratch("graft-dpp")
     val ev = Tables.events(spark, d)
-    sources.Sinks.writePartitionedBy(ev, "event_type", s"$tmp/ev")
+    ev.write.partitionBy("event_type").mode("overwrite").parquet(s"$tmp/ev")
 
     import spark.implicits._
     Seq(("click", 1L), ("view", 1L), ("error", 3L), ("purchase", 2L), ("signup", 2L))

@@ -68,7 +68,7 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(SnapshotStore.read(spark, root).count() == base.count() + 1)
   }
 
-  test("merge: same content as the non-transactional sink; old version intact (isolation)") {
+  test("merge: same content as a reference upsert; untouched partitions carry forward; old version intact (isolation)") {
     import spark.implicits._
     val root = scratch("snap_merge_")
     val v0 = SnapshotStore.overwrite(base, root, Some("c_nationkey"))
@@ -89,6 +89,13 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val got = SnapshotStore.read(spark, root)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
     assert(got.exceptAll(expect).count() == 0 && expect.exceptAll(got).count() == 0)
+
+    // Only nation 3 was rewritten: outside it the new version names exactly
+    // the old version's entries, so those files are physically untouched.
+    def outside3(v: Long) =
+      SnapshotStore.entriesAt(root, v).filterNot(_.contains("__part=3/")).toSet
+    assert(outside3(v0).nonEmpty && outside3(v1) == outside3(v0),
+      s"merge rewrote an untouched partition: ${outside3(v0)} vs ${outside3(v1)}")
 
     // ISOLATION: every file of the pinned version still exists and the old
     // version still reads the ORIGINAL content — the merge replaced the

@@ -16,14 +16,26 @@ class SourceHygieneSpec extends AnyFunSuite {
 
   private val EntryMains = Set("Bench.scala", "Verify.scala", "DataGen.scala")
 
-  /** Every `src/main` Scala file with its text, keyed by path. */
-  private lazy val sources: Map[Path, String] = {
-    val walk = Files.walk(Paths.get("src", "main"))
+  /** Top-level definitions in `src/main` that no code names, each with
+    * the reason it stays.
+    */
+  private val Unreferenced = Map(
+    "TextSources" -> "the reference's Iris ingest, read by MlSpec",
+    "StreamingDedup" -> "the streaming twin of the batch dedup, pinned set-identical by StreamingSpec",
+    "Observability" -> "quality counters to be wired into store commits, or deleted",
+    "GraftCatalog" -> "the SQL catalog plugin Spark loads by class name from spark.sql.catalog.<name>",
+    "SnapshotCatalog" -> "the store's multi-table atomic publish, pinned by SnapshotPublishSpec")
+
+  /** Every Scala file under `dir` with its text, keyed by path. */
+  private def scalaUnder(dir: Path): Map[Path, String] = {
+    val walk = Files.walk(dir)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { p =>
       p -> new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
     }.toMap
     finally walk.close()
   }
+
+  private lazy val sources: Map[Path, String] = scalaUnder(Paths.get("src", "main"))
 
   /** Files outside `allowed` (by file name) whose text matches `pattern`. */
   private def offenders(pattern: String, allowed: Set[String]): Seq[String] =
@@ -47,8 +59,51 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test("operators print nothing to stderr") {
-    // Ranking.scala's pass marks stay until they become structured events.
-    assert(offenders("""System\.err\.print""", EntryMains + "Ranking.scala").isEmpty)
+    assert(offenders("""System\.err\.print""", EntryMains).isEmpty)
+  }
+
+  test("every top-level object, class and trait in src/main is named by code outside its own definition") {
+    // Comments go (scaladoc links are not uses); string literals stay, so
+    // a class named in a conf string counts.
+    val lexed = """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    def code(text: String): String =
+      lexed.replaceAllIn(text, m => if (m.matched.startsWith("\"")) "$0" else " ")
+    val decl = """(?m)^(?:(?:private|protected)(?:\[\w+\])?\s+|(?:final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
+    // Each file cut at its top-level definitions: (definition name, its
+    // code), with "" owning the package and import preamble.
+    def chunks(text: String): Seq[(String, String)] = {
+      val c = code(text)
+      val starts = decl.findAllMatchIn(c).map(m => (m.group(1), m.start)).toSeq
+      ("", c.substring(0, starts.headOption.fold(c.length)(_._2))) +:
+        starts.zipWithIndex.map { case ((name, at), i) =>
+          name -> c.substring(at, starts.lift(i + 1).fold(c.length)(_._2))
+        }
+    }
+    val main = sources.values.toSeq.flatMap(chunks)
+    val bench = scalaUnder(Paths.get("perfbench", "src")).values.toSeq.flatMap(chunks)
+    val declared = main.map(_._1).filter(_.nonEmpty).toSet
+    assert(declared.size >= 50 && declared("SnapshotStore"), declared.toSeq.sorted)
+    val services = {
+      val dir = Paths.get("src", "main", "resources", "META-INF", "services")
+      val list = Files.list(dir)
+      try list.iterator().asScala.toSeq.flatMap(f => Files.readAllLines(f).asScala)
+        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+        .map(_.split('.').last).toSet
+      finally list.close()
+    }
+    assert(services.nonEmpty)
+    val roots = services ++ EntryMains.map(_.stripSuffix(".scala"))
+    def named(n: String): Boolean = {
+      val word = s"\\b$n\\b".r
+      (main ++ bench).exists { case (owner, c) => owner != n && word.findFirstIn(c).isDefined }
+    }
+    val unused = (declared -- roots).filterNot(named)
+    assert((unused -- Unreferenced.keySet).isEmpty,
+      s"named by no code in src/main or perfbench/src: ${(unused -- Unreferenced.keySet).toSeq.sorted}")
+    // The exception list cannot go stale: each entry is still defined and
+    // still unnamed.
+    assert(Unreferenced.keySet.subsetOf(unused),
+      s"no longer unreferenced, drop from the list: ${(Unreferenced.keySet -- unused).toSeq.sorted}")
   }
 
   test("no test-only reference shape (*Hof, *Reference) is defined in src/main") {

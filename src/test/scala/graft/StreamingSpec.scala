@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import graft.streaming.{StatefulOps, StreamOps}
+import graft.streaming.StreamOps
 
 /** SURVEY §2.10 non-oracle rows: true incremental semantics via
   * MemoryStream — watermark late-data drop (stream_watermark_late) and
@@ -258,27 +258,6 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("stream_custom_state: flatMapGroupsWithState carries per-user counters across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[(Long, Long)] // (user_id, value_cents)
-    val counted = graft.streaming.StatefulOps.runningCounter(
-      source.toDS().groupByKey(_._1))
-    val q = counted.writeStream
-      .format("memory").queryName("custom_state").outputMode(OutputMode.Append()).start()
-    try {
-      source.addData((1L, 100L), (1L, 250L), (2L, 40L))
-      q.processAllAvailable()
-      source.addData((1L, 90L), (3L, 700L))
-      q.processAllAvailable()
-      val rows = spark.table("custom_state")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      // batch 1 emissions + batch 2 emissions (user 1's state carried over)
-      assert(rows == Set((1L, 2L, 250L), (2L, 1L, 40L), (1L, 3L, 250L), (3L, 1L, 700L)),
-        rows.toString)
-    } finally q.stop()
-  }
-
   test("stream_restart_recovery: dedup state survives a stop + restart from checkpoint (RocksDB)") {
     import spark.implicits._
     // StreamingSpec so far proves state works WITHIN a query run; this
@@ -321,52 +300,6 @@ class StreamingSpec extends AnyFunSuite {
         case None => spark.conf.unset(key)
       }
     }
-  }
-
-  test("stream_foreachbatch_upsert: update-mode agg lands as keyed upsert; batch replay is exactly-once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = TestSpark.scratch("graft_feb")
-    val outDir = s"$root/kv"
-    val source = MemoryStream[(Long, Long)]
-    // Update-mode running count per user: each micro-batch emits only the
-    // keys whose count CHANGED — the natural upsert feed.
-    val counts = source.toDF().toDF("user_id", "cents")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-      .select(col("n"), col("sum_cents"), col("user_id"))
-    var lastBatch: Option[(org.apache.spark.sql.DataFrame, Long)] = None
-    val q = counts.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val batch = df.toDF()
-        // Persist the batch so the replay below re-runs the EXACT frame.
-        val pinned = batch.cache(); pinned.count()
-        lastBatch = Some((pinned, id))
-        StatefulOps.upsertByPartition(outDir, "user_id")(pinned, id)
-      }
-      .start()
-    try {
-      source.addData((1L, 100L), (2L, 200L), (1L, 50L))
-      q.processAllAvailable()
-      source.addData((1L, 25L), (3L, 300L))
-      q.processAllAvailable()
-      // The partition column comes back from directory names (inferred
-      // int) — normalize to long.
-      def state() = spark.read.parquet(outDir)
-        .select(col("user_id").cast("long"), col("n"), col("sum_cents"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val expected = Set((1L, 3L, 175L), (2L, 1L, 200L), (3L, 1L, 300L))
-      assert(state() == expected, state().toString)
-      // Simulate the restart-replay: re-apply the LAST committed batch
-      // (what a recovering query re-runs from checkpointed offsets). The
-      // dynamic-partition overwrite rewrites the same key partitions with
-      // identical content — the sink state must not change (exactly-once
-      // effect over an at-least-once delivery).
-      val (replayDf, replayId) = lastBatch.get
-      StatefulOps.upsertByPartition(outDir, "user_id")(replayDf, replayId)
-      assert(state() == expected, s"replay corrupted the sink: ${state()}")
-    } finally q.stop()
   }
 
   test("stream_lsh_dedup: near-dup arriving in a LATER batch is paired against stream history; unrelated docs are not") {
